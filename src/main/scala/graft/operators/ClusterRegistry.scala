@@ -402,7 +402,7 @@ object ClusterRegistry {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch", "bucket")
           .parquet(s"$path/ledger")))
-      var bandFut: java.util.concurrent.Future[Unit] = null
+      var bandFut: Overlap.Task[Unit] = null
       try {
         // the probe corpus keeps the ledger's PHYSICAL bucket column
         // and hands the bucket function to the verify stage, so the

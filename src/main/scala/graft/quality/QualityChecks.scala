@@ -47,14 +47,29 @@ object QualityChecks {
   /** Gate 1: table is non-empty (data_quality.py:5,25-32). */
   def requireNonEmpty(df: DataFrame, table: String): Long = {
     val n = df.count()
-    if (n == 0) throw QualityViolation(s"quality gate: $table is empty")
+    checkNonEmpty(n, table)
     n
   }
 
   /** Gate 2: key column has zero nulls (data_quality.py:6,34-41). */
-  def requireNoNullKeys(df: DataFrame, table: String, key: String): Unit = {
-    val nulls = df.filter(col(key).isNull).count()
+  def requireNoNullKeys(df: DataFrame, table: String, key: String): Unit =
+    checkNullKeys(df.filter(col(key).isNull).count(), table, key)
+
+  /** Gates 1 and 2 as ONE aggregate: the row count and the null-key
+    * count come out of a single scan of `df`. Same strict semantics and
+    * messages as [[requireNonEmpty]] then [[requireNoNullKeys]] (an
+    * empty table reports empty). Returns the row count. */
+  def requireLoaded(df: DataFrame, table: String, key: String): Long = {
+    val r = df.agg(count(lit(1)), count_if(col(key).isNull)).head()
+    checkNonEmpty(r.getLong(0), table)
+    checkNullKeys(r.getLong(1), table, key)
+    r.getLong(0)
+  }
+
+  private def checkNonEmpty(n: Long, table: String): Unit =
+    if (n == 0) throw QualityViolation(s"quality gate: $table is empty")
+
+  private def checkNullKeys(nulls: Long, table: String, key: String): Unit =
     if (nulls > 0)
       throw QualityViolation(s"quality gate: $table.$key has $nulls null keys")
-  }
 }

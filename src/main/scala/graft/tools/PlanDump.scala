@@ -9,6 +9,10 @@ import org.apache.spark.sql.execution.ExplainMode
   * queries, and one JVM per plan would cost 20 minutes of startup.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <name>...
+  *
+  * A failed dump does not stop the others; the run ends with a count of
+  * failed dumps and exits 1 when there was any, so a script archiving
+  * plans notices a missing one.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,7 +23,7 @@ object PlanDump {
     val spark = Sessions.local(appName = "graft-plandump")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    names.foreach { n =>
+    val failed = names.count { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val plan = df.queryExecution
@@ -28,11 +32,15 @@ object PlanDump {
           java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $n ok")
+        false
       } catch {
         case e: Throwable =>
           println(s"[plandump] $n FAILED: ${e.getMessage}")
+          true
       }
     }
     spark.stop()
+    println(s"[plandump] $failed of ${names.length} dumps failed")
+    if (failed > 0) sys.exit(1)
   }
 }

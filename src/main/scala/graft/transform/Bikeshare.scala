@@ -1,7 +1,8 @@
 package graft.transform
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The bikeshare ETL's transform surface (reference
   * dags/bikeshare_nyc/etl_script/etl.py) re-expressed as pure
@@ -18,37 +19,57 @@ import org.apache.spark.sql.functions._
   */
 object Bikeshare {
 
-  /** Trip cleaning (etl.py:57-58): drop trips that are BOTH same-station
-    * AND shorter than 300 s; the reference's `subtract` additionally
-    * dedups survivors. Single-scan form: negated filter + distinct —
-    * EXCEPT would scan and shuffle the table twice for a subtracted set
-    * that is a subset of the left side. coalesce(cond, false) keeps rows
-    * where the predicate is NULL (null station id), matching EXCEPT
+  /** The Citi Bike trip CSV schema (FIXTURES.md §1), pinned: exactly
+    * what `inferSchema` yields on the 2020 extract, so the read costs
+    * neither a header job nor a full inference scan (SURVEY.md §2 S1). */
+  val tripSchema: StructType = StructType.fromDDL(
+    "tripduration INT, starttime TIMESTAMP, stoptime TIMESTAMP, " +
+      "`start station id` INT, `start station name` STRING, " +
+      "`start station latitude` DOUBLE, `start station longitude` DOUBLE, " +
+      "`end station id` INT, `end station name` STRING, " +
+      "`end station latitude` DOUBLE, `end station longitude` DOUBLE, " +
+      "bikeid INT, usertype STRING, `birth year` INT, gender INT")
+
+  /** The cleaning filter (etl.py:57-58): drop trips that are BOTH
+    * same-station AND shorter than 300 s. coalesce(cond, false) keeps
+    * rows where the predicate is NULL (null station id), matching EXCEPT
     * semantics (a null-predicate row never appears on the right side).
     */
-  def cleanTrips(trips: DataFrame): DataFrame =
+  def keptTrips(trips: DataFrame): DataFrame =
     trips.filter(
       !coalesce(
         col("start station id") === col("end station id") &&
           col("tripduration") < 300,
         lit(false)))
-      .distinct()
+
+  /** Trip cleaning (etl.py:57-58): [[keptTrips]] plus the dedup the
+    * reference's `subtract` applies to survivors. Single-scan form:
+    * negated filter + distinct — EXCEPT would scan and shuffle the
+    * table twice for a subtracted set that is a subset of the left side.
+    */
+  def cleanTrips(trips: DataFrame): DataFrame = keptTrips(trips).distinct()
 
   /** Station dimension (etl.py:59-76,103): start-side ∪ end-side
     * projections, deduped by full row. Fixes the reference bug at
     * etl.py:103 where the union result is discarded and an empty
     * dim_station ships (SURVEY.md §7.5).
+    *
+    * Takes [[keptTrips]], not [[cleanTrips]]: distinct(project(distinct
+    * x)) = distinct(project x), so the full-row dedup would only add a
+    * shuffle. Both sides of a row come out of ONE pass (inline over a
+    * two-struct array), so the trips are scanned once, not per side.
     */
   def stationDim(trips: DataFrame): DataFrame = {
-    def side(prefix: String): DataFrame =
-      trips
-        .filter(col("bikeid").isNotNull)
-        .select(
-          col(s"$prefix station id").as("station_id"),
-          col(s"$prefix station name").as("name"),
-          col(s"$prefix station longitude").as("longitude"),
-          col(s"$prefix station latitude").as("latitude"))
-    side("start").union(side("end")).distinct()
+    def side(prefix: String): Column =
+      struct(
+        col(s"$prefix station id").as("station_id"),
+        col(s"$prefix station name").as("name"),
+        col(s"$prefix station longitude").as("longitude"),
+        col(s"$prefix station latitude").as("latitude"))
+    trips
+      .filter(col("bikeid").isNotNull)
+      .select(inline(array(side("start"), side("end"))))
+      .distinct()
   }
 
   /** Trip fact (etl.py:78-102): second-truncated timestamps and a
@@ -128,12 +149,17 @@ object Bikeshare {
 /** Raw-CSV ingest options kept from the reference (etl.py:54-56,122-124);
   * engine-proper reads parquet (SURVEY.md §1.3). */
 object CsvIngest {
-  /** Trip CSV (S1): header + explicit schema (no inferSchema
-    * double-scan) or inference when no schema is supplied. */
+  /** Trip CSV (S1): header + explicit schema, or inference when no
+    * schema is supplied. With a schema the read issues no job at all
+    * (no inferSchema double-scan), and `enforceSchema=false` checks each
+    * file's header against the schema's field names: a file whose
+    * columns are renamed or reordered fails its scan instead of binding
+    * values by position. */
   def csv(spark: SparkSession, path: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+      schema: Option[StructType] = None): DataFrame = {
     val r = spark.read.option("header", "true")
-    schema.fold(r.option("inferSchema", "true"))(s => r.schema(s)).csv(path)
+    schema.fold(r.option("inferSchema", "true"))(s =>
+      r.option("enforceSchema", "false").schema(s)).csv(path)
   }
 
   /** String-typed CSV (S2, etl.py:122-124): header only, every column

@@ -150,6 +150,22 @@ object EngineLawsProps extends Properties("EngineLaws") {
     }
   }
 
+  property("quality gates: requireLoaded == nonEmpty then nullKeys") = {
+    forAll(Gen.choose(0, 2), Gen.choose(0, 3)) { (nulls, clean) =>
+      val rows = (1 to clean).map(i => (Some(i.toLong), s"c$i")) ++
+        (1 to nulls).map(i => (Option.empty[Long], s"n$i"))
+      val df = rows.toDF("id", "v")
+      def outcome(gate: => Long): Either[String, Long] =
+        try Right(gate)
+        catch { case e: QualityChecks.QualityViolation => Left(e.getMessage) }
+      outcome(QualityChecks.requireLoaded(df, "t", "id")) == outcome {
+        val n = QualityChecks.requireNonEmpty(df, "t")
+        QualityChecks.requireNoNullKeys(df, "t", "id")
+        n
+      }
+    }
+  }
+
   property("semDedup: every id tagged once; keep iff no lower-id cell twin") = {
     val vecGen = Gen.listOfN(6, Gen.choose(-100, 100).map(_ / 100.0f))
     forAll(

@@ -1,8 +1,12 @@
 package graft.pipeline
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.operators.TableChecksum
 import graft.quality.QualityChecks
 
 /** End-to-end: fixtures → all six star tables staged into the catalog →
@@ -58,15 +62,60 @@ class BikesharePipelineSpec extends SparkTestBase {
   test("quality gates fail on violations (strict ==0 nulls)") {
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("id", "v")
-    intercept[QualityChecks.QualityViolation] {
+    val emptyMsg = intercept[QualityChecks.QualityViolation] {
       QualityChecks.requireNonEmpty(empty, "empty_table")
-    }
+    }.getMessage
     val withNull = Seq((1L, "a"), (2L, null), (3L, "c")).toDF("id", "v")
-    intercept[QualityChecks.QualityViolation] {
-      QualityChecks.requireNoNullKeys(withNull.withColumn(
-        "id", when(col("v").isNull, lit(null)).otherwise(col("id"))),
-        "t", "id")
-    }
+    val nullKey = withNull.withColumn(
+      "id", when(col("v").isNull, lit(null)).otherwise(col("id")))
+    val nullMsg = intercept[QualityChecks.QualityViolation] {
+      QualityChecks.requireNoNullKeys(nullKey, "t", "id")
+    }.getMessage
     QualityChecks.requireNoNullKeys(withNull, "t", "id") // clean key passes
+
+    // the one-aggregate gate raises the same violations, word for word
+    assert(intercept[QualityChecks.QualityViolation] {
+      QualityChecks.requireLoaded(empty, "empty_table", "id")
+    }.getMessage === emptyMsg)
+    assert(intercept[QualityChecks.QualityViolation] {
+      QualityChecks.requireLoaded(nullKey, "t", "id")
+    }.getMessage === nullMsg)
+    assert(QualityChecks.requireLoaded(withNull, "t", "id") === 3L)
+  }
+
+  /** Per table: row count and order-independent row-hash checksum. */
+  private def checksums(tables: Map[String, DataFrame]): Map[String, Seq[Any]] =
+    tables.map { case (n, df) =>
+      n -> TableChecksum.checksum(df, TableChecksum.serialized(df.columns.toSeq.map(col)))
+        .head().toSeq
+    }
+
+  test("two runs stage identical rows in all six tables, trip_id included") {
+    result
+    // fresh reads: an earlier re-run replaced the files `result` lists
+    val first = checksums(BikesharePipeline.tableNames
+      .map(n => n -> spark.table(s"graft_test.$n")).toMap)
+    val second = checksums(BikesharePipeline.run(
+      spark, fixture("trips.csv"), fixture("weather.csv"), db = "graft_test").tables)
+    assert(second === first)
+  }
+
+  test("run issues no Spark job outside a SQL execution") {
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).isEmpty)
+          outside.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      BikesharePipeline.run(
+        spark, fixture("trips.csv"), fixture("weather.csv"), db = "graft_jobs")
+      ListenerBusAccess.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(outside.isEmpty, s"jobs outside a SQL execution: $outside")
   }
 }

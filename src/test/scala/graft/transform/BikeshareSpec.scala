@@ -12,7 +12,7 @@ import graft.SparkTestBase
 class BikeshareSpec extends SparkTestBase {
 
   private lazy val trips: DataFrame =
-    CsvIngest.csv(spark, fixture("trips.csv"))
+    CsvIngest.csv(spark, fixture("trips.csv"), Some(Bikeshare.tripSchema))
   private lazy val weather: DataFrame =
     CsvIngest.csvStringTyped(spark, fixture("weather.csv"))
   private lazy val cleaned: DataFrame = Bikeshare.cleanTrips(trips)
@@ -27,8 +27,52 @@ class BikeshareSpec extends SparkTestBase {
     assert(cleaned.filter(col("tripduration") === 300).count() === 1)
   }
 
+  test("tripSchema is exactly the schema inference yields (FIXTURES.md §1)") {
+    assert(Bikeshare.tripSchema === CsvIngest.csv(spark, fixture("trips.csv")).schema)
+  }
+
+  test("pinned read fails on a CSV whose header differs from the schema") {
+    // the fixture with its start and end station ids swapped, header
+    // AND values: a positional bind would silently swap the two sides
+    val lines = scala.util.Using.resource(
+      scala.io.Source.fromFile(fixture("trips.csv")))(_.getLines().toList)
+    val header = lines.head.split(",", -1)
+    val (i, j) = (header.indexOf("start station id"), header.indexOf("end station id"))
+    def swap(line: String): String = {
+      val f = line.split(",", -1)
+      f.updated(i, f(j)).updated(j, f(i)).mkString(",")
+    }
+    val dir = new java.io.File("target/test_swapped_trips")
+    dir.mkdirs()
+    val path = new java.io.File(dir, "trips.csv").toPath
+    java.nio.file.Files.write(path, lines.map(swap).mkString("\n").getBytes("UTF-8"))
+    val e = intercept[Exception] {
+      CsvIngest.csv(spark, path.toString, Some(Bikeshare.tripSchema)).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).mkString("\n")
+    assert(messages.contains("does not conform to the schema"), messages)
+  }
+
+  test("single-scan stationDim over keptTrips equals the union over cleanTrips") {
+    def side(prefix: String): DataFrame =
+      cleaned
+        .filter(col("bikeid").isNotNull)
+        .select(
+          col(s"$prefix station id").as("station_id"),
+          col(s"$prefix station name").as("name"),
+          col(s"$prefix station longitude").as("longitude"),
+          col(s"$prefix station latitude").as("latitude"))
+    val unionForm = side("start").union(side("end")).distinct()
+    val singleScan = Bikeshare.stationDim(Bikeshare.keptTrips(trips))
+    assert(singleScan.schema.map(f => f.name -> f.dataType) ===
+      unionForm.schema.map(f => f.name -> f.dataType))
+    assert(singleScan.collect().toSet === unionForm.collect().toSet)
+    assert(singleScan.count() === unionForm.count())
+  }
+
   test("stationDim unions both sides and dedups (fixes etl.py:103 bug)") {
-    val dim = Bikeshare.stationDim(cleaned)
+    val dim = Bikeshare.stationDim(Bikeshare.keptTrips(trips))
     assert(dim.columns.toSeq ===
       Seq("station_id", "name", "longitude", "latitude"))
     val ids = dim.select("station_id").collect().map(_.getInt(0)).sorted
