@@ -87,13 +87,7 @@ object BandIndex {
       preSketched: Option[DataFrame] = None): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
-    // a rebuild starts a fresh index life (the LexicalIndex.build
-    // discipline): stale tombstones would hide rebuilt docs, stale
-    // markers would skip the first append reusing an old batch id,
-    // and a stale snapshot would point reads at a vanished base
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    LsmLayout.startIndexLife(spark, path)
     val sk = preSketched.getOrElse(sketchRelation(
       docs, idCol, textCol, shingleWidth, numHashes, bands))
     // sigs/, postings/ and meta/ are disjoint relations (the first two
@@ -137,8 +131,13 @@ object BandIndex {
       writerEpoch: Option[Long] = None,
       preSketched: Option[DataFrame] = None): Unit = {
     val spark = delta.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    if (!LsmLayout.isApplied(spark, path, batchId)) {
+    // file-count hygiene under continuous ingest (the s46 policy):
+    // postings/sigs need no read-side fold — generations only multiply
+    // the files/dirs a probe lists — so the bound is about scan
+    // metadata, not answer shape
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/sigs", "gen=",
+      compact(spark, path, _)) {
       val (numHashes, bands, shingleWidth) = metaOf(spark, path)
       // preSketched: the caller already built (and materialized) the
       // delta's [[sketchRelation]] with THIS index's meta — reuse it
@@ -147,36 +146,19 @@ object BandIndex {
         delta, idCol, textCol, shingleWidth, numHashes, bands))
       // disjoint generation directories under disjoint relations —
       // the two delta-sized writes overlap (the build discipline); the
-      // applied marker below still lands only after BOTH settle
+      // applied marker still lands only after BOTH settle
       Overlap.all(spark)(
-        () => sk.select(col("doc_id"), col("sig"))
-          .withColumn("gen", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen")
-          .parquet(s"$path/sigs"),
-        () => sk
-          .select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "band_val")))
-          .withColumn("gen", lit(batchId))
-          .repartition(col("band"))
-          .sortWithinPartitions(col("band_val"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen", "band")
-          .parquet(s"$path/postings"))
-      LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      LsmLayout.markApplied(spark, path, batchId)
+        () => LsmLayout.writeGeneration(
+          sk.select(col("doc_id"), col("sig")).withColumn("gen", lit(batchId)),
+          s"$path/sigs", "gen"),
+        () => LsmLayout.writeGeneration(
+          sk.select(col("doc_id"),
+              posexplode(col("bh")).as(Seq("band", "band_val")))
+            .withColumn("gen", lit(batchId))
+            .repartition(col("band"))
+            .sortWithinPartitions(col("band_val")),
+          s"$path/postings", "gen", "band"))
     }
-    // file-count hygiene under continuous ingest (the s46 policy):
-    // postings/sigs need no read-side fold — generations only multiply
-    // the files/dirs a probe lists — so the bound is about scan
-    // metadata, not answer shape. LIVE count: physical dirs include
-    // superseded generations awaiting GC, which would re-trip the
-    // policy on every append.
-    if (compactAfterGenerations > 0 &&
-      LsmLayout.liveGenerationCount(spark, path, s"$path/sigs") >
-        compactAfterGenerations)
-      compact(spark, path, writerEpoch)
   }
 
   /** Right-to-be-forgotten deletes (the s40 discipline applied to the
@@ -193,33 +175,9 @@ object BandIndex {
       idCol: String,
       path: String,
       batchId: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val spark = forgetIds.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (LsmLayout.isApplied(spark, path, gen)) return
-    val ids = forgetIds.select(col(idCol).as("doc_id")).distinct()
-    val snap = LsmLayout.snapshot(spark, path)
-    val fresh = LsmLayout.pendingTombstonesSized(spark, path, snap) match {
-      case None => ids
-      case Some((ts, bytes)) => ids.join(
-        LsmLayout.hintBroadcast(ts
-          .filter(col("batch") =!= batchId)
-          .select(col("doc_id")), bytes),
-        Seq("doc_id"), "left_anti")
-    }
-    val (forget, ckIds, nForget) = IterationCheckpoint.localCounted(fresh)
-    if (nForget > 0L)
-      forget
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/tombstones")
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.markApplied(spark, path, gen)
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
+      writerEpoch)
 
   /** Fold the layout back to one generation and drop tombstoned rows
     * physically (the LSM compaction half) — SNAPSHOT-ATOMICALLY for
@@ -237,51 +195,26 @@ object BandIndex {
     * a parquet path cannot be overwritten while a live plan reads it). */
   def compact(
       spark: SparkSession, path: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/postings", "gen=", newBase)
-    LsmLayout.clearStaleGeneration(spark, s"$path/sigs", "gen=", newBase)
+      writerEpoch: Option[Long] = None): Unit =
     // the two relation folds are independent (disjoint read and write
-    // directories) — overlap them; the manifest flip below still lands
-    // only after BOTH settle
-    Overlap.all(spark)(
-      () => {
-        val (post, postIds, _) = IterationCheckpoint.localCounted(
-          postingsScoped(spark, path, None, snap))
-        post
-          .withColumn("gen", lit(newBase))
-          .repartition(col("band")).sortWithinPartitions(col("band_val"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen", "band")
-          .parquet(s"$path/postings")
-        IterationCheckpoint.release(spark.sparkContext, postIds)
-      },
-      () => {
-        val (sigs, sigIds, _) = IterationCheckpoint.localCounted(
-          signaturesScoped(spark, path, None, snap))
-        sigs
-          .withColumn("gen", lit(newBase))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen")
-          .parquet(s"$path/sigs")
-        IterationCheckpoint.release(spark.sparkContext, sigIds)
-      })
-    val folded = snap.folded ++
-      (LsmLayout.liveGenerationNames(spark, s"$path/postings", "gen=", snap) ++
-        LsmLayout.liveGenerationNames(spark, s"$path/sigs", "gen=", snap))
-        .filterNot(_ == snap.base)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ LsmLayout.liveTombstoneBatches(spark, path, snap))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/postings", "gen="), (s"$path/sigs", "gen=")),
-      snap, next)
-  }
+    // directories) — they overlap; the manifest flip covers both
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      foldedRelations(path)) { fold =>
+      Seq(
+        () => LsmLayout.writeGeneration(
+          fold.checkpointed(postingsScoped(spark, path, None, fold.snap))
+            .withColumn("gen", lit(fold.newBase))
+            .repartition(col("band")).sortWithinPartitions(col("band_val")),
+          s"$path/postings", "gen", "band"),
+        () => LsmLayout.writeGeneration(
+          fold.checkpointed(signaturesScoped(spark, path, None, fold.snap))
+            .withColumn("gen", lit(fold.newBase)),
+          s"$path/sigs", "gen"))
+    }
+
+  /** The two relations a compact folds (and its GC sweeps). */
+  private[operators] def foldedRelations(path: String): Seq[(String, String)] =
+    Seq((s"$path/postings", "gen="), (s"$path/sigs", "gen="))
 
   /** Delta-vs-corpus near-dup pairs served from the stored index:
     * (delta_id, corpus_id, jaccard) for every delta doc whose exact

@@ -80,10 +80,7 @@ object ChunkStore {
       docs: DataFrame, idCol: String, textCol: String,
       path: String, maskBits: Int = 4): Unit = {
     val spark = docs.sparkSession
-    // a rebuild starts a fresh index life (the LexicalIndex discipline)
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    LsmLayout.startIndexLife(spark, path)
     val rows = Materialize.shared(chunkRows(docs, idCol, textCol, maskBits))
     // store/, manifest/ and the one-row meta are disjoint relations
     // (the first two derive from the shared chunk rows, computed once
@@ -130,83 +127,64 @@ object ChunkStore {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    if (LsmLayout.isApplied(spark, path, batchId)) {
-      maybeAutoCompact(spark, path, compactAfterGenerations, writerEpoch)
-      return
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/manifest", "gen=",
+      compact(spark, path, _)) {
+      val maskBits = LsmLayout.cachedMetaRow(spark, s"$path/meta")
+        .getAs[Long]("mask_bits").toInt
+      val snap = LsmLayout.snapshot(spark, path)
+      // the manifest sequence number: the metadata-monotone ingest
+      // ordinal (shared spelling) — NEVER restarts at a compact (folded
+      // names accumulate in the snapshot), which is what makes `seq` a
+      // corpus-wide time-travel pin: the old live-count spelling
+      // restarted at every fold, so a post-compact refresh could mint a
+      // seq below a superseded version's and latest-wins would resolve
+      // an EDITED doc to its stale text. Identical under retry (own dir
+      // excluded), no data read.
+      val seq = LsmLayout.committedGenerationOrdinal(
+        spark, s"$path/manifest", "gen=", snap, batchId)
+      val rows = Materialize.shared(chunkRows(delta, idCol, textCol, maskBits))
+      val cand = rows.groupBy(col("chunk_h"))
+        .agg(min(col("chunk")).as("chunk"))
+      // which candidate hashes the store already holds: the delta hash
+      // set broadcasts onto a map-only, hash-column-pruned store scan,
+      // and the (delta-bounded) hit list broadcasts back into the
+      // anti-join — so the corpus-sized store NEVER enters an exchange
+      // on the refresh path (a plain delta-anti-store join would shuffle
+      // the store's full hash column per micro-batch). LIVE generations
+      // only, and that is CORRECTNESS, not hygiene: a superseded
+      // generation awaiting GC may hold a chunk the refcount sweep
+      // reclaimed — counting it as "present" would skip re-storing a
+      // chunk no live generation holds, and reconstruction would lose it.
+      val storeLive = LsmLayout
+        .liveGenerationNames(spark, s"$path/store", "gen=", snap)
+        .filterNot(_ == batchId)
+      val present = LsmLayout
+        .readGenerations(spark, s"$path/store", "gen=", storeLive)
+        .select(col("chunk_h"))
+        .join(broadcast(cand.select(col("chunk_h"))),
+          Seq("chunk_h"), "left_semi")
+      // the store and manifest generations are disjoint relations from
+      // the one shared (materialized) chunk projection — write them
+      // CONCURRENTLY; the marker below lands only after both settle. The
+      // new-chunk plan's self-read of the store is safe by construction
+      // (it reads explicit live generation paths that EXCLUDE this
+      // batch's own directory, and the dynamic overwrite replaces only
+      // gen=<batch> — the compact() ledger-fold disjointness argument),
+      // so the old delta-sized eager checkpoint bought nothing but one
+      // extra materialization pass per refresh.
+      Overlap.all(spark)(
+        () => LsmLayout.writeGeneration(
+          cand.join(broadcast(present), Seq("chunk_h"), "left_anti")
+            .withColumn("gen", lit(batchId)),
+          s"$path/store", "gen"),
+        () => LsmLayout.writeGeneration(
+          rows.select(col("doc_id"), col("pos"), col("chunk_h"))
+            .withColumn("seq", lit(seq))
+            .withColumn("gen", lit(batchId)),
+          s"$path/manifest", "gen"))
     }
-    val maskBits = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-      .getAs[Long]("mask_bits").toInt
-    val snap = LsmLayout.snapshot(spark, path)
-    // the manifest sequence number: the metadata-monotone ingest
-    // ordinal (shared spelling) — NEVER restarts at a compact (folded
-    // names accumulate in the snapshot), which is what makes `seq` a
-    // corpus-wide time-travel pin: the old live-count spelling
-    // restarted at every fold, so a post-compact refresh could mint a
-    // seq below a superseded version's and latest-wins would resolve
-    // an EDITED doc to its stale text. Identical under retry (own dir
-    // excluded), no data read.
-    val seq = LsmLayout.committedGenerationOrdinal(
-      spark, s"$path/manifest", "gen=", snap, batchId)
-    val rows = Materialize.shared(chunkRows(delta, idCol, textCol, maskBits))
-    val cand = rows.groupBy(col("chunk_h"))
-      .agg(min(col("chunk")).as("chunk"))
-    // which candidate hashes the store already holds: the delta hash
-    // set broadcasts onto a map-only, hash-column-pruned store scan,
-    // and the (delta-bounded) hit list broadcasts back into the
-    // anti-join — so the corpus-sized store NEVER enters an exchange
-    // on the refresh path (a plain delta-anti-store join would shuffle
-    // the store's full hash column per micro-batch). LIVE generations
-    // only, and that is CORRECTNESS, not hygiene: a superseded
-    // generation awaiting GC may hold a chunk the refcount sweep
-    // reclaimed — counting it as "present" would skip re-storing a
-    // chunk no live generation holds, and reconstruction would lose it.
-    val storeLive = LsmLayout
-      .liveGenerationNames(spark, s"$path/store", "gen=", snap)
-      .filterNot(_ == batchId)
-    val present = LsmLayout
-      .readGenerations(spark, s"$path/store", "gen=", storeLive)
-      .select(col("chunk_h"))
-      .join(broadcast(cand.select(col("chunk_h"))),
-        Seq("chunk_h"), "left_semi")
-    // the store and manifest generations are disjoint relations from
-    // the one shared (materialized) chunk projection — write them
-    // CONCURRENTLY; the marker below lands only after both settle. The
-    // new-chunk plan's self-read of the store is safe by construction
-    // (it reads explicit live generation paths that EXCLUDE this
-    // batch's own directory, and the dynamic overwrite replaces only
-    // gen=<batch> — the compact() ledger-fold disjointness argument),
-    // so the old delta-sized eager checkpoint bought nothing but one
-    // extra materialization pass per refresh.
-    Overlap.all(spark)(
-      () => cand.join(broadcast(present), Seq("chunk_h"), "left_anti")
-        .withColumn("gen", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(s"$path/store"),
-      () => rows.select(col("doc_id"), col("pos"), col("chunk_h"))
-        .withColumn("seq", lit(seq))
-        .withColumn("gen", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(s"$path/manifest"))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.markApplied(spark, path, batchId)
-    maybeAutoCompact(spark, path, compactAfterGenerations, writerEpoch)
   }
-
-  /** The s46 generation-count policy, shared by the fresh and the
-    * already-applied retry paths of [[refresh]] (the IvfLayout shape:
-    * a clean retry must still honor the compaction budget). */
-  private def maybeAutoCompact(
-      spark: SparkSession, path: String, compactAfterGenerations: Int,
-      writerEpoch: Option[Long]): Unit =
-    if (compactAfterGenerations > 0 &&
-      LsmLayout.liveGenerationCount(spark, path, s"$path/manifest") >
-        compactAfterGenerations)
-      compact(spark, path, writerEpoch)
 
   /** The serving manifest relation: tombstoned docs dropped (the
     * forget-set anti-joins broadcast — a delete is visible before any
@@ -226,13 +204,8 @@ object ChunkStore {
       spark: SparkSession, path: String,
       snap: Option[LayoutSnapshot] = None,
       asOf: Option[Long] = None): DataFrame = {
-    val sn = snap.getOrElse(LsmLayout.snapshot(spark, path))
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/manifest", "gen=", sn)
-    val man = LsmLayout
-      .readGenerations(spark, s"$path/manifest", "gen=", live)
-      .drop("gen")
-    val scoped = LsmLayout.antiJoinTombstones(spark, path, sn, man, "doc_id")
+    val scoped = manifestsScoped(spark, path,
+      snap.getOrElse(LsmLayout.snapshot(spark, path)))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
     asOf.fold(scoped)(g => scoped.filter(col("seq") <= g))
       .withColumn("graft__mx", max(col("seq")).over(w))
@@ -240,6 +213,18 @@ object ChunkStore {
       .filter(col("seq") === col("graft__mx"))
       .select(col("doc_id"), col("pos"), col("chunk_h"),
         col("graft__mn").as("seq"))
+  }
+
+  /** Every live manifest version of a snapshot, tombstoned docs
+    * dropped. */
+  private def manifestsScoped(
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame = {
+    val live = LsmLayout.liveGenerationNames(
+      spark, s"$path/manifest", "gen=", snap)
+    LsmLayout.antiJoinTombstones(spark, path, snap,
+      LsmLayout.readGenerations(spark, s"$path/manifest", "gen=", live)
+        .drop("gen"),
+      "doc_id")
   }
 
   /** Lossless reconstruction from the two stored tables: the surviving
@@ -324,33 +309,9 @@ object ChunkStore {
   def tombstone(
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val spark = forgetIds.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (LsmLayout.isApplied(spark, path, gen)) return
-    val ids = forgetIds.select(col(idCol).as("doc_id")).distinct()
-    val fresh = LsmLayout.pendingTombstonesSized(
-      spark, path, LsmLayout.snapshot(spark, path)) match {
-      case None => ids
-      case Some((ts, bytes)) => ids.join(
-        LsmLayout.hintBroadcast(ts
-          .filter(col("batch") =!= batchId)
-          .select(col("doc_id")), bytes),
-        Seq("doc_id"), "left_anti")
-    }
-    val (forget, ckIds, nForget) = IterationCheckpoint.localCounted(fresh)
-    if (nForget > 0L)
-      forget
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/tombstones")
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.markApplied(spark, path, gen)
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
+      writerEpoch)
 
   /** Fold the layout to one generation with PHYSICAL reclamation:
     * manifests fold to the surviving latest version per doc (dropping
@@ -365,57 +326,13 @@ object ChunkStore {
     * never restarts — the monotone-ordinal contract). */
   def compact(
       spark: SparkSession, path: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/manifest", "gen=", newBase)
-    LsmLayout.clearStaleGeneration(spark, s"$path/store", "gen=", newBase)
+      writerEpoch: Option[Long] = None): Unit =
     // per-row `seq` is PRESERVED through the fold (the KMV compact
     // discipline): membership pins keep resolving exactly across
     // compacts — what collapses is superseded VERSION history (and
     // with it the swept chunks), per the reconstruct() contract
-    val (man, manIds, _) = IterationCheckpoint.localCounted(
+    foldVersions(spark, path, writerEpoch)(snap =>
       latestManifests(spark, path, Some(snap)))
-    // the manifest rewrite and the refcount-swept store rewrite both
-    // consume the checkpointed manifest fold and write disjoint
-    // relations — overlap them; the one manifest flip below still
-    // covers both only after both settle
-    Overlap.all(spark)(
-      () => man
-        .withColumn("gen", lit(newBase))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(s"$path/manifest"),
-      () => {
-        val (store, storeIds, _) = IterationCheckpoint.localCounted(
-          storeScoped(spark, path, snap)
-            .join(man.select(col("chunk_h")).distinct(), Seq("chunk_h"),
-              "left_semi"))
-        store
-          .withColumn("gen", lit(newBase))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen")
-          .parquet(s"$path/store")
-        IterationCheckpoint.release(spark.sparkContext, storeIds)
-      })
-    IterationCheckpoint.release(spark.sparkContext, manIds)
-    // ONE manifest flip covers both relations: a reader never joins a
-    // swept store against un-folded manifests (or vice versa)
-    val folded = snap.folded ++
-      Seq("manifest", "store").flatMap(rel =>
-        LsmLayout.liveGenerationNames(spark, s"$path/$rel", "gen=", snap))
-        .filterNot(_ == snap.base)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ LsmLayout.liveTombstoneBatches(spark, path, snap))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/manifest", "gen="), (s"$path/store", "gen=")),
-      snap, next)
-  }
 
   /** History-retention vacuum — the s27 "keep the last N" lifecycle op
     * applied to the layout's VERSION history (the generalized
@@ -434,68 +351,45 @@ object ChunkStore {
     * `writerEpoch` fences the flip and the GC. */
   def retentionVacuum(
       spark: SparkSession, path: String, keepFrom: Long,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/manifest", "gen=", newBase)
-    LsmLayout.clearStaleGeneration(spark, s"$path/store", "gen=", newBase)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/manifest", "gen=", snap)
-    val man0 = LsmLayout
-      .readGenerations(spark, s"$path/manifest", "gen=", live)
-      .drop("gen")
-    val scoped = LsmLayout.antiJoinTombstones(spark, path, snap, man0,
-      "doc_id")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    // per doc, over the narrow manifest: the floor version (max seq at
-    // or below keepFrom — null when the doc only exists after the
-    // floor) and the first-appearance ordinal; ONE window computes both
-    val kept = scoped
-      .withColumn("graft__fl",
-        max(when(col("seq") <= keepFrom, col("seq"))).over(w))
-      .withColumn("graft__mn", min(col("seq")).over(w))
-      .filter(col("seq") > keepFrom || col("seq") === col("graft__fl"))
-      .select(col("doc_id"), col("pos"), col("chunk_h"),
-        when(col("seq") === col("graft__fl"), col("graft__mn"))
-          .otherwise(col("seq")).as("seq"))
-    val (man, manIds, _) = IterationCheckpoint.localCounted(kept)
-    // manifest rewrite + refcount-swept store rewrite, disjoint
-    // relations from the checkpointed fold — overlap (the compact
-    // spelling); the one manifest flip below covers both
-    Overlap.all(spark)(
-      () => man
-        .withColumn("gen", lit(newBase))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(s"$path/manifest"),
-      () => {
-        val (store, storeIds, _) = IterationCheckpoint.localCounted(
-          storeScoped(spark, path, snap)
+      writerEpoch: Option[Long] = None): Unit =
+    foldVersions(spark, path, writerEpoch) { snap =>
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+      // per doc, over the narrow manifest: the floor version (max seq at
+      // or below keepFrom — null when the doc only exists after the
+      // floor) and the first-appearance ordinal; ONE window computes both
+      manifestsScoped(spark, path, snap)
+        .withColumn("graft__fl",
+          max(when(col("seq") <= keepFrom, col("seq"))).over(w))
+        .withColumn("graft__mn", min(col("seq")).over(w))
+        .filter(col("seq") > keepFrom || col("seq") === col("graft__fl"))
+        .select(col("doc_id"), col("pos"), col("chunk_h"),
+          when(col("seq") === col("graft__fl"), col("graft__mn"))
+            .otherwise(col("seq")).as("seq"))
+    }
+
+  /** The fold both [[compact]] and [[retentionVacuum]] commit: the
+    * `manifests` projection of the snapshot, checkpointed once, is
+    * rewritten as the new manifest base while the refcount-swept store
+    * (every chunk some kept manifest row references) is rewritten
+    * beside it — disjoint relations, overlapped; ONE manifest flip
+    * covers both, so a reader never joins a swept store against
+    * un-folded manifests (or vice versa). */
+  private def foldVersions(
+      spark: SparkSession, path: String, writerEpoch: Option[Long])(
+      manifests: LayoutSnapshot => DataFrame): Unit =
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      Seq((s"$path/manifest", "gen="), (s"$path/store", "gen="))) { fold =>
+      val man = fold.checkpointed(manifests(fold.snap))
+      Seq(
+        () => LsmLayout.writeGeneration(
+          man.withColumn("gen", lit(fold.newBase)), s"$path/manifest", "gen"),
+        () => LsmLayout.writeGeneration(
+          fold.checkpointed(storeScoped(spark, path, fold.snap)
             .join(man.select(col("chunk_h")).distinct(), Seq("chunk_h"),
               "left_semi"))
-        store
-          .withColumn("gen", lit(newBase))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen")
-          .parquet(s"$path/store")
-        IterationCheckpoint.release(spark.sparkContext, storeIds)
-      })
-    IterationCheckpoint.release(spark.sparkContext, manIds)
-    val folded = snap.folded ++
-      Seq("manifest", "store").flatMap(rel =>
-        LsmLayout.liveGenerationNames(spark, s"$path/$rel", "gen=", snap))
-        .filterNot(_ == snap.base)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ LsmLayout.liveTombstoneBatches(spark, path, snap))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/manifest", "gen="), (s"$path/store", "gen=")),
-      snap, next)
-  }
+            .withColumn("gen", lit(fold.newBase)),
+          s"$path/store", "gen"))
+    }
 
   /** Reclamation report: how much of the store a [[compact]] refcount
     * sweep would drop — live rows (referenced by some surviving latest

@@ -106,15 +106,6 @@ object ClusterRegistry {
 
   private val BaseBatch = "base"
 
-  /** Hygiene bound for the SECONDARY relations a registry compact
-    * folds (the text ledger and the internal band index): with no
-    * tombstones pending, their rewrite runs only once this many
-    * generations are live — they are read via explicit generation
-    * paths (ledger reads additionally prune by hash bucket), so extra
-    * generations cost directory fan-out, not read shape, and count
-    * alone never forces a corpus-sized rewrite (see [[compact]]). */
-  private val LedgerFoldAfterGenerations = 8
-
   /** The ledger's bucket function — the PORTABLE md5-derived hash (an
     * engine-local hash could not be re-derived by an external reader),
     * computed from the id's STRING form so the same value buckets
@@ -135,10 +126,7 @@ object ClusterRegistry {
       path: String, threshold: Double = 0.8,
       ledgerBuckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    // a rebuild starts a fresh index life (the LexicalIndex discipline)
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    LsmLayout.startIndexLife(spark, path)
     // ONE corpus sketch feeds both the index build and the batch
     // clustering (previously each ran its own scan→shingle→sketch
     // chain over the full corpus). The geometry comes from BandIndex's
@@ -393,15 +381,13 @@ object ClusterRegistry {
       // read — the replay input is the state before the batch either
       // way, appended or mid-append.
       val ledgerFut = Overlap.future(spark)(
-        Trace("reg.ingest:ledger-append")(delta
-          .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-          .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
-          .repartition(col("bucket"))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch", "bucket")
-          .parquet(s"$path/ledger")))
+        Trace("reg.ingest:ledger-append")(LsmLayout.writeGeneration(
+          delta
+            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+            .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
+            .repartition(col("bucket"))
+            .withColumn("batch", lit(batchId)),
+          s"$path/ledger", "batch", "bucket")))
       var bandFut: Overlap.Task[Unit] = null
       try {
         // the probe corpus keeps the ledger's PHYSICAL bucket column
@@ -517,13 +503,11 @@ object ClusterRegistry {
         // explicit-path read shape already excludes; the heavy
         // subtrees (edges, components, the fold overlay) are persisted
         // above, so the write job re-executes none of them.
-        Trace("reg.ingest:gen-write")(deltaAssign.unionByName(remapRows)
-          .withColumn("gen", lit(nextGen))
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(s"$path/assignments"))
+        Trace("reg.ingest:gen-write")(LsmLayout.writeGeneration(
+          deltaAssign.unionByName(remapRows)
+            .withColumn("gen", lit(nextGen))
+            .withColumn("batch", lit(batchId)),
+          s"$path/assignments", "batch"))
         // the ledger AND band generations must be committed before the
         // batch is marked applied (the marker asserts EVERY registry
         // relation — assignments, ledger, internal band — holds the
@@ -531,8 +515,7 @@ object ClusterRegistry {
         // overlapped the gen-write window)
         Overlap.await(ledgerFut)
         Overlap.await(bandFut)
-        LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-        LsmLayout.markApplied(spark, path, batchId)
+        LsmLayout.commitApplied(spark, path, batchId, writerEpoch)
       } catch {
         case e: Throwable =>
           // settle in-flight writes before surfacing: no background
@@ -556,16 +539,9 @@ object ClusterRegistry {
     }
     // file-count + overlay-size hygiene (the s46 policy): the fold's
     // broadcast overlay grows with every generation until a compact
-    // folds it into base — one listStatus, no data read. LIVE count
-    // (physical dirs include superseded generations awaiting GC), and
-    // the auto-compact runs under the SAME writer epoch as the ingest:
-    // a superseded writer must not overwrite the new owner's base or
-    // clear its tombstones.
-    if (compactAfterGenerations > 0 &&
-      LsmLayout.liveGenerationCount(
-        spark, path, s"$path/assignments", "batch=") >
-        compactAfterGenerations)
-      compact(spark, path, writerEpoch)
+    // folds it into base — one listStatus, no data read
+    LsmLayout.autoCompact(spark, path, s"$path/assignments", "batch=",
+      compactAfterGenerations, writerEpoch)(compact(spark, path, _))
   }
 
   /** One-row `(n_live, n_dead)` over the physically-present assignment
@@ -599,32 +575,8 @@ object ClusterRegistry {
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
       writerEpoch: Option[Long] = None): Unit = {
-    val spark = forgetIds.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (!LsmLayout.isApplied(spark, path, gen)) {
-      val ids = forgetIds.select(col(idCol).as("doc_id")).distinct()
-      val fresh = LsmLayout.pendingTombstonesSized(
-        spark, path, LsmLayout.snapshot(spark, path)) match {
-        case None => ids
-        case Some((ts, bytes)) => ids.join(
-          LsmLayout.hintBroadcast(ts
-            .filter(col("batch") =!= batchId)
-            .select(col("doc_id")), bytes),
-          Seq("doc_id"), "left_anti")
-      }
-      val (forget, ckIds, nForget) = IterationCheckpoint.localCounted(fresh)
-      if (nForget > 0L)
-        forget
-          .withColumn("batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(s"$path/tombstones")
-      LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      LsmLayout.markApplied(spark, path, gen)
-      IterationCheckpoint.release(spark.sparkContext, ckIds)
-    }
+    LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
+      writerEpoch)
     // the probe side must forget too (its own marker, under band/)
     BandIndex.tombstone(forgetIds, idCol, s"$path/band", batchId,
       writerEpoch = writerEpoch)
@@ -649,101 +601,45 @@ object ClusterRegistry {
   def compact(
       spark: SparkSession, path: String,
       writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(
-      spark, s"$path/assignments", "batch=", newBase)
-    LsmLayout.clearStaleGeneration(spark, s"$path/ledger", "batch=", newBase)
-    val liveTs = LsmLayout.liveTombstoneBatches(spark, path, snap)
-    val ledgerLive = LsmLayout.liveGenerationNames(
-      spark, s"$path/ledger", "batch=", snap.ledgerView)
-    // The corpus-sized ledger rewrite runs only when it has WORK to
-    // do: pending tombstones (the GDPR contract — forgotten text must
-    // leave the stored ledger physically at compact) or a generation
-    // count past the hygiene bound. Ledger reads prune by hash bucket
-    // and read explicit generation paths, so extra ledger generations
-    // cost directory fan-out, not scan bytes — unlike assignment
-    // generations, they do NOT grow the read fold's overlay. A
-    // generation-count-triggered compact therefore folds the (small)
+    // The corpus-sized ledger rewrite is the second fold track: it runs
+    // only when it has WORK to do (pending tombstones — forgotten text
+    // must leave the stored ledger physically at compact — or past the
+    // hygiene bound, [[LsmLayout.foldDue]]). Ledger reads prune by hash
+    // bucket and read explicit generation paths, so extra ledger
+    // generations cost directory fan-out, not scan bytes — unlike
+    // assignment generations, they do NOT grow the read fold's overlay.
+    // A generation-count-triggered compact therefore folds the (small)
     // assignment log WITHOUT rewriting the stored corpus text: at
     // 100 TB that is the difference between an assignment-sized
     // maintenance op and a full-corpus text pass on every policy trip.
-    val foldLedger = liveTs.nonEmpty ||
-      ledgerLive.size > LedgerFoldAfterGenerations
-    // both folds read explicit live-generation paths and write only
-    // the just-cleared batch=<newBase> directories, so read and write
-    // sets are disjoint by construction — no checkpoint needed
-    // (materializing the corpus-sized relations a second time inside
-    // the one deliberately corpus-sized maintenance op), and the two
-    // folds touch disjoint relations, so they OVERLAP. The ledger fold
-    // is where a forgotten doc's TEXT physically leaves the layout
-    // (the GDPR contract covers the stored ledger, not just ids and
-    // postings); the snapshot commit below lands only after both.
-    Overlap.all(spark)(
-      (Seq(() => Trace("reg.compact:fold-write")(
-        assignments(spark, path)
+    // Both folds read explicit live-generation paths and write only the
+    // just-cleared batch=<newBase> directories, so read and write sets
+    // are disjoint by construction — no checkpoint needed — and they
+    // touch disjoint relations, so they OVERLAP.
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      rels = Seq((s"$path/assignments", "batch=")),
+      secondary = Seq((s"$path/ledger", "batch="))) { fold =>
+      Seq(() => Trace("reg.compact:fold-write")(LsmLayout.writeGeneration(
+        assignmentsScoped(spark, path, None, snapOpt = Some(fold.snap))
           .withColumn("gen", lit(0L))
-          .withColumn("batch", lit(newBase))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch")
-          .parquet(s"$path/assignments"))) ++
-      (if (foldLedger)
-        Seq(() => Trace("reg.compact:ledger-fold")(
-          ledgerScoped(spark, path, None, snap)
+          .withColumn("batch", lit(fold.newBase)),
+        s"$path/assignments", "batch"))) ++
+      (if (fold.foldSecondary)
+        Seq(() => Trace("reg.compact:ledger-fold")(LsmLayout.writeGeneration(
+          ledgerScoped(spark, path, None, fold.snap)
             .repartition(col("bucket"))
-            .withColumn("batch", lit(newBase))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "bucket")
-            .parquet(s"$path/ledger")))
-      else Seq.empty)): _*)
-    // per-relation fold sets (each relation records ONLY its own
-    // folded generation names — the shared-set spelling recorded every
-    // batch twice and the duplicates accumulated across compacts)
-    val folded = snap.folded ++
-      LsmLayout.liveGenerationNames(
-        spark, s"$path/assignments", "batch=", snap)
-        .filterNot(_ == snap.base)
-    val (lbase, lfolded) =
-      if (foldLedger)
-        (newBase,
-          snap.ledgerFolded ++ ledgerLive.filterNot(_ == snap.ledgerBase))
-      else (snap.ledgerBase, snap.ledgerFolded)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ liveTs, Some(lbase), Some(lfolded))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/assignments", "batch=")), snap, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/ledger", "batch=")),
-      snap.ledgerView, next.ledgerView)
-    // the internal band index folds on the SAME policy as the ledger:
+            .withColumn("batch", lit(fold.newBase)),
+          s"$path/ledger", "batch", "bucket")))
+      else Seq.empty)
+    }
+    // the internal band index folds on the SAME rule as the ledger:
     // probes read explicit live generation paths (postings carry
     // per-doc facts, never an overlay fold like the assignments), so
-    // folding buys file hygiene, not read shape — run the two-relation
-    // rewrite only when the band's OWN pending tombstones require
-    // physical drops, or past the hygiene bound
+    // folding buys file hygiene, not read shape
     val bandPath = s"$path/band"
-    val bandSnap = LsmLayout.snapshot(spark, bandPath)
-    val bandTs = LsmLayout.liveTombstoneBatches(spark, bandPath, bandSnap)
-    val bandGens = LsmLayout.liveGenerationNames(
-      spark, s"$bandPath/sigs", "gen=", bandSnap)
-    if (bandTs.nonEmpty || bandGens.size > LedgerFoldAfterGenerations)
+    LsmLayout.compactWhenDue(spark, bandPath,
+      BandIndex.foldedRelations(bandPath))(
       Trace("reg.compact:band")(
-        BandIndex.compact(spark, bandPath, writerEpoch))
-    else
-      // the skipped rewrite still owes the PREVIOUS band compact its
-      // one-cycle-deferred GC: directories only snapshots OLDER than
-      // the current one could reference (superseded bases, folded
-      // generations, applied tombstone batches) are swept without a
-      // manifest flip — exactly the deletion set a second compact
-      // cycle would perform, so physical removal keeps its two-cycle
-      // contract through a skip history
-      LsmLayout.gcSuperseded(spark, bandPath,
-        Seq((s"$bandPath/postings", "gen="), (s"$bandPath/sigs", "gen=")),
-        bandSnap, bandSnap)
+        BandIndex.compact(spark, bandPath, writerEpoch)))
   }
 }

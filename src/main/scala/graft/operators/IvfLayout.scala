@@ -47,9 +47,7 @@ object IvfLayout {
       vecs: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Seq[Double]]): Unit = {
     val spark = vecs.sparkSession
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    LsmLayout.startIndexLife(spark, path)
     LsmLayout.deleteDir(spark, s"$path/centroids")
     // the cell-assigned vectors and the literal centroid table are
     // disjoint relations — write them concurrently (the build
@@ -118,24 +116,17 @@ object IvfLayout {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    if (!LsmLayout.isApplied(spark, path, batchId)) {
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/vectors", "gen=",
+      compact(spark, path, _)) {
       val cents = centroidsOf(spark, path, LsmLayout.snapshot(spark, path))
-      delta
-        .withColumn("cell",
-          Similarity.nearestCell(Similarity.asDouble(col(vecCol)), cents))
-        .withColumn("gen", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen", "cell")
-        .parquet(s"$path/vectors")
-      LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      LsmLayout.markApplied(spark, path, batchId)
+      LsmLayout.writeGeneration(
+        delta
+          .withColumn("cell",
+            Similarity.nearestCell(Similarity.asDouble(col(vecCol)), cents))
+          .withColumn("gen", lit(batchId)),
+        s"$path/vectors", "gen", "cell")
     }
-    if (compactAfterGenerations > 0 &&
-      LsmLayout.liveGenerationCount(spark, path, s"$path/vectors") >
-        compactAfterGenerations)
-      compact(spark, path, writerEpoch)
   }
 
   /** Right-to-be-forgotten deletes: an id list anti-joined on every
@@ -145,33 +136,9 @@ object IvfLayout {
   def tombstone(
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val spark = forgetIds.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (LsmLayout.isApplied(spark, path, gen)) return
-    val ids = forgetIds.select(col(idCol).as("vec_id")).distinct()
-    val fresh = LsmLayout.pendingTombstonesSized(
-      spark, path, LsmLayout.snapshot(spark, path)) match {
-      case None => ids
-      case Some((ts, bytes)) => ids.join(
-        LsmLayout.hintBroadcast(ts
-          .filter(col("batch") =!= batchId)
-          .select(col("vec_id")), bytes),
-        Seq("vec_id"), "left_anti")
-    }
-    val (forget, ckIds, nForget) = IterationCheckpoint.localCounted(fresh)
-    if (nForget > 0L)
-      forget
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/tombstones")
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.markApplied(spark, path, gen)
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    LsmLayout.tombstoneIds(forgetIds, idCol, "vec_id", path, batchId,
+      writerEpoch)
 
   /** Fold generations to one and drop tombstoned vectors physically;
     * markers kept, forget-set retired (the shared compact contract).
@@ -180,26 +147,16 @@ object IvfLayout {
     * `writerEpoch` fences the flip and the GC. */
   def compact(
       spark: SparkSession, path: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/vectors", "gen=", newBase)
-    val (rows, ckIds, _) = IterationCheckpoint.localCounted(
-      vectorsScoped(spark, path, snap))
-    rows
-      .withColumn("gen", lit(newBase))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("gen", "cell")
-      .parquet(s"$path/vectors")
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-    // the quantizer is unchanged — carry its table forward under the
-    // new base name (nlist rows, metadata-sized) so readers of either
-    // snapshot resolve a matching (vectors, centroids) pair
-    writeCentroids(spark, path, newBase, centroidsOf(spark, path, snap))
-    commitBaseSwap(spark, path, snap, newBase, writerEpoch)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    swapBase(spark, path, writerEpoch) { fold =>
+      writeVectors(path, fold, fold.checkpointed(
+        vectorsScoped(spark, path, fold.snap)))
+      // the quantizer is unchanged — carry its table forward under the
+      // new base name (nlist rows, metadata-sized) so readers of either
+      // snapshot resolve a matching (vectors, centroids) pair
+      writeCentroids(spark, path, fold.newBase,
+        centroidsOf(spark, path, fold.snap))
+    }
 
   /** Re-centroid the layout — the quantizer maintenance op the rest of
     * the lifecycle ([[refresh]]/[[tombstone]]/[[compact]]) deliberately
@@ -225,84 +182,70 @@ object IvfLayout {
       spark: SparkSession, path: String,
       rounds: Int = 5,
       nlist: Option[Int] = None,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/vectors", "gen=", newBase)
-    val (live, ckIds, _) = IterationCheckpoint.localCounted(
-      vectorsScoped(spark, path, snap))
-    // seed = stored centroids on KMeans' 1e-6 grid; the trained row is
-    // nlist×dim longs — ONE driver-side head() of plan-time metadata.
-    // `nlist` RE-SIZES the quantizer (the FAISS guidance is nlist ∝ √N
-    // for probes, ∝ N for constant cell occupancy — a build-time nlist
-    // is mis-sized once the corpus has grown 100×): growing pads the
-    // seed with the lowest-vec_id live vectors not already nearest an
-    // existing seed (deterministic — stored state + stored ids, so a
-    // retry re-derives the same seed); shrinking keeps the first
-    // `nlist` stored centroids. Lloyd then polishes the combined seed.
-    val stored = centroidsOf(spark, path, snap)
-      .map(_.map(x => math.floor(x * 1e6).toLong))
-    val k = nlist.getOrElse(stored.size)
-    require(k > 0, s"nlist must be positive: $k")
-    val init =
-      if (k <= stored.size) stored.take(k)
-      else {
-        val extra = live
-          .orderBy(col("vec_id"))
-          .limit(k) // ≤ k rows collected — seed-sized, not corpus-sized
-          .select(col("vec_id"),
-            Similarity.asDouble(col("embedding")).as("graft__v"))
-          .collect()
-          .map(r => r.getSeq[Double](1).map(x =>
-            math.floor(x * 1e6).toLong).toSeq)
-          // dedup the extra seeds against the stored centroids AND each
-          // other on the quantized grid: duplicate embeddings among the
-          // lowest-vec_id rows would otherwise yield identical seeds —
-          // permanently dead cells, an effective nlist below the ask
-          .distinct
-          .filterNot(stored.contains)
-          .take(k - stored.size)
-        // a tiny corpus may not fill the requested nlist — train with
-        // what exists (empty cells would keep dead seed centroids)
-        stored ++ extra
-      }
-    val trained = KMeans
-      .trainedCentroidRow(live, "vec_id", "embedding", init, rounds)
-      .head().getSeq[scala.collection.Seq[Long]](0)
-      .map(_.map(_.toDouble / 1e6).toSeq).toSeq
-    live
-      .withColumn("cell",
-        Similarity.nearestCell(
-          Similarity.asDouble(col("embedding")), trained))
-      .withColumn("gen", lit(newBase))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("gen", "cell")
-      .parquet(s"$path/vectors")
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-    writeCentroids(spark, path, newBase, trained)
-    commitBaseSwap(spark, path, snap, newBase, writerEpoch)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    swapBase(spark, path, writerEpoch) { fold =>
+      val live = fold.checkpointed(vectorsScoped(spark, path, fold.snap))
+      // seed = stored centroids on KMeans' 1e-6 grid; the trained row is
+      // nlist×dim longs — ONE driver-side head() of plan-time metadata.
+      // `nlist` RE-SIZES the quantizer (the FAISS guidance is nlist ∝ √N
+      // for probes, ∝ N for constant cell occupancy — a build-time nlist
+      // is mis-sized once the corpus has grown 100×): growing pads the
+      // seed with the lowest-vec_id live vectors not already nearest an
+      // existing seed (deterministic — stored state + stored ids, so a
+      // retry re-derives the same seed); shrinking keeps the first
+      // `nlist` stored centroids. Lloyd then polishes the combined seed.
+      val stored = centroidsOf(spark, path, fold.snap)
+        .map(_.map(x => math.floor(x * 1e6).toLong))
+      val k = nlist.getOrElse(stored.size)
+      require(k > 0, s"nlist must be positive: $k")
+      val init =
+        if (k <= stored.size) stored.take(k)
+        else {
+          val extra = live
+            .orderBy(col("vec_id"))
+            .limit(k) // ≤ k rows collected — seed-sized, not corpus-sized
+            .select(col("vec_id"),
+              Similarity.asDouble(col("embedding")).as("graft__v"))
+            .collect()
+            .map(r => r.getSeq[Double](1).map(x =>
+              math.floor(x * 1e6).toLong).toSeq)
+            // dedup the extra seeds against the stored centroids AND each
+            // other on the quantized grid: duplicate embeddings among the
+            // lowest-vec_id rows would otherwise yield identical seeds —
+            // permanently dead cells, an effective nlist below the ask
+            .distinct
+            .filterNot(stored.contains)
+            .take(k - stored.size)
+          // a tiny corpus may not fill the requested nlist — train with
+          // what exists (empty cells would keep dead seed centroids)
+          stored ++ extra
+        }
+      val trained = KMeans
+        .trainedCentroidRow(live, "vec_id", "embedding", init, rounds)
+        .head().getSeq[scala.collection.Seq[Long]](0)
+        .map(_.map(_.toDouble / 1e6).toSeq).toSeq
+      writeVectors(path, fold, live.withColumn("cell",
+        Similarity.nearestCell(Similarity.asDouble(col("embedding")), trained)))
+      writeCentroids(spark, path, fold.newBase, trained)
+    }
 
-  /** The shared snapshot flip of [[compact]] and [[retrain]]: fold
-    * every live generation into `newBase`, retire the applied
-    * tombstone batches, commit the manifest (epoch-fenced), GC what
-    * only the PREVIOUS snapshot had stopped referencing. */
-  private def commitBaseSwap(
-      spark: SparkSession, path: String, snap: LayoutSnapshot,
-      newBase: String, writerEpoch: Option[Long]): Unit = {
-    val folded = snap.folded ++ LsmLayout
-      .liveGenerationNames(spark, s"$path/vectors", "gen=", snap)
-      .filterNot(_ == snap.base)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ LsmLayout.liveTombstoneBatches(spark, path, snap))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/vectors", "gen="), (s"$path/centroids", "gen=")),
-      snap, next)
-  }
+  /** The shared snapshot flip of [[compact]] and [[retrain]]: `swap`
+    * writes the new (vectors, centroids) pair under the fold's base
+    * name, then one manifest flip folds every live generation into it
+    * and retires the applied tombstone batches; superseded vector
+    * generations and centroid tables are GC'd one cycle later. */
+  private def swapBase(
+      spark: SparkSession, path: String, writerEpoch: Option[Long])(
+      swap: LsmLayout.Fold => Unit): Unit =
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      Seq((s"$path/vectors", "gen="), (s"$path/centroids", "gen="))) { fold =>
+      Seq(() => swap(fold))
+    }
+
+  private def writeVectors(
+      path: String, fold: LsmLayout.Fold, rows: DataFrame): Unit =
+    LsmLayout.writeGeneration(rows.withColumn("gen", lit(fold.newBase)),
+      s"$path/vectors", "gen", "cell")
 
   /** The stored vector relation (vec_id, embedding, …, cell),
     * tombstones applied. Reading through here does NOT prune cells —

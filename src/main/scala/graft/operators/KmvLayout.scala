@@ -75,10 +75,7 @@ object KmvLayout {
       docs: DataFrame, groupCol: String, idCol: String, textCol: String,
       path: String, k: Int = 64, salt: String = "kmvl:"): Unit = {
     val spark = docs.sparkSession
-    // a rebuild starts a fresh index life (the LexicalIndex discipline)
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    LsmLayout.startIndexLife(spark, path)
     // the sketch table and the one-row literal meta are disjoint —
     // write them concurrently (the build discipline shared across the
     // stored layouts; a crashed partial build was never servable in
@@ -106,8 +103,12 @@ object KmvLayout {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    if (!LsmLayout.isApplied(spark, path, batchId)) {
+    // file-count hygiene (the s46 policy): membership pins SURVIVE the
+    // compact (per-row gens are preserved through the fold), so the
+    // threshold is purely a file-hygiene knob here
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/sketches", "batch=",
+      compact(spark, path, _)) {
       val m = LsmLayout.cachedMetaRow(spark, s"$path/meta")
       val (k, salt) = (m.getAs[Long]("k").toInt, m.getAs[String]("hash_salt"))
       // the metadata-monotone ingest ordinal (shared spelling): never
@@ -120,25 +121,12 @@ object KmvLayout {
       val nextGen = LsmLayout.committedGenerationOrdinal(
         spark, s"$path/sketches", "batch=",
         LsmLayout.snapshot(spark, path), batchId)
-      docSketches(delta, groupCol, idCol, textCol, salt, k)
-        .withColumn("gen", lit(nextGen))
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/sketches")
-      LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      LsmLayout.markApplied(spark, path, batchId)
+      LsmLayout.writeGeneration(
+        docSketches(delta, groupCol, idCol, textCol, salt, k)
+          .withColumn("gen", lit(nextGen))
+          .withColumn("batch", lit(batchId)),
+        s"$path/sketches", "batch")
     }
-    // file-count hygiene (the s46 policy). Membership pins SURVIVE the
-    // compact (per-row gens are preserved through the fold), so the
-    // threshold is purely a file-hygiene knob here. LIVE count; the
-    // auto-compact runs under the caller's writer epoch.
-    if (compactAfterGenerations > 0 &&
-      LsmLayout.liveGenerationCount(
-        spark, path, s"$path/sketches", "batch=") >
-        compactAfterGenerations)
-      compact(spark, path, writerEpoch)
   }
 
   /** Right-to-be-forgotten deletes (the s40 discipline applied to the
@@ -154,33 +142,9 @@ object KmvLayout {
   def tombstone(
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val spark = forgetIds.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (LsmLayout.isApplied(spark, path, gen)) return
-    val ids = forgetIds.select(col(idCol).as("doc_id")).distinct()
-    val fresh = LsmLayout.pendingTombstonesSized(
-      spark, path, LsmLayout.snapshot(spark, path)) match {
-      case None => ids
-      case Some((ts, bytes)) => ids.join(
-        LsmLayout.hintBroadcast(ts
-          .filter(col("batch") =!= batchId)
-          .select(col("doc_id")), bytes),
-        Seq("doc_id"), "left_anti")
-    }
-    val (forget, ckIds, nForget) = IterationCheckpoint.localCounted(fresh)
-    if (nForget > 0L)
-      forget
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/tombstones")
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.markApplied(spark, path, gen)
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-  }
+      writerEpoch: Option[Long] = None): Unit =
+    LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
+      writerEpoch)
 
   /** Physically drop tombstoned rows and fold the per-doc rows into
     * one generation directory (file-count hygiene; the per-doc
@@ -196,10 +160,6 @@ object KmvLayout {
   def compact(
       spark: SparkSession, path: String,
       writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    LsmLayout.clearStaleGeneration(spark, s"$path/sketches", "batch=", newBase)
     // per-row `gen` is PRESERVED through the fold (each doc's sketch is
     // written once, at its ingest — the re-ingest contract): a pin
     // `asOf = g` therefore keeps answering with exactly the docs
@@ -208,25 +168,14 @@ object KmvLayout {
     // never had (per-doc sketches are immutable facts), so time travel
     // here is membership-exact, not merely post-compact (gated by the
     // s43 oracle, which now compacts between the refresh and the pin).
-    val (rows, ckIds, _) = IterationCheckpoint.localCounted(
-      docRowsScoped(spark, path, snap)
-        .select(col("group"), col("doc_id"), col("sk"), col("gen")))
-    rows
-      .withColumn("batch", lit(newBase))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(s"$path/sketches")
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-    val folded = snap.folded ++ LsmLayout
-      .liveGenerationNames(spark, s"$path/sketches", "batch=", snap)
-      .filterNot(_ == snap.base)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ LsmLayout.liveTombstoneBatches(spark, path, snap))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/sketches", "batch=")), snap, next)
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      Seq((s"$path/sketches", "batch="))) { fold =>
+      Seq(() => LsmLayout.writeGeneration(
+        fold.checkpointed(docRowsScoped(spark, path, fold.snap)
+          .select(col("group"), col("doc_id"), col("sk"), col("gen")))
+          .withColumn("batch", lit(fold.newBase)),
+        s"$path/sketches", "batch"))
+    }
   }
 
   /** Reclamation report (the deadChunkStats pattern on the sketch

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored inverted shingle index — the warehouse layout behind lexical
@@ -77,14 +77,10 @@ object LexicalIndex {
       n: Int = 3,
       buckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    // a rebuild starts a fresh index life: pending tombstones and
-    // applied-batch markers from the previous life must not survive it
-    // — stale tombstones would silently exclude rebuilt postings while
-    // the fresh lexicon/meta still count them, and stale markers would
-    // skip the first refresh that reuses a batch id from the old life
-    LsmLayout.deleteDir(spark, s"$path/tombstones")
-    LsmLayout.clearApplied(spark, path)
-    LsmLayout.clearSnapshots(spark, path)
+    // a rebuild starts a fresh index life (stale tombstones would
+    // silently exclude rebuilt postings while the fresh lexicon/meta
+    // still count them)
+    LsmLayout.startIndexLife(spark, path)
     // meta/ is disjoint from the postings→lexicon chain (its counts
     // come from the DOCS, not the stored postings — docs shorter than
     // the shingle width have no postings but still count), so its
@@ -122,20 +118,6 @@ object LexicalIndex {
     * writers key their generations by CALLER-SUPPLIED batch id —
     * the idempotency contract (see [[refresh]]). */
   private val BaseGen = "base"
-
-  // the applied-batch markers + batch-id hygiene live in [[LsmLayout]]
-  // (shared with BandIndex/KmvLayout so the idempotency contract cannot
-  // drift between the stored layouts)
-  private[graft] def isApplied(
-      spark: SparkSession, path: String, gen: String): Boolean =
-    LsmLayout.isApplied(spark, path, gen)
-
-  private def markApplied(
-      spark: SparkSession, path: String, gen: String): Unit =
-    LsmLayout.markApplied(spark, path, gen)
-
-  private def requireValidBatchId(batchId: String): Unit =
-    LsmLayout.requireValidBatchId(batchId)
 
   /** The committed LIVE generation directories of the stored lexicon —
     * what the auto-compaction policy counts (physical dirs additionally
@@ -214,7 +196,7 @@ object LexicalIndex {
     * and keep reading live via [[metaRow]]. */
   private[operators] def layoutConstants(
       spark: SparkSession, path: String, snap: LayoutSnapshot): (Int, Int) = {
-    val row = LsmLayout.cachedMetaRow(spark, s"$path/meta/gen=${snap.base}")
+    val row = LsmLayout.cachedMetaRow(spark, s"$path/meta", Some(snap.base))
     (row.getAs[Long]("shingle_n").toInt, row.getAs[Long]("buckets").toInt)
   }
 
@@ -327,8 +309,9 @@ object LexicalIndex {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
-    requireValidBatchId(batchId)
-    if (!isApplied(spark, path, batchId)) {
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/lexicon", "gen=",
+      compact(spark, path, _)) {
       // the layout owns its shingle width and bucket count — caller-
       // supplied values that disagreed with the build would scatter the
       // delta into wrong directories or mix gram widths, silently
@@ -340,41 +323,41 @@ object LexicalIndex {
         .withColumn("gen", lit(batchId))
         .transform(Materialize.shared)
       // three disjoint relations from one shared delta projection —
-      // the writes overlap (the marker below lands after ALL settle;
-      // racing consumers materialize the shared frame once under the
-      // block manager's per-block lock)
+      // the writes overlap (the marker lands after ALL settle; racing
+      // consumers materialize the shared frame once under the block
+      // manager's per-block lock)
       Overlap.all(spark)(
-        () => dposts
-          .repartition(col("bucket")).sortWithinPartitions(col("shingle"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen", "bucket")
-          .parquet(s"$path/postings"),
-        () => dposts.groupBy(col("bucket"), col("shingle"))
-          .agg(count(lit(1)).as("df"))
-          .withColumn("gen", lit(batchId))
-          .repartition(col("bucket")).sortWithinPartitions(col("shingle"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen", "bucket")
-          .parquet(s"$path/lexicon"),
-        () => delta
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col(textCol), " ")).cast("long")).as("n_tokens"))
-          .withColumn("buckets", lit(buckets.toLong))
-          .withColumn("shingle_n", lit(n.toLong))
-          .withColumn("gen", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("gen")
-          .parquet(s"$path/meta"))
-      LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      markApplied(spark, path, batchId)
+        () => writeBucketed(dposts, s"$path/postings"),
+        () => writeBucketed(
+          dposts.groupBy(col("bucket"), col("shingle"))
+            .agg(count(lit(1)).as("df"))
+            .withColumn("gen", lit(batchId)),
+          s"$path/lexicon"),
+        () => LsmLayout.writeGeneration(
+          metaGeneration(delta, textCol, n, buckets, batchId, identity),
+          s"$path/meta", "gen"))
     }
-    if (compactAfterGenerations > 0 &&
-      generationCount(spark, path) > compactAfterGenerations)
-      compact(spark, path)
   }
+
+  /** A (gen, bucket)-partitioned relation, each bucket written by one
+    * task in shingle order (the build's row-group pruning layout). */
+  private def writeBucketed(df: DataFrame, dir: String): Unit =
+    LsmLayout.writeGeneration(
+      df.repartition(col("bucket")).sortWithinPartitions(col("shingle")),
+      dir, "gen", "bucket")
+
+  /** One meta generation row: the docs' counts through `signed` (a
+    * forget batch's generation is negated) plus the layout constants. */
+  private def metaGeneration(
+      docs: DataFrame, textCol: String, n: Int, buckets: Int, gen: String,
+      signed: Column => Column): DataFrame =
+    docs
+      .agg(signed(count(lit(1))).as("n_docs"),
+        signed(sum(size(split(col(textCol), " ")).cast("long")))
+          .as("n_tokens"))
+      .withColumn("buckets", lit(buckets.toLong))
+      .withColumn("shingle_n", lit(n.toLong))
+      .withColumn("gen", lit(gen))
 
   /** Right-to-be-forgotten deletes, LSM-style: the forget-set becomes a
     * tombstone id list (anti-joined on every postings read), a NEGATIVE
@@ -414,71 +397,26 @@ object LexicalIndex {
       batchId: String,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = forgetDocs.sparkSession
-    requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (isApplied(spark, path, gen)) return
-    // ONE snapshot resolution for the whole call: the constants lookup
-    // and the pending-tombstone filter read the same committed state
-    val snap = LsmLayout.snapshot(spark, path)
-    val (n, buckets) = layoutConstants(spark, path, snap)
-    val filtered = LsmLayout.pendingTombstonesSized(
-      spark, path, snap) match {
-      case None => forgetDocs
-      case Some((ts, bytes)) => forgetDocs.join(
-        LsmLayout.hintBroadcast(ts
-          .filter(col("batch") =!= batchId)
-          .select(col("doc_id").as(idCol)), bytes),
-        Seq(idCol), "left_anti")
+    LsmLayout.forgetBatch(spark, path, batchId, writerEpoch, forgetDocs,
+      idCol, "doc_id") { (forget, snap) =>
+      val (n, buckets) = layoutConstants(spark, path, snap)
+      val gen = s"ts-$batchId"
+      // three disjoint relations from the checkpointed forget-set —
+      // overlap the writes (marker after ALL settle)
+      Overlap.all(spark)(
+        () => LsmLayout.writeTombstones(
+          forget.select(col(idCol).as("doc_id")), path, batchId),
+        () => writeBucketed(
+          postingProjection(forget, idCol, textCol, n, buckets)
+            .groupBy(col("bucket"), col("shingle"))
+            .agg((-count(lit(1))).as("df"))
+            .withColumn("gen", lit(gen)),
+          s"$path/lexicon"),
+        () => LsmLayout.writeGeneration(
+          metaGeneration(forget, textCol, n, buckets, gen, -_),
+          s"$path/meta", "gen"))
     }
-    val (forget, ids, nForget) = IterationCheckpoint.localCounted(filtered)
-    if (nForget == 0L) {
-      // everything in this batch was already tombstoned by an earlier
-      // one — commit the no-op (an empty parquet write would leave a
-      // schemaless directory that breaks the tombstone read)
-      markApplied(spark, path, gen)
-      IterationCheckpoint.release(spark.sparkContext, ids)
-      return
-    }
-    // three disjoint relations from the checkpointed forget-set —
-    // overlap the writes (marker after ALL settle)
-    Overlap.all(spark)(
-      () => forget.select(col(idCol).as("doc_id"))
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(s"$path/tombstones"),
-      () => postingProjection(forget, idCol, textCol, n, buckets)
-        .groupBy(col("bucket"), col("shingle"))
-        .agg((-count(lit(1))).as("df"))
-        .withColumn("gen", lit(gen))
-        .repartition(col("bucket")).sortWithinPartitions(col("shingle"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen", "bucket")
-        .parquet(s"$path/lexicon"),
-      () => forget
-        .agg((-count(lit(1))).as("n_docs"),
-          (-sum(size(split(col(textCol), " ")).cast("long"))).as("n_tokens"))
-        .withColumn("buckets", lit(buckets.toLong))
-        .withColumn("shingle_n", lit(n.toLong))
-        .withColumn("gen", lit(gen))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gen")
-        .parquet(s"$path/meta"))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    markApplied(spark, path, gen)
-    IterationCheckpoint.release(spark.sparkContext, ids)
   }
-
-  /** Hygiene bound for the POSTINGS fold (the registry's
-    * LedgerFoldAfterGenerations discipline): with no tombstones
-    * pending, the corpus-sized postings rewrite runs only once this
-    * many generations are live — probes read explicit live-generation
-    * paths, so extra posting generations cost directory fan-out and
-    * per-bucket file count, never read shape or scan bytes. */
-  private val PostingsFoldAfterGenerations = 8
 
   /** Fold accumulated generations back to one — the compaction half
     * of the LSM contract (run when the generation/file count starts to
@@ -516,74 +454,30 @@ object LexicalIndex {
     * must come back). */
   def compact(
       spark: SparkSession, path: String,
-      writerEpoch: Option[Long] = None): Unit = {
-    val snap = LsmLayout.snapshot(spark, path)
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    val newBase = snap.nextBase
-    Seq("postings", "lexicon", "meta").foreach(rel =>
-      LsmLayout.clearStaleGeneration(spark, s"$path/$rel", "gen=", newBase))
-    val liveTs = LsmLayout.liveTombstoneBatches(spark, path, snap)
-    val postsLive = LsmLayout.liveGenerationNames(
-      spark, s"$path/postings", "gen=", snap.ledgerView)
-    val foldPostings = liveTs.nonEmpty ||
-      postsLive.size > PostingsFoldAfterGenerations
+      writerEpoch: Option[Long] = None): Unit =
     // the relation folds are independent (each reads its own live
-    // generations, writes its own new base) — overlap them; the ONE
-    // manifest flip below still lands only after ALL settle, so
-    // readers keep the all-or-nothing visibility contract
-    Overlap.all(spark)(
-      ((if (foldPostings)
-        Seq(() => Trace("lex.compact:postings-fold")(
-          postingsScoped(spark, path, snap)
-            .withColumn("gen", lit(newBase))
-            .repartition(col("bucket")).sortWithinPartitions(col("shingle"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen", "bucket")
-            .parquet(s"$path/postings")))
-      else Seq.empty[() => Unit]) ++
+    // generations, writes its own new base) — they overlap; the ONE
+    // manifest flip still lands only after ALL settle, so readers keep
+    // the all-or-nothing visibility contract
+    LsmLayout.snapshotCompact(spark, path, writerEpoch,
+      rels = Seq((s"$path/lexicon", "gen="), (s"$path/meta", "gen=")),
+      secondary = Seq((s"$path/postings", "gen="))) { fold =>
+      (if (fold.foldSecondary)
+        Seq(() => Trace("lex.compact:postings-fold")(writeBucketed(
+          postingsScoped(spark, path, fold.snap)
+            .withColumn("gen", lit(fold.newBase)),
+          s"$path/postings")))
+      else Seq.empty) ++
       Seq(
-        () => Trace("lex.compact:lexicon-fold")(
-          lexiconScoped(spark, path, snap)
-            .withColumn("gen", lit(newBase))
-            .repartition(col("bucket")).sortWithinPartitions(col("shingle"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen", "bucket")
-            .parquet(s"$path/lexicon")),
-        () => Trace("lex.compact:meta-fold")(
-          metaRowScoped(spark, path, snap)
-            .withColumn("gen", lit(newBase))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(s"$path/meta")))): _*)
-    val folded = snap.folded ++
-      Seq("lexicon", "meta").flatMap(rel =>
-        LsmLayout.liveGenerationNames(spark, s"$path/$rel", "gen=", snap))
-        .filterNot(_ == snap.base)
-    // per-relation fold state: a skipped postings fold keeps its base
-    // and its live generations — they stay readable, unfolded
-    val (pbase, pfolded) =
-      if (foldPostings)
-        (newBase, snap.ledgerFolded ++ postsLive.filterNot(_ == snap.ledgerBase))
-      else (snap.ledgerBase, snap.ledgerFolded)
-    val next = LayoutSnapshot(snap.id + 1L, newBase, folded,
-      snap.appliedTs ++ liveTs, Some(pbase), Some(pfolded))
-    LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-    LsmLayout.commitSnapshot(spark, path, next)
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/lexicon", "gen="), (s"$path/meta", "gen=")),
-      snap, next)
-    // postings GC runs against the postings fold track: on a fold it
-    // sweeps what the previous snapshot stopped referencing; on a skip
-    // it still owes the PREVIOUS postings fold its one-cycle-deferred
-    // sweep (the registry band-skip discipline), so physical removal
-    // keeps its two-cycle contract through a skip history
-    LsmLayout.gcSuperseded(spark, path,
-      Seq((s"$path/postings", "gen=")),
-      snap.ledgerView, next.ledgerView)
-  }
+        () => Trace("lex.compact:lexicon-fold")(writeBucketed(
+          lexiconScoped(spark, path, fold.snap)
+            .withColumn("gen", lit(fold.newBase)),
+          s"$path/lexicon")),
+        () => Trace("lex.compact:meta-fold")(LsmLayout.writeGeneration(
+          metaRowScoped(spark, path, fold.snap)
+            .withColumn("gen", lit(fold.newBase)),
+          s"$path/meta", "gen")))
+    }
 
   /** Reclamation report (the deadChunkStats pattern on the lexical
     * side): live vs dead POSTING rows, dead = rows of pending-

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /** One committed SNAPSHOT of a stored layout — the tiny manifest the
   * reader resolves ONCE and the compactor flips ATOMICALLY (one
@@ -35,27 +35,28 @@ private[graft] final case class LayoutSnapshot(
   /** The immutable base generation the NEXT compact writes. */
   def nextBase: String = s"base-${id + 1L}"
 
-  /** The registry's text-ledger relation tracks its own fold state:
-    * a compact may fold the (small) assignment log while SKIPPING the
-    * corpus-sized ledger rewrite (see ClusterRegistry.compact — the
-    * ledger only MUST fold when pending tombstones have to leave the
-    * stored text physically). Pre-split snapshots folded both
-    * relations together, so the ledger fields default to the shared
-    * ones — old manifests read unchanged. */
+  /** The SECOND fold track (the registry's text ledger, the lexical
+    * postings) keeps its own fold state: a compact may fold the small
+    * relations while SKIPPING the corpus-sized rewrite of the track
+    * (see [[LsmLayout.snapshotCompact]] — the track only MUST fold when
+    * pending tombstones have to leave it physically). Pre-split
+    * snapshots folded every relation together, so the track's fields
+    * default to the shared ones — old manifests read unchanged. */
   def ledgerBase: String = ledgerBaseOpt.getOrElse(base)
   def ledgerFolded: Set[String] = ledgerFoldedOpt.getOrElse(folded)
 
-  /** This snapshot re-keyed to the ledger relation's fold state — what
-    * ledger reads/GC pass wherever the shared helpers expect `base`/
-    * `folded`. */
+  /** This snapshot re-keyed to the second track's fold state — what
+    * the track's reads/GC pass wherever the shared helpers expect
+    * `base`/`folded`. */
   def ledgerView: LayoutSnapshot =
     LayoutSnapshot(id, ledgerBase, ledgerFolded, appliedTs)
 }
 
-/** The shared idempotency plumbing of the stored LSM layouts
-  * ([[LexicalIndex]], [[BandIndex]], [[KmvLayout]]) — one spelling for
-  * the at-least-once maintenance contract so the three layouts cannot
-  * drift:
+/** The shared maintenance protocol of the six stored LSM layouts
+  * ([[LexicalIndex]], [[BandIndex]], [[KmvLayout]], [[IvfLayout]],
+  * [[ChunkStore]], [[ClusterRegistry]]) — the at-least-once, snapshot
+  * and writer-epoch contract is written ONCE here, and each layout
+  * passes in only what is its own (its writes, its fold projections):
   *
   *  - every incremental write is keyed by a CALLER-SUPPLIED batch id
   *    that becomes the generation's partition directory, written with
@@ -70,14 +71,33 @@ private[graft] final case class LayoutSnapshot(
   *    must still no-op) and are cleared by a rebuild (a fresh index
   *    life may reuse batch ids).
   *
+  * The skeleton (see "the maintenance skeleton" below) owns every step
+  * of that contract, so no layout can skip one:
+  *  - [[startIndexLife]] — the build preamble (tombstones, markers and
+  *    snapshots of the previous life cleared; epochs kept);
+  *  - [[ingestBatch]] — batch-id check, the marker check, then after
+  *    the layout's writes the FENCE and the MARKER ([[commitApplied]]),
+  *    then the auto-compact policy, which always compacts under the
+  *    caller's epoch;
+  *  - [[forgetBatch]] / [[tombstoneIds]] — marker check, the
+  *    already-pending filter, one counted checkpoint, the layout's
+  *    writes (skipped for an all-duplicate batch), then fence + marker
+  *    — on EVERY path, the all-duplicate one included;
+  *  - [[snapshotCompact]] — snapshot, fence, `nextBase`, stale-
+  *    generation clear, the layout's fold writes (overlapped), the
+  *    folded set, fence + COMMIT of the new manifest, then the GC; it
+  *    also owns the optional second fold track ([[foldDue]] and its
+  *    skip-path GC).
+  *
   * Single-writer assumption: maintenance of one index path is driven
   * by one serialized loop (the foreachBatch contract) — concurrent
   * writers would race the marker check and the generation numbering.
   * The assumption is ENFORCED by the writer-epoch fence below
   * ([[acquireWriterEpoch]]/[[requireCurrentEpoch]]): every layout's
-  * maintenance entry points accept an optional `writerEpoch` and
-  * re-check it before committing, so a superseded loop fails loudly
-  * instead of corrupting silently (gated by WriterFencingSpec).
+  * maintenance entry points accept an optional `writerEpoch`, and the
+  * skeleton re-checks it before every marker and every manifest commit,
+  * so a superseded loop fails loudly instead of corrupting silently
+  * (gated by WriterFencingSpec).
   */
 private[graft] object LsmLayout {
 
@@ -102,9 +122,6 @@ private[graft] object LsmLayout {
     p.getFileSystem(spark.sessionState.newHadoopConf())
       .create(p, true).close()
   }
-
-  def clearApplied(spark: SparkSession, path: String): Unit =
-    deleteDir(spark, s"$path/_applied")
 
   /** Generation-name hygiene: batch ids become partition directory
     * names, so they must be path-safe, and must not collide with the
@@ -141,12 +158,6 @@ private[graft] object LsmLayout {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .map(_.getPath.getName.stripPrefix(prefix))
   }
-
-  /** Committed generation directories under a layout relation — what
-    * an auto-compaction policy counts. */
-  def generationCount(
-      spark: SparkSession, dir: String, prefix: String = "gen="): Int =
-    generationNames(spark, dir, prefix).size
 
   // ---- layout snapshots (snapshot-atomic compaction) ------------------
   // The compact of every stored layout used to rewrite its `base`
@@ -231,28 +242,6 @@ private[graft] object LsmLayout {
           "raced this layout (single-writer fence violation)")
   }
 
-  /** A rebuild starts a fresh snapshot life (build's full overwrite
-    * wipes every generation directory, so the legacy snapshot is again
-    * exactly right). */
-  def clearSnapshots(spark: SparkSession, root: String): Unit =
-    deleteDir(spark, snapDir(root))
-
-  /** Delete the possibly-partial generation directory a CRASHED earlier
-    * attempt of the SAME compact/retrain may have left, so the rewrite
-    * starts from a clean slate. Those ops write their new base under a
-    * DETERMINISTIC name with dynamic partition overwrite — if state
-    * changed between the attempts (a tombstone landed, say), the
-    * retry's row set may no longer cover every (sub-)partition the
-    * first attempt wrote, and the uncovered directories (stale rows,
-    * possibly freshly-tombstoned ones) would survive under the new base
-    * and be served after the commit. The name is referenced by NO
-    * committed snapshot until [[commitSnapshot]] runs, so the delete is
-    * invisible to concurrent readers. */
-  def clearStaleGeneration(
-      spark: SparkSession, dir: String, prefix: String,
-      name: String): Unit =
-    deleteDir(spark, s"$dir/$prefix$name")
-
   /** The generation names a reader of THIS snapshot folds: the
     * snapshot's base plus every non-base generation not yet folded
     * into it. Superseded base generations and folded generations may
@@ -300,16 +289,6 @@ private[graft] object LsmLayout {
     generationNames(spark, root + "/tombstones", "batch=")
       .filterNot(snap.appliedTs.contains)
 
-  /** The pending forget-set under a snapshot — `None` when every
-    * tombstone batch is already applied (the common post-compact
-    * fast path: no anti-join in the plan at all). */
-  def pendingTombstones(
-      spark: SparkSession, root: String, snap: LayoutSnapshot): Option[DataFrame] = {
-    val live = liveTombstoneBatches(spark, root, snap)
-    if (live.isEmpty) None
-    else Some(readGenerations(spark, s"$root/tombstones", "batch=", live))
-  }
-
   /** Read exactly the NAMED generation directories of a layout
     * relation (basePath keeps the partition column). This — not a
     * whole-directory read + isin filter — is the snapshot-safe scan
@@ -327,7 +306,8 @@ private[graft] object LsmLayout {
       .parquet(names.map(n => s"$dir/$prefix$n"): _*)
   }
 
-  /** [[pendingTombstones]] plus the forget-set's on-disk byte size —
+  /** The pending forget-set under a snapshot — `None` when every
+    * tombstone batch is already applied — plus its on-disk byte size:
     * the honest broadcast-budget input for the forget-path dedup joins
     * (a new batch anti-joins the ALREADY-pending ids so a re-submitted
     * doc id doesn't tombstone twice). The caller filters the frame
@@ -378,7 +358,7 @@ private[graft] object LsmLayout {
   def deadRowStats(
       spark: SparkSession, root: String, snap: LayoutSnapshot,
       rows: DataFrame, idName: String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, count, lit, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, count, sum, when}
     pendingTombstonesSized(spark, root, snap) match {
       case None =>
         rows.agg(
@@ -474,17 +454,257 @@ private[graft] object LsmLayout {
       deleteDir(spark, s"$root/tombstones")
   }
 
+  // ---- the maintenance skeleton ---------------------------------------
+  // One spelling of the choreography every layout's build, ingest,
+  // forget and compact shares; a layout passes in only its own writes.
+
+  /** The build preamble: a rebuild starts a fresh index life. Pending
+    * tombstones of the previous life would hide rebuilt rows, its
+    * applied markers would skip the first batch reusing an old id, and
+    * its snapshot would point reads at a vanished base (the build's
+    * full overwrite wipes every generation, so the legacy snapshot is
+    * again exactly right). Writer epochs are kept (see the fence). */
+  def startIndexLife(spark: SparkSession, path: String): Unit = {
+    deleteDir(spark, s"$path/tombstones")
+    deleteDir(spark, s"$path/_applied")
+    deleteDir(spark, snapDir(path))
+  }
+
+  /** Write `df` into its generation partition(s) under `dir` with
+    * dynamic partition overwrite — a retry replaces exactly the
+    * partitions it writes, never a sibling generation. */
+  def writeGeneration(df: DataFrame, dir: String, partitionCols: String*): Unit =
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(dir)
+
+  /** The commit of one maintenance batch: the fence check, then the
+    * applied marker — after the batch's last data write, so a
+    * superseded writer can never mark a batch committed. */
+  def commitApplied(
+      spark: SparkSession, path: String, gen: String,
+      writerEpoch: Option[Long]): Unit = {
+    requireCurrentEpoch(spark, path, writerEpoch)
+    markApplied(spark, path, gen)
+  }
+
+  /** The s46 generation-count policy (`compactAfterGenerations`, 0 =
+    * off) over the LIVE generations of one relation (physical
+    * directories include superseded generations awaiting GC and would
+    * re-trip the policy forever). The compact always runs under the
+    * caller's writer epoch: a superseded writer must not overwrite the
+    * new owner's base or clear its tombstones. */
+  def autoCompact(
+      spark: SparkSession, path: String, dir: String, prefix: String,
+      compactAfterGenerations: Int, writerEpoch: Option[Long])(
+      compact: Option[Long] => Unit): Unit =
+    if (compactAfterGenerations > 0 &&
+      liveGenerationCount(spark, path, dir, prefix) > compactAfterGenerations)
+      compact(writerEpoch)
+
+  /** The applied-once ingest of one batch: unless the batch's marker
+    * exists, run the layout's `writes` and commit ([[commitApplied]]);
+    * then, on the fresh AND the already-applied path (a clean retry
+    * must still honor the budget), the [[autoCompact]] policy over the
+    * relation `dir`. */
+  def ingestBatch(
+      spark: SparkSession, path: String, batchId: String,
+      writerEpoch: Option[Long], compactAfterGenerations: Int,
+      dir: String, prefix: String, compact: Option[Long] => Unit)(
+      writes: => Unit): Unit = {
+    requireValidBatchId(batchId)
+    if (!isApplied(spark, path, batchId)) {
+      writes
+      commitApplied(spark, path, batchId, writerEpoch)
+    }
+    autoCompact(spark, path, dir, prefix, compactAfterGenerations,
+      writerEpoch)(compact)
+  }
+
+  /** The forget batch `ts-<batchId>`, idempotent at both levels: a
+    * committed batch no-ops on its marker; otherwise `forget` loses the
+    * rows whose `storedId` is already pending in ANOTHER batch (read
+    * excluding this batch's own, possibly partial, partition — so a
+    * re-delivered delete never applies twice and a retry recomputes the
+    * same set), is checkpointed and counted once, and the layout's
+    * `writes` get the fresh rows — keyed `idName` — and the snapshot
+    * the filter read. An all-duplicate batch writes nothing (an empty
+    * parquet write would leave a schemaless directory that breaks the
+    * tombstone read) but still commits through the fence. */
+  def forgetBatch(
+      spark: SparkSession, path: String, batchId: String,
+      writerEpoch: Option[Long], forget: DataFrame, idName: String,
+      storedId: String)(
+      writes: (DataFrame, LayoutSnapshot) => Unit): Unit = {
+    requireValidBatchId(batchId)
+    val gen = s"ts-$batchId"
+    if (isApplied(spark, path, gen)) return
+    val snap = snapshot(spark, path)
+    val fresh = pendingTombstonesSized(spark, path, snap) match {
+      case None => forget
+      case Some((ts, bytes)) => forget.join(
+        hintBroadcast(ts.filter(col("batch") =!= batchId)
+          .select(col(storedId).as(idName)), bytes),
+        Seq(idName), "left_anti")
+    }
+    val (rows, ckIds, n) = IterationCheckpoint.localCounted(fresh)
+    if (n > 0L) writes(rows, snap)
+    commitApplied(spark, path, gen, writerEpoch)
+    IterationCheckpoint.release(spark.sparkContext, ckIds)
+  }
+
+  /** The id-list tombstone of the per-id-fact layouts (band postings,
+    * KMV sketches, IVF vectors, chunk manifests, registry assignments):
+    * the forget-set becomes a tombstone id list under `idName` that
+    * every read anti-joins — forget-set-sized work, nothing stored
+    * rewritten; the next compact drops the rows physically. */
+  def tombstoneIds(
+      forgetIds: DataFrame, idCol: String, idName: String,
+      path: String, batchId: String, writerEpoch: Option[Long]): Unit =
+    forgetBatch(forgetIds.sparkSession, path, batchId, writerEpoch,
+      forgetIds.select(col(idCol).as(idName)).distinct(), idName,
+      idName) { (rows, _) =>
+      writeTombstones(rows, path, batchId)
+    }
+
+  /** The forget batch's id list, in its own `batch=<batchId>` partition. */
+  def writeTombstones(rows: DataFrame, path: String, batchId: String): Unit =
+    writeGeneration(rows.withColumn("batch", lit(batchId)),
+      s"$path/tombstones", "batch")
+
+  /** Hygiene bound of every SECONDARY fold (the lexical postings, the
+    * registry's text ledger and internal band index): with no
+    * tombstones pending, the corpus-sized rewrite runs only once this
+    * many generations are live — those relations are read via explicit
+    * live-generation paths, so extra generations cost directory
+    * fan-out and file count, never read shape or scan bytes. */
+  private val SecondaryFoldAfterGenerations = 8
+
+  /** The fold-skip rule: a secondary relation must fold when tombstones
+    * are pending (the GDPR contract — forgotten rows leave the stored
+    * layout physically at compact) or past the hygiene bound. */
+  def foldDue(pendingTs: Seq[String], liveGenerations: Int): Boolean =
+    pendingTs.nonEmpty || liveGenerations > SecondaryFoldAfterGenerations
+
+  /** What a layout's fold writes see inside [[snapshotCompact]]: the
+    * snapshot being folded, the new base name to write, whether the
+    * second track folds this time, and a checkpoint whose blocks the
+    * skeleton releases once every fold write settled. */
+  final class Fold private[LsmLayout] (
+      spark: SparkSession, val snap: LayoutSnapshot, val newBase: String,
+      val foldSecondary: Boolean) {
+    private val ckIds = scala.collection.mutable.Set.empty[Int]
+
+    /** `df`, eagerly checkpointed (frames are checkpointed before a
+      * write whose plan could otherwise re-read a path the layout is
+      * rewriting). */
+    def checkpointed(df: DataFrame): DataFrame = {
+      val (ck, ids, _) = IterationCheckpoint.localCounted(df)
+      ckIds.synchronized(ckIds ++= ids)
+      ck
+    }
+
+    private[LsmLayout] def release(): Unit =
+      IterationCheckpoint.release(spark.sparkContext,
+        ckIds.synchronized(ckIds.toSet))
+  }
+
+  /** The snapshot-atomic compact every layout shares: resolve the
+    * snapshot, check the fence, pick `nextBase`, clear what a CRASHED
+    * earlier attempt may have left under that name (the rewrite uses a
+    * deterministic name with dynamic overwrite — if state changed
+    * between attempts, the retry's rows may not cover every partition
+    * the first attempt wrote, and the uncovered stale rows would be
+    * served after the commit; no committed snapshot references the
+    * name yet, so the delete is invisible to readers), run the layout's
+    * `folds` (independent relation writes, overlapped; the function
+    * itself runs on the calling thread, so eager work it does before
+    * returning precedes every write), record the folded generations,
+    * check the fence again and COMMIT the new manifest, then GC what
+    * only the PREVIOUS snapshot had stopped referencing.
+    *
+    * `rels` fold on every compact. `secondary` relations form the
+    * second fold track (their own base and folded set in the manifest):
+    * they fold only when [[foldDue]] — the fold sees
+    * `foldSecondary` — and a skipped track keeps its base and live
+    * generations, readable unfolded, while its GC still runs against
+    * the track's own state, so a skip history keeps the two-cycle
+    * removal contract. Tombstone batches pending at the start are
+    * retired by the commit. */
+  def snapshotCompact(
+      spark: SparkSession, root: String, writerEpoch: Option[Long],
+      rels: Seq[(String, String)],
+      secondary: Seq[(String, String)] = Seq.empty)(
+      folds: Fold => Seq[() => Unit]): Unit = {
+    val snap = snapshot(spark, root)
+    requireCurrentEpoch(spark, root, writerEpoch)
+    val newBase = snap.nextBase
+    (secondary ++ rels).foreach { case (dir, prefix) =>
+      deleteDir(spark, s"$dir/$prefix$newBase")
+    }
+    val liveTs = liveTombstoneBatches(spark, root, snap)
+    val secondaryLive = secondary.flatMap { case (dir, prefix) =>
+      liveGenerationNames(spark, dir, prefix, snap.ledgerView)
+    }.distinct
+    val fold = new Fold(spark, snap, newBase,
+      secondary.nonEmpty && foldDue(liveTs, secondaryLive.size))
+    try folds(fold) match {
+      case Seq(only) => only()
+      case many => Overlap.all(spark)(many: _*)
+    } finally fold.release()
+    val folded = snap.folded ++ rels.flatMap { case (dir, prefix) =>
+      liveGenerationNames(spark, dir, prefix, snap)
+    }.filterNot(_ == snap.base)
+    val next =
+      if (secondary.isEmpty)
+        LayoutSnapshot(snap.id + 1L, newBase, folded, snap.appliedTs ++ liveTs)
+      else {
+        val (sbase, sfolded) =
+          if (fold.foldSecondary)
+            (newBase, snap.ledgerFolded ++
+              secondaryLive.filterNot(_ == snap.ledgerBase))
+          else (snap.ledgerBase, snap.ledgerFolded)
+        LayoutSnapshot(snap.id + 1L, newBase, folded,
+          snap.appliedTs ++ liveTs, Some(sbase), Some(sfolded))
+      }
+    requireCurrentEpoch(spark, root, writerEpoch)
+    commitSnapshot(spark, root, next)
+    gcSuperseded(spark, root, rels, snap, next)
+    if (secondary.nonEmpty)
+      gcSuperseded(spark, root, secondary, snap.ledgerView, next.ledgerView)
+  }
+
+  /** A whole layout folded on the [[foldDue]] rule (the registry's
+    * internal band index): `compact` when due; otherwise sweep what a
+    * second compact cycle would — directories only snapshots OLDER than
+    * the current one could reference — without a manifest flip, so
+    * physical removal keeps its two-cycle contract through skips. */
+  def compactWhenDue(
+      spark: SparkSession, root: String, rels: Seq[(String, String)])(
+      compact: => Unit): Unit = {
+    val snap = snapshot(spark, root)
+    val live = rels.flatMap { case (dir, prefix) =>
+      liveGenerationNames(spark, dir, prefix, snap)
+    }.distinct
+    if (foldDue(liveTombstoneBatches(spark, root, snap), live.size)) compact
+    else gcSuperseded(spark, root, rels, snap, snap)
+  }
+
   // ---- immutable-meta caching ----------------------------------------
   // The band/registry/KMV/chunk layouts each write a ONE-ROW `meta/`
   // relation at build time and never again within an index life — yet
   // every ingest/refresh used to re-run a full parquet read JOB just to
   // re-learn those constants (measured: a few hundred ms of fixed cost
   // per maintenance call, dominating small-delta ingests). The cache
-  // keys by the meta directory's file fingerprint (part-file names
-  // carry a per-write UUID, so ANY rewrite — a rebuild at the same
-  // path — changes the key), making a hit one metadata listing and a
-  // rebuild a natural invalidation. Driver-side only, like every other
-  // plan-time constant.
+  // holds ONE entry per meta relation, validated by the read
+  // directory's file fingerprint (part-file names carry a per-write
+  // UUID, so ANY rewrite — a rebuild at the same path — changes it),
+  // making a hit one metadata listing and a rebuild a natural
+  // invalidation; a layout whose constants live in a generation of the
+  // relation (the lexical base) replaces its entry when the base moves
+  // instead of leaving one dead entry per compact. Driver-side only,
+  // like every other plan-time constant.
 
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -499,22 +719,31 @@ private[graft] object LsmLayout {
       .toSeq.sorted.mkString(";")
   }
 
-  /** The single meta row under `dir`, cached against the directory's
-    * file fingerprint — one listStatus on a hit, the parquet read job
-    * only on first touch or after a rewrite. Use ONLY for relations
-    * that are immutable within an index life (the build-time constant
-    * metas); generational metas (the lexical layout's) fold sums across
-    * generations and must keep reading live. */
+  /** The single meta row of the relation `dir` — or of its generation
+    * `gen=<generation>` — cached against the read directory's file
+    * fingerprint: one listStatus on a hit, the parquet read job only on
+    * first touch or after a rewrite. Use ONLY for rows that are
+    * immutable within an index life (the build-time constant metas);
+    * generational sums (the lexical counters) must keep reading live. */
   def cachedMetaRow(
-      spark: SparkSession, dir: String): org.apache.spark.sql.Row = {
-    val fp = metaFingerprint(spark, dir)
+      spark: SparkSession, dir: String,
+      generation: Option[String] = None): org.apache.spark.sql.Row = {
+    val read = generation.fold(dir)(g => s"$dir/gen=$g")
+    val fp = s"$read|${metaFingerprint(spark, read)}"
     val hit = metaCache.get(dir)
     if (hit != null && hit._1 == fp) hit._2
     else {
-      val row = spark.read.parquet(dir).head()
+      val row = spark.read.parquet(read).head()
       metaCache.put(dir, (fp, row))
       row
     }
+  }
+
+  /** The meta relations the cache currently holds an entry for. */
+  private[graft] def cachedMetaDirs: Set[String] = {
+    val keys = Set.newBuilder[String]
+    metaCache.keys().asIterator().forEachRemaining(k => keys += k)
+    keys.result()
   }
 
   // ---- writer fencing -----------------------------------------------

@@ -360,4 +360,19 @@ class LexicalIndexSpec extends SparkTestBase {
     assert(rows(LexicalIndex.pointProbe(spark, del, "a b x", 10)) ===
       rows(LexicalIndex.pointProbe(spark, rem, "a b x", 10)))
   }
+
+  test("the meta cache keeps one entry per lexical path across compacts") {
+    val p = "target/test_lexidx/meta_cache"
+    LexicalIndex.build(corpus, "doc_id", "text", p, n = 2, buckets = 4)
+    (1 to 3).foreach { i =>
+      // each refresh reads the layout constants of the current base
+      LexicalIndex.refresh(
+        Seq((100L + i, s"q$i r$i s$i")).toDF("doc_id", "text"),
+        "doc_id", "text", p, batchId = s"b$i")
+      LexicalIndex.compact(spark, p)
+    }
+    LexicalIndex.pointProbe(spark, p, "a b c", k = 3).collect()
+    assert(LsmLayout.cachedMetaDirs.filter(_.startsWith(s"$p/")) ===
+      Set(s"$p/meta"))
+  }
 }

@@ -73,27 +73,54 @@ class WriterFencingSpec extends SparkTestBase {
     assert(serve(p) === serve(rebuilt))
   }
 
+  /** A stale writer's maintenance call must throw the fence error and
+    * commit nothing: no applied marker for `marker`, no new snapshot. */
+  private def fencedOut(path: String, marker: Option[String])(op: => Unit): Unit = {
+    val snapBefore = LsmLayout.snapshot(spark, path).id
+    val err = intercept[IllegalStateException](op)
+    assert(err.getMessage.contains("stale writer epoch"), err.getMessage)
+    marker.foreach(m => assert(!LsmLayout.isApplied(spark, path, m),
+      s"a fenced-out call must not leave the $m marker at $path"))
+    assert(LsmLayout.snapshot(spark, path).id === snapBefore,
+      s"a fenced-out call must not commit a snapshot at $path")
+  }
+
   test("the fence guards every layout family's commit path") {
+    // every maintenance op of every layout, called by a superseded
+    // writer (epoch 0 after a newer loop took epoch 1)
+    val stale = Some(0L)
+    val forget = Seq(1L, 2L).toDF("doc_id")
+    // lexical
+    val lex = "target/test_fence/lex_all"
+    LexicalIndex.build(docs(0 until 6, "l"), "doc_id", "text", lex, n = 2)
+    LsmLayout.acquireWriterEpoch(spark, lex)
+    fencedOut(lex, Some("b1"))(LexicalIndex.refresh(docs(6 until 9, "l"),
+      "doc_id", "text", lex, batchId = "b1", writerEpoch = stale))
+    fencedOut(lex, Some("ts-d1"))(LexicalIndex.tombstone(
+      docs(1 until 3, "l"), "doc_id", "text", lex, batchId = "d1",
+      writerEpoch = stale))
+    fencedOut(lex, None)(LexicalIndex.compact(spark, lex, stale))
     // band
     val band = "target/test_fence/band"
     BandIndex.build(docs(0 until 6, "b"), "doc_id", "text", band)
     LsmLayout.acquireWriterEpoch(spark, band)
-    intercept[IllegalStateException] {
-      BandIndex.append(docs(6 until 9, "b"), "doc_id", "text", band,
-        batchId = "b1", writerEpoch = Some(0L))
-    }
+    fencedOut(band, Some("b1"))(BandIndex.append(docs(6 until 9, "b"),
+      "doc_id", "text", band, batchId = "b1", writerEpoch = stale))
+    fencedOut(band, Some("ts-d1"))(BandIndex.tombstone(forget, "doc_id",
+      band, batchId = "d1", writerEpoch = stale))
+    fencedOut(band, None)(BandIndex.compact(spark, band, stale))
     // kmv
     val kmv = "target/test_fence/kmv"
     KmvLayout.build(
       docs(0 until 6, "k").withColumn("source", lit("s")),
       "source", "doc_id", "text", kmv)
     LsmLayout.acquireWriterEpoch(spark, kmv)
-    intercept[IllegalStateException] {
-      KmvLayout.refresh(
-        docs(6 until 9, "k").withColumn("source", lit("s")),
-        "source", "doc_id", "text", kmv, batchId = "b1",
-        writerEpoch = Some(0L))
-    }
+    fencedOut(kmv, Some("b1"))(KmvLayout.refresh(
+      docs(6 until 9, "k").withColumn("source", lit("s")),
+      "source", "doc_id", "text", kmv, batchId = "b1", writerEpoch = stale))
+    fencedOut(kmv, Some("ts-d1"))(KmvLayout.tombstone(forget, "doc_id", kmv,
+      batchId = "d1", writerEpoch = stale))
+    fencedOut(kmv, None)(KmvLayout.compact(spark, kmv, stale))
     // ivf
     val ivf = "target/test_fence/ivf"
     val vecs = (1 to 12).map(i =>
@@ -102,29 +129,61 @@ class WriterFencingSpec extends SparkTestBase {
     IvfLayout.build(vecs, "vec_id", "embedding", ivf,
       Similarity.hyperplanes(2, 4).map(_.map(_.toDouble)))
     LsmLayout.acquireWriterEpoch(spark, ivf)
-    intercept[IllegalStateException] {
-      IvfLayout.refresh(vecs, "vec_id", "embedding", ivf,
-        batchId = "b1", writerEpoch = Some(0L))
-    }
+    fencedOut(ivf, Some("b1"))(IvfLayout.refresh(vecs, "vec_id", "embedding",
+      ivf, batchId = "b1", writerEpoch = stale))
+    fencedOut(ivf, Some("ts-d1"))(IvfLayout.tombstone(
+      Seq(1L, 2L).toDF("vec_id"), "vec_id", ivf, batchId = "d1",
+      writerEpoch = stale))
+    fencedOut(ivf, None)(IvfLayout.compact(spark, ivf, stale))
+    fencedOut(ivf, None)(IvfLayout.retrain(spark, ivf, rounds = 1,
+      writerEpoch = stale))
     // chunk store
     val cs = "target/test_fence/chunks"
     ChunkStore.build(docs(0 until 6, "c"), "doc_id", "text", cs)
     LsmLayout.acquireWriterEpoch(spark, cs)
-    intercept[IllegalStateException] {
-      ChunkStore.refresh(docs(6 until 9, "c"), "doc_id", "text", cs,
-        batchId = "b1", writerEpoch = Some(0L))
-    }
-    // registry (ingest AND forget)
+    fencedOut(cs, Some("b1"))(ChunkStore.refresh(docs(6 until 9, "c"),
+      "doc_id", "text", cs, batchId = "b1", writerEpoch = stale))
+    fencedOut(cs, Some("ts-d1"))(ChunkStore.tombstone(forget, "doc_id", cs,
+      batchId = "d1", writerEpoch = stale))
+    fencedOut(cs, None)(ChunkStore.compact(spark, cs, stale))
+    fencedOut(cs, None)(ChunkStore.retentionVacuum(spark, cs, keepFrom = 0L,
+      writerEpoch = stale))
+    // registry (ingest, forget and compact)
     val reg = "target/test_fence/registry"
     ClusterRegistry.build(docs(0 until 6, "r"), "doc_id", "text", reg)
     LsmLayout.acquireWriterEpoch(spark, reg)
-    intercept[IllegalStateException] {
-      ClusterRegistry.ingest(docs(6 until 9, "r"),
-        "doc_id", "text", reg, batchId = "b1", writerEpoch = Some(0L))
-    }
-    intercept[IllegalStateException] {
-      ClusterRegistry.forget(Seq(1L).toDF("doc_id"), "doc_id", reg,
-        batchId = "d1", writerEpoch = Some(0L))
-    }
+    fencedOut(reg, Some("b1"))(ClusterRegistry.ingest(docs(6 until 9, "r"),
+      "doc_id", "text", reg, batchId = "b1", writerEpoch = stale))
+    fencedOut(reg, Some("ts-d1"))(ClusterRegistry.forget(forget, "doc_id",
+      reg, batchId = "d1", writerEpoch = stale))
+    fencedOut(reg, None)(ClusterRegistry.compact(spark, reg, stale))
+  }
+
+  test("a superseded writer's re-delivered lexical batch cannot auto-compact") {
+    val p = "target/test_fence/lex_autocompact"
+    LexicalIndex.build(docs(0 until 8, "x"), "doc_id", "text", p, n = 2)
+    val epochA = LsmLayout.acquireWriterEpoch(spark, p)
+    LexicalIndex.refresh(docs(8 until 12, "x"), "doc_id", "text", p,
+      batchId = "b1", writerEpoch = Some(epochA))
+    LsmLayout.acquireWriterEpoch(spark, p)
+    // A re-delivers its already-applied batch with a policy the live
+    // generations (base + b1) exceed: the auto-compact runs under A's
+    // superseded epoch and must be fenced, committing no snapshot
+    fencedOut(p, None)(LexicalIndex.refresh(docs(8 until 12, "x"),
+      "doc_id", "text", p, batchId = "b1", compactAfterGenerations = 1,
+      writerEpoch = Some(epochA)))
+  }
+
+  test("a superseded writer's all-duplicate lexical tombstone commits no marker") {
+    val p = "target/test_fence/lex_dup_tombstone"
+    LexicalIndex.build(docs(0 until 8, "y"), "doc_id", "text", p, n = 2)
+    val epochA = LsmLayout.acquireWriterEpoch(spark, p)
+    LexicalIndex.tombstone(docs(1 until 3, "y"), "doc_id", "text", p,
+      batchId = "d1", writerEpoch = Some(epochA))
+    LsmLayout.acquireWriterEpoch(spark, p)
+    // every id of d2 is already pending (d1): nothing to write, but the
+    // commit of the no-op batch is still a commit and must be fenced
+    fencedOut(p, Some("ts-d2"))(LexicalIndex.tombstone(docs(1 until 3, "y"),
+      "doc_id", "text", p, batchId = "d2", writerEpoch = Some(epochA)))
   }
 }
