@@ -88,15 +88,22 @@ object BandIndex {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
     LsmLayout.startIndexLife(spark, path)
-    val sk = preSketched.getOrElse(sketchRelation(
-      docs, idCol, textCol, shingleWidth, numHashes, bands))
+    // both data writes consume the sketch: without `preSketched` it is
+    // materialized here so shingling and MinHash run once, not once per
+    // write. It is left to the runner sweep (the Materialize contract),
+    // not unpersisted here: the cache is keyed by plan, so an equal
+    // sketch a concurrent caller cached (the registry build over the
+    // same docs) is this same entry, and unpersisting it here would drop
+    // the caller's cache under it.
+    val sk = preSketched.getOrElse(Materialize.shared(sketchRelation(
+      docs, idCol, textCol, shingleWidth, numHashes, bands)))
     // sigs/, postings/ and meta/ are disjoint relations (the first two
     // derive from the same sketch, meta is a one-row literal) — write
     // all three CONCURRENTLY (the wall is the largest write, not the
-    // sum; a shared pre-materialized sketch is computed once under the
-    // block manager's per-block lock either way). A crashed partial
-    // build was never servable in any ordering — builds clear the
-    // markers/snapshot first and carry no marker of their own.
+    // sum; the materialized sketch is computed once under the block
+    // manager's per-block lock). A crashed partial build was never
+    // servable in any ordering — builds clear the markers/snapshot
+    // first and carry no marker of their own.
     Overlap.all(spark)(
       () => sk.select(col("doc_id"), col("sig"))
         .withColumn("gen", lit(BaseGen))

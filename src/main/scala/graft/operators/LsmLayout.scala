@@ -119,8 +119,19 @@ private[graft] object LsmLayout {
 
   def markApplied(spark: SparkSession, path: String, gen: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_applied/$gen")
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .create(p, true).close()
+    createFresh(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .close()
+  }
+
+  /** Create `p` as a NEW inode: an existing file is deleted first, never
+    * truncated in place — a layout tree cloned with hard links
+    * (CorpusFixture) shares its files' inodes with the source tree, and
+    * an overwrite-create would truncate and chmod the source's file. */
+  private def createFresh(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FSDataOutputStream = {
+    fs.delete(p, false)
+    fs.create(p, false)
   }
 
   /** Generation-name hygiene: batch ids become partition directory
@@ -222,7 +233,7 @@ private[graft] object LsmLayout {
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(
       s"${snapDir(root)}/.tmp-${snap.id}")
-    val out = fs.create(tmp, true)
+    val out = createFresh(fs, tmp)
     try out.write(
       (s"base=${snap.base}\n" +
         s"folded=${snap.folded.toSeq.sorted.mkString(",")}\n" +

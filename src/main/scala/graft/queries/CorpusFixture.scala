@@ -129,9 +129,10 @@ object CorpusFixture {
         // fixed cost at large SF). Safe because every stored file is
         // immutable once written — the layouts mutate by writing NEW
         // files, unlinking, or renaming, never by writing through an
-        // existing file — so a linked clone cannot observe or cause
-        // cross-tree interference. Byte-copy fallback where links are
-        // unsupported.
+        // existing file (the layout metadata writes delete, then create:
+        // LsmLayout.createFresh) — so a linked clone cannot observe or
+        // cause cross-tree interference. Byte-copy fallback where links
+        // are unsupported.
         try Files.createLink(d, s)
         catch {
           case _: UnsupportedOperationException | _: java.io.IOException =>

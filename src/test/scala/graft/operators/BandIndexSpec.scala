@@ -36,6 +36,18 @@ class BandIndexSpec extends SparkTestBase {
     assert(out === Array((101L, 1L, 1.0), (102L, 2L, 17.0 / 19.0)))
   }
 
+  test("build materializes one sketch for both writes and leaves it to the runner sweep") {
+    val path = "target/test_bandindex/shared_sketch"
+    val sketch = BandIndex.sketchRelation(corpus, "doc_id", "text",
+      BandIndex.DefaultShingleWidth, BandIndex.DefaultNumHashes,
+      BandIndex.DefaultBands)
+    BandIndex.build(corpus, "doc_id", "text", path)
+    // the cache is keyed by plan: an entry the build dropped would also
+    // be gone for a caller that cached an equal sketch (the registry)
+    assert(sketch.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    sketch.unpersist()
+  }
+
   test("append makes a delta visible to the NEXT probe") {
     import spark.implicits._
     val path = "target/test_bandindex/append"
