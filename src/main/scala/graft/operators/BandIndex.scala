@@ -87,39 +87,41 @@ object BandIndex {
       preSketched: Option[DataFrame] = None): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path)
-    // both data writes consume the sketch: without `preSketched` it is
-    // materialized here so shingling and MinHash run once, not once per
-    // write. It is left to the runner sweep (the Materialize contract),
-    // not unpersisted here: the cache is keyed by plan, so an equal
-    // sketch a concurrent caller cached (the registry build over the
-    // same docs) is this same entry, and unpersisting it here would drop
-    // the caller's cache under it.
-    val sk = preSketched.getOrElse(Materialize.shared(sketchRelation(
-      docs, idCol, textCol, shingleWidth, numHashes, bands)))
-    // sigs/, postings/ and meta/ are disjoint relations (the first two
-    // derive from the same sketch, meta is a one-row literal) — write
-    // all three CONCURRENTLY (the wall is the largest write, not the
-    // sum; the materialized sketch is computed once under the block
-    // manager's per-block lock). A crashed partial build was never
-    // servable in any ordering — builds clear the markers/snapshot
-    // first and carry no marker of their own.
-    Overlap.all(spark)(
-      () => sk.select(col("doc_id"), col("sig"))
-        .withColumn("gen", lit(BaseGen))
-        .write.mode("overwrite").partitionBy("gen").parquet(s"$path/sigs"),
-      () => sk
-        .select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "band_val")))
-        .withColumn("gen", lit(BaseGen))
-        .repartition(col("band"))
-        .sortWithinPartitions(col("band_val"))
-        .write.mode("overwrite").partitionBy("gen", "band")
-        .parquet(s"$path/postings"),
-      () => spark.range(1)
-        .select(lit(numHashes.toLong).as("num_hashes"),
-          lit(bands.toLong).as("bands"),
-          lit(shingleWidth.toLong).as("shingle_n"))
-        .write.mode("overwrite").parquet(s"$path/meta"))
+    LsmLayout.startIndexLife(spark, path) {
+      // both data writes consume the sketch: without `preSketched` it is
+      // materialized here so shingling and MinHash run once, not once per
+      // write. It is left to the runner sweep (the Materialize contract),
+      // not unpersisted here: the cache is keyed by plan, so an equal
+      // sketch a concurrent caller cached (the registry build over the
+      // same docs) is this same entry, and unpersisting it here would drop
+      // the caller's cache under it.
+      val sk = preSketched.getOrElse(Materialize.shared(sketchRelation(
+        docs, idCol, textCol, shingleWidth, numHashes, bands)))
+      // sigs/, postings/ and meta/ are disjoint relations (the first two
+      // derive from the same sketch, meta is a one-row literal) — write
+      // all three CONCURRENTLY (the wall is the largest write, not the
+      // sum; the materialized sketch is computed once under the block
+      // manager's per-block lock). A crashed partial build was never
+      // servable in any ordering — builds clear the markers/snapshot
+      // first and carry no marker of their own.
+      Overlap.all(spark)(
+        () => sk.select(col("doc_id"), col("sig"))
+          .withColumn("gen", lit(BaseGen))
+          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/sigs"),
+        () => sk
+          .select(col("doc_id"),
+            posexplode(col("bh")).as(Seq("band", "band_val")))
+          .withColumn("gen", lit(BaseGen))
+          .repartition(col("band"))
+          .sortWithinPartitions(col("band_val"))
+          .write.mode("overwrite").partitionBy("gen", "band")
+          .parquet(s"$path/postings"),
+        () => spark.range(1)
+          .select(lit(numHashes.toLong).as("num_hashes"),
+            lit(bands.toLong).as("bands"),
+            lit(shingleWidth.toLong).as("shingle_n"))
+          .write.mode("overwrite").parquet(s"$path/meta"))
+    }
   }
 
   /** Index the delta batch too (the next batch must see this one):

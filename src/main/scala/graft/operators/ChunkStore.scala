@@ -80,25 +80,27 @@ object ChunkStore {
       docs: DataFrame, idCol: String, textCol: String,
       path: String, maskBits: Int = 4): Unit = {
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path)
-    val rows = Materialize.shared(chunkRows(docs, idCol, textCol, maskBits))
-    // store/, manifest/ and the one-row meta are disjoint relations
-    // (the first two derive from the shared chunk rows, computed once
-    // under the block manager's per-block lock) — write all three
-    // concurrently; a crashed partial build was never servable in any
-    // ordering
-    Overlap.all(spark)(
-      () => rows.groupBy(col("chunk_h"))
-        .agg(min(col("chunk")).as("chunk"))
-        .withColumn("gen", lit(BaseGen))
-        .write.mode("overwrite").partitionBy("gen").parquet(s"$path/store"),
-      () => rows.select(col("doc_id"), col("pos"), col("chunk_h"))
-        .withColumn("seq", lit(0L))
-        .withColumn("gen", lit(BaseGen))
-        .write.mode("overwrite").partitionBy("gen").parquet(s"$path/manifest"),
-      () => spark.range(1)
-        .select(lit(maskBits.toLong).as("mask_bits"))
-        .write.mode("overwrite").parquet(s"$path/meta"))
+    LsmLayout.startIndexLife(spark, path) {
+      val rows = Materialize.shared(chunkRows(docs, idCol, textCol, maskBits))
+      // store/, manifest/ and the one-row meta are disjoint relations
+      // (the first two derive from the shared chunk rows, computed once
+      // under the block manager's per-block lock) — write all three
+      // concurrently; a crashed partial build was never servable in any
+      // ordering
+      Overlap.all(spark)(
+        () => rows.groupBy(col("chunk_h"))
+          .agg(min(col("chunk")).as("chunk"))
+          .withColumn("gen", lit(BaseGen))
+          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/store"),
+        () => rows.select(col("doc_id"), col("pos"), col("chunk_h"))
+          .withColumn("seq", lit(0L))
+          .withColumn("gen", lit(BaseGen))
+          .write.mode("overwrite").partitionBy("gen")
+          .parquet(s"$path/manifest"),
+        () => spark.range(1)
+          .select(lit(maskBits.toLong).as("mask_bits"))
+          .write.mode("overwrite").parquet(s"$path/meta"))
+    }
   }
 
   /** Ingest a delta batch: chunk the delta (delta-sized, map-only),

@@ -126,70 +126,71 @@ object ClusterRegistry {
       path: String, threshold: Double = 0.8,
       ledgerBuckets: Int = 16): Unit = {
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path)
-    // ONE corpus sketch feeds both the index build and the batch
-    // clustering (previously each ran its own scan→shingle→sketch
-    // chain over the full corpus). The geometry comes from BandIndex's
-    // own default constants — the single source of truth — so the
-    // shared sketch can never disagree with the stored index meta.
-    val sk = Materialize.shared(BandIndex.sketchRelation(
-      docs, idCol, textCol,
-      shingleWidth = BandIndex.DefaultShingleWidth,
-      numHashes = BandIndex.DefaultNumHashes,
-      bands = BandIndex.DefaultBands))
-    // the four build relations are pairwise disjoint (band/, the
-    // assignment base, ledger/, meta/), so the index build and the
-    // text-ledger write run CONCURRENTLY with the clustering chain —
-    // the wall is the longest of the three, not their sum. Racing
-    // consumers of the shared sketch are safe: cached partitions are
-    // computed once under the block manager's per-block lock.
-    val bandFut = Overlap.future(spark)(
-      Trace("reg.build:band")(BandIndex.build(docs, idCol, textCol,
-        s"$path/band", preSketched = Some(sk))))
-    // the one-row meta literal is disjoint from every other relation —
-    // launched with the fan-out instead of serializing after it (a
-    // crashed partial build was never servable in any ordering; ingest
-    // fails loudly on a missing meta either way)
-    val metaFut = Overlap.future(spark)(
-      spark.range(1)
-        .select(lit(threshold).as("threshold"),
-          lit(ledgerBuckets.toLong).as("ledger_buckets"))
-        .write.mode("overwrite").parquet(s"$path/meta"))
-    // the layout-owned text ledger starts with the build set — from
-    // here on, ingests are self-contained (delta-only). Bucketed for
-    // rehydration pruning; repartitioned by bucket so each task writes
-    // one bucket directory (no small-files fan-out).
-    val ledgerFut = Overlap.future(spark)(
-      Trace("reg.build:ledger")(docs
-        .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-        .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
-        .repartition(col("bucket"))
-        .withColumn("batch", lit(BaseBatch))
-        .write.mode("overwrite").partitionBy("batch", "bucket")
-        .parquet(s"$path/ledger")))
-    try {
-      val comp = Trace("reg.build:components")(DedupClusters.components(
-        MinHashNearDup.pairsFromSketched(sk, threshold,
-          numHashes = BandIndex.DefaultNumHashes),
-        "id_a", "id_b"))
-        .select(col("id").as("doc_id"), col("comp"))
-      Trace("reg.build:assignments")(docs.select(col(idCol).as("doc_id"))
-        .join(comp, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-        .withColumn("gen", lit(0L))
-        .withColumn("batch", lit(BaseBatch))
-        .write.mode("overwrite").partitionBy("batch")
-        .parquet(s"$path/assignments"))
-      Overlap.await(bandFut)
-      Overlap.await(ledgerFut)
-      Overlap.await(metaFut)
-    } catch {
-      case e: Throwable =>
-        Overlap.settle(bandFut)
-        Overlap.settle(ledgerFut)
-        Overlap.settle(metaFut)
-        throw e
+    LsmLayout.startIndexLife(spark, path) {
+      // ONE corpus sketch feeds both the index build and the batch
+      // clustering (previously each ran its own scan→shingle→sketch
+      // chain over the full corpus). The geometry comes from BandIndex's
+      // own default constants — the single source of truth — so the
+      // shared sketch can never disagree with the stored index meta.
+      val sk = Materialize.shared(BandIndex.sketchRelation(
+        docs, idCol, textCol,
+        shingleWidth = BandIndex.DefaultShingleWidth,
+        numHashes = BandIndex.DefaultNumHashes,
+        bands = BandIndex.DefaultBands))
+      // the four build relations are pairwise disjoint (band/, the
+      // assignment base, ledger/, meta/), so the index build and the
+      // text-ledger write run CONCURRENTLY with the clustering chain —
+      // the wall is the longest of the three, not their sum. Racing
+      // consumers of the shared sketch are safe: cached partitions are
+      // computed once under the block manager's per-block lock.
+      val bandFut = Overlap.future(spark)(
+        BandIndex.build(docs, idCol, textCol,
+          s"$path/band", preSketched = Some(sk)))
+      // the one-row meta literal is disjoint from every other relation —
+      // launched with the fan-out instead of serializing after it (a
+      // crashed partial build was never servable in any ordering; ingest
+      // fails loudly on a missing meta either way)
+      val metaFut = Overlap.future(spark)(
+        spark.range(1)
+          .select(lit(threshold).as("threshold"),
+            lit(ledgerBuckets.toLong).as("ledger_buckets"))
+          .write.mode("overwrite").parquet(s"$path/meta"))
+      // the layout-owned text ledger starts with the build set — from
+      // here on, ingests are self-contained (delta-only). Bucketed for
+      // rehydration pruning; repartitioned by bucket so each task writes
+      // one bucket directory (no small-files fan-out).
+      val ledgerFut = Overlap.future(spark)(
+        docs
+          .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+          .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
+          .repartition(col("bucket"))
+          .withColumn("batch", lit(BaseBatch))
+          .write.mode("overwrite").partitionBy("batch", "bucket")
+          .parquet(s"$path/ledger"))
+      try {
+        val comp = DedupClusters.components(
+          MinHashNearDup.pairsFromSketched(sk, threshold,
+            numHashes = BandIndex.DefaultNumHashes),
+          "id_a", "id_b")
+          .select(col("id").as("doc_id"), col("comp"))
+        docs.select(col(idCol).as("doc_id"))
+          .join(comp, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+          .withColumn("gen", lit(0L))
+          .withColumn("batch", lit(BaseBatch))
+          .write.mode("overwrite").partitionBy("batch")
+          .parquet(s"$path/assignments")
+        Overlap.await(bandFut)
+        Overlap.await(ledgerFut)
+        Overlap.await(metaFut)
+      } catch {
+        case e: Throwable =>
+          Overlap.settle(bandFut)
+          Overlap.settle(ledgerFut)
+          Overlap.settle(metaFut)
+          throw e
+      }
     }
   }
 
@@ -338,7 +339,6 @@ object ClusterRegistry {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
-    LsmLayout.requireValidBatchId(batchId)
     // the delta is sketched ONCE (with the index's own meta) for all
     // three consumers — the index probe, the within-delta pair join
     // and the index append; the relation is delta-sized and shared
@@ -349,14 +349,28 @@ object ClusterRegistry {
       Materialize.shared(BandIndex.sketchRelation(
         delta, idCol, textCol, shingleWidth, numHashes, bands))
     }
-    if (!LsmLayout.isApplied(spark, path, batchId)) {
+    // file-count + overlay-size hygiene (the s46 policy): the fold's
+    // broadcast overlay grows with every generation until a compact
+    // folds it into base — one listStatus, no data read
+    LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
+      compactAfterGenerations, s"$path/assignments", "batch=",
+      compact(spark, path, _),
+      // an applied batch: the next batch must still see this one in the
+      // band index (its own idempotency marker lives inside BandIndex);
+      // a clean retry whose registry half short-circuited only sketches
+      // if the band half actually needs to run (it checks its own
+      // marker first)
+      whenApplied = BandIndex.append(delta, idCol, textCol, s"$path/band",
+        batchId, writerEpoch = writerEpoch,
+        preSketched =
+          if (LsmLayout.isApplied(spark, s"$path/band", batchId)) None
+          else Some(deltaSketch))) {
       // fence BEFORE the first mutation: a superseded writer used to
       // land its ledger generation before the first epoch check (the
       // pre-existing write-then-fence pattern, extended to corpus
       // text) — now it is rejected before touching any relation
       LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      val metaRow = Trace("reg.ingest:meta")(
-        LsmLayout.cachedMetaRow(spark, s"$path/meta"))
+      val metaRow = LsmLayout.cachedMetaRow(spark, s"$path/meta")
       val threshold = metaRow.getAs[Double]("threshold")
       // MIGRATION NOTE: layouts built before the layout-owned ledger
       // (round 15) carry no `ledger_buckets` in meta and no ledger/
@@ -381,13 +395,13 @@ object ClusterRegistry {
       // read — the replay input is the state before the batch either
       // way, appended or mid-append.
       val ledgerFut = Overlap.future(spark)(
-        Trace("reg.ingest:ledger-append")(LsmLayout.writeGeneration(
+        LsmLayout.writeGeneration(
           delta
             .select(col(idCol).as("doc_id"), col(textCol).as("text"))
             .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
             .repartition(col("bucket"))
             .withColumn("batch", lit(batchId)),
-          s"$path/ledger", "batch", "bucket")))
+          s"$path/ledger", "batch", "bucket"))
       var bandFut: Overlap.Task[Unit] = null
       try {
         // the probe corpus keeps the ledger's PHYSICAL bucket column
@@ -455,9 +469,8 @@ object ClusterRegistry {
           .pairsFromSketched(deltaSketch, threshold,
             numHashes = bandMeta._1)
           .select(col("id_a").as("u"), col("id_b").as("v"))
-        val comp = Trace("reg.ingest:components")(
-          Materialize.shared(DedupClusters.components(
-            edgesDC.unionByName(edgesDD), "u", "v")))
+        val comp = Materialize.shared(DedupClusters.components(
+          edgesDC.unionByName(edgesDD), "u", "v"))
         // index the batch into the band layout CONCURRENTLY with the
         // assignment-generation work below: the two touch disjoint
         // relations (band/sigs+postings vs assignments), and the band
@@ -474,9 +487,9 @@ object ClusterRegistry {
         // racing first consumer computes cached partitions once under
         // the block manager's per-block lock (the lazy val itself
         // synchronizes initialization).
-        bandFut = Overlap.future(spark)(Trace("reg.ingest:band-append")(
+        bandFut = Overlap.future(spark)(
           BandIndex.append(delta, idCol, textCol, s"$path/band", batchId,
-            writerEpoch = writerEpoch, preSketched = Some(deltaSketch))))
+            writerEpoch = writerEpoch, preSketched = Some(deltaSketch)))
         // delta assignments: component min if paired, else singleton
         val deltaAssign = delta.select(col(idCol).as("doc_id"))
           .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -503,11 +516,11 @@ object ClusterRegistry {
         // explicit-path read shape already excludes; the heavy
         // subtrees (edges, components, the fold overlay) are persisted
         // above, so the write job re-executes none of them.
-        Trace("reg.ingest:gen-write")(LsmLayout.writeGeneration(
+        LsmLayout.writeGeneration(
           deltaAssign.unionByName(remapRows)
             .withColumn("gen", lit(nextGen))
             .withColumn("batch", lit(batchId)),
-          s"$path/assignments", "batch"))
+          s"$path/assignments", "batch")
         // the ledger AND band generations must be committed before the
         // batch is marked applied (the marker asserts EVERY registry
         // relation — assignments, ledger, internal band — holds the
@@ -515,7 +528,6 @@ object ClusterRegistry {
         // overlapped the gen-write window)
         Overlap.await(ledgerFut)
         Overlap.await(bandFut)
-        LsmLayout.commitApplied(spark, path, batchId, writerEpoch)
       } catch {
         case e: Throwable =>
           // settle in-flight writes before surfacing: no background
@@ -525,23 +537,7 @@ object ClusterRegistry {
           if (bandFut != null) Overlap.settle(bandFut)
           throw e
       }
-    } else {
-      // the next batch must see this one in the band index (its own
-      // idempotency marker lives inside BandIndex); a clean retry whose
-      // registry half short-circuited only sketches if the band half
-      // actually needs to run (it checks its own marker first)
-      Trace("reg.ingest:band-append")(
-        BandIndex.append(delta, idCol, textCol, s"$path/band", batchId,
-          writerEpoch = writerEpoch,
-          preSketched =
-            if (LsmLayout.isApplied(spark, s"$path/band", batchId)) None
-            else Some(deltaSketch)))
     }
-    // file-count + overlay-size hygiene (the s46 policy): the fold's
-    // broadcast overlay grows with every generation until a compact
-    // folds it into base — one listStatus, no data read
-    LsmLayout.autoCompact(spark, path, s"$path/assignments", "batch=",
-      compactAfterGenerations, writerEpoch)(compact(spark, path, _))
   }
 
   /** One-row `(n_live, n_dead)` over the physically-present assignment
@@ -619,17 +615,17 @@ object ClusterRegistry {
     LsmLayout.snapshotCompact(spark, path, writerEpoch,
       rels = Seq((s"$path/assignments", "batch=")),
       secondary = Seq((s"$path/ledger", "batch="))) { fold =>
-      Seq(() => Trace("reg.compact:fold-write")(LsmLayout.writeGeneration(
+      Seq(() => LsmLayout.writeGeneration(
         assignmentsScoped(spark, path, None, snapOpt = Some(fold.snap))
           .withColumn("gen", lit(0L))
           .withColumn("batch", lit(fold.newBase)),
-        s"$path/assignments", "batch"))) ++
+        s"$path/assignments", "batch")) ++
       (if (fold.foldSecondary)
-        Seq(() => Trace("reg.compact:ledger-fold")(LsmLayout.writeGeneration(
+        Seq(() => LsmLayout.writeGeneration(
           ledgerScoped(spark, path, None, fold.snap)
             .repartition(col("bucket"))
             .withColumn("batch", lit(fold.newBase)),
-          s"$path/ledger", "batch", "bucket")))
+          s"$path/ledger", "batch", "bucket"))
       else Seq.empty)
     }
     // the internal band index folds on the SAME rule as the ledger:
@@ -639,7 +635,6 @@ object ClusterRegistry {
     val bandPath = s"$path/band"
     LsmLayout.compactWhenDue(spark, bandPath,
       BandIndex.foldedRelations(bandPath))(
-      Trace("reg.compact:band")(
-        BandIndex.compact(spark, bandPath, writerEpoch)))
+      BandIndex.compact(spark, bandPath, writerEpoch))
   }
 }

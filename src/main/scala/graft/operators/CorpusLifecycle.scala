@@ -133,27 +133,26 @@ object CorpusLifecycle {
     // settles every branch, then rethrows the first error — a partial
     // fan-out the same retry call repairs).
     Overlap.all(delta.sparkSession)(
-      (layouts.registry.map(p => () => Trace("corpus.ingest:registry")(
+      (layouts.registry.map(p => () =>
         ClusterRegistry.ingest(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p)))) ++
-      layouts.band.map(p => () => Trace("corpus.ingest:band")(
+          compactAfterGenerations, epochOf(p))) ++
+      layouts.band.map(p => () =>
         BandIndex.append(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p)))) ++
-      layouts.lexical.map(p => () => Trace("corpus.ingest:lexical")(
+          compactAfterGenerations, epochOf(p))) ++
+      layouts.lexical.map(p => () =>
         LexicalIndex.refresh(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p)))) ++
-      layouts.kmv.map(p => () => Trace("corpus.ingest:kmv")(
+          compactAfterGenerations, epochOf(p))) ++
+      layouts.kmv.map(p => () =>
         KmvLayout.refresh(delta, groupCol.get, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p)))) ++
+          compactAfterGenerations, epochOf(p))) ++
       layouts.ivf.map { p => () =>
         val (vecs, vid, vcol) = deltaVectors.get
-        Trace("corpus.ingest:ivf")(
-          IvfLayout.refresh(vecs, vid, vcol, p, batchId,
-            compactAfterGenerations, epochOf(p)))
+        IvfLayout.refresh(vecs, vid, vcol, p, batchId,
+          compactAfterGenerations, epochOf(p))
       } ++
-      layouts.chunks.map(p => () => Trace("corpus.ingest:chunks")(
+      layouts.chunks.map(p => () =>
         ChunkStore.refresh(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p))))).toSeq: _*)
+          compactAfterGenerations, epochOf(p)))).toSeq: _*)
   }
 
   /** Fan out the snapshot-atomic compacts — physical reclamation of

@@ -140,10 +140,11 @@ object DedupClusters {
     // checkpoint, same answer (equivalence property-tested in
     // DedupClustersSpec). The gate bounds the fast path's actual work
     // (it iterates raw edge rows), so an over-threshold graph can only
-    // ever fall through to the scale path; the 10^7-edge FrontierDrill
-    // stays on the iterative rounds. The upstream pair producer still
-    // runs exactly once — the counted checkpoint below is the single
-    // materialization, and the count rides its job. Disabled when a
+    // ever fall through to the scale path; DedupClustersSpec's ring
+    // family ("1k ring with chords (iterative)") pins the iterative
+    // rounds. The upstream pair producer still runs exactly once — the
+    // counted checkpoint below is the single materialization, and the
+    // count rides its job. Disabled when a
     // reliable checkpoint dir is given (the 100 TB deployment mode
     // keeps the uniform round structure) or smallGraphEdgeRows < 0
     // (how the spec pins the iterative path).
@@ -230,8 +231,9 @@ object DedupClusters {
       // reachable minimum, values stay monotone, and membership (the
       // changed-vertex set) is untouched, so the frontier invariant
       // argued above is preserved verbatim. Without this step the
-      // cross-round jump alone is NOT O(log diameter): the 10⁷-edge
-      // FrontierDrill's ring+chain family blows the 30-round cap with
+      // cross-round jump alone is NOT O(log diameter): at 10⁷ edges the
+      // ring+chain family (DedupClustersSpec's "1k ring with chords
+      // (iterative)" case is its small twin) blows the 30-round cap with
       // ~13k frontier left, while doubling closes the whole graph in 2
       // rounds (SCALE_r08.md has the A/B).
       //

@@ -47,20 +47,21 @@ object IvfLayout {
       vecs: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Seq[Double]]): Unit = {
     val spark = vecs.sparkSession
-    LsmLayout.startIndexLife(spark, path)
-    LsmLayout.deleteDir(spark, s"$path/centroids")
-    // the cell-assigned vectors and the literal centroid table are
-    // disjoint relations — write them concurrently (the build
-    // discipline shared across the stored layouts; a crashed partial
-    // build was never servable in any ordering)
-    Overlap.all(spark)(
-      () => vecs
-        .withColumn("cell",
-          Similarity.nearestCell(Similarity.asDouble(col(vecCol)), centroids))
-        .withColumn("gen", lit(BaseGen))
-        .write.mode("overwrite").partitionBy("gen", "cell")
-        .parquet(s"$path/vectors"),
-      () => writeCentroids(spark, path, BaseGen, centroids))
+    LsmLayout.startIndexLife(spark, path) {
+      LsmLayout.deleteDir(spark, s"$path/centroids")
+      // the cell-assigned vectors and the literal centroid table are
+      // disjoint relations — write them concurrently (the build
+      // discipline shared across the stored layouts; a crashed partial
+      // build was never servable in any ordering)
+      Overlap.all(spark)(
+        () => vecs
+          .withColumn("cell",
+            Similarity.nearestCell(Similarity.asDouble(col(vecCol)), centroids))
+          .withColumn("gen", lit(BaseGen))
+          .write.mode("overwrite").partitionBy("gen", "cell")
+          .parquet(s"$path/vectors"),
+        () => writeCentroids(spark, path, BaseGen, centroids))
+    }
   }
 
   /** Centroid tables are VERSIONED BY THE BASE GENERATION NAME (one

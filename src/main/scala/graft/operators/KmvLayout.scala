@@ -75,20 +75,21 @@ object KmvLayout {
       docs: DataFrame, groupCol: String, idCol: String, textCol: String,
       path: String, k: Int = 64, salt: String = "kmvl:"): Unit = {
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path)
-    // the sketch table and the one-row literal meta are disjoint —
-    // write them concurrently (the build discipline shared across the
-    // stored layouts; a crashed partial build was never servable in
-    // any ordering)
-    Overlap.all(spark)(
-      () => docSketches(docs, groupCol, idCol, textCol, salt, k)
-        .withColumn("gen", lit(0L))
-        .withColumn("batch", lit(BaseBatch))
-        .write.mode("overwrite").partitionBy("batch")
-        .parquet(s"$path/sketches"),
-      () => spark.range(1)
-        .select(lit(k.toLong).as("k"), lit(salt).as("hash_salt"))
-        .write.mode("overwrite").parquet(s"$path/meta"))
+    LsmLayout.startIndexLife(spark, path) {
+      // the sketch table and the one-row literal meta are disjoint —
+      // write them concurrently (the build discipline shared across the
+      // stored layouts; a crashed partial build was never servable in
+      // any ordering)
+      Overlap.all(spark)(
+        () => docSketches(docs, groupCol, idCol, textCol, salt, k)
+          .withColumn("gen", lit(0L))
+          .withColumn("batch", lit(BaseBatch))
+          .write.mode("overwrite").partitionBy("batch")
+          .parquet(s"$path/sketches"),
+        () => spark.range(1)
+          .select(lit(k.toLong).as("k"), lit(salt).as("hash_salt"))
+          .write.mode("overwrite").parquet(s"$path/meta"))
+    }
   }
 
   /** Delta refresh: sketch the delta ONLY (per doc) and write its

@@ -80,38 +80,39 @@ object LexicalIndex {
     // a rebuild starts a fresh index life (stale tombstones would
     // silently exclude rebuilt postings while the fresh lexicon/meta
     // still count them)
-    LsmLayout.startIndexLife(spark, path)
-    // meta/ is disjoint from the postings→lexicon chain (its counts
-    // come from the DOCS, not the stored postings — docs shorter than
-    // the shingle width have no postings but still count), so its
-    // corpus scan runs CONCURRENTLY with the chain instead of
-    // serializing as a third action after it
-    Overlap.all(spark)(
-      () => {
-        postingProjection(docs, idCol, textCol, n, buckets)
+    LsmLayout.startIndexLife(spark, path) {
+      // meta/ is disjoint from the postings→lexicon chain (its counts
+      // come from the DOCS, not the stored postings — docs shorter than
+      // the shingle width have no postings but still count), so its
+      // corpus scan runs CONCURRENTLY with the chain instead of
+      // serializing as a third action after it
+      Overlap.all(spark)(
+        () => {
+          postingProjection(docs, idCol, textCol, n, buckets)
+            .withColumn("gen", lit(BaseGen))
+            .repartition(col("bucket"))
+            .sortWithinPartitions(col("shingle"))
+            .write.mode("overwrite").partitionBy("gen", "bucket")
+            .parquet(s"$path/postings")
+          // document frequency from the STORED postings — one groupBy
+          // over the narrow index, no second pass over text
+          spark.read.parquet(s"$path/postings")
+            .groupBy(col("bucket"), col("shingle"))
+            .agg(count(lit(1)).as("df"))
+            .withColumn("gen", lit(BaseGen))
+            .repartition(col("bucket"))
+            .sortWithinPartitions(col("shingle"))
+            .write.mode("overwrite").partitionBy("gen", "bucket")
+            .parquet(s"$path/lexicon")
+        },
+        () => docs
+          .agg(count(lit(1)).as("n_docs"),
+            sum(size(split(col(textCol), " ")).cast("long")).as("n_tokens"))
+          .withColumn("buckets", lit(buckets.toLong))
+          .withColumn("shingle_n", lit(n.toLong))
           .withColumn("gen", lit(BaseGen))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("shingle"))
-          .write.mode("overwrite").partitionBy("gen", "bucket")
-          .parquet(s"$path/postings")
-        // document frequency from the STORED postings — one groupBy
-        // over the narrow index, no second pass over text
-        spark.read.parquet(s"$path/postings")
-          .groupBy(col("bucket"), col("shingle"))
-          .agg(count(lit(1)).as("df"))
-          .withColumn("gen", lit(BaseGen))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("shingle"))
-          .write.mode("overwrite").partitionBy("gen", "bucket")
-          .parquet(s"$path/lexicon")
-      },
-      () => docs
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col(textCol), " ")).cast("long")).as("n_tokens"))
-        .withColumn("buckets", lit(buckets.toLong))
-        .withColumn("shingle_n", lit(n.toLong))
-        .withColumn("gen", lit(BaseGen))
-        .write.mode("overwrite").partitionBy("gen").parquet(s"$path/meta"))
+          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/meta"))
+    }
   }
 
   /** The generation name the one-shot [[build]] writes. Incremental
@@ -463,20 +464,20 @@ object LexicalIndex {
       rels = Seq((s"$path/lexicon", "gen="), (s"$path/meta", "gen=")),
       secondary = Seq((s"$path/postings", "gen="))) { fold =>
       (if (fold.foldSecondary)
-        Seq(() => Trace("lex.compact:postings-fold")(writeBucketed(
+        Seq(() => writeBucketed(
           postingsScoped(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
-          s"$path/postings")))
+          s"$path/postings"))
       else Seq.empty) ++
       Seq(
-        () => Trace("lex.compact:lexicon-fold")(writeBucketed(
+        () => writeBucketed(
           lexiconScoped(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
-          s"$path/lexicon")),
-        () => Trace("lex.compact:meta-fold")(LsmLayout.writeGeneration(
+          s"$path/lexicon"),
+        () => LsmLayout.writeGeneration(
           metaRowScoped(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
-          s"$path/meta", "gen")))
+          s"$path/meta", "gen"))
     }
 
   /** Reclamation report (the deadChunkStats pattern on the lexical

@@ -414,10 +414,8 @@ private[graft] object LsmLayout {
     * viable plan once the ledger text is large; at 100 TB a per-batch
     * full text scan is the maintenance bottleneck). Same discipline
     * as [[broadcastBudgetBytes]]: the on-disk bytes are the honest
-    * decision input. Test hook: `-Dgraft.rehydration.prune.bytes=<n>`. */
-  def rehydrationPruneBytes: Long =
-    sys.props.get("graft.rehydration.prune.bytes").map(_.toLong)
-      .getOrElse(256L << 20)
+    * decision input. */
+  val rehydrationPruneBytes: Long = 256L << 20
 
   /** The broadcast budget every small-side maintenance relation
     * (read-fold overlays, tombstone id lists) is guarded by: past it,
@@ -468,18 +466,24 @@ private[graft] object LsmLayout {
   // ---- the maintenance skeleton ---------------------------------------
   // One spelling of the choreography every layout's build, ingest,
   // forget and compact shares; a layout passes in only its own writes.
+  // Each of the four is one Trace span ("build", "ingest", "forget",
+  // "compact") keyed by the layout path.
 
-  /** The build preamble: a rebuild starts a fresh index life. Pending
-    * tombstones of the previous life would hide rebuilt rows, its
-    * applied markers would skip the first batch reusing an old id, and
-    * its snapshot would point reads at a vanished base (the build's
-    * full overwrite wipes every generation, so the legacy snapshot is
-    * again exactly right). Writer epochs are kept (see the fence). */
-  def startIndexLife(spark: SparkSession, path: String): Unit = {
-    deleteDir(spark, s"$path/tombstones")
-    deleteDir(spark, s"$path/_applied")
-    deleteDir(spark, snapDir(path))
-  }
+  /** A build: a rebuild starts a fresh index life, then runs the
+    * layout's `build` writes. Pending tombstones of the previous life
+    * would hide rebuilt rows, its applied markers would skip the first
+    * batch reusing an old id, and its snapshot would point reads at a
+    * vanished base (the build's full overwrite wipes every generation,
+    * so the legacy snapshot is again exactly right). Writer epochs are
+    * kept (see the fence). */
+  def startIndexLife(spark: SparkSession, path: String)(
+      build: => Unit): Unit =
+    Trace("build", path) {
+      deleteDir(spark, s"$path/tombstones")
+      deleteDir(spark, s"$path/_applied")
+      deleteDir(spark, snapDir(path))
+      build
+    }
 
   /** Write `df` into its generation partition(s) under `dir` with
     * dynamic partition overwrite — a retry replaces exactly the
@@ -515,23 +519,25 @@ private[graft] object LsmLayout {
       compact(writerEpoch)
 
   /** The applied-once ingest of one batch: unless the batch's marker
-    * exists, run the layout's `writes` and commit ([[commitApplied]]);
-    * then, on the fresh AND the already-applied path (a clean retry
-    * must still honor the budget), the [[autoCompact]] policy over the
-    * relation `dir`. */
+    * exists, run the layout's `writes` and commit ([[commitApplied]]),
+    * else run `whenApplied`; then, on the fresh AND the already-applied
+    * path (a clean retry must still honor the budget), the
+    * [[autoCompact]] policy over the relation `dir`. */
   def ingestBatch(
       spark: SparkSession, path: String, batchId: String,
       writerEpoch: Option[Long], compactAfterGenerations: Int,
-      dir: String, prefix: String, compact: Option[Long] => Unit)(
-      writes: => Unit): Unit = {
-    requireValidBatchId(batchId)
-    if (!isApplied(spark, path, batchId)) {
-      writes
-      commitApplied(spark, path, batchId, writerEpoch)
+      dir: String, prefix: String, compact: Option[Long] => Unit,
+      whenApplied: => Unit = ())(
+      writes: => Unit): Unit =
+    Trace("ingest", path) {
+      requireValidBatchId(batchId)
+      if (!isApplied(spark, path, batchId)) {
+        writes
+        commitApplied(spark, path, batchId, writerEpoch)
+      } else whenApplied
+      autoCompact(spark, path, dir, prefix, compactAfterGenerations,
+        writerEpoch)(compact)
     }
-    autoCompact(spark, path, dir, prefix, compactAfterGenerations,
-      writerEpoch)(compact)
-  }
 
   /** The forget batch `ts-<batchId>`, idempotent at both levels: a
     * committed batch no-ops on its marker; otherwise `forget` loses the
@@ -547,23 +553,25 @@ private[graft] object LsmLayout {
       spark: SparkSession, path: String, batchId: String,
       writerEpoch: Option[Long], forget: DataFrame, idName: String,
       storedId: String)(
-      writes: (DataFrame, LayoutSnapshot) => Unit): Unit = {
-    requireValidBatchId(batchId)
-    val gen = s"ts-$batchId"
-    if (isApplied(spark, path, gen)) return
-    val snap = snapshot(spark, path)
-    val fresh = pendingTombstonesSized(spark, path, snap) match {
-      case None => forget
-      case Some((ts, bytes)) => forget.join(
-        hintBroadcast(ts.filter(col("batch") =!= batchId)
-          .select(col(storedId).as(idName)), bytes),
-        Seq(idName), "left_anti")
+      writes: (DataFrame, LayoutSnapshot) => Unit): Unit =
+    Trace("forget", path) {
+      requireValidBatchId(batchId)
+      val gen = s"ts-$batchId"
+      if (!isApplied(spark, path, gen)) {
+        val snap = snapshot(spark, path)
+        val fresh = pendingTombstonesSized(spark, path, snap) match {
+          case None => forget
+          case Some((ts, bytes)) => forget.join(
+            hintBroadcast(ts.filter(col("batch") =!= batchId)
+              .select(col(storedId).as(idName)), bytes),
+            Seq(idName), "left_anti")
+        }
+        val (rows, ckIds, n) = IterationCheckpoint.localCounted(fresh)
+        if (n > 0L) writes(rows, snap)
+        commitApplied(spark, path, gen, writerEpoch)
+        IterationCheckpoint.release(spark.sparkContext, ckIds)
+      }
     }
-    val (rows, ckIds, n) = IterationCheckpoint.localCounted(fresh)
-    if (n > 0L) writes(rows, snap)
-    commitApplied(spark, path, gen, writerEpoch)
-    IterationCheckpoint.release(spark.sparkContext, ckIds)
-  }
 
   /** The id-list tombstone of the per-id-fact layouts (band postings,
     * KMV sketches, IVF vectors, chunk manifests, registry assignments):
@@ -647,7 +655,7 @@ private[graft] object LsmLayout {
       spark: SparkSession, root: String, writerEpoch: Option[Long],
       rels: Seq[(String, String)],
       secondary: Seq[(String, String)] = Seq.empty)(
-      folds: Fold => Seq[() => Unit]): Unit = {
+      folds: Fold => Seq[() => Unit]): Unit = Trace("compact", root) {
     val snap = snapshot(spark, root)
     requireCurrentEpoch(spark, root, writerEpoch)
     val newBase = snap.nextBase

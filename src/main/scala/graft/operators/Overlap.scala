@@ -29,8 +29,8 @@ import org.apache.spark.sql.SparkSession
   * session (session thread-locals do not cross pool threads); job
   * descriptions/groups are thread-local and intentionally not
   * propagated (cosmetic only on these paths), while each task tags its
-  * jobs with a tag of its own, the handle its cancellation uses. The
-  * pool is unbounded
+  * jobs with a tag of its own, the handle its cancellation uses, and
+  * carries its submitter's [[Trace]] span tags. The pool is unbounded
   * (cached) because tasks may themselves fan out — nested submits must
   * never deadlock — and daemon so it cannot pin a JVM exit.
   */
@@ -59,7 +59,7 @@ private[graft] object Overlap {
     * body issues carries the task's job tag, so cancelling the task
     * cancels those jobs too. */
   final class Task[A] private[Overlap] (
-      spark: SparkSession, tag: String, body: () => A)
+      spark: SparkSession, tag: String, spans: Set[String], body: () => A)
       extends java.util.concurrent.FutureTask[A](() => {
         SparkSession.setActiveSession(spark)
         val sc = spark.sparkContext
@@ -71,6 +71,7 @@ private[graft] object Overlap {
         // at task entry.
         sc.clearJobGroup()
         sc.setLocalProperty("spark.sql.execution.id", null)
+        Trace.adopt(sc, spans)
         sc.addJobTag(tag)
         try body() finally sc.removeJobTag(tag)
       }) {
@@ -102,7 +103,8 @@ private[graft] object Overlap {
 
   /** Submit `body` for concurrent execution against `spark`. */
   def future[A](spark: SparkSession)(body: => A): Task[A] = {
-    val t = new Task(spark, s"graft-overlap-${nextTagId.getAndIncrement()}", () => body)
+    val t = new Task(spark, s"graft-overlap-${nextTagId.getAndIncrement()}",
+      Trace.inherited(spark.sparkContext), () => body)
     pool.execute(t)
     t
   }

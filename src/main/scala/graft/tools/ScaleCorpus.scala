@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-/** Shared synthetic-scale corpus generator for the drill tools
-  * (ScaleDrill, PairDrill): `copies` salted copies per base document /
-  * embedding under `target/scale<copies>x`, testdata untouched.
+/** Synthetic-scale corpus generator for ScaleDrill: `copies` salted
+  * copies per base document / embedding under `target/scale<copies>x`,
+  * testdata untouched.
   *
   * Copy 0 is verbatim; document copies 1..N-1 suffix every 3rd token
   * with a copy tag, which destroys enough 3-shingles that COPIES ARE

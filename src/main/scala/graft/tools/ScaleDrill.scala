@@ -133,8 +133,8 @@ object ScaleDrill {
       "n170_epoch_quota", "n172_histogram_emd", "n173_stream_cap_parity",
       // round-12 additions: the forget/retry/auto-compaction gates of
       // the stored-layout maintenance family and the chunk-store
-      // refresh (the MaintenanceDrill covers the 100×-corpus /
-      // 1×-delta separation these fused oracle runs cannot see)
+      // refresh (these fused oracle runs time build and refresh
+      // together; graft.tools.Ledger's build/ingest spans separate them)
       "s44_band_forget", "s45_kmv_forget", "s46_lexical_autocompact",
       "s47_chunk_refresh", "n174_refresh_retry", "n175_band_append_retry",
       "n176_maintenance_interleave", "s48_ivf_refresh", "s49_ivf_forget",
@@ -166,7 +166,7 @@ object ScaleDrill {
     val spark = Sessions.local(appName = "graft-scale-drill")
     spark.sparkContext.setLogLevel("WARN")
 
-    // corpus construction: see ScaleCorpus (shared with PairDrill)
+    // corpus construction: see ScaleCorpus
     val scaledDir = ScaleCorpus.build(spark, sfDir, copies)
 
     def time(name: String, dir: String): Double = {

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Compile-time bridge to two `private[sql]` Spark APIs (the Scala
+/** Compile-time bridge to package-private Spark APIs (the Scala
   * access modifier admits code in this package; the JVM methods are
   * public). Used by `graft.operators.IterationCheckpoint` to rebuild a
   * checkpointed frame from its INTERNAL rows: the public
@@ -34,4 +34,9 @@ object GraftSqlInternals {
   /** The dataset's compiled internal-row RDD (`QueryExecution.toRdd`). */
   def internalRdd(df: Dataset[_]): RDD[InternalRow] =
     df.queryExecution.toRdd
+
+  /** Block until every listener event posted so far has been delivered
+    * (`graft.tools.Ledger` reads its listeners only after this). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

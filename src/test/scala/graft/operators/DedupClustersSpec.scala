@@ -18,7 +18,8 @@ class DedupClustersSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Iterative path pinned (`smallGraphEdgeRows = -1`) — the frontier
-    * rounds + pointer doubling the 10^7-edge FrontierDrill runs. */
+    * rounds + pointer doubling that graphs past the small-graph gate
+    * run. */
   private def runIter(rows: Seq[(Long, Long)]): Map[Long, Long] =
     DedupClusters.components(edgesDf(rows), "a", "b",
       smallGraphEdgeRows = -1L)
@@ -120,7 +121,8 @@ class DedupClustersSpec extends SparkTestBase {
     // formed during a round can point "backwards" around the ring, and
     // the within-round doubling must still terminate (labels strictly
     // decrease, so the pointer graph stays acyclic even when the edge
-    // graph is not). Chords replicate the FrontierDrill ring family.
+    // graph is not). The ring-with-multiplicative-chords family is the
+    // one the 10^7-edge runs (SCALE_r08.md) stressed, at 1k vertices.
     val n = 1000L
     val ring = (0L until n).map(i => i -> ((i + 1) % n))
     val chords = (0L until n).map(i => i -> ((i * 2654435761L) % n))

@@ -567,6 +567,35 @@ object EngineLawsProps extends Properties("EngineLaws") {
     }
   }
 
+  property("IterationCheckpoint local/localCounted/reliable return their input") = {
+    // every materialization the iterative loops use must hand back its
+    // input row for row — the symmetrize-distinct edge shape of the
+    // components rounds, over ids from the 2e7+ ring range of the
+    // 10^7-edge components runs as well as small ones
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir("target/test_iteration_checkpoint")
+    val id = Gen.oneOf(Gen.choose(0L, 50L),
+      Gen.choose(20000000L, 21000000L), Gen.const(Long.MaxValue))
+    forAll(Gen.listOf(Gen.zip(id, id))) { edges =>
+      val base = edges.toDF("u", "v")
+      val sym = base.union(base.select(col("v").as("u"), col("u").as("v")))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+      def bag(df: org.apache.spark.sql.DataFrame) =
+        df.collect().groupBy(identity).view.mapValues(_.length).toMap
+      val want = bag(sym)
+      def same(df: org.apache.spark.sql.DataFrame) =
+        df.schema == sym.schema && bag(df) == want
+      val (l, lIds) = IterationCheckpoint.local(sym)
+      val (c, cIds, n) = IterationCheckpoint.localCounted(sym)
+      val (r, _) = IterationCheckpoint.reliable(sym)
+      val ok = same(l) && same(c) && n == want.values.sum && same(r)
+      IterationCheckpoint.release(sc, lIds ++ cIds)
+      ok
+    }
+  }
+
   property("snapshot diff statuses partition the id universe") = {
     val snapGen = Gen.listOf(Gen.zip(Gen.choose(1L, 12L), Gen.alphaStr))
       .map(_.toMap.toList)
