@@ -15,8 +15,15 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `path`:
   *  - `band/` — a [[BandIndex]] over everything ingested (the probe
-  *    side of each batch); shares the registry's tombstone/compact
-  *    lifecycle below;
+  *    side of each batch), private or shared. PRIVATE (the default) it
+  *    lives at `$path/band` and shares the registry's tombstone/compact
+  *    lifecycle below. SHARED (`build(sharedBand = Some(b))`) the
+  *    registry keeps no copy: it probes `b`, the deployment's standalone
+  *    band layout, whose appends, tombstones and compacts the
+  *    [[CorpusLifecycle]] coordinator's band branch owns. The location
+  *    is recorded in `meta/` relative to the registry's parent
+  *    directory (trees stay relocatable), and every later call reads
+  *    it from there, never from a caller;
   *  - `assignments/` (doc_id, cluster_id, gen) partitioned by `batch`
   *    — LSM: the `base` generation holds ≤1 row per doc (the build, or
   *    the last [[compact]]'s fold); every ingest APPENDS a generation
@@ -86,7 +93,9 @@ import org.apache.spark.sql.functions._
   *
   * Idempotent per the [[LsmLayout]] contract; the probe excludes the
   * batch's own band generation (a crashed first attempt may have
-  * appended it — the delta must not probe against itself on replay).
+  * appended it, or, on a shared band, the coordinator's band branch
+  * may be appending it concurrently — the delta must not probe against
+  * itself on replay).
   * Same LSH probabilistic caveat as [[MinHashNearDup]]/s37; final
   * pairs are exact-verified, so only candidate surfacing is
   * probabilistic.
@@ -120,12 +129,20 @@ object ClusterRegistry {
     * the ledger text. Size it so one bucket's text fits a task
     * comfortably — the default suits the test scales; a 100 TB corpus
     * wants O(10k). Stored in `meta/`, so every later ingest derives
-    * the same buckets (the self-describing-index lesson). */
+    * the same buckets (the self-describing-index lesson).
+    *
+    * `sharedBand` names a standalone [[BandIndex]] layout to probe
+    * instead of building a private `$path/band` (see the class doc):
+    * the build then writes no band relation at all — the band layout is
+    * built on its own, over the same docs. */
   def build(
       docs: DataFrame, idCol: String, textCol: String,
       path: String, threshold: Double = 0.8,
-      ledgerBuckets: Int = 16): Unit = {
+      ledgerBuckets: Int = 16,
+      sharedBand: Option[String] = None): Unit = {
     val spark = docs.sparkSession
+    val bandEntry =
+      sharedBand.map(LsmLayout.relativeLocation(parentOf(path), _))
     LsmLayout.startIndexLife(spark, path) {
       // ONE corpus sketch feeds both the index build and the batch
       // clustering (previously each ran its own scan→shingle→sketch
@@ -142,10 +159,12 @@ object ClusterRegistry {
       // text-ledger write run CONCURRENTLY with the clustering chain —
       // the wall is the longest of the three, not their sum. Racing
       // consumers of the shared sketch are safe: cached partitions are
-      // computed once under the block manager's per-block lock.
-      val bandFut = Overlap.future(spark)(
-        BandIndex.build(docs, idCol, textCol,
-          s"$path/band", preSketched = Some(sk)))
+      // computed once under the block manager's per-block lock. A
+      // shared band is built by its own layout's build, not here.
+      val bandFut = if (sharedBand.isDefined) None else Some(
+        Overlap.future(spark)(
+          BandIndex.build(docs, idCol, textCol,
+            s"$path/band", preSketched = Some(sk))))
       // the one-row meta literal is disjoint from every other relation —
       // launched with the fan-out instead of serializing after it (a
       // crashed partial build was never servable in any ordering; ingest
@@ -153,7 +172,8 @@ object ClusterRegistry {
       val metaFut = Overlap.future(spark)(
         spark.range(1)
           .select(lit(threshold).as("threshold"),
-            lit(ledgerBuckets.toLong).as("ledger_buckets"))
+            lit(ledgerBuckets.toLong).as("ledger_buckets"),
+            lit(bandEntry.orNull).cast("string").as("band"))
           .write.mode("overwrite").parquet(s"$path/meta"))
       // the layout-owned text ledger starts with the build set — from
       // here on, ingests are self-contained (delta-only). Bucketed for
@@ -181,17 +201,54 @@ object ClusterRegistry {
           .withColumn("batch", lit(BaseBatch))
           .write.mode("overwrite").partitionBy("batch")
           .parquet(s"$path/assignments")
-        Overlap.await(bandFut)
+        bandFut.foreach(Overlap.await)
         Overlap.await(ledgerFut)
         Overlap.await(metaFut)
       } catch {
         case e: Throwable =>
-          Overlap.settle(bandFut)
+          bandFut.foreach(Overlap.settle)
           Overlap.settle(ledgerFut)
           Overlap.settle(metaFut)
           throw e
       }
     }
+  }
+
+  private def parentOf(path: String): String =
+    new org.apache.hadoop.fs.Path(path).getParent.toString
+
+  /** The shared band index this registry probes, resolved from its
+    * meta against its parent directory — `None` for a private band, for
+    * a registry built before band sharing (its meta has no `band`
+    * entry) and for a path holding no registry. */
+  private[graft] def sharedBand(
+      spark: SparkSession, path: String): Option[String] =
+    if (!LsmLayout.dirExists(spark, s"$path/meta")) None
+    else {
+      val m = LsmLayout.cachedMetaRow(spark, s"$path/meta")
+      if (!m.schema.fieldNames.contains("band") ||
+        m.isNullAt(m.fieldIndex("band"))) None
+      else Some(new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(parentOf(path)), m.getAs[String]("band"))
+        .toString)
+    }
+
+  /** Shared mode's delivery check: the coordinator's band branch owns
+    * every band write, so each batch this registry applied (ingests and
+    * forgets alike) must be applied in the band too. A batch the band
+    * lacks was delivered to the registry alone — its docs would never
+    * surface as candidates (or, for a forget, stay probe-visible) — so
+    * the next ingest fails and names it. */
+  private def requireBandHolds(
+      spark: SparkSession, path: String, band: String): Unit = {
+    val missing = LsmLayout.appliedBatches(spark, path)
+      .diff(LsmLayout.appliedBatches(spark, band))
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"registry $path applied batch(es) ${missing.sorted.mkString(", ")} " +
+          s"that its shared band index $band never applied — deliver them " +
+          "through CorpusLifecycle (retry the same batch id) before the " +
+          "next ingest")
   }
 
   /** The stored text ledger of every SURVIVING doc — what candidate
@@ -332,6 +389,11 @@ object ClusterRegistry {
     * `compactAfterGenerations` (0 = off) triggers [[compact]] when the
     * committed generation count exceeds the threshold (the s46
     * policy). `writerEpoch` is the [[LsmLayout]] single-writer fence.
+    *
+    * On a SHARED band the ingest only probes it: the batch's band
+    * append is the coordinator's band branch ([[CorpusLifecycle.ingest]]),
+    * and before its first write the ingest checks that the band holds
+    * every batch this registry already applied.
     */
   def ingest(
       delta: DataFrame, idCol: String, textCol: String,
@@ -339,11 +401,14 @@ object ClusterRegistry {
       compactAfterGenerations: Int = 0,
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
+    val shared = sharedBand(spark, path)
+    val bandPath = shared.getOrElse(s"$path/band")
     // the delta is sketched ONCE (with the index's own meta) for all
     // three consumers — the index probe, the within-delta pair join
-    // and the index append; the relation is delta-sized and shared
-    // (previously each consumer re-ran the scan→shingle→sketch chain)
-    lazy val bandMeta = BandIndex.metaOf(spark, s"$path/band")
+    // and the private index append; the relation is delta-sized and
+    // shared (previously each consumer re-ran the scan→shingle→sketch
+    // chain)
+    lazy val bandMeta = BandIndex.metaOf(spark, bandPath)
     lazy val deltaSketch: DataFrame = {
       val (numHashes, bands, shingleWidth) = bandMeta
       Materialize.shared(BandIndex.sketchRelation(
@@ -356,20 +421,22 @@ object ClusterRegistry {
       compactAfterGenerations, s"$path/assignments", "batch=",
       compact(spark, path, _),
       // an applied batch: the next batch must still see this one in the
-      // band index (its own idempotency marker lives inside BandIndex);
-      // a clean retry whose registry half short-circuited only sketches
-      // if the band half actually needs to run (it checks its own
-      // marker first)
-      whenApplied = BandIndex.append(delta, idCol, textCol, s"$path/band",
-        batchId, writerEpoch = writerEpoch,
-        preSketched =
-          if (LsmLayout.isApplied(spark, s"$path/band", batchId)) None
-          else Some(deltaSketch))) {
+      // private band index (its own idempotency marker lives inside
+      // BandIndex); a clean retry whose registry half short-circuited
+      // only sketches if the band half actually needs to run (it checks
+      // its own marker first). A shared band is the coordinator's.
+      whenApplied = if (shared.isEmpty)
+        BandIndex.append(delta, idCol, textCol, bandPath,
+          batchId, writerEpoch = writerEpoch,
+          preSketched =
+            if (LsmLayout.isApplied(spark, bandPath, batchId)) None
+            else Some(deltaSketch))) {
       // fence BEFORE the first mutation: a superseded writer used to
       // land its ledger generation before the first epoch check (the
       // pre-existing write-then-fence pattern, extended to corpus
       // text) — now it is rejected before touching any relation
       LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
+      shared.foreach(requireBandHolds(spark, path, _))
       val metaRow = LsmLayout.cachedMetaRow(spark, s"$path/meta")
       val threshold = metaRow.getAs[Double]("threshold")
       // MIGRATION NOTE: layouts built before the layout-owned ledger
@@ -402,7 +469,7 @@ object ClusterRegistry {
             .repartition(col("bucket"))
             .withColumn("batch", lit(batchId)),
           s"$path/ledger", "batch", "bucket"))
-      var bandFut: Overlap.Task[Unit] = null
+      var bandFut: Option[Overlap.Task[Unit]] = None
       try {
         // the probe corpus keeps the ledger's PHYSICAL bucket column
         // and hands the bucket function to the verify stage, so the
@@ -458,20 +525,29 @@ object ClusterRegistry {
         // resolution and the absorbed-cluster remap below — un-shared,
         // `touched` re-executed the entire probe pipeline (band join,
         // prefilter, ledger rehydration, exact verify) a second time per
-        // ingest (measured: ~1.5 s of the 6 s sf0.1 ingest wall)
-        val edgesDC = Materialize.shared(BandIndex.probe(
-          corpus, delta, idCol, textCol, s"$path/band", threshold,
-          excludeGen = Some(batchId), preSketched = Some(deltaSketch),
-          corpusBucket = bucketHint)
-          .join(reg.withColumnRenamed("doc_id", "corpus_id"), Seq("corpus_id"))
-          .select(col("delta_id").as("u"), col("cluster_id").as("v")))
+        // ingest (measured: ~1.5 s of the 6 s sf0.1 ingest wall).
+        // CHECKPOINTED, not persisted: a persisted frame is keyed by its
+        // plan, and a write committing under a path the plan reads makes
+        // Spark's cache manager drop the cached rows (`recacheByPath`) —
+        // this batch's ledger append does, and on a shared band so does
+        // the coordinator's concurrent band append — after which the
+        // remap re-ran the whole probe pipeline (s59/s60 at sf0.1: 11-19
+        // extra stage jobs). A checkpoint's plan names no path.
+        val (edgesDC, edgesCk, _) = IterationCheckpoint.localCounted(
+          BandIndex.probe(
+            corpus, delta, idCol, textCol, bandPath, threshold,
+            excludeGen = Some(batchId), preSketched = Some(deltaSketch),
+            corpusBucket = bucketHint)
+            .join(reg.withColumnRenamed("doc_id", "corpus_id"),
+              Seq("corpus_id"))
+            .select(col("delta_id").as("u"), col("cluster_id").as("v")))
         val edgesDD = MinHashNearDup
           .pairsFromSketched(deltaSketch, threshold,
             numHashes = bandMeta._1)
           .select(col("id_a").as("u"), col("id_b").as("v"))
         val comp = Materialize.shared(DedupClusters.components(
           edgesDC.unionByName(edgesDD), "u", "v"))
-        // index the batch into the band layout CONCURRENTLY with the
+        // index the batch into the private band CONCURRENTLY with the
         // assignment-generation work below: the two touch disjoint
         // relations (band/sigs+postings vs assignments), and the band
         // append commits its own applied marker after its own writes,
@@ -487,9 +563,9 @@ object ClusterRegistry {
         // racing first consumer computes cached partitions once under
         // the block manager's per-block lock (the lazy val itself
         // synchronizes initialization).
-        bandFut = Overlap.future(spark)(
-          BandIndex.append(delta, idCol, textCol, s"$path/band", batchId,
-            writerEpoch = writerEpoch, preSketched = Some(deltaSketch)))
+        if (shared.isEmpty) bandFut = Some(Overlap.future(spark)(
+          BandIndex.append(delta, idCol, textCol, bandPath, batchId,
+            writerEpoch = writerEpoch, preSketched = Some(deltaSketch))))
         // delta assignments: component min if paired, else singleton
         val deltaAssign = delta.select(col(idCol).as("doc_id"))
           .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -521,20 +597,21 @@ object ClusterRegistry {
             .withColumn("gen", lit(nextGen))
             .withColumn("batch", lit(batchId)),
           s"$path/assignments", "batch")
-        // the ledger AND band generations must be committed before the
-        // batch is marked applied (the marker asserts EVERY registry
-        // relation — assignments, ledger, internal band — holds the
-        // batch; the band await costs nothing extra here, its writes
+        // the ledger AND private band generations must be committed
+        // before the batch is marked applied (the marker asserts EVERY
+        // registry relation — assignments, ledger, private band — holds
+        // the batch; the band await costs nothing extra here, its writes
         // overlapped the gen-write window)
         Overlap.await(ledgerFut)
-        Overlap.await(bandFut)
+        bandFut.foreach(Overlap.await)
+        IterationCheckpoint.release(spark.sparkContext, edgesCk)
       } catch {
         case e: Throwable =>
           // settle in-flight writes before surfacing: no background
           // mutation may still be landing when the caller handles the
           // failure (the retry contract assumes a quiesced layout)
           Overlap.settle(ledgerFut)
-          if (bandFut != null) Overlap.settle(bandFut)
+          bandFut.foreach(Overlap.settle)
           throw e
       }
     }
@@ -562,11 +639,12 @@ object ClusterRegistry {
   }
 
   /** Right-to-be-forgotten deletes: tombstone the doc's assignment row
-    * AND its band postings/signatures in one call — forget-set-sized
-    * work; every serving path (the fold, the canonical view, the next
-    * ingest's probe and remap) is blind to the doc immediately, and
-    * [[compact]] drops the rows physically. Ids/topology retention is
-    * the class-doc contract. Idempotent at both levels. */
+    * AND its private band postings/signatures in one call —
+    * forget-set-sized work; every serving path (the fold, the canonical
+    * view, the next ingest's probe and remap) is blind to the doc
+    * immediately, and [[compact]] drops the rows physically. A shared
+    * band is tombstoned by the coordinator's band branch. Ids/topology
+    * retention is the class-doc contract. Idempotent at both levels. */
   def forget(
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
@@ -574,8 +652,9 @@ object ClusterRegistry {
     LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
       writerEpoch)
     // the probe side must forget too (its own marker, under band/)
-    BandIndex.tombstone(forgetIds, idCol, s"$path/band", batchId,
-      writerEpoch = writerEpoch)
+    if (sharedBand(forgetIds.sparkSession, path).isEmpty)
+      BandIndex.tombstone(forgetIds, idCol, s"$path/band", batchId,
+        writerEpoch = writerEpoch)
   }
 
   /** Fold the assignment log back to one base generation (≤1 row per
@@ -583,7 +662,7 @@ object ClusterRegistry {
     * wins the read fold; the ingest ORDINAL itself never restarts —
     * the monotone-ordinal contract, so pins stay aligned across
     * layouts) and drop tombstoned docs physically, here
-    * and in the internal band index — SNAPSHOT-ATOMICALLY for
+    * and in a private band index — SNAPSHOT-ATOMICALLY for
     * concurrent readers: the fold lands in a brand-new immutable
     * `base-<id>` generation, one manifest flip makes it (and the
     * now-applied tombstones) visible, and only directories the
@@ -628,13 +707,16 @@ object ClusterRegistry {
           s"$path/ledger", "batch", "bucket"))
       else Seq.empty)
     }
-    // the internal band index folds on the SAME rule as the ledger:
+    // a private band index folds on the SAME rule as the ledger:
     // probes read explicit live generation paths (postings carry
     // per-doc facts, never an overlay fold like the assignments), so
-    // folding buys file hygiene, not read shape
-    val bandPath = s"$path/band"
-    LsmLayout.compactWhenDue(spark, bandPath,
-      BandIndex.foldedRelations(bandPath))(
-      BandIndex.compact(spark, bandPath, writerEpoch))
+    // folding buys file hygiene, not read shape. A shared band is
+    // compacted by the coordinator's band branch.
+    if (sharedBand(spark, path).isEmpty) {
+      val bandPath = s"$path/band"
+      LsmLayout.compactWhenDue(spark, bandPath,
+        BandIndex.foldedRelations(bandPath))(
+        BandIndex.compact(spark, bandPath, writerEpoch))
+    }
   }
 }

@@ -25,6 +25,14 @@ import org.apache.spark.sql.functions._
   * (two layouts "crash-applied" individually, then the coordinator
   * completes and replays).
   *
+  * ONE band index per corpus: the six ways share one MinHash band
+  * index. A registry built with `sharedBand` = the deployment's `band`
+  * layout probes that layout instead of keeping a private copy, and the
+  * band branch of every call here owns its appends, tombstones and
+  * compacts. [[ingest]], [[forget]], [[compact]] and [[maintain]] check
+  * up front that `layouts.band` is the band the registry's meta names
+  * (a registry with a private band may run beside any band layout).
+  *
   * Writer fencing: epochs are PATH-scoped ([[LsmLayout]]), so one
   * coordinator epoch cannot fence six paths; `epochOf` maps each
   * layout path to the epoch its maintenance loop holds (default
@@ -52,6 +60,18 @@ object CorpusLifecycle {
       Seq(registry, band, lexical, kmv, ivf, chunks).flatten
   }
 
+  /** A registry on a shared band leaves every band write to this
+    * coordinator's band branch, so that branch must exist and point at
+    * the same band — otherwise the batch silently never reaches the
+    * index the registry probes. */
+  private def requireSharedBand(
+      spark: SparkSession, layouts: CorpusLayouts): Unit =
+    for (r <- layouts.registry; b <- ClusterRegistry.sharedBand(spark, r))
+      require(layouts.band.exists(LsmLayout.sameLocation(_, b)),
+        s"registry $r probes the shared band index $b, but layouts.band " +
+          s"is ${layouts.band.getOrElse("not configured")} — its band " +
+          "writes would miss the index the registry probes")
+
   /** Right-to-be-forgotten across the whole corpus: ONE forget-set
     * (`forgetDocs`, carrying `idCol` everywhere and `textCol` for the
     * lexical negative-df recompute), ONE batch id, every layout. After
@@ -65,6 +85,7 @@ object CorpusLifecycle {
       forgetDocs: DataFrame, idCol: String, textCol: String,
       layouts: CorpusLayouts, batchId: String,
       epochOf: String => Option[Long] = _ => None): Unit = {
+    requireSharedBand(forgetDocs.sparkSession, layouts)
     val ids = forgetDocs.select(col(idCol))
     // the six per-layout forgets touch disjoint paths and are each
     // marker-gated — fan them out CONCURRENTLY (Overlap settles every
@@ -125,6 +146,7 @@ object CorpusLifecycle {
     require(layouts.ivf.isEmpty || deltaVectors.isDefined,
       "an IVF layout is configured but no deltaVectors were supplied — " +
         "the layout would silently miss this batch")
+    requireSharedBand(delta.sparkSession, layouts)
     // the six per-layout ingests touch disjoint paths and are each
     // marker-gated — fan them out CONCURRENTLY: at bench scale each
     // branch's wall is dominated by per-action fixed cost, and at
@@ -165,6 +187,7 @@ object CorpusLifecycle {
   def compact(
       spark: SparkSession, layouts: CorpusLayouts,
       epochOf: String => Option[Long] = _ => None): Unit = {
+    requireSharedBand(spark, layouts)
     // independent snapshot-atomic compacts on disjoint paths — fan out
     // concurrently; a failure leaves the other layouts' forget-sets
     // applied or pending exactly as a crash would (still correct at
@@ -243,6 +266,7 @@ object CorpusLifecycle {
       policy: MaintenancePolicy = MaintenancePolicy(),
       epochOf: String => Option[Long] = _ => None): DataFrame = {
     import spark.implicits._
+    requireSharedBand(spark, layouts)
     type Decision = (String, String, Double, Double, String)
     def genRule(name: String, p: String, dir: String, prefix: String)(
         run: => Unit): Decision = {

@@ -117,6 +117,30 @@ private[graft] object LsmLayout {
   def isApplied(spark: SparkSession, path: String, gen: String): Boolean =
     dirExists(spark, s"$path/_applied/$gen")
 
+  /** Every batch (ingest ids and `ts-` forget batches) whose marker is
+    * committed in this index life — one listStatus. */
+  def appliedBatches(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/_applied")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filterNot(_.startsWith("."))
+  }
+
+  /** A layout path as a normalized absolute local path — what two
+    * spellings of one location (relative vs absolute, `a/./b`, `a/x/../b`)
+    * compare equal under. */
+  private def location(path: String): java.nio.file.Path =
+    java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(path).toUri.getPath)
+      .toAbsolutePath.normalize
+
+  def sameLocation(a: String, b: String): Boolean = location(a) == location(b)
+
+  /** `target` relative to the directory `base` — what a layout records
+    * about a sibling layout so the tree stays relocatable. */
+  def relativeLocation(base: String, target: String): String =
+    location(base).relativize(location(target)).toString
+
   def markApplied(spark: SparkSession, path: String, gen: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_applied/$gen")
     createFresh(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
@@ -593,7 +617,7 @@ private[graft] object LsmLayout {
       s"$path/tombstones", "batch")
 
   /** Hygiene bound of every SECONDARY fold (the lexical postings, the
-    * registry's text ledger and internal band index): with no
+    * registry's text ledger and private band index): with no
     * tombstones pending, the corpus-sized rewrite runs only once this
     * many generations are live — those relations are read via explicit
     * live-generation paths, so extra generations cost directory
@@ -695,7 +719,7 @@ private[graft] object LsmLayout {
   }
 
   /** A whole layout folded on the [[foldDue]] rule (the registry's
-    * internal band index): `compact` when due; otherwise sweep what a
+    * private band index): `compact` when due; otherwise sweep what a
     * second compact cycle would — directories only snapshots OLDER than
     * the current one could reference — without a manifest flip, so
     * physical removal keeps its two-cycle contract through skips. */

@@ -11,7 +11,10 @@ import graft.operators._
   * (s55/s56/s59/s60/s61/s64): six layouts built once per scale factor
   * on the `doc_id % 3 =!= 0` / `vec_id % 3 =!= 0` base slice, then
   * CLONED (a file-tree copy) into each oracle's own sink root before
-  * the oracle mutates it.
+  * the oracle mutates it. The registry is built on the fixture's
+  * `band` layout (`ClusterRegistry.build(sharedBand = ...)`): one band
+  * index per corpus, no private `registry/band` copy; its meta names
+  * the band relative to the root, so a clone probes its own `band`.
   *
   * Why (the r15 bench adjudication): every coordination oracle used to
   * rebuild the SAME six layouts from the same corpus inside its timed
@@ -31,7 +34,10 @@ import graft.operators._
   * build leaves no marker and the next consumer rebuilds). Keyed by
   * the sf directory name — Verify (sf0.01) and Bench (sf0.1) never
   * share a tree; Bench clears target/sinks at startup, so every bench
-  * run re-prices one build.
+  * run re-prices one build. The key's `base3-v<n>` suffix names the
+  * tree's layout format: a change to what the builds write (v2: the
+  * shared band) bumps it, so an older cached tree is swept and rebuilt
+  * instead of cloned.
   */
 object CorpusFixture {
 
@@ -67,7 +73,7 @@ object CorpusFixture {
     val src = new java.io.File(sfDir, "documents.parquet")
     val fp = java.lang.Long.toHexString(
       src.length * 1000003L ^ src.lastModified)
-    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v1"
+    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v2"
   }
 
   /** Build the fixture if its `_done` marker is absent (or `rebuild`);
@@ -99,7 +105,7 @@ object CorpusFixture {
       // build's own internal contracts are unchanged)
       Overlap.all(spark)(
         () => ClusterRegistry.build(base, "doc_id", "text",
-          s"$root/registry"),
+          s"$root/registry", sharedBand = Some(s"$root/band")),
         () => BandIndex.build(base, "doc_id", "text", s"$root/band"),
         () => LexicalIndex.build(base, "doc_id", "text", s"$root/lexical"),
         () => KmvLayout.build(base.withColumn("g", col("doc_id")),

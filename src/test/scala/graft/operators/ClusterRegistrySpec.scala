@@ -410,4 +410,41 @@ class ClusterRegistrySpec extends SparkTestBase {
       "GDPR must reach the stored ledger text through a skip history")
     assert(led().keySet === wantLedger.keySet + 40L - 2L)
   }
+
+  test("shared band: an ingest that bypassed the coordinator fails the next ingest, naming the batch") {
+    val root = "target/test_clusterreg/sharedband"
+    val (reg, band) = (s"$root/registry", s"$root/band")
+    ClusterRegistry.build(corpus, "doc_id", "text", reg, threshold = 0.8,
+      sharedBand = Some(band))
+    BandIndex.build(corpus, "doc_id", "text", band)
+    assert(!LsmLayout.dirExists(spark, s"$reg/band"),
+      "a shared-band registry keeps no private band")
+    assert(ClusterRegistry.sharedBand(spark, reg) === Some(band))
+    // the registry alone probes the shared band (doc 10 still bridges
+    // {1,2} and {3}) but leaves the band without the batch
+    ClusterRegistry.ingest(delta, "doc_id", "text", reg, batchId = "b1")
+    assert(assigned(reg) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 10L -> 1L))
+    assert(!LsmLayout.isApplied(spark, band, "b1"))
+    assert(BandIndex.signatures(spark, band)
+      .filter(col("doc_id") === 10L).count() === 0L)
+    val more = Seq((40L, (1 to 20).map(i => s"y$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    val e = intercept[IllegalStateException](
+      ClusterRegistry.ingest(more, "doc_id", "text", reg, batchId = "b2"))
+    assert(e.getMessage.contains("b1"), e.getMessage)
+    assert(!LsmLayout.isApplied(spark, reg, "b2"))
+    // delivering the batch to the band clears the check
+    BandIndex.append(delta, "doc_id", "text", band, batchId = "b1")
+    ClusterRegistry.ingest(more, "doc_id", "text", reg, batchId = "b2")
+    assert(assigned(reg)(40L) === 40L)
+    // the meta names the band relative to the registry's parent: a
+    // copied tree probes its own band
+    val moved = "target/test_clusterreg/sharedband_moved"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(moved))
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(root), new java.io.File(moved))
+    assert(ClusterRegistry.sharedBand(spark, s"$moved/registry") ===
+      Some(s"$moved/band"))
+  }
 }

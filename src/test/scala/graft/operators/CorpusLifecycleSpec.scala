@@ -430,4 +430,126 @@ class CorpusLifecycleSpec extends SparkTestBase {
       .filter(col("missing") =!= 0L || col("extra") =!= 0L)
       .count() === 0L)
   }
+
+  // ---- one band index per corpus (a registry on the shared band) -----
+
+  private def bandDelta1 = docs.filter(col("doc_id").isin(9L, 10L))
+  // doc 13 near-duplicates doc 5 (J = 17/19), so b2 merges into a base
+  // cluster only if the probe finds doc 5 in the band the registry reads
+  private def bandDelta2 = docs.filter(col("doc_id").isin(11L, 12L))
+    .unionByName(Seq((13L, run(15, 33) + " q1")).toDF("doc_id", "text"))
+
+  /** The registry and the standalone band layout over the base docs; the
+    * registry probes `$root/band` (shared) or its own copy (private). */
+  private def bandTree(
+      root: String, shared: Boolean): CorpusLifecycle.CorpusLayouts = {
+    val lay = CorpusLifecycle.CorpusLayouts(
+      registry = Some(s"$root/registry"), band = Some(s"$root/band"))
+    ClusterRegistry.build(baseDocs, "doc_id", "text", s"$root/registry",
+      sharedBand = if (shared) lay.band else None)
+    BandIndex.build(baseDocs, "doc_id", "text", s"$root/band")
+    lay
+  }
+
+  private def consistency(lay: CorpusLifecycle.CorpusLayouts) =
+    CorpusLifecycle.consistencyAudit(spark, lay)
+      .as[(String, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+
+  test("shared band vs private band: the same lifecycle serves the same answers") {
+    val trees = Seq(true, false).map { shared =>
+      val root = s"target/test_corpuslc/band_${if (shared) "shared" else "private"}"
+      val lay = bandTree(root, shared)
+      CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
+      CorpusLifecycle.ingest(bandDelta2, "doc_id", "text", lay, batchId = "b2")
+      CorpusLifecycle.forget(docs.filter(col("doc_id").isin(3L, 10L)),
+        "doc_id", "text", lay, batchId = "g1")
+      CorpusLifecycle.maintain(spark, lay,
+        CorpusLifecycle.MaintenancePolicy(maxLiveGenerations = 1)).collect()
+      shared -> lay
+    }.toMap
+    val (sh, pr) = (trees(true), trees(false))
+    def canon(lay: CorpusLifecycle.CorpusLayouts) =
+      ClusterRegistry.canonicalAssignments(spark, lay.registry.get)
+        .as[(Long, Long)].collect().toMap
+    assert(canon(sh) === canon(pr))
+    assert(canon(sh)(13L) === 5L, "b2's near-dup must join doc 5's cluster")
+    assert(!canon(sh).contains(3L) && !canon(sh).contains(10L))
+    // the band each registry probes answers a delta probe identically
+    val query = Seq((99L, run(5, 23) + " q2")).toDF("doc_id", "text")
+    def probed(lay: CorpusLifecycle.CorpusLayouts) = {
+      val reg = lay.registry.get
+      BandIndex.probe(ClusterRegistry.ledger(spark, reg), query,
+        "doc_id", "text",
+        ClusterRegistry.sharedBand(spark, reg).getOrElse(s"$reg/band"), 0.8)
+        .as[(Long, Long, Double)].collect().toSet
+    }
+    assert(probed(sh) === probed(pr))
+    assert(probed(sh).map(_._2) === Set(1L, 2L))
+    Seq(sh, pr).foreach(lay =>
+      assert(consistency(lay).values.forall(_ == ((0L, 0L))),
+        s"${lay.registry.get}: ${consistency(lay)}"))
+    // one band index on the shared tree; the private tree keeps its copy
+    assert(ClusterRegistry.sharedBand(spark, sh.registry.get) === sh.band)
+    assert(!LsmLayout.dirExists(spark, s"${sh.registry.get}/band"))
+    assert(ClusterRegistry.sharedBand(spark, pr.registry.get) === None)
+    assert(LsmLayout.dirExists(spark, s"${pr.registry.get}/band"))
+  }
+
+  test("shared band: a registry half applied alone is completed once by the coordinator retry") {
+    val root = "target/test_corpuslc/band_replay"
+    val lay = bandTree(root, shared = true)
+    val band = lay.band.get
+    // the coordinator crashed after the registry half committed b1
+    ClusterRegistry.ingest(bandDelta1, "doc_id", "text", lay.registry.get,
+      batchId = "b1")
+    assert(!LsmLayout.isApplied(spark, band, "b1"))
+    CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
+    CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
+    assert(spark.read.parquet(s"$band/sigs").filter(col("gen") === "b1")
+      .count() === 2L, "the band must hold b1's two docs exactly once")
+    assert(BandIndex.signatures(spark, band).count() === 10L)
+    assert(consistency(lay).values.forall(_ == ((0L, 0L))))
+    // the band now holds every batch the registry applied: the next
+    // ingest passes the delivery check
+    CorpusLifecycle.ingest(bandDelta2, "doc_id", "text", lay, batchId = "b2")
+    assert(BandIndex.signatures(spark, band).count() === 13L)
+  }
+
+  test("shared band: a lost band generation audits as band missing, registry whole") {
+    val root = "target/test_corpuslc/band_audit"
+    val lay = bandTree(root, shared = true)
+    CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
+    assert(consistency(lay).values.forall(_ == ((0L, 0L))))
+    Seq("sigs", "postings").foreach(r =>
+      LsmLayout.deleteDir(spark, s"$root/band/$r/gen=b1"))
+    val a = consistency(lay)
+    assert(a("band") === ((2L, 0L)), s"b1's two docs must show missing: $a")
+    assert(a("registry") === ((0L, 0L)), s"the registry lost nothing: $a")
+  }
+
+  test("shared band: the coordinator refuses a band that is not the one the registry's meta names") {
+    val root = "target/test_corpuslc/band_guard"
+    val lay = bandTree(root, shared = true)
+    Seq(lay.copy(band = None), lay.copy(band = Some(s"$root/other_band")))
+      .foreach { bad =>
+        def refused(call: => Any): Unit = {
+          val e = intercept[IllegalArgumentException](call)
+          assert(e.getMessage.contains(s"$root/band"), e.getMessage)
+        }
+        refused(CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", bad,
+          batchId = "b1"))
+        refused(CorpusLifecycle.forget(docs.filter(col("doc_id") === 3L),
+          "doc_id", "text", bad, batchId = "g1"))
+        refused(CorpusLifecycle.maintain(spark, bad))
+      }
+    // refused up front: no layout applied anything
+    Seq(s"$root/registry", s"$root/band").foreach(p =>
+      assert(LsmLayout.appliedBatches(spark, p).isEmpty, p))
+    // the same band spelled as an absolute path is the same band
+    CorpusLifecycle.ingest(bandDelta1, "doc_id", "text",
+      lay.copy(band = Some(new java.io.File(s"$root/band").getAbsolutePath)),
+      batchId = "b1")
+    assert(LsmLayout.isApplied(spark, s"$root/band", "b1"))
+  }
 }
