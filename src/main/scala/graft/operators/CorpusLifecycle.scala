@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * unfenced — batch jobs, tests).
   *
   * 100 TB shape: pure fan-out of forget-set-sized work — each layout
-  * call writes one tombstone id list (plus the lexical negative-df
-  * generation, recomputed map-only from the forget docs' text); no
-  * stored relation is scanned or rewritten. [[compact]] fans out the
+  * call writes one tombstone id list (plus the lexical negated meta
+  * generation, the forget docs' document and token counts); no stored
+  * relation is scanned or rewritten. [[compact]] fans out the
   * snapshot-atomic per-layout compacts when physical reclamation is
   * due — deliberately the corpus-sized pass, per the layout contract.
   */
@@ -74,7 +74,7 @@ object CorpusLifecycle {
 
   /** Right-to-be-forgotten across the whole corpus: ONE forget-set
     * (`forgetDocs`, carrying `idCol` everywhere and `textCol` for the
-    * lexical negative-df recompute), ONE batch id, every layout. After
+    * lexical negated token count), ONE batch id, every layout. After
     * this returns, no serving path of any configured layout returns
     * the docs: the registry fold and canonical view, band probes and
     * point probes, lexical probes/idf/BM25, KMV group folds and the
@@ -268,9 +268,9 @@ object CorpusLifecycle {
     import spark.implicits._
     requireSharedBand(spark, layouts)
     type Decision = (String, String, Double, Double, String)
-    def genRule(name: String, p: String, dir: String, prefix: String)(
-        run: => Unit): Decision = {
-      val n = LsmLayout.liveGenerationCount(spark, p, dir, prefix)
+    def gens(p: String, dir: String, prefix: String): Int =
+      LsmLayout.liveGenerationCount(spark, p, dir, prefix)
+    def genRule(name: String, n: Int)(run: => Unit): Decision = {
       val act = n > policy.maxLiveGenerations
       if (act) run
       (name, "live_generations", n.toDouble,
@@ -282,7 +282,7 @@ object CorpusLifecycle {
     // Fast path: no pending tombstones (the common post-compact state)
     // → share 0 from metadata alone, no report scan runs.
     def deadOrGenRule(
-        name: String, p: String, dir: String, prefix: String,
+        name: String, p: String, liveGenerations: => Int,
         threshold: Double, stats: => DataFrame)(run: => Unit): Decision = {
       val pending = LsmLayout.liveTombstoneBatches(
         spark, p, LsmLayout.snapshot(spark, p)).nonEmpty
@@ -297,7 +297,7 @@ object CorpusLifecycle {
       if (share > threshold) {
         run
         (name, "dead_row_share", share, threshold, "compact")
-      } else genRule(name, p, dir, prefix)(run)
+      } else genRule(name, liveGenerations)(run)
     }
     // each layout's observe→decide→act chain is independent of every
     // other's (disjoint paths, per-layout epochs) — run the six
@@ -307,20 +307,20 @@ object CorpusLifecycle {
     val decisions: Seq[(String, String, Double, Double, String)] =
       Overlap.join(spark)(
       (layouts.registry.map(p => () =>
-        deadOrGenRule("registry", p, s"$p/assignments", "batch=",
+        deadOrGenRule("registry", p, gens(p, s"$p/assignments", "batch="),
           policy.maxRegistryDeadShare,
           ClusterRegistry.deadRowStats(spark, p))(
           ClusterRegistry.compact(spark, p, epochOf(p)))) ++
       layouts.band.map(p => () =>
-        deadOrGenRule("band", p, s"$p/sigs", "gen=",
+        deadOrGenRule("band", p, gens(p, s"$p/sigs", "gen="),
           policy.maxBandDeadShare, BandIndex.deadRowStats(spark, p))(
           BandIndex.compact(spark, p, epochOf(p)))) ++
       layouts.lexical.map(p => () =>
-        deadOrGenRule("lexical", p, s"$p/lexicon", "gen=",
+        deadOrGenRule("lexical", p, LexicalIndex.generationCount(spark, p),
           policy.maxLexicalDeadShare, LexicalIndex.deadRowStats(spark, p))(
           LexicalIndex.compact(spark, p, epochOf(p)))) ++
       layouts.kmv.map(p => () =>
-        deadOrGenRule("kmv", p, s"$p/sketches", "batch=",
+        deadOrGenRule("kmv", p, gens(p, s"$p/sketches", "batch="),
           policy.maxKmvDeadShare, KmvLayout.deadRowStats(spark, p))(
           KmvLayout.compact(spark, p, epochOf(p)))) ++
       layouts.ivf.map { p => () =>
@@ -331,7 +331,7 @@ object CorpusLifecycle {
           IvfLayout.retrain(spark, p, policy.ivfRetrainRounds,
             writerEpoch = epochOf(p))
           ("ivf", "max_cell_share", mx, policy.maxIvfCellShare, "retrain")
-        } else genRule("ivf", p, s"$p/vectors", "gen=")(
+        } else genRule("ivf", gens(p, s"$p/vectors", "gen="))(
           IvfLayout.compact(spark, p, epochOf(p)))
       } ++
       layouts.chunks.map { p => () =>
@@ -343,7 +343,7 @@ object CorpusLifecycle {
           ChunkStore.compact(spark, p, epochOf(p))
           ("chunks", "dead_chunk_share", share,
             policy.maxChunkDeadShare, "compact")
-        } else genRule("chunks", p, s"$p/manifest", "gen=")(
+        } else genRule("chunks", gens(p, s"$p/manifest", "gen="))(
           ChunkStore.compact(spark, p, epochOf(p)))
       }).toSeq)
     decisions

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stored inverted shingle index — the warehouse layout behind lexical
@@ -23,33 +24,34 @@ import org.apache.spark.sql.functions._
   *    onto each posting so no probe needs a second doc table: `ns`
   *    (distinct-gram count) serves Jaccard, `dl` (token length) and
   *    `tf` (within-doc occurrences) serve BM25.
-  *  - `lexicon/` (shingle, df) same bucketing — the document-frequency
-  *    table idf ranking weighs by; derived from the STORED postings, so
-  *    the text is shingled exactly once per build.
-  *  - `meta/` one row (n_docs, n_tokens) — the corpus sizes the idf
-  *    ratio and the BM25 length normalization need (counted over
-  *    documents, not postings: docs shorter than the shingle width
-  *    have no postings but still count).
+  *  - `meta/` one row per generation (n_docs, n_tokens, buckets,
+  *    shingle_n) — the corpus sizes the idf ratio and the BM25 length
+  *    normalization need (counted over documents, not postings: docs
+  *    shorter than the shingle width have no postings but still
+  *    count), and the layout constants.
+  *
+  * Document frequency is not stored: a shingle's df is the length of
+  * its LIVE posting list (postings minus pending tombstones), which
+  * every serving path reads anyway for the query's shingles — so it is
+  * counted there, and [[lexicon]] is that count as a view. No second
+  * relation has to be written, folded or kept consistent with the
+  * postings.
   *
   * Serving probes are index-only: the query doc's shingles come from
-  * the postings themselves (pushed doc_id filter), weights broadcast,
-  * and the corpus side is one doc-keyed partial aggregate + TakeOrdered
-  * — the n114/n118 shapes with the build amortized away. Plan-pinned
+  * the postings themselves (pushed doc_id filter), broadcast, and the
+  * corpus side is one doc-keyed partial aggregate + TakeOrdered — the
+  * n114/n118 shapes with the build amortized away. Plan-pinned
   * (QueryPlansSpec): no scan in a probe plan reads a text column.
   */
 object LexicalIndex {
 
-  /** Shingle the corpus ONCE and write the postings/lexicon/meta
-    * layout. The postings stream is repartitioned by bucket before the
-    * partitioned write so each task writes one bucket directory
-    * (no small-files fan-out) with shingle-sorted row groups. */
   /** One posting row per distinct (doc, gram): (doc_id, ns = the doc's
     * distinct-gram count, dl = the doc's TOKEN length, shingle,
     * tf = within-doc occurrence count, bucket). ns serves Jaccard, dl
     * and tf serve BM25-style length/frequency normalization — all
-    * denormalized at build so no probe needs a second table beyond the
-    * lexicon. The fused graft_shingle_tfs expression emits the
-    * counted distinct set in one pass, so tf costs NO extra aggregate. */
+    * denormalized at build so no probe needs a second table. The fused
+    * graft_shingle_tfs expression emits the counted distinct set in one
+    * pass, so tf costs NO extra aggregate. */
   private def postingProjection(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, buckets: Int): DataFrame =
@@ -69,6 +71,10 @@ object LexicalIndex {
       .withColumn("bucket",
         pmod(TextOps.hexHash60(col("shingle")), lit(buckets.toLong)))
 
+  /** Shingle the corpus ONCE and write the postings/meta layout. The
+    * postings stream is repartitioned by bucket before the partitioned
+    * write so each task writes one bucket directory (no small-files
+    * fan-out) with shingle-sorted row groups. */
   def build(
       docs: DataFrame,
       idCol: String,
@@ -78,39 +84,23 @@ object LexicalIndex {
       buckets: Int = 16): Unit = {
     val spark = docs.sparkSession
     // a rebuild starts a fresh index life (stale tombstones would
-    // silently exclude rebuilt postings while the fresh lexicon/meta
-    // still count them)
+    // silently exclude rebuilt postings while the fresh meta still
+    // counts them)
     LsmLayout.startIndexLife(spark, path) {
-      // meta/ is disjoint from the postings→lexicon chain (its counts
-      // come from the DOCS, not the stored postings — docs shorter than
-      // the shingle width have no postings but still count), so its
-      // corpus scan runs CONCURRENTLY with the chain instead of
-      // serializing as a third action after it
+      // a tree written by an older layout version also holds a stored
+      // `lexicon/` (shingle → df) relation, which nothing reads anymore
+      LsmLayout.deleteDir(spark, s"$path/lexicon")
+      // meta/ counts the DOCS, not the postings (docs shorter than the
+      // shingle width have no postings but still count), so its corpus
+      // scan runs CONCURRENTLY with the postings write
       Overlap.all(spark)(
-        () => {
-          postingProjection(docs, idCol, textCol, n, buckets)
-            .withColumn("gen", lit(BaseGen))
-            .repartition(col("bucket"))
-            .sortWithinPartitions(col("shingle"))
-            .write.mode("overwrite").partitionBy("gen", "bucket")
-            .parquet(s"$path/postings")
-          // document frequency from the STORED postings — one groupBy
-          // over the narrow index, no second pass over text
-          spark.read.parquet(s"$path/postings")
-            .groupBy(col("bucket"), col("shingle"))
-            .agg(count(lit(1)).as("df"))
-            .withColumn("gen", lit(BaseGen))
-            .repartition(col("bucket"))
-            .sortWithinPartitions(col("shingle"))
-            .write.mode("overwrite").partitionBy("gen", "bucket")
-            .parquet(s"$path/lexicon")
-        },
-        () => docs
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col(textCol), " ")).cast("long")).as("n_tokens"))
-          .withColumn("buckets", lit(buckets.toLong))
-          .withColumn("shingle_n", lit(n.toLong))
+        () => postingProjection(docs, idCol, textCol, n, buckets)
           .withColumn("gen", lit(BaseGen))
+          .repartition(col("bucket"))
+          .sortWithinPartitions(col("shingle"))
+          .write.mode("overwrite").partitionBy("gen", "bucket")
+          .parquet(s"$path/postings"),
+        () => metaGeneration(docs, textCol, n, buckets, BaseGen, identity)
           .write.mode("overwrite").partitionBy("gen").parquet(s"$path/meta"))
     }
   }
@@ -120,17 +110,30 @@ object LexicalIndex {
     * the idempotency contract (see [[refresh]]). */
   private val BaseGen = "base"
 
-  /** The committed LIVE generation directories of the stored lexicon —
-    * what the auto-compaction policy counts (physical dirs additionally
-    * hold superseded generations awaiting GC). */
+  /** The committed LIVE generations of the layout — what the
+    * auto-compaction policies count: the live meta generations (one per
+    * build, refresh and forget batch; physical dirs additionally hold
+    * superseded generations awaiting GC) that [[countedGeneration]]
+    * selects. */
   private[graft] def generationCount(
       spark: SparkSession, path: String): Int =
-    LsmLayout.liveGenerationCount(spark, path, s"$path/lexicon")
+    LsmLayout.liveGenerationCount(spark, path, s"$path/meta",
+      counted = countedGeneration(spark, path))
+
+  /** Whether the live meta generation `g` counts as a generation: the
+    * base, every forget batch, and every refresh batch that appended
+    * postings. A refresh whose docs are all shorter than the shingle
+    * width adds a meta row but nothing a probe scans, so it does not
+    * count. */
+  private def countedGeneration(spark: SparkSession, path: String)(
+      g: String): Boolean =
+    LsmLayout.isBaseName(g) || g.startsWith("ts-") ||
+      LsmLayout.dirExists(spark, s"$path/postings/gen=$g")
 
   /** One relation of a layout, scoped to a SNAPSHOT's live generations
     * — superseded base generations and folded generations awaiting GC
-    * are invisible (reading them would double-count every df/meta sum
-    * after a compact). */
+    * are invisible (reading them would double-count every posting and
+    * meta sum after a compact). */
   private def scopedRel(
       spark: SparkSession, path: String, rel: String,
       snap: LayoutSnapshot): DataFrame = {
@@ -155,22 +158,31 @@ object LexicalIndex {
       scopedRel(spark, path, "postings", snap.ledgerView).drop("gen"),
       "doc_id")
 
-  /** The LOGICAL document-frequency table: refresh appends delta df
-    * generations LSM-style (never rewrites the stored table), so the
-    * physical relation holds ≤ #generations rows per (bucket, shingle)
-    * and reads fold them with one sum. [[compact]] collapses
-    * generations back to one. */
+  /** The document-frequency table (bucket, shingle, df) as a VIEW of
+    * the live postings: df is the length of the shingle's posting list
+    * with tombstoned documents excluded, so a shingle whose documents
+    * were all forgotten has left the vocabulary. Nothing is stored for
+    * it. */
   def lexicon(spark: SparkSession, path: String): DataFrame =
-    lexiconScoped(spark, path, LsmLayout.snapshot(spark, path))
-
-  private def lexiconScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
-    scopedRel(spark, path, "lexicon", snap)
+    postings(spark, path)
       .groupBy(col("bucket"), col("shingle"))
-      .agg(sum(col("df")).as("df"))
-      // a shingle whose documents were ALL tombstoned folds to df = 0
-      // (negative generations) — it has left the vocabulary
-      .filter(col("df") > 0)
+      .agg(count(lit(1)).as("df"))
+
+  /** `post` with a `df` column: the number of its rows sharing the
+    * row's shingle. When `post` holds EVERY live posting of each shingle
+    * it contains (the serving paths filter by shingle only), that is the
+    * shingle's document frequency — a window count, so the postings are
+    * read once for both the weights and the scores. */
+  private def withDf(post: DataFrame): DataFrame =
+    post.withColumn("df",
+      count(lit(1)).over(Window.partitionBy(col("shingle"))))
+
+  /** The exact-rational idf grid weight round(1e6·N/df) of a row
+    * carrying `n_docs` (meta) and `df` ([[withDf]]). */
+  private def idfWeight: Column =
+    round(lit(1000000.0) *
+      (col("n_docs").cast("double") / col("df").cast("double")))
+      .cast("long")
 
   /** The LOGICAL meta row (n_docs, n_tokens, buckets, shingle_n):
     * counters sum across generations; the layout constants are
@@ -222,21 +234,23 @@ object LexicalIndex {
   /** Point-probe serving for an ARBITRARY query text: the query is
     * shingled driver-side (plan-time constants — the s23 probe-set
     * argument: a serving path receives the query as a literal), its
-    * bucket set prunes the postings and lexicon scans AT THE CATALOG,
-    * and the shingle IN-list is pushed to the parquet reader, so the
-    * probe reads only the row groups that can match — this is the scan
-    * shape the fp-bucketed layout exists for. Ranking is the n114
-    * idf-sum (query tf = 1 per distinct shingle). Plan-pinned:
-    * PartitionFilters carries the bucket set, probe reads ≤ |query
-    * buckets| of the bucket partitions. */
+    * bucket set prunes the postings scan AT THE CATALOG, and the
+    * shingle IN-list is pushed to the parquet reader, so the probe
+    * reads only the row groups that can match — this is the scan shape
+    * the fp-bucketed layout exists for. Ranking is the n114 idf-sum
+    * (query tf = 1 per distinct shingle); each shingle's df is counted
+    * from the same pruned read (every live posting of a query shingle
+    * passes the filters). Plan-pinned: PartitionFilters carries the
+    * bucket set, probe reads ≤ |query buckets| of the bucket
+    * partitions. */
   def pointProbe(
       spark: SparkSession,
       path: String,
       queryText: String,
       k: Int): DataFrame = {
-    // ONE snapshot resolution for the whole probe — lexicon, meta and
-    // postings must read the SAME committed state even if a compact
-    // flips the manifest mid-planning
+    // ONE snapshot resolution for the whole probe — meta and postings
+    // must read the SAME committed state even if a compact flips the
+    // manifest mid-planning
     val snap = LsmLayout.snapshot(spark, path)
     // shingle width and bucket count are properties of the STORED
     // layout — read them from meta (constants, driver-cached) rather
@@ -246,37 +260,23 @@ object LexicalIndex {
     val qsh = literalShingles(queryText, n)
     require(qsh.nonEmpty, s"query shorter than the shingle width: $queryText")
     val qb = qsh.map(bucketOf(_, buckets)).distinct
-    // filter BELOW the generation fold so the bucket set prunes at the
-    // catalog and the shingle IN-list reaches the reader
-    val lex = scopedRel(spark, path, "lexicon", snap)
+    withDf(postingsScoped(spark, path, snap)
       .filter(col("bucket").isin(qb: _*))
-      .filter(col("shingle").isin(qsh: _*))
-      .groupBy(col("bucket"), col("shingle"))
-      .agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0) // fully-tombstoned shingles fold to 0
-    val qw = lex.crossJoin(broadcast(metaRowScoped(spark, path, snap)))
-      .select(col("shingle"),
-        round(lit(1000000.0) *
-          (col("n_docs").cast("double") / col("df").cast("double")))
-          .cast("long").as("graft__w"))
-    postingsScoped(spark, path, snap)
-      .filter(col("bucket").isin(qb: _*))
-      .filter(col("shingle").isin(qsh: _*))
-      .join(broadcast(qw), Seq("shingle"))
+      .filter(col("shingle").isin(qsh: _*)))
+      .crossJoin(broadcast(metaRowScoped(spark, path, snap)))
       .groupBy(col("doc_id"))
-      .agg(sum(col("graft__w")).as("score"))
+      .agg(sum(idfWeight).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
   }
 
   /** Incremental refresh with a new document batch — the s25 delta
     * discipline applied to the text index, LSM-style: the delta is
-    * shingled map-only and APPENDED into the posting bucket
-    * partitions, its df partials are appended as a new lexicon
-    * GENERATION, and a new meta generation row records the delta
-    * counts. Nothing stored is rewritten — refresh does delta-sized
-    * work only (the 100 TB incremental contract); reads fold
-    * generations with one tiny sum ([[lexicon]]/[[metaRow]]) and
+    * shingled map-only and APPENDED into the posting bucket partitions
+    * as a new generation, and a new meta generation row records the
+    * delta counts. Nothing stored is rewritten — refresh does
+    * delta-sized work only (the 100 TB incremental contract); reads
+    * fold generations (postings by union, meta with one tiny sum) and
     * [[compact]] collapses them when the generation count matters.
     * Merge associativity (append ∪ sum) means any batch decomposition
     * serves identically — oracle-proven (s30 single delta, n124
@@ -291,12 +291,12 @@ object LexicalIndex {
     * gen partitions instead of appending a duplicate that would
     * silently inflate df/postings/meta. A fully-committed batch also
     * leaves an `_applied/<batchId>` marker (written after the last
-    * write), so a clean retry skips all three writes outright. Gated:
+    * write), so a clean retry skips both writes outright. Gated:
     * n174 (refresh-with-retry ≡ rebuild through the served answer) and
     * StreamingIndexSpec's batch-replay invariance.
     *
     * `compactAfterGenerations` (0 = off) is the auto-compaction policy
-    * for continuous ingest: when the committed lexicon generation count
+    * for continuous ingest: when the committed meta generation count
     * exceeds the threshold after this refresh, [[compact]] folds the
     * LSM back to one generation inside the same maintenance call —
     * bounding the generation/file count a serve-side read folds, with
@@ -311,8 +311,8 @@ object LexicalIndex {
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/lexicon", "gen=",
-      compact(spark, path, _)) {
+      compactAfterGenerations, s"$path/meta", "gen=",
+      compact(spark, path, _), counted = countedGeneration(spark, path)) {
       // the layout owns its shingle width and bucket count — caller-
       // supplied values that disagreed with the build would scatter the
       // delta into wrong directories or mix gram widths, silently
@@ -320,20 +320,13 @@ object LexicalIndex {
       // driver-side cache (no per-refresh meta read job).
       val (n, buckets) = layoutConstants(
         spark, path, LsmLayout.snapshot(spark, path))
-      val dposts = postingProjection(delta, idCol, textCol, n, buckets)
-        .withColumn("gen", lit(batchId))
-        .transform(Materialize.shared)
-      // three disjoint relations from one shared delta projection —
-      // the writes overlap (the marker lands after ALL settle; racing
-      // consumers materialize the shared frame once under the block
-      // manager's per-block lock)
+      // two disjoint relations — the writes overlap (the marker lands
+      // after both settle)
       Overlap.all(spark)(
-        () => writeBucketed(dposts, s"$path/postings"),
         () => writeBucketed(
-          dposts.groupBy(col("bucket"), col("shingle"))
-            .agg(count(lit(1)).as("df"))
+          postingProjection(delta, idCol, textCol, n, buckets)
             .withColumn("gen", lit(batchId)),
-          s"$path/lexicon"),
+          s"$path/postings"),
         () => LsmLayout.writeGeneration(
           metaGeneration(delta, textCol, n, buckets, batchId, identity),
           s"$path/meta", "gen"))
@@ -361,35 +354,36 @@ object LexicalIndex {
       .withColumn("gen", lit(gen))
 
   /** Right-to-be-forgotten deletes, LSM-style: the forget-set becomes a
-    * tombstone id list (anti-joined on every postings read), a NEGATIVE
-    * lexicon generation (the delta's df partials, negated — recomputed
-    * map-only from the forget docs' text, exactly the [[refresh]]
-    * machinery run in reverse), and a negative meta generation, so idf
-    * weights and BM25 normalization reflect the shrunk corpus from the
-    * next probe on. Nothing stored is rewritten — a delete does
-    * forget-set-sized work only; [[compact]] later drops the tombstoned
-    * postings physically and clears the list.
+    * tombstone id list (anti-joined on every postings read — so every
+    * df, counted from the live postings, shrinks with it) and a
+    * negated meta generation (the forget docs' n_docs and n_tokens, so
+    * idf weights and BM25 normalization reflect the shrunk corpus from
+    * the next probe on). The forget docs' text is read for their token
+    * counts only; it is not shingled. Nothing stored is rewritten — a
+    * delete does forget-set-sized work only; [[compact]] later drops
+    * the tombstoned postings physically and clears the list.
     *
     * Contract: the forget-set must be (a subset of) documents actually
     * in the index — GDPR deletes name content you hold. Re-ingesting a
     * deleted id requires a [[compact]] first (while its tombstone is
     * pending, the anti-join would hide the re-ingested postings while
-    * the lexicon counted them).
+    * meta counted them).
     *
     * IDEMPOTENT at two levels (the [[refresh]] discipline): (a) across
     * DISTINCT delete batches, ids already tombstoned by an earlier
     * batch are filtered out, so a logically re-delivered delete never
-    * subtracts df/meta twice; (b) within ONE batch under retry, the
-    * negative generation is keyed `ts-<batchId>` and the id list lands
-    * in its own `batch=<batchId>` partition, both written with dynamic
-    * overwrite — a retried partial attempt replaces its own partitions
-    * — and a fully-committed batch leaves an `_applied/ts-<batchId>`
-    * marker that makes the retry a no-op. The cross-batch filter reads
-    * the tombstone list EXCLUDING this batch's partition, so a lazy
-    * re-execution after this batch's own append cannot see its own ids
-    * (the self-read-after-write hazard the pre-generational spelling
-    * guarded with an eager checkpoint; the checkpoint is kept so the
-    * filtered set materializes once for the three writes). */
+    * subtracts meta twice; (b) within ONE batch under retry, the
+    * negated meta generation is keyed `ts-<batchId>` and the id list
+    * lands in its own `batch=<batchId>` partition, both written with
+    * dynamic overwrite — a retried partial attempt replaces its own
+    * partitions — and a fully-committed batch leaves an
+    * `_applied/ts-<batchId>` marker that makes the retry a no-op. The
+    * cross-batch filter reads the tombstone list EXCLUDING this batch's
+    * partition, so a lazy re-execution after this batch's own append
+    * cannot see its own ids (the self-read-after-write hazard the
+    * pre-generational spelling guarded with an eager checkpoint; the
+    * checkpoint is kept so the filtered set materializes once for both
+    * writes). */
   def tombstone(
       forgetDocs: DataFrame,
       idCol: String,
@@ -401,58 +395,50 @@ object LexicalIndex {
     LsmLayout.forgetBatch(spark, path, batchId, writerEpoch, forgetDocs,
       idCol, "doc_id") { (forget, snap) =>
       val (n, buckets) = layoutConstants(spark, path, snap)
-      val gen = s"ts-$batchId"
-      // three disjoint relations from the checkpointed forget-set —
-      // overlap the writes (marker after ALL settle)
+      // two disjoint relations from the checkpointed forget-set —
+      // overlap the writes (marker after both settle)
       Overlap.all(spark)(
         () => LsmLayout.writeTombstones(
           forget.select(col(idCol).as("doc_id")), path, batchId),
-        () => writeBucketed(
-          postingProjection(forget, idCol, textCol, n, buckets)
-            .groupBy(col("bucket"), col("shingle"))
-            .agg((-count(lit(1))).as("df"))
-            .withColumn("gen", lit(gen)),
-          s"$path/lexicon"),
         () => LsmLayout.writeGeneration(
-          metaGeneration(forget, textCol, n, buckets, gen, -_),
+          metaGeneration(forget, textCol, n, buckets, s"ts-$batchId", -_),
           s"$path/meta", "gen"))
     }
   }
 
   /** Fold accumulated generations back to one — the compaction half
     * of the LSM contract (run when the generation/file count starts to
-    * matter; probes are correct either way). Lexicon and meta ALWAYS
-    * fold their sums (their generations grow the read-side fold — ≤
-    * #generations rows per shingle / meta row). The postings are
-    * already logically final (appends never duplicate a (doc, gram)
-    * row; reads resolve explicit live-generation paths), so the ONE
-    * corpus-sized rewrite in this op runs only when it has WORK to do:
-    * pending tombstones (the GDPR contract — forgotten postings must
-    * leave the stored layout physically at compact) or a generation
-    * count past the hygiene bound (restore the
-    * one-sorted-file-per-bucket layout the row-group pruning story
-    * assumes — the s19 discipline). The postings relation tracks its
-    * own fold state in the snapshot's second fold track (the
+    * matter; probes are correct either way). Meta ALWAYS folds its sums
+    * (its generations grow the read-side fold — one row per
+    * generation). The postings are already logically final (appends
+    * never duplicate a (doc, gram) row; reads resolve explicit
+    * live-generation paths), so the ONE corpus-sized rewrite in this op
+    * runs only when it has WORK to do: pending tombstones (the GDPR
+    * contract — forgotten postings must leave the stored layout
+    * physically at compact) or a generation count past the hygiene
+    * bound (restore the one-sorted-file-per-bucket layout the row-group
+    * pruning story assumes — the s19 discipline). The postings relation
+    * tracks its own fold state in the snapshot's second fold track (the
     * ClusterRegistry ledger spelling), so a count-triggered compact is
-    * a vocabulary-sized fold, not a full-corpus posting pass — at
-    * 100 TB the difference between an O(vocab) policy trip and an
+    * a one-row meta fold, not a full-corpus posting pass — at 100 TB
+    * the difference between a metadata-sized policy trip and an
     * O(corpus) one.
     *
     * SNAPSHOT-ATOMIC for concurrent readers: the folds land in a
     * brand-new immutable `base-<id>` generation and ONE manifest flip
-    * makes postings, lexicon and meta visible together — a probe never
-    * mixes a folded lexicon with an un-folded meta (which would skew
-    * every idf weight); directories only the previous snapshot had
-    * stopped referencing are GC'd, so a reader holding either snapshot
-    * scans intact files. The `_applied` markers are KEPT: a late retry
-    * of a pre-compact batch must still no-op (its data survives inside
-    * the folded generation). `writerEpoch` fences the flip and the GC.
-    * The folds run WITHOUT eager checkpoints: each reads explicit
-    * live-generation paths and writes only the just-cleared
-    * gen=<newBase> directories, so read and write sets are disjoint by
-    * construction (the ClusterRegistry.compact fold argument — if a
-    * read path ever stops being explicit-path-scoped, the checkpoints
-    * must come back). */
+    * makes postings and meta visible together — a probe never mixes
+    * folded postings (tombstoned docs dropped) with an un-folded meta
+    * (which would skew every idf weight); directories only the previous
+    * snapshot had stopped referencing are GC'd, so a reader holding
+    * either snapshot scans intact files. The `_applied` markers are
+    * KEPT: a late retry of a pre-compact batch must still no-op (its
+    * data survives inside the folded generation). `writerEpoch` fences
+    * the flip and the GC. The folds run WITHOUT eager checkpoints: each
+    * reads explicit live-generation paths and writes only the
+    * just-cleared gen=<newBase> directories, so read and write sets are
+    * disjoint by construction (the ClusterRegistry.compact fold
+    * argument — if a read path ever stops being explicit-path-scoped,
+    * the checkpoints must come back). */
   def compact(
       spark: SparkSession, path: String,
       writerEpoch: Option[Long] = None): Unit =
@@ -461,20 +447,15 @@ object LexicalIndex {
     // manifest flip still lands only after ALL settle, so readers keep
     // the all-or-nothing visibility contract
     LsmLayout.snapshotCompact(spark, path, writerEpoch,
-      rels = Seq((s"$path/lexicon", "gen="), (s"$path/meta", "gen=")),
+      rels = Seq((s"$path/meta", "gen=")),
       secondary = Seq((s"$path/postings", "gen="))) { fold =>
       (if (fold.foldSecondary)
         Seq(() => writeBucketed(
           postingsScoped(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
           s"$path/postings"))
-      else Seq.empty) ++
-      Seq(
-        () => writeBucketed(
-          lexiconScoped(spark, path, fold.snap)
-            .withColumn("gen", lit(fold.newBase)),
-          s"$path/lexicon"),
-        () => LsmLayout.writeGeneration(
+      else Seq.empty) :+
+        (() => LsmLayout.writeGeneration(
           metaRowScoped(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
           s"$path/meta", "gen"))
@@ -530,11 +511,22 @@ object LexicalIndex {
       .limit(k)
   }
 
-  /** Exact-rational idf-weighted retrieval served FROM the index (the
-    * n114 question): per-shingle weight round(1e6·N/df) from the stored
-    * lexicon + meta, query weights broadcast onto the posting stream,
-    * BIGINT score sum, TakeOrdered. The (bucket, shingle) join between
-    * query postings and lexicon is co-partitioned by construction. */
+  /** The candidate stream of the two doc-keyed rankings: the postings
+    * of the query doc's shingles (its own postings via a pushed doc_id
+    * filter, broadcast into a semi-join), each with its shingle's df —
+    * counted before the query doc itself is dropped — its idf weight
+    * `graft__w` and the meta counters. One snapshot for every read. */
+  private def queryCandidates(
+      spark: SparkSession, path: String, queryDocId: Long): DataFrame = {
+    val snap = LsmLayout.snapshot(spark, path)
+    val post = postingsScoped(spark, path, snap)
+    val q = post.filter(col("doc_id") === queryDocId).select(col("shingle"))
+    withDf(post.join(broadcast(q), Seq("shingle"), "left_semi"))
+      .filter(col("doc_id") =!= queryDocId)
+      .crossJoin(broadcast(metaRowScoped(spark, path, snap)))
+      .withColumn("graft__w", idfWeight)
+  }
+
   /** BM25-shaped ranked retrieval served FROM the index: the n114
     * exact-rational idf grid (w = round(1e6·N/df) — no log, the n31
     * discipline) with the Robertson tf/length normalization at
@@ -549,26 +541,12 @@ object LexicalIndex {
     * EXACTLY per doc — so the doc score is order-independent and
     * bit-identical cross-engine (the n34/n117 "identical IEEE chain +
     * exact integer sum" discipline; a raw double sum would be
-    * partitioning-dependent). Probe shape: query terms → lexicon
-    * (co-partitioned) → broadcast weights onto the posting stream →
-    * one doc-keyed BIGINT sum → TakeOrdered. Index-only; tf and dl
-    * ride the postings, so no extra join. */
+    * partitioning-dependent). Probe shape: [[queryCandidates]] → one
+    * doc-keyed BIGINT sum → TakeOrdered. Index-only; tf and dl ride the
+    * postings, so no extra join. */
   def bm25TopK(
-      spark: SparkSession, path: String, queryDocId: Long, k: Int): DataFrame = {
-    val post = postings(spark, path)
-    val lex = lexicon(spark, path)
-    val meta = metaRow(spark, path)
-    val qw = post.filter(col("doc_id") === queryDocId)
-      .select(col("bucket"), col("shingle"))
-      .join(lex, Seq("bucket", "shingle"))
-      .crossJoin(broadcast(meta))
-      .select(col("shingle"),
-        round(lit(1000000.0) *
-          (col("n_docs").cast("double") / col("df").cast("double")))
-          .cast("long").as("graft__w"),
-        col("n_docs"), col("n_tokens"))
-    post.filter(col("doc_id") =!= queryDocId)
-      .join(broadcast(qw), Seq("shingle"))
+      spark: SparkSession, path: String, queryDocId: Long, k: Int): DataFrame =
+    queryCandidates(spark, path, queryDocId)
       .select(col("doc_id"),
         round(
           (col("graft__w").cast("double") * lit(22.0) *
@@ -581,26 +559,16 @@ object LexicalIndex {
       .agg(sum(col("graft__s")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
 
+  /** Exact-rational idf-weighted retrieval served FROM the index (the
+    * n114 question): per-shingle weight round(1e6·N/df) with df counted
+    * from the postings and N from meta, summed as BIGINT per doc over
+    * the shingles it shares with the query doc, TakeOrdered. */
   def lexicalTopK(
-      spark: SparkSession, path: String, queryDocId: Long, k: Int): DataFrame = {
-    val post = postings(spark, path)
-    val lex = lexicon(spark, path)
-    val meta = metaRow(spark, path)
-    val qw = post.filter(col("doc_id") === queryDocId)
-      .select(col("bucket"), col("shingle"))
-      .join(lex, Seq("bucket", "shingle"))
-      .crossJoin(broadcast(meta))
-      .select(col("shingle"),
-        round(lit(1000000.0) *
-          (col("n_docs").cast("double") / col("df").cast("double")))
-          .cast("long").as("graft__w"))
-    post.filter(col("doc_id") =!= queryDocId)
-      .join(broadcast(qw), Seq("shingle"))
+      spark: SparkSession, path: String, queryDocId: Long, k: Int): DataFrame =
+    queryCandidates(spark, path, queryDocId)
       .groupBy(col("doc_id"))
       .agg(sum(col("graft__w")).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-  }
 }

@@ -310,11 +310,13 @@ private[graft] object LsmLayout {
   /** Live-generation count under the CURRENT snapshot — what an
     * auto-compaction policy compares against its threshold (physical
     * directory counts include superseded generations awaiting GC and
-    * would re-trip the policy forever). */
+    * would re-trip the policy forever). `counted` selects the
+    * generation names a layout's policy counts (default: all). */
   def liveGenerationCount(
       spark: SparkSession, root: String, dir: String,
-      prefix: String = "gen="): Int =
-    liveGenerationNames(spark, dir, prefix, snapshot(spark, root)).size
+      prefix: String = "gen=", counted: String => Boolean = _ => true): Int =
+    liveGenerationNames(spark, dir, prefix, snapshot(spark, root))
+      .count(counted)
 
   /** Tombstone batches a reader of this snapshot must still anti-join
     * (batches the base already physically applied are skipped; their
@@ -536,22 +538,25 @@ private[graft] object LsmLayout {
     * new owner's base or clear its tombstones. */
   def autoCompact(
       spark: SparkSession, path: String, dir: String, prefix: String,
-      compactAfterGenerations: Int, writerEpoch: Option[Long])(
+      compactAfterGenerations: Int, writerEpoch: Option[Long],
+      counted: String => Boolean = _ => true)(
       compact: Option[Long] => Unit): Unit =
     if (compactAfterGenerations > 0 &&
-      liveGenerationCount(spark, path, dir, prefix) > compactAfterGenerations)
+      liveGenerationCount(spark, path, dir, prefix, counted) >
+        compactAfterGenerations)
       compact(writerEpoch)
 
   /** The applied-once ingest of one batch: unless the batch's marker
     * exists, run the layout's `writes` and commit ([[commitApplied]]),
     * else run `whenApplied`; then, on the fresh AND the already-applied
     * path (a clean retry must still honor the budget), the
-    * [[autoCompact]] policy over the relation `dir`. */
+    * [[autoCompact]] policy over the `counted` generations of the
+    * relation `dir`. */
   def ingestBatch(
       spark: SparkSession, path: String, batchId: String,
       writerEpoch: Option[Long], compactAfterGenerations: Int,
       dir: String, prefix: String, compact: Option[Long] => Unit,
-      whenApplied: => Unit = ())(
+      whenApplied: => Unit = (), counted: String => Boolean = _ => true)(
       writes: => Unit): Unit =
     Trace("ingest", path) {
       requireValidBatchId(batchId)
@@ -560,7 +565,7 @@ private[graft] object LsmLayout {
         commitApplied(spark, path, batchId, writerEpoch)
       } else whenApplied
       autoCompact(spark, path, dir, prefix, compactAfterGenerations,
-        writerEpoch)(compact)
+        writerEpoch, counted)(compact)
     }
 
   /** The forget batch `ts-<batchId>`, idempotent at both levels: a

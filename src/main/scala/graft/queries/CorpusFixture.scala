@@ -36,8 +36,8 @@ import graft.operators._
   * share a tree; Bench clears target/sinks at startup, so every bench
   * run re-prices one build. The key's `base3-v<n>` suffix names the
   * tree's layout format: a change to what the builds write (v2: the
-  * shared band) bumps it, so an older cached tree is swept and rebuilt
-  * instead of cloned.
+  * shared band; v3: no stored lexical lexicon) bumps it, so an older
+  * cached tree is swept and rebuilt instead of cloned.
   */
 object CorpusFixture {
 
@@ -73,7 +73,7 @@ object CorpusFixture {
     val src = new java.io.File(sfDir, "documents.parquet")
     val fp = java.lang.Long.toHexString(
       src.length * 1000003L ^ src.lastModified)
-    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v2"
+    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v3"
   }
 
   /** Build the fixture if its `_done` marker is absent (or `rebuild`);

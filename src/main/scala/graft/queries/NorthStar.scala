@@ -5160,7 +5160,7 @@ object NorthStar {
     // ----- s28: shingle index as WAREHOUSE LAYOUT (lexical serving) -----
     // n118 shingles the corpus per query; at 100 TB the shingle
     // relation IS a table — [[LexicalIndex.build]] writes it once as
-    // fp-bucketed, shingle-sorted postings (+ lexicon + meta), and the
+    // fp-bucketed, shingle-sorted postings (+ meta), and the
     // serving probe answers the SAME more-like-this question from the
     // stored layout: query shingles via a pushed doc_id filter on the
     // postings, broadcast, one doc-keyed agg, TakeOrdered. The s23/s26
@@ -5185,11 +5185,10 @@ object NorthStar {
 
     // ----- s29: idf retrieval served from the stored shingle index ------
     // The n114 ranking answered INDEX-ONLY: per-shingle weights
-    // round(1e6·N/df) from the stored lexicon (df) + meta (N), query
-    // weights broadcast onto the stored postings, BIGINT score sum.
-    // The query-shingles↔lexicon join is co-partitioned (bucket,
-    // shingle) by construction — zero text reads, zero shingle builds
-    // at serve time.
+    // round(1e6·N/df) with df counted from the stored postings (the
+    // query doc's shingles broadcast into a semi-join, one window
+    // count) and N from meta, BIGINT score sum — zero text reads, zero
+    // shingle builds at serve time.
     QuerySpec(
       "s29_lexical_serve",
       s"""WITH RECURSIVE $shingleCte,
@@ -5214,11 +5213,11 @@ object NorthStar {
     // The s25 delta discipline applied to the text side: the index is
     // built over 90% of the corpus, then refreshed with the remaining
     // 10% — delta shingled map-only and appended into the bucket
-    // partitions, lexicon updated by a vocab-sized full-outer merge of
-    // stored df + delta partials, meta by adding the delta count. The
-    // indexed corpus is never re-shingled. The oracle computes the idf
-    // serving answer over the FULL corpus from scratch — refresh ≡
-    // full rebuild, proven on the serving answer itself.
+    // partitions (df is counted from them at serve time), meta by
+    // adding the delta count. The indexed corpus is never re-shingled.
+    // The oracle computes the idf serving answer over the FULL corpus
+    // from scratch — refresh ≡ full rebuild, proven on the serving
+    // answer itself.
     QuerySpec(
       "s30_lexical_refresh",
       s"""WITH RECURSIVE $shingleCte,
@@ -5246,14 +5245,14 @@ object NorthStar {
 
     // ----- s40: right-to-be-forgotten deletes in the lexical index ------
     // The serving layout's GDPR path: a forget-set (doc_id % 10 = 7)
-    // becomes a tombstone id list + NEGATIVE lexicon/meta generations
-    // (the refresh machinery run in reverse — forget-set-sized work,
-    // nothing stored rewritten), and every probe answers as if the
-    // docs never existed: postings anti-join the broadcast tombstones,
-    // df and N fold the negative generations. The oracle rebuilds the
-    // serving answer from scratch over the REMAINING corpus — delete ≡
-    // rebuild, proven on the answer itself (the s30 discipline,
-    // mirrored). LexicalIndexSpec additionally proves compact()
+    // becomes a tombstone id list + a negated meta generation
+    // (forget-set-sized work, nothing stored rewritten), and every
+    // probe answers as if the docs never existed: postings anti-join
+    // the broadcast tombstones, so df — counted from the live postings
+    // — shrinks with them, and N folds the negated generation. The
+    // oracle rebuilds the serving answer from scratch over the
+    // REMAINING corpus — delete ≡ rebuild, proven on the answer itself
+    // (the s30 discipline, mirrored). LexicalIndexSpec additionally proves compact()
     // physically drops the tombstoned postings and serves identically.
     QuerySpec(
       "s40_lexical_forget",
@@ -5432,7 +5431,7 @@ object NorthStar {
     // The scan shape the fp-bucketed layout exists for: an ad-hoc
     // query STRING arrives, is shingled driver-side (plan-time
     // constants — the s23 probe-set argument), and its bucket set
-    // prunes the postings/lexicon scans at the CATALOG while the
+    // prunes the postings scan at the CATALOG while the
     // shingle IN-list reaches the parquet reader — the probe touches
     // only the ≤|query shingles| bucket partitions and, within them,
     // only row groups whose shingle range can match (the build sorts
@@ -8412,7 +8411,7 @@ object NorthStar {
     // ----- s46: auto-compaction policy under continuous ingest ----------
     // The LSM contract needs a BOUND on generation growth: with
     // compactAfterGenerations = 2, the third refresh sees 3 committed
-    // lexicon generations and folds them back to one INSIDE the same
+    // generations and folds them back to one INSIDE the same
     // maintenance call — so a continuous ingest loop never accumulates
     // unbounded generations for the read fold. The policy firing
     // mid-sequence is part of the gate (the require below pins the

@@ -552,4 +552,24 @@ class CorpusLifecycleSpec extends SparkTestBase {
       batchId = "b1")
     assert(LsmLayout.isApplied(spark, s"$root/band", "b1"))
   }
+
+  test("maintain: the lexical generation rule counts build, ingest and forget as three meta generations") {
+    val root = "target/test_corpuslc/lexical_gens"
+    val lay = CorpusLifecycle.CorpusLayouts(lexical = Some(s"$root/lexical"))
+    LexicalIndex.build(baseDocs, "doc_id", "text", s"$root/lexical", n = 2)
+    CorpusLifecycle.ingest(deltaDocs, "doc_id", "text", lay, batchId = "b1")
+    CorpusLifecycle.forget(docs.filter(col("doc_id") === 3L), "doc_id",
+      "text", lay, batchId = "g1")
+    assert(LexicalIndex.generationCount(spark, s"$root/lexical") === 3)
+    // a dead-share threshold the forget cannot reach leaves the decision
+    // to the generation rule: base, b1 and ts-g1 > 2
+    val pol = CorpusLifecycle.MaintenancePolicy(
+      maxLiveGenerations = 2, maxLexicalDeadShare = 1.0)
+    val rep = CorpusLifecycle.maintain(spark, lay, pol)
+      .as[(String, String, Double, Double, String)].collect()
+    assert(rep.toSeq ===
+      Seq(("lexical", "live_generations", 3.0, 2.0, "compact")))
+    assert(LexicalIndex.generationCount(spark, s"$root/lexical") === 1)
+    assert(!new java.io.File(s"$root/lexical/lexicon").exists())
+  }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.{forAll, propBoolean, throws}
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean, throws}
 
 import org.apache.spark.sql.functions._
 
@@ -617,6 +617,110 @@ object EngineLawsProps extends Properties("EngineLaws") {
             }
           }
       }
+    }
+  }
+
+  // --- lexical index maintenance law (Spark-backed; one index life per
+  // case) ----------------------------------------------------------------
+
+  private sealed trait LexOp
+  private case object LexRebuild extends LexOp
+  private case object LexCompact extends LexOp
+  /** New docs; with `reingest`, every id forgotten AND compacted away
+    * since comes back too, with the text `reText`. */
+  private final case class LexRefresh(
+      texts: List[String], reingest: Boolean, reText: String) extends LexOp
+  /** Forget the live docs these picks index (doc 0 excepted). */
+  private final case class LexForget(picks: List[Int]) extends LexOp
+
+  private val lexLawCases = new java.util.concurrent.atomic.AtomicInteger()
+
+  property("lexical index: df view == live-doc group-by, pointProbe == driver idf-sum, any maintenance sequence") = {
+    val word = Gen.oneOf("a", "b", "c", "d")
+    val text = Gen.choose(1, 5).flatMap(Gen.listOfN(_, word)).map(_.mkString(" "))
+    val refresh = for {
+      ts <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, text))
+      re <- Gen.oneOf(true, false)
+      rt <- text
+    } yield LexRefresh(ts, re, rt)
+    val forget = Gen.choose(1, 2).flatMap(Gen.listOfN(_, Gen.choose(0, 99)))
+      .map(LexForget(_))
+    val anyOp: Gen[LexOp] = Gen.frequency(1 -> Gen.const(LexRebuild),
+      3 -> refresh, 2 -> forget, 2 -> Gen.const(LexCompact))
+    val some = Gen.choose(0, 1).flatMap(Gen.listOfN(_, anyOp))
+    // random maintenance around one fixed thread: a forget, a later
+    // compact, then a refresh that re-ingests the compacted-away ids
+    val opsGen = for {
+      s1 <- some; f <- forget; s2 <- some; s3 <- some; r <- refresh
+      s4 <- some
+    } yield s1 ++ (f :: s2) ++ (LexCompact :: s3) ++
+      (r.copy(reingest = true) :: s4)
+    val baseGen = Gen.choose(0, 4).flatMap(Gen.listOfN(_, text))
+    val queryGen = Gen.choose(2, 5).flatMap(Gen.listOfN(_, word))
+      .map(_.mkString(" "))
+    forAllNoShrink(baseGen, opsGen, queryGen) { (baseTexts, ops, query) =>
+      val n = 2
+      val path = s"target/test_lexlaw/${lexLawCases.incrementAndGet()}"
+      LsmLayout.deleteDir(spark, path)
+      // doc 0 always has postings and is never forgotten: a layout with
+      // no posting generation at all cannot be read
+      val live = scala.collection.mutable.LinkedHashMap[Long, String](
+        0L -> "a b c d")
+      baseTexts.foreach(t => live(live.size.toLong) = t)
+      var nextId = 100L
+      var pending = Set.empty[Long]
+      var gone = Set.empty[Long] // forgotten, and no longer in the index
+      def frame(docs: Seq[(Long, String)]) = docs.toDF("doc_id", "text")
+      LexicalIndex.build(frame(live.toSeq), "doc_id", "text", path, n = n,
+        buckets = 4)
+      ops.zipWithIndex.foreach {
+        case (LexRebuild, _) =>
+          LexicalIndex.build(frame(live.toSeq), "doc_id", "text", path,
+            n = n, buckets = 4)
+          gone ++= pending
+          pending = Set.empty
+        case (LexCompact, _) =>
+          LexicalIndex.compact(spark, path)
+          gone ++= pending
+          pending = Set.empty
+        case (LexRefresh(texts, reingest, reText), i) =>
+          val back = if (reingest) gone.toSeq.sorted.map(_ -> reText) else Nil
+          val fresh = texts.map { t => nextId += 1; nextId -> t }
+          LexicalIndex.refresh(frame(back ++ fresh), "doc_id", "text", path,
+            batchId = s"b$i")
+          gone --= back.map(_._1)
+          (back ++ fresh).foreach { case (id, t) => live(id) = t }
+        case (LexForget(picks), i) =>
+          val ids = live.keys.filter(_ != 0L).toIndexedSeq
+          if (ids.nonEmpty) {
+            val del = picks.map(p => ids(p % ids.size)).distinct
+            LexicalIndex.tombstone(frame(del.map(d => d -> live(d))),
+              "doc_id", "text", path, batchId = s"d$i")
+            del.foreach(live.remove)
+            pending ++= del
+          }
+      }
+      // the independent twins: df over the live docs' distinct grams, and
+      // the idf-sum ranking round(1e6·N/df) over the query's grams
+      val grams = live.view.mapValues(LexicalIndex.literalShingles(_, n).toSet)
+        .toMap
+      val df = grams.values.toSeq.flatMap(_.toSeq).groupBy(identity)
+        .view.mapValues(_.size.toLong).toMap
+      def w(g: String): Long = BigDecimal(
+        1000000.0 * (live.size.toDouble / df(g).toDouble))
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      val qg = LexicalIndex.literalShingles(query, n).toSet
+      val want = grams.toSeq
+        .map { case (id, gs) => id -> (gs intersect qg).toSeq.map(w).sum }
+        .filter { case (id, _) => (grams(id) intersect qg).nonEmpty }
+        .sortBy { case (id, sc) => (-sc, id) }
+        .take(10)
+      val gotDf = LexicalIndex.lexicon(spark, path)
+        .select("shingle", "df").as[(String, Long)].collect().toMap
+      val got = LexicalIndex.pointProbe(spark, path, query, k = 10)
+        .as[(Long, Long)].collect().toSeq
+      (gotDf == df) :| s"lexicon $gotDf != $df after $ops" &&
+        (got == want) :| s"pointProbe($query) $got != $want after $ops"
     }
   }
 }

@@ -35,7 +35,7 @@ class LexicalIndexSpec extends SparkTestBase {
       (2L, "b x") -> ((2L, 3L, 1L)),
       (4L, "b c") -> ((2L, 4L, 2L)),
       (4L, "c b") -> ((2L, 4L, 1L))))
-    val lex = spark.read.parquet(s"$path/lexicon")
+    val lex = LexicalIndex.lexicon(spark, path)
       .collect().map(r => r.getAs[String]("shingle") -> r.getAs[Long]("df")).toMap
     assert(lex === Map("a b" -> 2L, "b c" -> 2L, "c a" -> 1L,
       "b x" -> 1L, "c b" -> 1L))
@@ -74,8 +74,7 @@ class LexicalIndexSpec extends SparkTestBase {
     assert(posts(inc) === posts(full))
     assert(lexi(inc) === lexi(full))
     assert(meta(inc) === meta(full))
-    val lexRows = spark.read.parquet(s"$inc/lexicon")
-      .filter(col("gen") === snap.base).count()
+    val lexRows = LexicalIndex.lexicon(spark, inc).count()
     assert(lexRows === lexi(full).size.toLong,
       "compacted lexicon must hold exactly one row per shingle")
   }
@@ -298,8 +297,7 @@ class LexicalIndexSpec extends SparkTestBase {
     val snap = LsmLayout.snapshot(spark, p)
     // lexicon and meta folded into the new base (their generations grow
     // the read-side fold) ...
-    assert(spark.read.parquet(s"$p/lexicon")
-      .filter(col("gen") === snap.base)
+    assert(LexicalIndex.lexicon(spark, p)
       .groupBy("shingle").count().filter(col("count") > 1).count() === 0L)
     assert(spark.read.parquet(s"$p/meta")
       .filter(col("gen") === snap.base).count() === 1L)
@@ -374,5 +372,36 @@ class LexicalIndexSpec extends SparkTestBase {
     LexicalIndex.pointProbe(spark, p, "a b c", k = 3).collect()
     assert(LsmLayout.cachedMetaDirs.filter(_.startsWith(s"$p/")) ===
       Set(s"$p/meta"))
+  }
+
+  test("a build over an older tree with a stored lexicon/ removes it and serves like a fresh build") {
+    val old = "target/test_lexidx/old_format"
+    val fresh = "target/test_lexidx/old_format_fresh"
+    LexicalIndex.build(corpus, "doc_id", "text", old, n = 2, buckets = 4)
+    LexicalIndex.refresh(
+      Seq((5L, "a b q")).toDF("doc_id", "text"), "doc_id", "text", old,
+      batchId = "b1")
+    // the older layout's df relation: a base and a refresh generation
+    LexicalIndex.lexicon(spark, old)
+      .withColumn("gen", lit("base"))
+      .write.partitionBy("gen", "bucket").parquet(s"$old/lexicon")
+    Seq(("a b", 1L, 0L, "b1")).toDF("shingle", "df", "bucket", "gen")
+      .write.mode("append").partitionBy("gen", "bucket")
+      .parquet(s"$old/lexicon")
+    assert(new java.io.File(s"$old/lexicon/gen=b1").exists())
+    LexicalIndex.build(corpus, "doc_id", "text", old, n = 2, buckets = 4)
+    LexicalIndex.build(corpus, "doc_id", "text", fresh, n = 2, buckets = 4)
+    assert(!new java.io.File(s"$old/lexicon").exists(),
+      "the rebuild must remove the older layout's lexicon/")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    assert(rows(LexicalIndex.moreLikeThis(spark, old, 1L, 10)) ===
+      rows(LexicalIndex.moreLikeThis(spark, fresh, 1L, 10)))
+    assert(rows(LexicalIndex.lexicalTopK(spark, old, 1L, 10)) ===
+      rows(LexicalIndex.lexicalTopK(spark, fresh, 1L, 10)))
+    assert(rows(LexicalIndex.bm25TopK(spark, old, 1L, 10)) ===
+      rows(LexicalIndex.bm25TopK(spark, fresh, 1L, 10)))
+    assert(rows(LexicalIndex.pointProbe(spark, old, "a b c a b", 10)) ===
+      rows(LexicalIndex.pointProbe(spark, fresh, "a b c a b", 10)))
   }
 }
