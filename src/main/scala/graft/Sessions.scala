@@ -32,6 +32,12 @@ import org.apache.spark.sql.SparkSession
   *   each; checksums and the output committer are unchanged. It is a
   *   `spark.hadoop.` setting, so every Hadoop configuration the session
   *   hands out carries it.
+  * - parquet writes keep Spark's defaults here (INT96 timestamps, v1
+  *   data pages): the query sinks are read by DuckDB, which would read
+  *   INT64 timestamps with a time zone. The compact stored format is
+  *   scoped instead: `Warehouse`'s stagings write through a clone of
+  *   this session that carries it (`Warehouse.StoredFormat`), and the
+  *   stored layouts set v2 pages per write (`LsmLayout.writeRelation`).
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

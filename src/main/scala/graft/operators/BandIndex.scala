@@ -105,22 +105,20 @@ object BandIndex {
       // servable in any ordering — builds clear the markers/snapshot
       // first and carry no marker of their own.
       Overlap.all(spark)(
-        () => sk.select(col("doc_id"), col("sig"))
-          .withColumn("gen", lit(BaseGen))
-          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/sigs"),
-        () => sk
-          .select(col("doc_id"),
-            posexplode(col("bh")).as(Seq("band", "band_val")))
-          .withColumn("gen", lit(BaseGen))
-          .repartition(col("band"))
-          .sortWithinPartitions(col("band_val"))
-          .write.mode("overwrite").partitionBy("gen", "band")
-          .parquet(s"$path/postings"),
-        () => spark.range(1)
-          .select(lit(numHashes.toLong).as("num_hashes"),
-            lit(bands.toLong).as("bands"),
-            lit(shingleWidth.toLong).as("shingle_n"))
-          .write.mode("overwrite").parquet(s"$path/meta"))
+        () => LsmLayout.writeRelation(
+          sk.select(col("doc_id"), col("sig")).withColumn("gen", lit(BaseGen)),
+          s"$path/sigs", "gen"),
+        () => LsmLayout.writeRelation(
+          banded(sk.select(col("doc_id"),
+              posexplode(col("bh")).as(Seq("band", "band_val")))
+            .withColumn("gen", lit(BaseGen))),
+          s"$path/postings", "gen", "band"),
+        () => LsmLayout.writeRelation(
+          spark.range(1)
+            .select(lit(numHashes.toLong).as("num_hashes"),
+              lit(bands.toLong).as("bands"),
+              lit(shingleWidth.toLong).as("shingle_n")),
+          s"$path/meta"))
     }
   }
 
@@ -161,11 +159,9 @@ object BandIndex {
           sk.select(col("doc_id"), col("sig")).withColumn("gen", lit(batchId)),
           s"$path/sigs", "gen"),
         () => LsmLayout.writeGeneration(
-          sk.select(col("doc_id"),
+          banded(sk.select(col("doc_id"),
               posexplode(col("bh")).as(Seq("band", "band_val")))
-            .withColumn("gen", lit(batchId))
-            .repartition(col("band"))
-            .sortWithinPartitions(col("band_val")),
+            .withColumn("gen", lit(batchId))),
           s"$path/postings", "gen", "band"))
     }
   }
@@ -211,15 +207,23 @@ object BandIndex {
       foldedRelations(path)) { fold =>
       Seq(
         () => LsmLayout.writeGeneration(
-          fold.checkpointed(postingsScoped(spark, path, None, fold.snap))
-            .withColumn("gen", lit(fold.newBase))
-            .repartition(col("band")).sortWithinPartitions(col("band_val")),
+          banded(fold.checkpointed(postingsScoped(spark, path, None, fold.snap))
+            .withColumn("gen", lit(fold.newBase))),
           s"$path/postings", "gen", "band"),
         () => LsmLayout.writeGeneration(
           fold.checkpointed(signaturesScoped(spark, path, None, fold.snap))
             .withColumn("gen", lit(fold.newBase)),
           s"$path/sigs", "gen"))
     }
+
+  /** Postings as each band is stored: written by one task, in band_val
+    * order. The sort key leads with `band`, the one partition column
+    * that is not a constant, so it satisfies the ordering the planned
+    * write requires; any other key is replaced by the write's own
+    * (band) sort (see `LexicalIndex.bucketed`). */
+  private def banded(df: DataFrame): DataFrame =
+    df.repartition(col("band"))
+      .sortWithinPartitions(col("band"), col("band_val"))
 
   /** The two relations a compact folds (and its GC sweeps). */
   private[operators] def foldedRelations(path: String): Seq[(String, String)] =

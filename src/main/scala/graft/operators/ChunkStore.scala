@@ -88,18 +88,19 @@ object ChunkStore {
       // concurrently; a crashed partial build was never servable in any
       // ordering
       Overlap.all(spark)(
-        () => rows.groupBy(col("chunk_h"))
-          .agg(min(col("chunk")).as("chunk"))
-          .withColumn("gen", lit(BaseGen))
-          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/store"),
-        () => rows.select(col("doc_id"), col("pos"), col("chunk_h"))
-          .withColumn("seq", lit(0L))
-          .withColumn("gen", lit(BaseGen))
-          .write.mode("overwrite").partitionBy("gen")
-          .parquet(s"$path/manifest"),
-        () => spark.range(1)
-          .select(lit(maskBits.toLong).as("mask_bits"))
-          .write.mode("overwrite").parquet(s"$path/meta"))
+        () => LsmLayout.writeRelation(
+          rows.groupBy(col("chunk_h"))
+            .agg(min(col("chunk")).as("chunk"))
+            .withColumn("gen", lit(BaseGen)),
+          s"$path/store", "gen"),
+        () => LsmLayout.writeRelation(
+          rows.select(col("doc_id"), col("pos"), col("chunk_h"))
+            .withColumn("seq", lit(0L))
+            .withColumn("gen", lit(BaseGen)),
+          s"$path/manifest", "gen"),
+        () => LsmLayout.writeRelation(
+          spark.range(1).select(lit(maskBits.toLong).as("mask_bits")),
+          s"$path/meta"))
     }
   }
 

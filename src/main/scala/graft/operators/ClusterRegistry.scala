@@ -170,37 +170,38 @@ object ClusterRegistry {
       // crashed partial build was never servable in any ordering; ingest
       // fails loudly on a missing meta either way)
       val metaFut = Overlap.future(spark)(
-        spark.range(1)
-          .select(lit(threshold).as("threshold"),
-            lit(ledgerBuckets.toLong).as("ledger_buckets"),
-            lit(bandEntry.orNull).cast("string").as("band"))
-          .write.mode("overwrite").parquet(s"$path/meta"))
+        LsmLayout.writeRelation(
+          spark.range(1)
+            .select(lit(threshold).as("threshold"),
+              lit(ledgerBuckets.toLong).as("ledger_buckets"),
+              lit(bandEntry.orNull).cast("string").as("band")),
+          s"$path/meta"))
       // the layout-owned text ledger starts with the build set — from
       // here on, ingests are self-contained (delta-only). Bucketed for
       // rehydration pruning; repartitioned by bucket so each task writes
       // one bucket directory (no small-files fan-out).
       val ledgerFut = Overlap.future(spark)(
-        docs
-          .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-          .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
-          .repartition(col("bucket"))
-          .withColumn("batch", lit(BaseBatch))
-          .write.mode("overwrite").partitionBy("batch", "bucket")
-          .parquet(s"$path/ledger"))
+        LsmLayout.writeRelation(
+          docs
+            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
+            .withColumn("bucket", ledgerBucket(col("doc_id"), ledgerBuckets))
+            .repartition(col("bucket"))
+            .withColumn("batch", lit(BaseBatch)),
+          s"$path/ledger", "batch", "bucket"))
       try {
         val comp = DedupClusters.components(
           MinHashNearDup.pairsFromSketched(sk, threshold,
             numHashes = BandIndex.DefaultNumHashes),
           "id_a", "id_b")
           .select(col("id").as("doc_id"), col("comp"))
-        docs.select(col(idCol).as("doc_id"))
-          .join(comp, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("comp"), col("doc_id")).as("cluster_id"))
-          .withColumn("gen", lit(0L))
-          .withColumn("batch", lit(BaseBatch))
-          .write.mode("overwrite").partitionBy("batch")
-          .parquet(s"$path/assignments")
+        LsmLayout.writeRelation(
+          docs.select(col(idCol).as("doc_id"))
+            .join(comp, Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("comp"), col("doc_id")).as("cluster_id"))
+            .withColumn("gen", lit(0L))
+            .withColumn("batch", lit(BaseBatch)),
+          s"$path/assignments", "batch")
         bandFut.foreach(Overlap.await)
         Overlap.await(ledgerFut)
         Overlap.await(metaFut)

@@ -54,12 +54,12 @@ object IvfLayout {
       // discipline shared across the stored layouts; a crashed partial
       // build was never servable in any ordering)
       Overlap.all(spark)(
-        () => vecs
-          .withColumn("cell",
-            Similarity.nearestCell(Similarity.asDouble(col(vecCol)), centroids))
-          .withColumn("gen", lit(BaseGen))
-          .write.mode("overwrite").partitionBy("gen", "cell")
-          .parquet(s"$path/vectors"),
+        () => LsmLayout.writeRelation(
+          vecs
+            .withColumn("cell",
+              Similarity.nearestCell(Similarity.asDouble(col(vecCol)), centroids))
+            .withColumn("gen", lit(BaseGen)),
+          s"$path/vectors", "gen", "cell"),
         () => writeCentroids(spark, path, BaseGen, centroids))
     }
   }
@@ -88,11 +88,12 @@ object IvfLayout {
       spark: SparkSession, path: String, base: String,
       centroids: Seq[Seq[Double]]): Unit = {
     import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, c) }
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(centroidDir(path, base))
+    LsmLayout.writeRelation(
+      centroids.zipWithIndex
+        .map { case (c, i) => (i.toLong, c) }
+        .toDF("cell", "centroid")
+        .coalesce(1),
+      centroidDir(path, base))
   }
 
   /** The stored centroid table OF ONE SNAPSHOT, driver-side — nlist

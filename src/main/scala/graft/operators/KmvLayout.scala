@@ -81,14 +81,15 @@ object KmvLayout {
       // stored layouts; a crashed partial build was never servable in
       // any ordering)
       Overlap.all(spark)(
-        () => docSketches(docs, groupCol, idCol, textCol, salt, k)
-          .withColumn("gen", lit(0L))
-          .withColumn("batch", lit(BaseBatch))
-          .write.mode("overwrite").partitionBy("batch")
-          .parquet(s"$path/sketches"),
-        () => spark.range(1)
-          .select(lit(k.toLong).as("k"), lit(salt).as("hash_salt"))
-          .write.mode("overwrite").parquet(s"$path/meta"))
+        () => LsmLayout.writeRelation(
+          docSketches(docs, groupCol, idCol, textCol, salt, k)
+            .withColumn("gen", lit(0L))
+            .withColumn("batch", lit(BaseBatch)),
+          s"$path/sketches", "batch"),
+        () => LsmLayout.writeRelation(
+          spark.range(1)
+            .select(lit(k.toLong).as("k"), lit(salt).as("hash_salt")),
+          s"$path/meta"))
     }
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Stored inverted shingle index — the warehouse layout behind lexical
   * retrieval serving (the s23/s26 discipline applied to the text side).
@@ -94,14 +95,13 @@ object LexicalIndex {
       // shingle width have no postings but still count), so its corpus
       // scan runs CONCURRENTLY with the postings write
       Overlap.all(spark)(
-        () => postingProjection(docs, idCol, textCol, n, buckets)
-          .withColumn("gen", lit(BaseGen))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("shingle"))
-          .write.mode("overwrite").partitionBy("gen", "bucket")
-          .parquet(s"$path/postings"),
-        () => metaGeneration(docs, textCol, n, buckets, BaseGen, identity)
-          .write.mode("overwrite").partitionBy("gen").parquet(s"$path/meta"))
+        () => LsmLayout.writeRelation(
+          bucketed(postingProjection(docs, idCol, textCol, n, buckets)
+            .withColumn("gen", lit(BaseGen))),
+          s"$path/postings", "gen", "bucket"),
+        () => LsmLayout.writeRelation(
+          metaGeneration(docs, textCol, n, buckets, BaseGen, identity),
+          s"$path/meta", "gen"))
     }
   }
 
@@ -142,6 +142,27 @@ object LexicalIndex {
     LsmLayout.readGenerations(spark, s"$path/$rel", "gen=", live)
   }
 
+  /** The live postings generations of a snapshot (the second fold
+    * track), tombstoned rows included. A layout may have none — a build
+    * over docs that are all shorter than the shingle width writes no
+    * postings, and neither does a compact after every doc was
+    * forgotten — and then reads as empty. */
+  private def livePostings(
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
+    LsmLayout.readGenerations(spark, s"$path/postings", "gen=",
+      LsmLayout.liveGenerationNames(
+        spark, s"$path/postings", "gen=", snap.ledgerView),
+      Some(PostingsSchema))
+
+  /** The columns a postings generation read returns: the file columns
+    * (`doc_id` declared as the long id the corpora carry), then the
+    * partition columns as the directory names infer them. */
+  private val PostingsSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("ns", LongType),
+    StructField("dl", LongType), StructField("shingle", StringType),
+    StructField("tf", LongType), StructField("gen", StringType),
+    StructField("bucket", IntegerType)))
+
   /** The stored posting relation (doc_id, ns, dl, shingle, tf, bucket),
     * minus tombstoned documents when a forget-set is pending — every
     * probe routes through here, so a [[tombstone]] call is visible on
@@ -155,7 +176,7 @@ object LexicalIndex {
   private def postingsScoped(
       spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
     LsmLayout.antiJoinTombstones(spark, path, snap,
-      scopedRel(spark, path, "postings", snap.ledgerView).drop("gen"),
+      livePostings(spark, path, snap).drop("gen"),
       "doc_id")
 
   /** The document-frequency table (bucket, shingle, df) as a VIEW of
@@ -333,12 +354,21 @@ object LexicalIndex {
     }
   }
 
-  /** A (gen, bucket)-partitioned relation, each bucket written by one
-    * task in shingle order (the build's row-group pruning layout). */
+  /** A (gen, bucket)-partitioned generation write of [[bucketed]] rows. */
   private def writeBucketed(df: DataFrame, dir: String): Unit =
-    LsmLayout.writeGeneration(
-      df.repartition(col("bucket")).sortWithinPartitions(col("shingle")),
-      dir, "gen", "bucket")
+    LsmLayout.writeGeneration(bucketed(df), dir, "gen", "bucket")
+
+  /** Postings as each bucket is stored: written by one task, in shingle
+    * order (the row-group pruning layout). The sort key leads with
+    * `bucket`: the planned write requires its rows ordered by the
+    * partition columns that are not constants — `bucket`, since `gen` is
+    * a literal — and replaces any sort that does not start with them by
+    * its own (bucket) sort, which drops the shingle order. A key of
+    * `shingle` alone, or one leading with the constant `gen`, reaches
+    * disk unsorted (StoredFormatSpec checks every bucket file). */
+  private def bucketed(df: DataFrame): DataFrame =
+    df.repartition(col("bucket"))
+      .sortWithinPartitions(col("bucket"), col("shingle"))
 
   /** One meta generation row: the docs' counts through `signed` (a
     * forget batch's generation is negated) plus the layout constants. */
@@ -469,12 +499,8 @@ object LexicalIndex {
     * probes more). One narrow doc_id scan over the live generations. */
   def deadRowStats(spark: SparkSession, path: String): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/postings", "gen=", snap.ledgerView)
     LsmLayout.deadRowStats(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/postings", "gen=", live)
-        .select(col("doc_id")),
-      "doc_id")
+      livePostings(spark, path, snap).select(col("doc_id")), "doc_id")
   }
 
   /** Index-health report: per-bucket posting/vocabulary/document

@@ -98,6 +98,17 @@ private[graft] final case class LayoutSnapshot(
   * skeleton re-checks it before every marker and every manifest commit,
   * so a superseded loop fails loudly instead of corrupting silently
   * (gated by WriterFencingSpec).
+  *
+  * Stored format: every relation a layout stores — build, generation,
+  * fold and tombstone writes alike — goes through [[writeRelation]] or
+  * [[writeGeneration]], which write parquet v2 data pages (per write,
+  * so the session's defaults are untouched): integer columns are
+  * delta- or dictionary-coded (DELTA_BINARY_PACKED, RLE_DICTIONARY),
+  * which stores the sorted band values, doc ids and signatures in
+  * fewer bytes than v1's plain pages. A tree whose older generations
+  * are v1 reads unchanged — the page version is per file. The query
+  * sinks keep the session's v1 pages and INT96 timestamps: they are
+  * what the DuckDB oracles read (see `graft.warehouse.Warehouse`).
   */
 private[graft] object LsmLayout {
 
@@ -333,15 +344,27 @@ private[graft] object LsmLayout {
     * EVERY footer under the directory, including superseded
     * generations a concurrent compact's GC may delete mid-inference;
     * explicit live paths never touch them (and skip listing them —
-    * at scale the metadata win too). */
+    * at scale the metadata win too).
+    *
+    * A relation that may legitimately have NO live generation (an
+    * empty write leaves no generation directory) passes its declared
+    * `empty` schema: with no names the read is an empty frame of that
+    * schema, not an error. */
   def readGenerations(
       spark: SparkSession, dir: String, prefix: String,
-      names: Seq[String]): DataFrame = {
-    require(names.nonEmpty,
-      s"no live generations to read under $dir (prefix $prefix)")
-    spark.read.option("basePath", dir)
-      .parquet(names.map(n => s"$dir/$prefix$n"): _*)
-  }
+      names: Seq[String],
+      empty: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    (names, empty) match {
+      case (Seq(), Some(schema)) =>
+        spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      case _ =>
+        require(names.nonEmpty,
+          s"no live generations to read under $dir (prefix $prefix)")
+        spark.read.option("basePath", dir)
+          .parquet(names.map(n => s"$dir/$prefix$n"): _*)
+    }
 
   /** The pending forget-set under a snapshot — `None` when every
     * tombstone batch is already applied — plus its on-disk byte size:
@@ -511,13 +534,25 @@ private[graft] object LsmLayout {
       build
     }
 
+  /** The one parquet writer of every stored layout relation — see
+    * "stored format" in the object doc. */
+  private def writer(df: DataFrame, partitionCols: Seq[String]) = {
+    val w = df.write.mode("overwrite")
+      .option("parquet.writer.version", "v2")
+    if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)
+  }
+
+  /** Replace the whole relation `dir` — a build's write (every
+    * generation of the previous index life goes with it). */
+  def writeRelation(df: DataFrame, dir: String, partitionCols: String*): Unit =
+    writer(df, partitionCols).parquet(dir)
+
   /** Write `df` into its generation partition(s) under `dir` with
     * dynamic partition overwrite — a retry replaces exactly the
     * partitions it writes, never a sibling generation. */
   def writeGeneration(df: DataFrame, dir: String, partitionCols: String*): Unit =
-    df.write.mode("overwrite")
+    writer(df, partitionCols)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
       .parquet(dir)
 
   /** The commit of one maintenance batch: the fence check, then the

@@ -36,7 +36,8 @@ import graft.operators._
   * share a tree; Bench clears target/sinks at startup, so every bench
   * run re-prices one build. The key's `base3-v<n>` suffix names the
   * tree's layout format: a change to what the builds write (v2: the
-  * shared band; v3: no stored lexical lexicon) bumps it, so an older
+  * shared band; v3: no stored lexical lexicon; v4: v2 data pages and
+  * sorted lexical and band postings) bumps it, so an older
   * cached tree is swept and rebuilt instead of cloned.
   */
 object CorpusFixture {
@@ -73,7 +74,7 @@ object CorpusFixture {
     val src = new java.io.File(sfDir, "documents.parquet")
     val fp = java.lang.Long.toHexString(
       src.length * 1000003L ^ src.lastModified)
-    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v3"
+    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v4"
   }
 
   /** Build the fixture if its `_done` marker is absent (or `rebuild`);

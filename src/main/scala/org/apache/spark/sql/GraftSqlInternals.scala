@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.StructType
   * iteration of a driver-controlled loop. `internalCreateDataFrame`
   * wraps the same rows in a fresh `LogicalRDD` with default statistics
   * (the stats reset is the point — see IterationCheckpoint's scaladoc)
-  * and no conversion at all.
+  * and no conversion at all. `cloneSession` and `rebind` give
+  * `graft.warehouse.Warehouse` a session whose write settings do not
+  * leak into the caller's.
   *
   * Version note: both members exist unchanged across Spark 3.x–4.x
   * (`internalCreateDataFrame` on the classic SparkSession,
@@ -39,4 +41,19 @@ object GraftSqlInternals {
     * (`graft.tools.Ledger` reads its listeners only after this). */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** A new session over the same context, shared state and catalog,
+    * starting from a copy of `spark`'s conf, functions, temporary views
+    * and query-execution listeners; conf set on it stays on it
+    * (`graft.warehouse.Warehouse`'s staging session). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s plan as a frame of `spark`: the same rows, planned and run
+    * under `spark`'s conf. The ANALYZED plan is rebound — its relations
+    * are already resolved, so a source read without a schema does not
+    * infer it (one Spark job) a second time. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
 }

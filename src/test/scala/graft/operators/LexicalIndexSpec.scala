@@ -404,4 +404,42 @@ class LexicalIndexSpec extends SparkTestBase {
     assert(rows(LexicalIndex.pointProbe(spark, old, "a b c a b", 10)) ===
       rows(LexicalIndex.pointProbe(spark, fresh, "a b c a b", 10)))
   }
+
+  /** Every lexical read that must answer empty (not throw) when the
+    * layout holds no live postings generation. */
+  private def assertEmptyServing(p: String): Unit = {
+    assert(LexicalIndex.postings(spark, p).collect().isEmpty)
+    assert(LexicalIndex.lexicon(spark, p).collect().isEmpty)
+    assert(LexicalIndex.stats(spark, p).collect().isEmpty)
+    assert(LexicalIndex.pointProbe(spark, p, "a b c", k = 5).collect().isEmpty)
+    assert(LexicalIndex.lexicalTopK(spark, p, 1L, 5).collect().isEmpty)
+  }
+
+  test("a build over docs all shorter than the shingle width serves empty answers") {
+    val p = "target/test_lexidx/all_short"
+    LexicalIndex.build(Seq((1L, "zz"), (2L, "y")).toDF("doc_id", "text"),
+      "doc_id", "text", p, n = 2, buckets = 4)
+    assert(LsmLayout.generationNames(spark, s"$p/postings").isEmpty,
+      "no postings generation is written")
+    assertEmptyServing(p)
+    assert(LexicalIndex.metaRow(spark, p).select("n_docs").head().getLong(0) === 2L)
+    // the first refresh with postings makes it servable
+    LexicalIndex.refresh(Seq((3L, "a b c")).toDF("doc_id", "text"),
+      "doc_id", "text", p, batchId = "b1")
+    assert(LexicalIndex.pointProbe(spark, p, "a b c", k = 5)
+      .collect().map(_.getLong(0)).toSeq === Seq(3L))
+  }
+
+  test("a compact after every doc was forgotten serves empty answers") {
+    val p = "target/test_lexidx/all_forgotten"
+    LexicalIndex.build(corpus, "doc_id", "text", p, n = 2, buckets = 4)
+    LexicalIndex.tombstone(corpus, "doc_id", "text", p, batchId = "d1")
+    assertEmptyServing(p)
+    LexicalIndex.compact(spark, p)
+    val live = LsmLayout.liveGenerationNames(spark, s"$p/postings", "gen=",
+      LsmLayout.snapshot(spark, p).ledgerView)
+    assert(live.isEmpty, "the fold of an all-forgotten corpus writes no postings")
+    assertEmptyServing(p)
+    assert(LexicalIndex.metaRow(spark, p).select("n_docs").head().getLong(0) === 0L)
+  }
 }
