@@ -90,11 +90,12 @@ object BandIndex {
     LsmLayout.startIndexLife(spark, path) {
       // both data writes consume the sketch: without `preSketched` it is
       // materialized here so shingling and MinHash run once, not once per
-      // write. It is left to the runner sweep (the Materialize contract),
-      // not unpersisted here: the cache is keyed by plan, so an equal
-      // sketch a concurrent caller cached (the registry build over the
-      // same docs) is this same entry, and unpersisting it here would drop
-      // the caller's cache under it.
+      // write, and the build's operation scope releases it when the build
+      // ends. A caller that shares one sketch between builds (the corpus
+      // fixture: this band and the registry over the same docs) persists
+      // it in its own scope and hands it in: the cache is keyed by plan,
+      // so a sketch each build persisted for itself would be one entry,
+      // and whichever build ended first would drop the other's cache.
       val sk = preSketched.getOrElse(Materialize.shared(sketchRelation(
         docs, idCol, textCol, shingleWidth, numHashes, bands)))
       // sigs/, postings/ and meta/ are disjoint relations (the first two
@@ -237,11 +238,13 @@ object BandIndex {
     * removed by the exact verify). `corpus` is the indexed relation the
     * candidate TEXT rehydrates from; only candidate ids touch it.
     *
-    * Cache note: the delta sketch relation is persisted via
-    * Materialize.shared (it feeds the band join, the prefilter and the
-    * verify); the blocks are released by the runner sweep
-    * ([[Materialize]]'s release contract) once the returned frame is
-    * consumed.
+    * Cache note: without `preSketched`, the delta sketch relation is
+    * persisted via Materialize.shared (it feeds the band join, the
+    * prefilter and the verify). The probe returns a lazy frame, so no
+    * operation scope can release it: the blocks are left to the runner
+    * sweep ([[Materialize]]'s release contract) once the returned frame
+    * is consumed. A caller inside an operation (the registry ingest)
+    * hands in a sketch its scope owns.
     */
   /** `corpusBucket` — the rehydration-pruning hook: `(bucketColName,
     * bucketOf)` where `bucketColName` is a PHYSICAL partition column

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental near-dup CLUSTER maintenance with STABLE ids — the
@@ -134,12 +135,18 @@ object ClusterRegistry {
     * `sharedBand` names a standalone [[BandIndex]] layout to probe
     * instead of building a private `$path/band` (see the class doc):
     * the build then writes no band relation at all — the band layout is
-    * built on its own, over the same docs. */
+    * built on its own, over the same docs.
+    *
+    * `preSketched` hands in an already-persisted
+    * [[BandIndex.sketchRelation]] of `docs` built with BandIndex's
+    * default geometry — the corpus fixture persists one sketch for this
+    * build and the band build (the [[BandIndex.build]] parameter). */
   def build(
       docs: DataFrame, idCol: String, textCol: String,
       path: String, threshold: Double = 0.8,
       ledgerBuckets: Int = 16,
-      sharedBand: Option[String] = None): Unit = {
+      sharedBand: Option[String] = None,
+      preSketched: Option[DataFrame] = None): Unit = {
     val spark = docs.sparkSession
     val bandEntry =
       sharedBand.map(LsmLayout.relativeLocation(parentOf(path), _))
@@ -149,11 +156,12 @@ object ClusterRegistry {
       // chain over the full corpus). The geometry comes from BandIndex's
       // own default constants — the single source of truth — so the
       // shared sketch can never disagree with the stored index meta.
-      val sk = Materialize.shared(BandIndex.sketchRelation(
-        docs, idCol, textCol,
-        shingleWidth = BandIndex.DefaultShingleWidth,
-        numHashes = BandIndex.DefaultNumHashes,
-        bands = BandIndex.DefaultBands))
+      val sk = preSketched.getOrElse(Materialize.shared(
+        BandIndex.sketchRelation(
+          docs, idCol, textCol,
+          shingleWidth = BandIndex.DefaultShingleWidth,
+          numHashes = BandIndex.DefaultNumHashes,
+          bands = BandIndex.DefaultBands)))
       // the four build relations are pairwise disjoint (band/, the
       // assignment base, ledger/, meta/), so the index build and the
       // text-ledger write run CONCURRENTLY with the clustering chain —
@@ -307,7 +315,12 @@ object ClusterRegistry {
     * merges it caused — is a filter on the fold, not a restore.
     * Tombstones apply to every snapshot (a GDPR delete reaches
     * time-travel reads too); a [[compact]] collapses history, after
-    * which pins address the post-compact state only. */
+    * which pins address the post-compact state only.
+    *
+    * Cache note: the fold overlay is persisted (Materialize.shared) and,
+    * the result being a lazy frame, left to the runner sweep
+    * ([[Materialize]]'s release contract); inside an operation (the
+    * ingest, the compact) the operation's scope releases it. */
   def assignments(
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame =
@@ -317,7 +330,8 @@ object ClusterRegistry {
       spark: SparkSession, path: String,
       excludeBatch: Option[String],
       asOf: Option[Long] = None,
-      snapOpt: Option[LayoutSnapshot] = None): DataFrame = {
+      snapOpt: Option[LayoutSnapshot] = None,
+      shareOverlay: Boolean = true): DataFrame = {
     val dir = s"$path/assignments"
     // ONE snapshot resolution per read: the base pointer, the
     // recent-overlay name set and the pending forget-set all come from
@@ -340,12 +354,13 @@ object ClusterRegistry {
       else {
         val recent = LsmLayout.readGenerations(spark, dir, "batch=",
           recentNames)
-        val overlay = Materialize.shared(
-          asOf.fold(recent)(g => recent.filter(col("gen") <= g))
-            .groupBy(col("doc_id"))
-            .agg(max(struct(col("gen"), col("cluster_id"))).as("graft__l"))
-            .select(col("doc_id"),
-              col("graft__l.cluster_id").as("cluster_id")))
+        val latest = asOf.fold(recent)(g => recent.filter(col("gen") <= g))
+          .groupBy(col("doc_id"))
+          .agg(max(struct(col("gen"), col("cluster_id"))).as("graft__l"))
+          .select(col("doc_id"), col("graft__l.cluster_id").as("cluster_id"))
+        // read twice (the anti-join's id list and the union), so
+        // persisted unless the caller asks for no cache
+        val overlay = if (shareOverlay) Materialize.shared(latest) else latest
         // the overlay broadcast is bounded by the BUDGET, not just by
         // policy: a mis-sized compactAfterGenerations (or a long
         // compact-free ingest run) grows the overlay until it would
@@ -367,15 +382,20 @@ object ClusterRegistry {
     * min SURVIVING member. [[assignments]]'s raw ids are the stable
     * tokens downstream joins key on; this view is what compares
     * against a from-scratch clustering (the s52 oracle) after deletes
-    * may have forgotten a cluster's original min member. One
-    * clusters-keyed agg + an equi-join that reuses its exchange. */
-  def canonicalAssignments(spark: SparkSession, path: String): DataFrame = {
-    val a = Materialize.shared(assignments(spark, path))
-    val canon = a.groupBy(col("cluster_id"))
-      .agg(min(col("doc_id")).as("graft__canon"))
-    a.join(canon, Seq("cluster_id"))
-      .select(col("doc_id"), col("graft__canon").as("cluster_id"))
-  }
+    * may have forgotten a cluster's original min member. One window
+    * over `cluster_id`: the assignments are read once, so nothing is
+    * persisted, not even the fold overlay — a lazy frame's cache is one
+    * no operation scope could release, and every registry probe would
+    * leave one behind. */
+  def canonicalAssignments(spark: SparkSession, path: String): DataFrame =
+    canonical(assignmentsScoped(spark, path, None, shareOverlay = false))
+
+  /** `(doc_id, cluster_id)` with every cluster renamed to its min
+    * `doc_id`. */
+  private[graft] def canonical(a: DataFrame): DataFrame =
+    a.select(col("doc_id"),
+      min(col("doc_id")).over(Window.partitionBy(col("cluster_id")))
+        .as("cluster_id"))
 
   /** Ingest one batch: assign every delta doc a cluster id and merge
     * any corpus clusters the delta bridges. SELF-CONTAINED — the call
@@ -395,12 +415,18 @@ object ClusterRegistry {
     * append is the coordinator's band branch ([[CorpusLifecycle.ingest]]),
     * and before its first write the ingest checks that the band holds
     * every batch this registry already applied.
+    *
+    * `preSketched` hands in the delta's persisted
+    * [[BandIndex.sketchRelation]] built with the probed band's meta (the
+    * coordinator sketches each batch once for this ingest and the band
+    * append).
     */
   def ingest(
       delta: DataFrame, idCol: String, textCol: String,
       path: String, batchId: String,
       compactAfterGenerations: Int = 0,
-      writerEpoch: Option[Long] = None): Unit = {
+      writerEpoch: Option[Long] = None,
+      preSketched: Option[DataFrame] = None): Unit = {
     val spark = delta.sparkSession
     val shared = sharedBand(spark, path)
     val bandPath = shared.getOrElse(s"$path/band")
@@ -410,7 +436,7 @@ object ClusterRegistry {
     // shared (previously each consumer re-ran the scan→shingle→sketch
     // chain)
     lazy val bandMeta = BandIndex.metaOf(spark, bandPath)
-    lazy val deltaSketch: DataFrame = {
+    lazy val deltaSketch: DataFrame = preSketched.getOrElse {
       val (numHashes, bands, shingleWidth) = bandMeta
       Materialize.shared(BandIndex.sketchRelation(
         delta, idCol, textCol, shingleWidth, numHashes, bands))
@@ -522,7 +548,8 @@ object ClusterRegistry {
         // cluster id; the probe skips this batch's own (possibly
         // partially appended) band generation so replays are
         // deterministic
-        // materialized ONCE: the edge list feeds BOTH the component
+        // materialized ONCE (the ingest's operation scope releases the
+        // checkpoint): the edge list feeds BOTH the component
         // resolution and the absorbed-cluster remap below — un-shared,
         // `touched` re-executed the entire probe pipeline (band join,
         // prefilter, ledger rehydration, exact verify) a second time per
@@ -534,7 +561,7 @@ object ClusterRegistry {
         // the coordinator's concurrent band append — after which the
         // remap re-ran the whole probe pipeline (s59/s60 at sf0.1: 11-19
         // extra stage jobs). A checkpoint's plan names no path.
-        val (edgesDC, edgesCk, _) = IterationCheckpoint.localCounted(
+        val (edgesDC, _, _) = IterationCheckpoint.localCounted(
           BandIndex.probe(
             corpus, delta, idCol, textCol, bandPath, threshold,
             excludeGen = Some(batchId), preSketched = Some(deltaSketch),
@@ -605,7 +632,6 @@ object ClusterRegistry {
         // overlapped the gen-write window)
         Overlap.await(ledgerFut)
         bandFut.foreach(Overlap.await)
-        IterationCheckpoint.release(spark.sparkContext, edgesCk)
       } catch {
         case e: Throwable =>
           // settle in-flight writes before surfacing: no background

@@ -33,6 +33,12 @@ import org.apache.spark.sql.functions._
   * up front that `layouts.band` is the band the registry's meta names
   * (a registry with a private band may run beside any band layout).
   *
+  * Each fan-out ([[ingest]], [[forget]], [[compact]], [[maintain]]) is
+  * one [[Materialize.scoped]] operation around its branches, which
+  * carry the scope: what the call persists is released when it ends.
+  * [[ingest]] sketches the batch ONCE for the registry ingest and the
+  * band append and owns that sketch.
+  *
   * Writer fencing: epochs are PATH-scoped ([[LsmLayout]]), so one
   * coordinator epoch cannot fence six paths; `epochOf` maps each
   * layout path to the epoch its maintenance loop holds (default
@@ -91,7 +97,7 @@ object CorpusLifecycle {
     // marker-gated — fan them out CONCURRENTLY (Overlap settles every
     // branch before surfacing a failure, so an error mid-fan-out
     // leaves exactly the partial state the retry contract repairs)
-    Overlap.all(forgetDocs.sparkSession)(
+    Materialize.scoped(Overlap.all(forgetDocs.sparkSession)(
       (layouts.registry.map(p => () =>
         ClusterRegistry.forget(ids, idCol, p, batchId, epochOf(p))) ++
       layouts.band.map(p => () =>
@@ -104,7 +110,7 @@ object CorpusLifecycle {
       layouts.ivf.map(p => () =>
         IvfLayout.tombstone(ids, idCol, p, batchId, epochOf(p))) ++
       layouts.chunks.map(p => () =>
-        ChunkStore.tombstone(ids, idCol, p, batchId, epochOf(p)))).toSeq: _*)
+        ChunkStore.tombstone(ids, idCol, p, batchId, epochOf(p)))).toSeq: _*))
   }
 
   /** Corpus-wide delta ingest: ONE delta batch, ONE batch id, every
@@ -146,35 +152,54 @@ object CorpusLifecycle {
     require(layouts.ivf.isEmpty || deltaVectors.isDefined,
       "an IVF layout is configured but no deltaVectors were supplied — " +
         "the layout would silently miss this batch")
-    requireSharedBand(delta.sparkSession, layouts)
-    // the six per-layout ingests touch disjoint paths and are each
-    // marker-gated — fan them out CONCURRENTLY: at bench scale each
-    // branch's wall is dominated by per-action fixed cost, and at
-    // 100 TB the small layouts' commit latency hides behind the
-    // registry's probe. Failure semantics are unchanged (Overlap
-    // settles every branch, then rethrows the first error — a partial
-    // fan-out the same retry call repairs).
-    Overlap.all(delta.sparkSession)(
-      (layouts.registry.map(p => () =>
-        ClusterRegistry.ingest(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p))) ++
-      layouts.band.map(p => () =>
-        BandIndex.append(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p))) ++
-      layouts.lexical.map(p => () =>
-        LexicalIndex.refresh(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p))) ++
-      layouts.kmv.map(p => () =>
-        KmvLayout.refresh(delta, groupCol.get, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p))) ++
-      layouts.ivf.map { p => () =>
-        val (vecs, vid, vcol) = deltaVectors.get
-        IvfLayout.refresh(vecs, vid, vcol, p, batchId,
-          compactAfterGenerations, epochOf(p))
-      } ++
-      layouts.chunks.map(p => () =>
-        ChunkStore.refresh(delta, idCol, textCol, p, batchId,
-          compactAfterGenerations, epochOf(p)))).toSeq: _*)
+    val spark = delta.sparkSession
+    requireSharedBand(spark, layouts)
+    Materialize.scoped {
+      // ONE delta sketch (with the band's own meta) for the band append
+      // and a registry probing that band: persisted here, lazily — the
+      // first consumer inside the fan-out computes it, once, under the
+      // block lock — and released with this call's scope. Each branch
+      // persisting its own equal sketch would share one cache entry
+      // (plan-keyed), which whichever branch ended first would drop. A
+      // band whose meta cannot be read gets no sketch: its branch fails
+      // on its own, as it would without one.
+      val sketch = layouts.band.flatMap(b =>
+        scala.util.Try(BandIndex.metaOf(spark, b)).toOption.map {
+          case (numHashes, bands, shingleWidth) =>
+            Materialize.shared(BandIndex.sketchRelation(
+              delta, idCol, textCol, shingleWidth, numHashes, bands))
+        })
+      val registrySketch = layouts.registry
+        .flatMap(ClusterRegistry.sharedBand(spark, _)).flatMap(_ => sketch)
+      // the six per-layout ingests touch disjoint paths and are each
+      // marker-gated — fan them out CONCURRENTLY: at bench scale each
+      // branch's wall is dominated by per-action fixed cost, and at
+      // 100 TB the small layouts' commit latency hides behind the
+      // registry's probe. Failure semantics are unchanged (Overlap
+      // settles every branch, then rethrows the first error — a partial
+      // fan-out the same retry call repairs).
+      Overlap.all(spark)(
+        (layouts.registry.map(p => () =>
+          ClusterRegistry.ingest(delta, idCol, textCol, p, batchId,
+            compactAfterGenerations, epochOf(p), registrySketch)) ++
+        layouts.band.map(p => () =>
+          BandIndex.append(delta, idCol, textCol, p, batchId,
+            compactAfterGenerations, epochOf(p), sketch)) ++
+        layouts.lexical.map(p => () =>
+          LexicalIndex.refresh(delta, idCol, textCol, p, batchId,
+            compactAfterGenerations, epochOf(p))) ++
+        layouts.kmv.map(p => () =>
+          KmvLayout.refresh(delta, groupCol.get, idCol, textCol, p, batchId,
+            compactAfterGenerations, epochOf(p))) ++
+        layouts.ivf.map { p => () =>
+          val (vecs, vid, vcol) = deltaVectors.get
+          IvfLayout.refresh(vecs, vid, vcol, p, batchId,
+            compactAfterGenerations, epochOf(p))
+        } ++
+        layouts.chunks.map(p => () =>
+          ChunkStore.refresh(delta, idCol, textCol, p, batchId,
+            compactAfterGenerations, epochOf(p)))).toSeq: _*)
+    }
   }
 
   /** Fan out the snapshot-atomic compacts — physical reclamation of
@@ -192,7 +217,7 @@ object CorpusLifecycle {
     // concurrently; a failure leaves the other layouts' forget-sets
     // applied or pending exactly as a crash would (still correct at
     // serve time, repaired by the next call)
-    Overlap.all(spark)(
+    Materialize.scoped(Overlap.all(spark)(
       (layouts.registry.map(p => () =>
         ClusterRegistry.compact(spark, p, epochOf(p))) ++
       layouts.band.map(p => () => BandIndex.compact(spark, p, epochOf(p))) ++
@@ -201,7 +226,7 @@ object CorpusLifecycle {
       layouts.kmv.map(p => () => KmvLayout.compact(spark, p, epochOf(p))) ++
       layouts.ivf.map(p => () => IvfLayout.compact(spark, p, epochOf(p))) ++
       layouts.chunks.map(p => () =>
-        ChunkStore.compact(spark, p, epochOf(p)))).toSeq: _*)
+        ChunkStore.compact(spark, p, epochOf(p)))).toSeq: _*))
   }
 
   /** The maintenance policy [[maintain]] decides with — every
@@ -305,7 +330,7 @@ object CorpusLifecycle {
     // canonical layout order (row content identical to the sequential
     // spelling; actions stay snapshot-atomic and epoch-fenced inside)
     val decisions: Seq[(String, String, Double, Double, String)] =
-      Overlap.join(spark)(
+      Materialize.scoped(Overlap.join(spark)(
       (layouts.registry.map(p => () =>
         deadOrGenRule("registry", p, gens(p, s"$p/assignments", "batch="),
           policy.maxRegistryDeadShare,
@@ -345,7 +370,7 @@ object CorpusLifecycle {
             policy.maxChunkDeadShare, "compact")
         } else genRule("chunks", gens(p, s"$p/manifest", "gen="))(
           ChunkStore.compact(spark, p, epochOf(p)))
-      }).toSeq)
+      }).toSeq))
     decisions
       .toDF("layout", "metric", "value", "threshold", "action")
   }
@@ -399,7 +424,11 @@ object CorpusLifecycle {
     * id join each — corpus-ID-sized, never text-sized, except the one
     * map-only token count over the stored ledger that feeds the gates.
     * Populations are corpus-sized on both sides, so the joins shuffle
-    * ids by design (this is the periodic audit, not a serving path). */
+    * ids by design (this is the periodic audit, not a serving path).
+    *
+    * Cache note: the reference population is persisted (every layout's
+    * row reads it) and, the audit being a lazy frame, left to the runner
+    * sweep ([[Materialize]]'s release contract). */
   def consistencyAudit(
       spark: SparkSession, layouts: CorpusLayouts,
       expected: Option[(DataFrame, String)] = None): DataFrame = {

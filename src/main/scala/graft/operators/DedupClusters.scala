@@ -99,7 +99,9 @@ object DedupClusters {
     // otherwise, so a long run would pin O(rounds × |V|) executor
     // storage. A checkpointed round's blocks are its ONLY copy (the
     // lineage is truncated), so only rounds no longer referenced may be
-    // released — never the current one or the returned result.
+    // released — never the current one or the returned result (an
+    // operation scope around the caller releases those when the
+    // operation ends: Materialize.scoped).
     //
     // `reliableCheckpointDir` swaps localCheckpoint for a RELIABLE
     // checkpoint (files under the given dir, typically HDFS/object

@@ -59,11 +59,14 @@ private[graft] object IterationCheckpoint {
     * (eager checkpoint, then count) pays one extra full pass over the
     * round's table every iteration. Rows are copied before persisting —
     * `toRdd` reuses mutable UnsafeRows, the same discipline
-    * `Dataset.localCheckpoint` applies internally. */
+    * `Dataset.localCheckpoint` applies internally. Inside an operation
+    * scope the blocks also belong to the scope ([[Materialize.scoped]]),
+    * which releases them when the operation ends. */
   def localCounted(df: DataFrame): (DataFrame, scala.collection.Set[Int], Long) = {
     val rdd = org.apache.spark.sql.GraftSqlInternals.internalRdd(df)
       .map(_.copy())
     rdd.localCheckpoint()
+    Materialize.ownCheckpoint(rdd)
     val n = rdd.count()
     // the release set is the checkpointed RDD's OWN id — localCheckpoint
     // persists exactly `rdd`. (The old global persistent-keyset diff

@@ -516,7 +516,12 @@ private[graft] object LsmLayout {
   // One spelling of the choreography every layout's build, ingest,
   // forget and compact shares; a layout passes in only its own writes.
   // Each of the four is one Trace span ("build", "ingest", "forget",
-  // "compact") keyed by the layout path.
+  // "compact") keyed by the layout path, and one Materialize operation
+  // scope: what the operation persists or checkpoints is released when
+  // it returns or throws, after every write it issued has settled.
+
+  private def operation(name: String, path: String)(body: => Unit): Unit =
+    Trace(name, path)(Materialize.scoped(body))
 
   /** A build: a rebuild starts a fresh index life, then runs the
     * layout's `build` writes. Pending tombstones of the previous life
@@ -527,7 +532,7 @@ private[graft] object LsmLayout {
     * kept (see the fence). */
   def startIndexLife(spark: SparkSession, path: String)(
       build: => Unit): Unit =
-    Trace("build", path) {
+    operation("build", path) {
       deleteDir(spark, s"$path/tombstones")
       deleteDir(spark, s"$path/_applied")
       deleteDir(spark, snapDir(path))
@@ -593,7 +598,7 @@ private[graft] object LsmLayout {
       dir: String, prefix: String, compact: Option[Long] => Unit,
       whenApplied: => Unit = (), counted: String => Boolean = _ => true)(
       writes: => Unit): Unit =
-    Trace("ingest", path) {
+    operation("ingest", path) {
       requireValidBatchId(batchId)
       if (!isApplied(spark, path, batchId)) {
         writes
@@ -608,7 +613,8 @@ private[graft] object LsmLayout {
     * rows whose `storedId` is already pending in ANOTHER batch (read
     * excluding this batch's own, possibly partial, partition — so a
     * re-delivered delete never applies twice and a retry recomputes the
-    * same set), is checkpointed and counted once, and the layout's
+    * same set), is checkpointed and counted once (the operation scope
+    * releases the checkpoint), and the layout's
     * `writes` get the fresh rows — keyed `idName` — and the snapshot
     * the filter read. An all-duplicate batch writes nothing (an empty
     * parquet write would leave a schemaless directory that breaks the
@@ -618,7 +624,7 @@ private[graft] object LsmLayout {
       writerEpoch: Option[Long], forget: DataFrame, idName: String,
       storedId: String)(
       writes: (DataFrame, LayoutSnapshot) => Unit): Unit =
-    Trace("forget", path) {
+    operation("forget", path) {
       requireValidBatchId(batchId)
       val gen = s"ts-$batchId"
       if (!isApplied(spark, path, gen)) {
@@ -630,10 +636,9 @@ private[graft] object LsmLayout {
               .select(col(storedId).as(idName)), bytes),
             Seq(idName), "left_anti")
         }
-        val (rows, ckIds, n) = IterationCheckpoint.localCounted(fresh)
+        val (rows, _, n) = IterationCheckpoint.localCounted(fresh)
         if (n > 0L) writes(rows, snap)
         commitApplied(spark, path, gen, writerEpoch)
-        IterationCheckpoint.release(spark.sparkContext, ckIds)
       }
     }
 
@@ -673,24 +678,16 @@ private[graft] object LsmLayout {
   /** What a layout's fold writes see inside [[snapshotCompact]]: the
     * snapshot being folded, the new base name to write, whether the
     * second track folds this time, and a checkpoint whose blocks the
-    * skeleton releases once every fold write settled. */
+    * compact's operation scope releases. */
   final class Fold private[LsmLayout] (
-      spark: SparkSession, val snap: LayoutSnapshot, val newBase: String,
+      val snap: LayoutSnapshot, val newBase: String,
       val foldSecondary: Boolean) {
-    private val ckIds = scala.collection.mutable.Set.empty[Int]
 
     /** `df`, eagerly checkpointed (frames are checkpointed before a
       * write whose plan could otherwise re-read a path the layout is
       * rewriting). */
-    def checkpointed(df: DataFrame): DataFrame = {
-      val (ck, ids, _) = IterationCheckpoint.localCounted(df)
-      ckIds.synchronized(ckIds ++= ids)
-      ck
-    }
-
-    private[LsmLayout] def release(): Unit =
-      IterationCheckpoint.release(spark.sparkContext,
-        ckIds.synchronized(ckIds.toSet))
+    def checkpointed(df: DataFrame): DataFrame =
+      IterationCheckpoint.localCounted(df)._1
   }
 
   /** The snapshot-atomic compact every layout shares: resolve the
@@ -719,7 +716,7 @@ private[graft] object LsmLayout {
       spark: SparkSession, root: String, writerEpoch: Option[Long],
       rels: Seq[(String, String)],
       secondary: Seq[(String, String)] = Seq.empty)(
-      folds: Fold => Seq[() => Unit]): Unit = Trace("compact", root) {
+      folds: Fold => Seq[() => Unit]): Unit = operation("compact", root) {
     val snap = snapshot(spark, root)
     requireCurrentEpoch(spark, root, writerEpoch)
     val newBase = snap.nextBase
@@ -730,12 +727,12 @@ private[graft] object LsmLayout {
     val secondaryLive = secondary.flatMap { case (dir, prefix) =>
       liveGenerationNames(spark, dir, prefix, snap.ledgerView)
     }.distinct
-    val fold = new Fold(spark, snap, newBase,
+    val fold = new Fold(snap, newBase,
       secondary.nonEmpty && foldDue(liveTs, secondaryLive.size))
-    try folds(fold) match {
+    folds(fold) match {
       case Seq(only) => only()
       case many => Overlap.all(spark)(many: _*)
-    } finally fold.release()
+    }
     val folded = snap.folded ++ rels.flatMap { case (dir, prefix) =>
       liveGenerationNames(spark, dir, prefix, snap)
     }.filterNot(_ == snap.base)

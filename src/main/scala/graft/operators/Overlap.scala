@@ -30,7 +30,8 @@ import org.apache.spark.sql.SparkSession
   * descriptions/groups are thread-local and intentionally not
   * propagated (cosmetic only on these paths), while each task tags its
   * jobs with a tag of its own, the handle its cancellation uses, and
-  * carries its submitter's [[Trace]] span tags. The pool is unbounded
+  * carries its submitter's [[Trace]] span tags and
+  * [[Materialize.scoped]] operation scope. The pool is unbounded
   * (cached) because tasks may themselves fan out — nested submits must
   * never deadlock — and daemon so it cannot pin a JVM exit.
   */
@@ -59,7 +60,8 @@ private[graft] object Overlap {
     * body issues carries the task's job tag, so cancelling the task
     * cancels those jobs too. */
   final class Task[A] private[Overlap] (
-      spark: SparkSession, tag: String, spans: Set[String], body: () => A)
+      spark: SparkSession, tag: String, spans: Set[String],
+      scope: Materialize.Scope, body: () => A)
       extends java.util.concurrent.FutureTask[A](() => {
         SparkSession.setActiveSession(spark)
         val sc = spark.sparkContext
@@ -72,8 +74,13 @@ private[graft] object Overlap {
         sc.clearJobGroup()
         sc.setLocalProperty("spark.sql.execution.id", null)
         Trace.adopt(sc, spans)
+        Materialize.adopt(scope)
         sc.addJobTag(tag)
-        try body() finally sc.removeJobTag(tag)
+        try body()
+        finally {
+          sc.removeJobTag(tag)
+          Materialize.adopt(null)
+        }
       }) {
 
     private val exited = new java.util.concurrent.CountDownLatch(1)
@@ -104,7 +111,7 @@ private[graft] object Overlap {
   /** Submit `body` for concurrent execution against `spark`. */
   def future[A](spark: SparkSession)(body: => A): Task[A] = {
     val t = new Task(spark, s"graft-overlap-${nextTagId.getAndIncrement()}",
-      Trace.inherited(spark.sparkContext), () => body)
+      Trace.inherited(spark.sparkContext), Materialize.current, () => body)
     pool.execute(t)
     t
   }

@@ -81,10 +81,10 @@ private[graft] object Trace {
 
   /** On a task's thread: swap the span tags the (pooled) thread holds —
     * inherited when it was created, or left by its previous task — for
-    * the submitter's. */
-  def adopt(sc: SparkContext, tags: Set[String]): Unit =
-    if (recorder != null) {
-      sc.getJobTags().filter(_.startsWith(TagPrefix)).foreach(sc.removeJobTag)
-      tags.foreach(sc.addJobTag)
-    }
+    * the submitter's. Runs with the recorder off too: a thread created
+    * while a span was open keeps its tag after the recorder stops. */
+  def adopt(sc: SparkContext, tags: Set[String]): Unit = {
+    sc.getJobTags().filter(_.startsWith(TagPrefix)).foreach(sc.removeJobTag)
+    tags.foreach(sc.addJobTag)
+  }
 }

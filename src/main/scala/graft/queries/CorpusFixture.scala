@@ -103,18 +103,28 @@ object CorpusFixture {
         .filter(col("vec_id") % 3 =!= 0)
       // six independent builds on disjoint directories — overlap them
       // (the fixture wall is the slowest build, not the sum; each
-      // build's own internal contracts are unchanged)
-      Overlap.all(spark)(
-        () => ClusterRegistry.build(base, "doc_id", "text",
-          s"$root/registry", sharedBand = Some(s"$root/band")),
-        () => BandIndex.build(base, "doc_id", "text", s"$root/band"),
-        () => LexicalIndex.build(base, "doc_id", "text", s"$root/lexical"),
-        () => KmvLayout.build(base.withColumn("g", col("doc_id")),
-          "g", "doc_id", "text", s"$root/kmv", k = 32),
-        () => IvfLayout.build(baseVecs, "vec_id", "embedding", s"$root/ivf",
-          Similarity.hyperplanes(4, 64).map(_.map(_.toDouble))),
-        () => ChunkStore.build(base, "doc_id", "text", s"$root/chunks",
-          maskBits = 4))
+      // build's own internal contracts are unchanged). One operation:
+      // the registry and band builds share ONE corpus sketch, persisted
+      // here (lazily — the first build to read it computes it, once,
+      // under the block lock) and released when the fan-out ends.
+      Materialize.scoped {
+        val sketch = Materialize.shared(BandIndex.sketchRelation(
+          base, "doc_id", "text", BandIndex.DefaultShingleWidth,
+          BandIndex.DefaultNumHashes, BandIndex.DefaultBands))
+        Overlap.all(spark)(
+          () => ClusterRegistry.build(base, "doc_id", "text",
+            s"$root/registry", sharedBand = Some(s"$root/band"),
+            preSketched = Some(sketch)),
+          () => BandIndex.build(base, "doc_id", "text", s"$root/band",
+            preSketched = Some(sketch)),
+          () => LexicalIndex.build(base, "doc_id", "text", s"$root/lexical"),
+          () => KmvLayout.build(base.withColumn("g", col("doc_id")),
+            "g", "doc_id", "text", s"$root/kmv", k = 32),
+          () => IvfLayout.build(baseVecs, "vec_id", "embedding",
+            s"$root/ivf", Similarity.hyperplanes(4, 64).map(_.map(_.toDouble))),
+          () => ChunkStore.build(base, "doc_id", "text", s"$root/chunks",
+            maskBits = 4))
+      }
       Files.createFile(done)
     }
     root

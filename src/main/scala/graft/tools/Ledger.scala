@@ -20,8 +20,11 @@ import graft.operators.Trace
   * their `SQLMetrics` time and rows, read from each action's executed
   * plan; and the [[Trace]] spans of the stored layouts' build, ingest,
   * forget and compact calls, each with the jobs it ran itself (`jobs`)
-  * and with its nested spans (`jobs_total`). With `reps` > 1 the record
-  * is the fastest rep's, with every rep's wall in `walls_s`.
+  * and with its nested spans (`jobs_total`); and what the query left
+  * persisted for the sweep (`persisted_after`: persisted RDDs and cached
+  * plans, counted just before the ledger's own sweep — an operation
+  * scope leaves none, see `graft.operators.Materialize`). With `reps` > 1
+  * the record is the fastest rep's, with every rep's wall in `walls_s`.
   *
   * Usage: runMain graft.tools.Ledger <query>[,<query>...]|all [sfDir] [reps] [out]
   * (sfDir defaults to `$SPARK_GRAFT_SF_DIR`, reps to 1, out to
@@ -35,11 +38,15 @@ object Ledger {
   /** A span with the jobs attributed to it alone and with its children. */
   final case class SpanJobs(span: Trace.Span, jobs: Int, jobsTotal: Int)
 
+  /** Persisted RDDs and cache-manager entries one run left behind. */
+  final case class Held(rdds: Int, plans: Int)
+
   final case class Entry(
       wallS: Double, wallsS: Seq[Double], jobs: Int, stages: Int, tasks: Long,
       executorCpuS: Double, inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, driverGapS: Double,
-      topOperators: Seq[OpTotal], spans: Seq[SpanJobs], error: Option[String])
+      topOperators: Seq[OpTotal], spans: Seq[SpanJobs], persistedAfter: Held,
+      error: Option[String])
 
   private final class Job(val id: Int, val startMs: Long, val tags: Set[String],
       val stageIds: Seq[Int]) {
@@ -142,21 +149,28 @@ object Ledger {
       runs.minBy(_.wallS).copy(wallsS = runs.map(_.wallS))
     }
 
-    private def once(name: String, sfDir: String): Entry = {
+    private def once(name: String, sfDir: String): Entry = measure {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+    }
+
+    /** One record of `body`, then the sweep of what it left persisted. */
+    def measure(body: => Unit): Entry = {
       drain()
       events.take()
       spans.clear()
       val t0 = System.nanoTime()
       val error =
         try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
+          body
           None
         } catch { case e: Throwable => Some(e.toString) }
       val wallS = (System.nanoTime() - t0) / 1e9
       drain()
       val (jobs, stages, ops) = events.take()
       val traced = spans.recorded
+      val held = Held(sc.getPersistentRDDs.size,
+        org.apache.spark.sql.GraftSqlInternals.cachedPlanCount(spark))
       spark.catalog.clearCache()
       sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       val ran = stages.filter(s => jobs.exists(_.stageIds.contains(s.id)))
@@ -177,6 +191,7 @@ object Ledger {
           val tag = Trace.TagPrefix + s.id
           SpanJobs(s, innermost.count(_ == s.id), jobs.count(_.tags(tag)))
         },
+        persistedAfter = held,
         error = error)
     }
   }
@@ -210,6 +225,8 @@ object Ledger {
       s""""driver_gap_s":${num(e.driverGapS)},""" +
       s""""top_operators":${ops.mkString("[", ",", "]")},""" +
       s""""spans":${spans.mkString("[", ",", "]")},""" +
+      s""""persisted_after":{"rdds":${e.persistedAfter.rdds},""" +
+      s""""plans":${e.persistedAfter.plans}},""" +
       s""""error":${e.error.map(str).getOrElse("null")}}"""
   }
 
@@ -242,7 +259,8 @@ object Ledger {
     val session = new Session(spark)
     try names.foreach { name =>
       val e = session.record(name, sfDir, reps)
-      System.err.println(f"[ledger] $name%-36s ${e.wallS}%7.2f s ${e.jobs}%4d jobs")
+      System.err.println(f"[ledger] $name%-36s ${e.wallS}%7.2f s ${e.jobs}%4d jobs" +
+        s" held ${e.persistedAfter.rdds}/${e.persistedAfter.plans}")
       lines += s"${str(name)}:${json(e)}"
       // rewritten after every query, so a cut run keeps what it measured
       java.nio.file.Files.writeString(out, lines.mkString(head + "\n", ",\n", "\n}}\n"))

@@ -42,6 +42,11 @@ object GraftSqlInternals {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** How many plans the session's cache manager holds
+    * (`graft.tools.Ledger`'s `persisted_after`). */
+  def cachedPlanCount(spark: SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
+
   /** A new session over the same context, shared state and catalog,
     * starting from a copy of `spark`'s conf, functions, temporary views
     * and query-execution listeners; conf set on it stays on it

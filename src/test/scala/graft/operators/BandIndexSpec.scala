@@ -36,15 +36,21 @@ class BandIndexSpec extends SparkTestBase {
     assert(out === Array((101L, 1L, 1.0), (102L, 2L, 17.0 / 19.0)))
   }
 
-  test("build materializes one sketch for both writes and leaves it to the runner sweep") {
+  test("build releases its own sketch and keeps a caller's equal one") {
+    import org.apache.spark.storage.StorageLevel
     val path = "target/test_bandindex/shared_sketch"
     val sketch = BandIndex.sketchRelation(corpus, "doc_id", "text",
       BandIndex.DefaultShingleWidth, BandIndex.DefaultNumHashes,
       BandIndex.DefaultBands)
+    Materialize.releaseAll(spark)
+    // the sketch both writes read belongs to the build's operation scope
     BandIndex.build(corpus, "doc_id", "text", path)
-    // the cache is keyed by plan: an entry the build dropped would also
-    // be gone for a caller that cached an equal sketch (the registry)
-    assert(sketch.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(sketch.storageLevel === StorageLevel.NONE)
+    // the cache is keyed by plan: a caller's equal sketch is the same
+    // entry, so the build must not drop it
+    sketch.persist(StorageLevel.MEMORY_AND_DISK).count()
+    BandIndex.build(corpus, "doc_id", "text", path)
+    assert(sketch.storageLevel !== StorageLevel.NONE)
     sketch.unpersist()
   }
 

@@ -449,6 +449,27 @@ object EngineLawsProps extends Properties("EngineLaws") {
     }
   }
 
+  property("canonical registry view: one window == the persisted self-join spelling") = {
+    // few clusters over many docs, so clusters hold several members and
+    // some hold one; cluster ids need not be member ids (a forgotten min)
+    val rowGen = for {
+      d <- Gen.choose(0L, 40L); c <- Gen.choose(0L, 6L)
+    } yield (d, c)
+    forAll(Gen.listOf(rowGen)) { rows =>
+      val a = rows.toMap.toSeq.toDF("doc_id", "cluster_id")
+      val got = ClusterRegistry.canonical(a).as[(Long, Long)].collect().toSet
+      // the earlier spelling: a persisted assignment frame self-joined
+      // with its per-cluster min
+      val p = a.persist()
+      val old = p.join(p.groupBy(col("cluster_id"))
+          .agg(min(col("doc_id")).as("graft__canon")), Seq("cluster_id"))
+        .select(col("doc_id"), col("graft__canon").as("cluster_id"))
+        .as[(Long, Long)].collect().toSet
+      p.unpersist(blocking = false)
+      got == old
+    }
+  }
+
   property("len(bin(n)) == floor(log2 n) + 1 for any positive count (the n90 bucket)") =
     forAll(Gen.choose(1L, 1L << 52)) { n =>
       java.lang.Long.toBinaryString(n).length ==

@@ -6,7 +6,7 @@ import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkTestBase
-import graft.operators.{KmvLayout, Trace}
+import graft.operators.{ChunkStore, KmvLayout, Trace}
 
 /** The execution ledger against an independent listener: its job
   * counts, its span attribution, and that spans cost nothing while it
@@ -79,6 +79,29 @@ class LedgerSpec extends SparkTestBase {
         assert(s.jobsTotal === s.jobs + children.map(_.jobsTotal).sum,
           s"${s.span.name} ${s.span.path}")
       }
+    }
+  }
+
+  test("persisted_after: none after a chunk store build and refresh, some after a query persisting outside any operation") {
+    withLedger { ledger =>
+      val path = "target/test_ledger/chunks_held"
+      val docs = Seq((1L, "a b c d e f g h"), (2L, "b c d e f g h i"))
+        .toDF("doc_id", "text")
+      // both persist their chunk rows, inside their operation scopes
+      val e = ledger.measure {
+        ChunkStore.build(docs, "doc_id", "text", path)
+        ChunkStore.refresh(docs.withColumn("doc_id", $"doc_id" + 10L),
+          "doc_id", "text", path, batchId = "b1")
+      }
+      assert(e.error.isEmpty && e.jobs > 0)
+      assert(e.persistedAfter === Ledger.Held(0, 0))
+      // n42 persists its fingerprint relation and leaves it to the sweep
+      val q = ledger.record("n42_winnow_candidates", sf)
+      assert(q.error.isEmpty)
+      assert(q.persistedAfter.rdds > 0 && q.persistedAfter.plans > 0)
+      // the ledger's own sweep ran after the count
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(spark.sharedState.cacheManager.isEmpty)
     }
   }
 
