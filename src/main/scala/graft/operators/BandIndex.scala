@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *  - `sigs/` (doc_id, sig) partitioned by `gen` — the k-minima
   *    signatures backing the estimate prefilter, joined candidate-sized
   *    only.
-  *  - `meta/` one row (num_hashes, bands, shingle_n) — the index is
-  *    self-describing (the round-11 LexicalIndex lesson: a disagreeing
-  *    caller parameter must not be possible).
+  *  - the build constants (num_hashes, bands, shingle_n) live in the
+  *    layout's commit record — the index is self-describing (a
+  *    disagreeing caller parameter must not be possible).
   *  - `tombstones/` (doc_id) partitioned by delete batch — the forget
   *    set (the s40 GDPR discipline applied to the LSH layout): every
   *    [[postings]]/[[signatures]] read anti-joins the broadcast id
@@ -34,13 +34,9 @@ import org.apache.spark.sql.functions._
   *    [[compact]] drops the rows physically and clears the list.
   *
   * IDEMPOTENT maintenance under at-least-once delivery (the
-  * foreachBatch retry contract, shared via [[LsmLayout]]): [[append]]
-  * and [[tombstone]] key their writes by the caller's batch id with
-  * dynamic partition overwrite — a retried batch replaces its own
-  * generation instead of appending a duplicate that would multiply
-  * rows through the sig join and emit duplicated probe results — and
-  * leave an `_applied` marker so a clean retry no-ops (gated by n175:
-  * append-with-retry ≡ rebuild through the probe answer).
+  * [[LsmLayout]] contract: a duplicated generation would multiply rows
+  * through the sig join; gated by n175: append-with-retry ≡ rebuild
+  * through the probe answer).
   *
   * The probe never reads corpus TEXT except in the final exact-verify
   * stage, and there only candidate-sized: the candidate corpus ids are
@@ -64,7 +60,7 @@ object BandIndex {
     * registry (and any other caller that pre-computes a shared
     * [[sketchRelation]] for an index built with defaults) must derive
     * from these same constants — a second hardcoded copy could drift
-    * from the stored index meta, exactly the mismatch [[metaOf]] says
+    * from the stored build constants, exactly the mismatch [[metaOf]] says
     * must stay impossible. */
   private[graft] val DefaultShingleWidth = 3
   private[graft] val DefaultNumHashes = 64
@@ -72,7 +68,7 @@ object BandIndex {
 
   private val BaseGen = "base"
 
-  /** Sketch the corpus ONCE and write the postings/sigs/meta layout.
+  /** Sketch the corpus ONCE and write the postings/sigs layout.
     * `preSketched` hands in an already-materialized [[sketchRelation]]
     * built with THESE exact parameters (the registry's one-sketch
     * discipline — it also feeds the batch clustering). */
@@ -87,7 +83,9 @@ object BandIndex {
       preSketched: Option[DataFrame] = None): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path) {
+    LsmLayout.startIndexLife(spark, path, foldedRelations(path),
+      Map("num_hashes" -> numHashes, "bands" -> bands,
+        "shingle_n" -> shingleWidth)) {
       // both data writes consume the sketch: without `preSketched` it is
       // materialized here so shingling and MinHash run once, not once per
       // write, and the build's operation scope releases it when the build
@@ -98,13 +96,10 @@ object BandIndex {
       // and whichever build ended first would drop the other's cache.
       val sk = preSketched.getOrElse(Materialize.shared(sketchRelation(
         docs, idCol, textCol, shingleWidth, numHashes, bands)))
-      // sigs/, postings/ and meta/ are disjoint relations (the first two
-      // derive from the same sketch, meta is a one-row literal) — write
-      // all three CONCURRENTLY (the wall is the largest write, not the
+      // sigs/ and postings/ are disjoint relations from the same sketch
+      // — write both CONCURRENTLY (the wall is the larger write, not the
       // sum; the materialized sketch is computed once under the block
-      // manager's per-block lock). A crashed partial build was never
-      // servable in any ordering — builds clear the markers/snapshot
-      // first and carry no marker of their own.
+      // manager's per-block lock). The build's record commits after both.
       Overlap.all(spark)(
         () => LsmLayout.writeRelation(
           sk.select(col("doc_id"), col("sig")).withColumn("gen", lit(BaseGen)),
@@ -113,20 +108,14 @@ object BandIndex {
           banded(sk.select(col("doc_id"),
               posexplode(col("bh")).as(Seq("band", "band_val")))
             .withColumn("gen", lit(BaseGen))),
-          s"$path/postings", "gen", "band"),
-        () => LsmLayout.writeRelation(
-          spark.range(1)
-            .select(lit(numHashes.toLong).as("num_hashes"),
-              lit(bands.toLong).as("bands"),
-              lit(shingleWidth.toLong).as("shingle_n")),
-          s"$path/meta"))
+          s"$path/postings", "gen", "band"))
     }
   }
 
   /** Index the delta batch too (the next batch must see this one):
     * postings/sigs are immutable per-doc facts — delta-sized writes, no
     * merge, no read-side fold. Keyed by `batchId` and written with
-    * dynamic overwrite + an applied marker, so an at-least-once retry
+    * dynamic overwrite + a record commit, so an at-least-once retry
     * replaces-or-skips instead of duplicating the generation (which
     * would multiply probe rows through the signature join). */
   def append(
@@ -144,9 +133,9 @@ object BandIndex {
     // the files/dirs a probe lists — so the bound is about scan
     // metadata, not answer shape
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/sigs", "gen=",
-      compact(spark, path, _)) {
-      val (numHashes, bands, shingleWidth) = metaOf(spark, path)
+      compactAfterGenerations, foldedRelations(path),
+      compact(spark, path, _)) { snap =>
+      val (numHashes, bands, shingleWidth) = metaOf(snap)
       // preSketched: the caller already built (and materialized) the
       // delta's [[sketchRelation]] with THIS index's meta — reuse it
       // instead of re-running the scan→shingle→sketch chain
@@ -154,7 +143,7 @@ object BandIndex {
         delta, idCol, textCol, shingleWidth, numHashes, bands))
       // disjoint generation directories under disjoint relations —
       // the two delta-sized writes overlap (the build discipline); the
-      // applied marker still lands only after BOTH settle
+      // record still commits only after BOTH settle
       Overlap.all(spark)(
         () => LsmLayout.writeGeneration(
           sk.select(col("doc_id"), col("sig")).withColumn("gen", lit(batchId)),
@@ -175,7 +164,7 @@ object BandIndex {
     * aggregate to correct. [[compact]] later drops the rows physically.
     * Idempotent at both levels (ids already tombstoned are filtered
     * out; the batch partition overwrites itself under retry; a
-    * committed batch no-ops on its marker). */
+    * committed batch no-ops on its record). */
   def tombstone(
       forgetIds: DataFrame,
       idCol: String,
@@ -194,7 +183,7 @@ object BandIndex {
     * side, nor a partially-rewritten base); directories only the
     * PREVIOUS snapshot had stopped referencing are deleted, so a
     * reader holding either snapshot scans intact files. Applied
-    * markers are KEPT (a late retry of a pre-compact batch must still
+    * batches are KEPT (a late retry of a pre-compact batch must still
     * no-op). `writerEpoch` fences the flip and the GC — a superseded
     * writer's compact must not overwrite the new owner's base or
     * delete its tombstones (frames are checkpointed before each write;
@@ -208,11 +197,11 @@ object BandIndex {
       foldedRelations(path)) { fold =>
       Seq(
         () => LsmLayout.writeGeneration(
-          banded(fold.checkpointed(postingsScoped(spark, path, None, fold.snap))
+          banded(fold.checkpointed(scoped(spark, fold.snap, "postings", None))
             .withColumn("gen", lit(fold.newBase))),
           s"$path/postings", "gen", "band"),
         () => LsmLayout.writeGeneration(
-          fold.checkpointed(signaturesScoped(spark, path, None, fold.snap))
+          fold.checkpointed(scoped(spark, fold.snap, "sigs", None))
             .withColumn("gen", lit(fold.newBase)),
           s"$path/sigs", "gen"))
     }
@@ -226,9 +215,10 @@ object BandIndex {
     df.repartition(col("band"))
       .sortWithinPartitions(col("band"), col("band_val"))
 
-  /** The two relations a compact folds (and its GC sweeps). */
+  /** The two relations every build, append and compact writes; the
+    * generation-count policy counts the first. */
   private[operators] def foldedRelations(path: String): Seq[(String, String)] =
-    Seq((s"$path/postings", "gen="), (s"$path/sigs", "gen="))
+    Seq((s"$path/sigs", "gen="), (s"$path/postings", "gen="))
 
   /** Delta-vs-corpus near-dup pairs served from the stored index:
     * (delta_id, corpus_id, jaccard) for every delta doc whose exact
@@ -267,6 +257,21 @@ object BandIndex {
       excludeGen: Option[String] = None,
       preSketched: Option[DataFrame] = None,
       corpusBucket: Option[(String, Column => Column)] = None)
+      : DataFrame =
+    probeAt(LsmLayout.snapshot(delta.sparkSession, path), corpus, delta,
+      idCol, textCol, threshold, excludeGen, preSketched, corpusBucket)
+
+  /** [[probe]] against an already-resolved record of the index. */
+  private[graft] def probeAt(
+      snap: LayoutSnapshot,
+      corpus: DataFrame,
+      delta: DataFrame,
+      idCol: String,
+      textCol: String,
+      threshold: Double,
+      excludeGen: Option[String] = None,
+      preSketched: Option[DataFrame] = None,
+      corpusBucket: Option[(String, Column => Column)] = None)
       : DataFrame = {
     // excludeGen: skip one stored generation on the index side —
     // the ingest-then-append maintenance loop (ClusterRegistry) probes
@@ -275,11 +280,11 @@ object BandIndex {
     // left behind (the delta would probe against itself and the
     // output would stop being deterministic under replay)
     val spark = delta.sparkSession
-    val (numHashes, bands, shingleWidth) = metaOf(spark, path)
-    // ONE snapshot resolution for the whole probe — the postings join
-    // and the signature prefilter must read the SAME committed state
-    // even if a compact flips the manifest mid-planning
-    val snap = LsmLayout.snapshot(spark, path)
+    val path = snap.root
+    // ONE record for the whole probe — the constants, the postings join
+    // and the signature prefilter read the SAME committed state even if
+    // a compact commits mid-planning
+    val (numHashes, bands, shingleWidth) = metaOf(snap)
 
     // delta side: map-only fused sketch + its shingle sets, computed
     // once and reused by the prefilter and the exact verify — or, via
@@ -300,7 +305,7 @@ object BandIndex {
     // touches the index's corpus-sized relation, and it reads two longs
     // + an id per row
     val candidates = deltaBands
-      .join(postingsScoped(spark, path, excludeGen, snap),
+      .join(scoped(spark, snap, "postings", excludeGen),
         Seq("band", "band_val"))
       .select(col("delta_id"), col("doc_id").as("corpus_id"))
       .distinct()
@@ -311,7 +316,7 @@ object BandIndex {
     val minMatches = math.floor((threshold - sigMargin) * numHashes).toLong
     val plausible = candidates
       .join(dsk.select(col("delta_id"), col("sig").as("sig_d")), "delta_id")
-      .join(signaturesScoped(spark, path, excludeGen, snap)
+      .join(scoped(spark, snap, "sigs", excludeGen)
         .select(col("doc_id").as("corpus_id"), col("sig").as("sig_c")),
         "corpus_id")
       .withColumn("est",
@@ -414,8 +419,8 @@ object BandIndex {
       queryText: String,
       threshold: Double): DataFrame = {
     val spark = corpus.sparkSession
-    val (numHashes, bands, shingleWidth) = metaOf(spark, path)
     val snap = LsmLayout.snapshot(spark, path)
+    val (numHashes, bands, shingleWidth) = metaOf(snap)
     val qsh = LexicalIndex.literalShingles(queryText, shingleWidth)
     require(qsh.nonEmpty,
       s"query shorter than the shingle width: $queryText")
@@ -425,14 +430,14 @@ object BandIndex {
     val bandPred = bvals.zipWithIndex.map { case (v, b) =>
       col("band") === b && col("band_val") === v
     }.reduce(_ || _)
-    val candidates = postingsScoped(spark, path, None, snap)
+    val candidates = scoped(spark, snap, "postings", None)
       .filter(bandPred)
       .select(col("doc_id"))
       .distinct()
     val sigMargin = 2.5 * math.sqrt(threshold * (1 - threshold) / numHashes)
     val minMatches = math.floor((threshold - sigMargin) * numHashes).toLong
     val sigLit = array(sig.map(lit): _*)
-    val plausible = signaturesScoped(spark, path, None, snap)
+    val plausible = scoped(spark, snap, "sigs", None)
       .join(broadcast(candidates), Seq("doc_id"))
       .withColumn("graft__est",
         size(filter(zip_with(col("sig"), sigLit, (x, y) => x === y),
@@ -464,35 +469,23 @@ object BandIndex {
     * the layout SNAPSHOT once: superseded base generations and folded
     * generations awaiting GC are invisible. */
   def postings(spark: SparkSession, path: String): DataFrame =
-    postingsScoped(spark, path, None, LsmLayout.snapshot(spark, path))
-
-  private def postingsScoped(
-      spark: SparkSession, path: String,
-      excludeGen: Option[String], snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout
-      .liveGenerationNames(spark, s"$path/postings", "gen=", snap)
-      .filterNot(excludeGen.contains)
-    val post = LsmLayout
-      .readGenerations(spark, s"$path/postings", "gen=", live)
-      .drop("gen")
-    LsmLayout.antiJoinTombstones(spark, path, snap, post, "doc_id")
-  }
+    scoped(spark, LsmLayout.snapshot(spark, path), "postings", None)
 
   /** The stored signature relation (doc_id, sig), tombstones applied —
     * the prefilter's corpus side. */
   def signatures(spark: SparkSession, path: String): DataFrame =
-    signaturesScoped(spark, path, None, LsmLayout.snapshot(spark, path))
+    scoped(spark, LsmLayout.snapshot(spark, path), "sigs", None)
 
-  private def signaturesScoped(
-      spark: SparkSession, path: String,
-      excludeGen: Option[String], snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout
-      .liveGenerationNames(spark, s"$path/sigs", "gen=", snap)
-      .filterNot(excludeGen.contains)
-    val sigs = LsmLayout
-      .readGenerations(spark, s"$path/sigs", "gen=", live)
-      .drop("gen")
-    LsmLayout.antiJoinTombstones(spark, path, snap, sigs, "doc_id")
+  /** The relation `rel` of a record, `excludeGen` skipped and tombstones
+    * applied. */
+  private def scoped(
+      spark: SparkSession, snap: LayoutSnapshot, rel: String,
+      excludeGen: Option[String]): DataFrame = {
+    val dir = s"${snap.root}/$rel"
+    LsmLayout.antiJoinTombstones(spark, snap.root, snap,
+      LsmLayout.readGenerations(spark, dir, "gen=",
+        snap.liveIn(dir).filterNot(excludeGen.contains)).drop("gen"),
+      "doc_id")
   }
 
   /** Reclamation report (the deadChunkStats pattern on the LSH side):
@@ -504,24 +497,24 @@ object BandIndex {
     * fires). One narrow doc_id scan over the pruned live generations. */
   def deadRowStats(spark: SparkSession, path: String): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/postings", "gen=", snap)
     LsmLayout.deadRowStats(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/postings", "gen=", live)
+      LsmLayout.readLive(spark, snap, s"$path/postings", "gen=")
         .select(col("doc_id")),
       "doc_id")
   }
 
-  /** Layout constants (num_hashes, bands, shingle_n) — one meta row of
-    * plan-time metadata, like the s23 probe-set derivation. Exposed to
-    * the registry so a shared sketch is built with the INDEX's own
-    * parameters (a disagreeing caller must stay impossible). */
+  /** Layout constants (num_hashes, bands, shingle_n) from the commit
+    * record — plan-time metadata, like the s23 probe-set derivation.
+    * Exposed to the registry so a shared sketch is built with the
+    * INDEX's own parameters (a disagreeing caller must stay
+    * impossible). */
   private[graft] def metaOf(
-      spark: SparkSession, path: String): (Int, Int, Int) = {
-    val m = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-    (m.getAs[Long]("num_hashes").toInt, m.getAs[Long]("bands").toInt,
-      m.getAs[Long]("shingle_n").toInt)
-  }
+      spark: SparkSession, path: String): (Int, Int, Int) =
+    metaOf(LsmLayout.snapshot(spark, path))
+
+  private[graft] def metaOf(snap: LayoutSnapshot): (Int, Int, Int) =
+    (snap.constant("num_hashes").toInt, snap.constant("bands").toInt,
+      snap.constant("shingle_n").toInt)
 
   /** The full per-doc sketch relation (doc_id, sh, sig, bh) — the ONE
     * map-only chain every band-family stage derives from. Exposed so a

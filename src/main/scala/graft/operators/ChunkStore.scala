@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *    appears in exactly one generation under the single-writer
   *    contract);
   *  - `manifest/` (doc_id, pos, chunk_h, seq) partitioned by `gen` —
-  *    `seq` is the monotone INGEST ORDINAL (derived from directory
-  *    metadata, retry-stable, NEVER restarting at a compact — the
-  *    shared `committedGenerationOrdinal` spelling, aligned with the
+  *    `seq` is the monotone INGEST ORDINAL (the commit record's,
+  *    retry-stable, NEVER restarting at a compact, aligned with the
   *    registry/KMV generation numbers under coordinated ingest);
   *    [[reconstruct]] folds each doc to its LATEST manifest, so
   *    re-ingesting an EDITED doc under its existing doc_id is
@@ -27,17 +26,15 @@ import org.apache.spark.sql.functions._
   *    instead of silently merging two manifest versions into one
   *    garbled reconstruction — and `asOf = g` pins the fold to the
   *    corpus as of ingest g (membership-exact across compacts);
-  *  - `meta/` one row (mask_bits) — self-describing (the LexicalIndex
-  *    lesson: cut points from a disagreeing mask would produce valid-
-  *    looking manifests whose chunks never match the store).
+  *  - the build constant `mask_bits` in the commit record —
+  *    self-describing (cut points from a disagreeing mask would produce
+  *    valid-looking manifests whose chunks never match the store).
   *
-  * IDEMPOTENT maintenance under at-least-once delivery (shared via
-  * [[LsmLayout]]): [[refresh]] keys its writes by the caller's batch id
-  * with dynamic partition overwrite + an applied marker, and its
-  * new-chunk anti-join reads the store EXCLUDING the batch's own
-  * (possibly partial) generation — so a retry recomputes the same
-  * new-chunk set and replaces its own partitions (gated by s47:
-  * refresh-with-retry ≡ one-shot build through the reconstruction).
+  * IDEMPOTENT maintenance under at-least-once delivery (the
+  * [[LsmLayout]] contract): the new-chunk anti-join reads committed
+  * store generations only, so a retry recomputes the same new-chunk set
+  * (gated by s47: refresh-with-retry ≡ one-shot build through the
+  * reconstruction).
   *
   * 100 TB shape: build is one corpus pass (per-row CDC fold — the
   * fused `graft_cdc_chunks` codegen — then a hash-keyed distinct);
@@ -80,13 +77,12 @@ object ChunkStore {
       docs: DataFrame, idCol: String, textCol: String,
       path: String, maskBits: Int = 4): Unit = {
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path) {
+    LsmLayout.startIndexLife(spark, path, relations(path),
+      Map("mask_bits" -> maskBits)) {
       val rows = Materialize.shared(chunkRows(docs, idCol, textCol, maskBits))
-      // store/, manifest/ and the one-row meta are disjoint relations
-      // (the first two derive from the shared chunk rows, computed once
-      // under the block manager's per-block lock) — write all three
-      // concurrently; a crashed partial build was never servable in any
-      // ordering
+      // store/ and manifest/ are disjoint relations from the shared
+      // chunk rows (computed once under the block manager's per-block
+      // lock) — write both concurrently
       Overlap.all(spark)(
         () => LsmLayout.writeRelation(
           rows.groupBy(col("chunk_h"))
@@ -97,20 +93,16 @@ object ChunkStore {
           rows.select(col("doc_id"), col("pos"), col("chunk_h"))
             .withColumn("seq", lit(0L))
             .withColumn("gen", lit(BaseGen)),
-          s"$path/manifest", "gen"),
-        () => LsmLayout.writeRelation(
-          spark.range(1).select(lit(maskBits.toLong).as("mask_bits")),
-          s"$path/meta"))
+          s"$path/manifest", "gen"))
     }
   }
 
   /** Ingest a delta batch: chunk the delta (delta-sized, map-only),
     * append its manifests, and append ONLY the chunks whose hash is
-    * absent from every other generation — the content-address dedup
+    * absent from every committed generation — the content-address dedup
     * that makes storage growth edit-sized. Idempotent per the
-    * [[LsmLayout]] contract; the anti-join excludes the batch's own
-    * generation so a partial-failure replay recomputes the identical
-    * new-chunk set.
+    * [[LsmLayout]] contract; a partial-failure replay recomputes the
+    * identical new-chunk set.
     *
     * Doc-id semantics: NEW ids simply append; an EXISTING id (an
     * edited doc re-synced under its identity) writes a new seq-stamped
@@ -131,22 +123,16 @@ object ChunkStore {
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/manifest", "gen=",
-      compact(spark, path, _)) {
-      val maskBits = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-        .getAs[Long]("mask_bits").toInt
-      val snap = LsmLayout.snapshot(spark, path)
-      // the manifest sequence number: the metadata-monotone ingest
-      // ordinal (shared spelling) — NEVER restarts at a compact (folded
-      // names accumulate in the snapshot), which is what makes `seq` a
-      // corpus-wide time-travel pin: the old live-count spelling
-      // restarted at every fold, so a post-compact refresh could mint a
-      // seq below a superseded version's and latest-wins would resolve
-      // an EDITED doc to its stale text. Identical under retry (own dir
-      // excluded), no data read.
-      val seq = LsmLayout.committedGenerationOrdinal(
-        spark, s"$path/manifest", "gen=", snap, batchId)
-      val rows = Materialize.shared(chunkRows(delta, idCol, textCol, maskBits))
+      compactAfterGenerations, relations(path),
+      compact(spark, path, _)) { snap =>
+      // the manifest sequence number: the record's ingest ordinal —
+      // NEVER restarts at a compact, which is what makes `seq` a
+      // corpus-wide time-travel pin (a seq minted below a superseded
+      // version's would let latest-wins resolve an EDITED doc to its
+      // stale text). Identical under retry, no data read.
+      val seq = snap.ordinal + 1L
+      val rows = Materialize.shared(chunkRows(delta, idCol, textCol,
+        snap.constant("mask_bits").toInt))
       val cand = rows.groupBy(col("chunk_h"))
         .agg(min(col("chunk")).as("chunk"))
       // which candidate hashes the store already holds: the delta hash
@@ -159,23 +145,19 @@ object ChunkStore {
       // generation awaiting GC may hold a chunk the refcount sweep
       // reclaimed — counting it as "present" would skip re-storing a
       // chunk no live generation holds, and reconstruction would lose it.
-      val storeLive = LsmLayout
-        .liveGenerationNames(spark, s"$path/store", "gen=", snap)
-        .filterNot(_ == batchId)
       val present = LsmLayout
-        .readGenerations(spark, s"$path/store", "gen=", storeLive)
+        .readLive(spark, snap, s"$path/store", "gen=")
         .select(col("chunk_h"))
         .join(broadcast(cand.select(col("chunk_h"))),
           Seq("chunk_h"), "left_semi")
       // the store and manifest generations are disjoint relations from
       // the one shared (materialized) chunk projection — write them
-      // CONCURRENTLY; the marker below lands only after both settle. The
+      // CONCURRENTLY; the record commits only after both settle. The
       // new-chunk plan's self-read of the store is safe by construction
-      // (it reads explicit live generation paths that EXCLUDE this
+      // (it reads explicit committed generation paths, never this
       // batch's own directory, and the dynamic overwrite replaces only
       // gen=<batch> — the compact() ledger-fold disjointness argument),
-      // so the old delta-sized eager checkpoint bought nothing but one
-      // extra materialization pass per refresh.
+      // so no checkpoint is needed.
       Overlap.all(spark)(
         () => LsmLayout.writeGeneration(
           cand.join(broadcast(present), Seq("chunk_h"), "left_anti")
@@ -204,11 +186,9 @@ object ChunkStore {
     * drop the doc (caught by the spec's cross-compact pin). One window
     * computes both bounds. */
   private def latestManifests(
-      spark: SparkSession, path: String,
-      snap: Option[LayoutSnapshot] = None,
+      spark: SparkSession, path: String, snap: LayoutSnapshot,
       asOf: Option[Long] = None): DataFrame = {
-    val scoped = manifestsScoped(spark, path,
-      snap.getOrElse(LsmLayout.snapshot(spark, path)))
+    val scoped = manifestsScoped(spark, path, snap)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
     asOf.fold(scoped)(g => scoped.filter(col("seq") <= g))
       .withColumn("graft__mx", max(col("seq")).over(w))
@@ -221,14 +201,10 @@ object ChunkStore {
   /** Every live manifest version of a snapshot, tombstoned docs
     * dropped. */
   private def manifestsScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/manifest", "gen=", snap)
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
     LsmLayout.antiJoinTombstones(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/manifest", "gen=", live)
-        .drop("gen"),
+      LsmLayout.readLive(spark, snap, s"$path/manifest", "gen=").drop("gen"),
       "doc_id")
-  }
 
   /** Lossless reconstruction from the two stored tables: the surviving
     * latest manifests ([[latestManifests]]) through one manifest⋈store
@@ -252,7 +228,7 @@ object ChunkStore {
     // between the two reads would join live manifests against a store
     // whose duplicate-held chunks (old base + new base) multiply rows
     val snap = LsmLayout.snapshot(spark, path)
-    latestManifests(spark, path, Some(snap), asOf)
+    latestManifests(spark, path, snap, asOf)
       .join(storeScoped(spark, path, snap), Seq("chunk_h"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_chunks"),
@@ -276,10 +252,7 @@ object ChunkStore {
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/manifest", "gen=", snap)
-    val man = LsmLayout
-      .readGenerations(spark, s"$path/manifest", "gen=", live)
+    val man = LsmLayout.readLive(spark, snap, s"$path/manifest", "gen=")
       .select(col("doc_id"), col("seq"))
     val pinned = asOf.fold(man)(g => man.filter(col("seq") <= g))
       .select(col("doc_id"))
@@ -291,12 +264,8 @@ object ChunkStore {
     * superseded generations awaiting GC may duplicate live chunks
     * (the folded base holds everything) and would multiply any join. */
   private def storeScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/store", "gen=", snap)
-    LsmLayout.readGenerations(spark, s"$path/store", "gen=", live)
-      .drop("gen")
-  }
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
+    LsmLayout.readLive(spark, snap, s"$path/store", "gen=").drop("gen")
 
   /** Right-to-be-forgotten deletes: the forget-set becomes a tombstone
     * id list every [[reconstruct]] anti-joins — the doc is
@@ -324,7 +293,7 @@ object ChunkStore {
     * never drop store rows eagerly; this sweep is where forgotten
     * docs' unique chunks AND dead superseded chunks leave disk.
     * Deliberately the one corpus-sized maintenance op (the compact
-    * contract): one manifest fold + one hash semi-join. Markers kept;
+    * contract): one manifest fold + one hash semi-join. Applied batches kept;
     * forget-set cleared; per-row seqs preserved (the counter itself
     * never restarts — the monotone-ordinal contract). */
   def compact(
@@ -335,7 +304,7 @@ object ChunkStore {
     // compacts — what collapses is superseded VERSION history (and
     // with it the swept chunks), per the reconstruct() contract
     foldVersions(spark, path, writerEpoch)(snap =>
-      latestManifests(spark, path, Some(snap)))
+      latestManifests(spark, path, snap))
 
   /** History-retention vacuum — the s27 "keep the last N" lifecycle op
     * applied to the layout's VERSION history (the generalized
@@ -350,7 +319,7 @@ object ChunkStore {
     * chunks only it referenced, via the same refcount sweep) physically
     * leaves disk. Tombstoned docs leave entirely (GDPR outranks
     * retention like it outranks time travel). Snapshot-atomic with the
-    * same one-flip/two-cycle-GC contract as compact; markers kept;
+    * same one-flip/two-cycle-GC contract as compact; applied batches kept;
     * `writerEpoch` fences the flip and the GC. */
   def retentionVacuum(
       spark: SparkSession, path: String, keepFrom: Long,
@@ -381,7 +350,7 @@ object ChunkStore {
       spark: SparkSession, path: String, writerEpoch: Option[Long])(
       manifests: LayoutSnapshot => DataFrame): Unit =
     LsmLayout.snapshotCompact(spark, path, writerEpoch,
-      Seq((s"$path/manifest", "gen="), (s"$path/store", "gen="))) { fold =>
+      relations(path)) { fold =>
       val man = fold.checkpointed(manifests(fold.snap))
       Seq(
         () => LsmLayout.writeGeneration(
@@ -394,6 +363,11 @@ object ChunkStore {
           s"$path/store", "gen"))
     }
 
+  /** The two relations every build, refresh and compact writes; the
+    * generation-count policy counts the manifests. */
+  private def relations(path: String) =
+    Seq((s"$path/manifest", "gen="), (s"$path/store", "gen="))
+
   /** Reclamation report: how much of the store a [[compact]] refcount
     * sweep would drop — live rows (referenced by some surviving latest
     * manifest) vs dead rows (orphaned by superseded edit manifests or
@@ -403,7 +377,7 @@ object ChunkStore {
     * read only on the store side. Single-row output. */
   def deadChunkStats(spark: SparkSession, path: String): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val refs = latestManifests(spark, path, Some(snap))
+    val refs = latestManifests(spark, path, snap)
       .select(col("chunk_h")).distinct()
       .withColumn("graft__live", lit(1L))
     storeScoped(spark, path, snap)
@@ -424,10 +398,8 @@ object ChunkStore {
   /** Store-growth report: chunks and bytes per generation — what the
     * n169 chunk-delta claim is measured with. Metadata-sized output. */
   def generationStats(spark: SparkSession, path: String): DataFrame = {
-    val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/store", "gen=", snap)
-    LsmLayout.readGenerations(spark, s"$path/store", "gen=", live)
+    LsmLayout.readLive(spark, LsmLayout.snapshot(spark, path),
+        s"$path/store", "gen=")
       .groupBy(col("gen"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(length(col("chunk")).cast("long")).as("n_chars"))

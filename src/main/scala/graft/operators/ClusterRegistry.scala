@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    registry keeps no copy: it probes `b`, the deployment's standalone
   *    band layout, whose appends, tombstones and compacts the
   *    [[CorpusLifecycle]] coordinator's band branch owns. The location
-  *    is recorded in `meta/` relative to the registry's parent
-  *    directory (trees stay relocatable), and every later call reads
-  *    it from there, never from a caller;
+  *    is a build constant of the commit record, relative to the
+  *    registry's parent directory (trees stay relocatable), and every
+  *    later call reads it from there, never from a caller;
   *  - `assignments/` (doc_id, cluster_id, gen) partitioned by `batch`
   *    — LSM: the `base` generation holds ≤1 row per doc (the build, or
   *    the last [[compact]]'s fold); every ingest APPENDS a generation
@@ -34,13 +34,10 @@ import org.apache.spark.sql.functions._
   *  - `ledger/` (doc_id, text) partitioned by (`batch`, `bucket`) —
   *    the LAYOUT-OWNED text ledger candidate verification rehydrates
   *    from (the build set under `base`, each ingest's delta under its
-  *    batch id — the same LSM discipline as the assignments). The
-  *    registry used to require the caller to assemble and pass the
-  *    full ledger on every ingest; a stale or partial caller copy
-  *    produced silently WRONG cluster merges (candidate pairs whose
-  *    corpus text was missing dropped at the exact-verify join) —
-  *    exactly the silent contract drift the coordinator exists to
-  *    kill, so the state now lives with the index. `bucket` =
+  *    batch id — the same LSM discipline as the assignments). It lives
+  *    with the index because a stale or partial caller-assembled copy
+  *    produces silently WRONG cluster merges (candidate pairs whose
+  *    corpus text is missing drop at the exact-verify join). `bucket` =
   *    pmod(hex60(doc_id), ledger_buckets) is the 100 TB rehydration
   *    lever owning the ledger unlocks: the verify stage needs the
   *    TEXT of candidate ids only, and with the ledger hash-bucketed
@@ -65,7 +62,7 @@ import org.apache.spark.sql.functions._
   * because every cluster-id vertex is already the min of its members.
   * Untouched clusters never appear in the graph, so their rows are
   * never rewritten. Gated: n177 proves build∘ingest(with retry AND
-  * marker-less replay) ≡ the batch recursive-closure clustering over
+  * commit-less replay) ≡ the batch recursive-closure clustering over
   * the union corpus, singletons included; n178 gates the multi-batch
   * foreachBatch loop shape (with a mid-stream replay) and
   * ClusterRegistrySpec drives the real MemoryStream loop.
@@ -109,8 +106,8 @@ import org.apache.spark.sql.functions._
   * anti-joins as a broadcast), so per-ingest fold cost is
   * delta+merge-sized; `compactAfterGenerations` bounds how large the
   * overlay can grow (size the policy to the broadcast budget). The
-  * generation number derives from directory metadata (one listStatus),
-  * never a data scan.
+  * generation number is the commit record's ingest ordinal, never a
+  * data scan.
   */
 object ClusterRegistry {
 
@@ -129,8 +126,8 @@ object ClusterRegistry {
     * doc): a micro-batch verify reads ~candidate-buckets/buckets of
     * the ledger text. Size it so one bucket's text fits a task
     * comfortably — the default suits the test scales; a 100 TB corpus
-    * wants O(10k). Stored in `meta/`, so every later ingest derives
-    * the same buckets (the self-describing-index lesson).
+    * wants O(10k). A build constant of the commit record, so every
+    * later ingest derives the same buckets.
     *
     * `sharedBand` names a standalone [[BandIndex]] layout to probe
     * instead of building a private `$path/band` (see the class doc):
@@ -150,20 +147,21 @@ object ClusterRegistry {
     val spark = docs.sparkSession
     val bandEntry =
       sharedBand.map(LsmLayout.relativeLocation(parentOf(path), _))
-    LsmLayout.startIndexLife(spark, path) {
+    LsmLayout.startIndexLife(spark, path, relations(path),
+      Map("threshold" -> threshold, "ledger_buckets" -> ledgerBuckets) ++
+        bandEntry.map("band" -> _)) {
       // ONE corpus sketch feeds both the index build and the batch
-      // clustering (previously each ran its own scan→shingle→sketch
-      // chain over the full corpus). The geometry comes from BandIndex's
-      // own default constants — the single source of truth — so the
-      // shared sketch can never disagree with the stored index meta.
+      // clustering. The geometry comes from BandIndex's own default
+      // constants — the single source of truth — so the shared sketch
+      // can never disagree with the stored index's.
       val sk = preSketched.getOrElse(Materialize.shared(
         BandIndex.sketchRelation(
           docs, idCol, textCol,
           shingleWidth = BandIndex.DefaultShingleWidth,
           numHashes = BandIndex.DefaultNumHashes,
           bands = BandIndex.DefaultBands)))
-      // the four build relations are pairwise disjoint (band/, the
-      // assignment base, ledger/, meta/), so the index build and the
+      // the three build relations are pairwise disjoint (band/, the
+      // assignment base, ledger/), so the index build and the
       // text-ledger write run CONCURRENTLY with the clustering chain —
       // the wall is the longest of the three, not their sum. Racing
       // consumers of the shared sketch are safe: cached partitions are
@@ -173,17 +171,6 @@ object ClusterRegistry {
         Overlap.future(spark)(
           BandIndex.build(docs, idCol, textCol,
             s"$path/band", preSketched = Some(sk))))
-      // the one-row meta literal is disjoint from every other relation —
-      // launched with the fan-out instead of serializing after it (a
-      // crashed partial build was never servable in any ordering; ingest
-      // fails loudly on a missing meta either way)
-      val metaFut = Overlap.future(spark)(
-        LsmLayout.writeRelation(
-          spark.range(1)
-            .select(lit(threshold).as("threshold"),
-              lit(ledgerBuckets.toLong).as("ledger_buckets"),
-              lit(bandEntry.orNull).cast("string").as("band")),
-          s"$path/meta"))
       // the layout-owned text ledger starts with the build set — from
       // here on, ingests are self-contained (delta-only). Bucketed for
       // rehydration pruning; repartitioned by bucket so each task writes
@@ -212,12 +199,10 @@ object ClusterRegistry {
           s"$path/assignments", "batch")
         bandFut.foreach(Overlap.await)
         Overlap.await(ledgerFut)
-        Overlap.await(metaFut)
       } catch {
         case e: Throwable =>
           bandFut.foreach(Overlap.settle)
           Overlap.settle(ledgerFut)
-          Overlap.settle(metaFut)
           throw e
       }
     }
@@ -226,21 +211,21 @@ object ClusterRegistry {
   private def parentOf(path: String): String =
     new org.apache.hadoop.fs.Path(path).getParent.toString
 
+  /** The two relations every build and ingest writes; the
+    * generation-count policy counts the assignments. */
+  private def relations(path: String) =
+    Seq((s"$path/assignments", "batch="), (s"$path/ledger", "batch="))
+
   /** The shared band index this registry probes, resolved from its
-    * meta against its parent directory — `None` for a private band, for
-    * a registry built before band sharing (its meta has no `band`
-    * entry) and for a path holding no registry. */
+    * record against its parent directory — `None` for a private band. */
   private[graft] def sharedBand(
       spark: SparkSession, path: String): Option[String] =
-    if (!LsmLayout.dirExists(spark, s"$path/meta")) None
-    else {
-      val m = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-      if (!m.schema.fieldNames.contains("band") ||
-        m.isNullAt(m.fieldIndex("band"))) None
-      else Some(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(parentOf(path)), m.getAs[String]("band"))
-        .toString)
-    }
+    sharedBandOf(LsmLayout.snapshot(spark, path))
+
+  private def sharedBandOf(snap: LayoutSnapshot): Option[String] =
+    snap.constants.get("band").map(b =>
+      new org.apache.hadoop.fs.Path(
+        new org.apache.hadoop.fs.Path(parentOf(snap.root)), b).toString)
 
   /** Shared mode's delivery check: the coordinator's band branch owns
     * every band write, so each batch this registry applied (ingests and
@@ -249,13 +234,12 @@ object ClusterRegistry {
     * surface as candidates (or, for a forget, stay probe-visible) — so
     * the next ingest fails and names it. */
   private def requireBandHolds(
-      spark: SparkSession, path: String, band: String): Unit = {
-    val missing = LsmLayout.appliedBatches(spark, path)
-      .diff(LsmLayout.appliedBatches(spark, band))
+      snap: LayoutSnapshot, band: LayoutSnapshot): Unit = {
+    val missing = snap.applied -- band.applied
     if (missing.nonEmpty)
       throw new IllegalStateException(
-        s"registry $path applied batch(es) ${missing.sorted.mkString(", ")} " +
-          s"that its shared band index $band never applied — deliver them " +
+        s"registry ${snap.root} applied batch(es) ${missing.toSeq.sorted.mkString(", ")} " +
+          s"that its shared band index ${band.root} never applied — deliver them " +
           "through CorpusLifecycle (retry the same batch id) before the " +
           "next ingest")
   }
@@ -266,7 +250,7 @@ object ClusterRegistry {
     * ledger-shaped relation: live generations under one snapshot,
     * pending tombstones anti-joined broadcast. */
   def ledger(spark: SparkSession, path: String): DataFrame =
-    ledgerScoped(spark, path, None, LsmLayout.snapshot(spark, path))
+    ledgerScoped(spark, path, LsmLayout.snapshot(spark, path))
       .drop("bucket")
 
   /** The ledger WITH its physical bucket column (long-cast: partition
@@ -274,31 +258,18 @@ object ClusterRegistry {
     * joins against. */
   private[graft] def ledgerBucketed(
       spark: SparkSession, path: String): DataFrame =
-    ledgerScoped(spark, path, None, LsmLayout.snapshot(spark, path))
+    ledgerScoped(spark, path, LsmLayout.snapshot(spark, path))
 
+  /** The ledger's live generations (the ledger folds on its own track:
+    * a compact may fold the assignment log while skipping the
+    * corpus-sized ledger rewrite), tombstones applied. */
   private def ledgerScoped(
-      spark: SparkSession, path: String,
-      excludeBatch: Option[String], snap: LayoutSnapshot): DataFrame = {
-    // the ledger tracks its own fold state (a compact may fold the
-    // assignment log while skipping the corpus-sized ledger rewrite)
-    val live = LsmLayout.liveGenerationNames(spark, s"$path/ledger",
-        "batch=", snap.ledgerView)
-      .filterNot(excludeBatch.contains)
-    ledgerFromNames(spark, path, live, snap)
-  }
-
-  /** The ledger read over an ALREADY-LISTED live-generation name set —
-    * callers that also need the names for a byte-budget decision
-    * (ingest's rehydration gate) list once and reuse. */
-  private def ledgerFromNames(
-      spark: SparkSession, path: String,
-      live: Seq[String], snap: LayoutSnapshot): DataFrame = {
-    val rows = LsmLayout.readGenerations(spark, s"$path/ledger", "batch=",
-        live)
-      .select(col("doc_id"), col("text"),
-        col("bucket").cast("long").as("bucket"))
-    LsmLayout.antiJoinTombstones(spark, path, snap, rows, "doc_id")
-  }
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
+    LsmLayout.antiJoinTombstones(spark, path, snap,
+      LsmLayout.readLive(spark, snap, s"$path/ledger", "batch=")
+        .select(col("doc_id"), col("text"),
+          col("bucket").cast("long").as("bucket")),
+      "doc_id")
 
   /** The current assignment of every SURVIVING doc. Read shape: the
     * compacted `base` generation already holds ≤1 row per doc, so only
@@ -317,36 +288,24 @@ object ClusterRegistry {
     * time-travel reads too); a [[compact]] collapses history, after
     * which pins address the post-compact state only.
     *
-    * Cache note: the fold overlay is persisted (Materialize.shared) and,
-    * the result being a lazy frame, left to the runner sweep
-    * ([[Materialize]]'s release contract); inside an operation (the
-    * ingest, the compact) the operation's scope releases it. */
+    * Nothing is persisted: the overlay's two uses in one plan share its
+    * aggregate's shuffle through exchange reuse, and a lazy frame's
+    * cache is one no operation scope could release. */
   def assignments(
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame =
-    assignmentsScoped(spark, path, None, asOf)
+    assignmentsScoped(spark, path, LsmLayout.snapshot(spark, path), asOf)
 
+  /** The assignment fold of one record: the base pointer, the
+    * recent-overlay generations and the pending forget-set all come from
+    * the same record, so a compact committing mid-read is invisible
+    * (pre- or post-compact state, never a mix). */
   private def assignmentsScoped(
-      spark: SparkSession, path: String,
-      excludeBatch: Option[String],
+      spark: SparkSession, path: String, snap: LayoutSnapshot,
       asOf: Option[Long] = None,
-      snapOpt: Option[LayoutSnapshot] = None,
-      shareOverlay: Boolean = true): DataFrame = {
+      persistOverlay: Boolean = false): DataFrame = {
     val dir = s"$path/assignments"
-    // ONE snapshot resolution per read: the base pointer, the
-    // recent-overlay name set and the pending forget-set all come from
-    // the same committed manifest, so a compact flipping mid-read is
-    // invisible (pre- or post-compact state, never a mix). A caller
-    // that already resolved the snapshot for its own decisions (the
-    // ingest path) hands it in, so one maintenance call reads ONE
-    // manifest resolution everywhere.
-    val snap = snapOpt.getOrElse(LsmLayout.snapshot(spark, path))
-    // committed LIVE generation NAMES from directory metadata — also
-    // what keeps the recent-overlay scan pinned to the non-base
-    // partitions (folded generations awaiting GC are invisible)
-    val recentNames = LsmLayout.liveGenerationNames(spark, dir, "batch=", snap)
-      .filterNot(_ == snap.base)
-      .filterNot(excludeBatch.contains)
+    val recentNames = snap.liveIn(dir).filterNot(_ == snap.base)
     val base = LsmLayout.readGenerations(spark, dir, "batch=", Seq(snap.base))
       .select(col("doc_id"), col("cluster_id"))
     val folded =
@@ -354,13 +313,13 @@ object ClusterRegistry {
       else {
         val recent = LsmLayout.readGenerations(spark, dir, "batch=",
           recentNames)
-        val latest = asOf.fold(recent)(g => recent.filter(col("gen") <= g))
+        val fold = asOf.fold(recent)(g => recent.filter(col("gen") <= g))
           .groupBy(col("doc_id"))
           .agg(max(struct(col("gen"), col("cluster_id"))).as("graft__l"))
           .select(col("doc_id"), col("graft__l.cluster_id").as("cluster_id"))
-        // read twice (the anti-join's id list and the union), so
-        // persisted unless the caller asks for no cache
-        val overlay = if (shareOverlay) Materialize.shared(latest) else latest
+        // an ingest reads the fold in two queries (the edge list and the
+        // remap write), so it persists the overlay in its own scope
+        val latest = if (persistOverlay) Materialize.shared(fold) else fold
         // the overlay broadcast is bounded by the BUDGET, not just by
         // policy: a mis-sized compactAfterGenerations (or a long
         // compact-free ingest run) grows the overlay until it would
@@ -371,9 +330,9 @@ object ClusterRegistry {
         val overlayBytes = LsmLayout.dirBytes(spark, dir, recentNames, "batch=")
         base
           .join(LsmLayout.hintBroadcast(
-            overlay.select(col("doc_id")), overlayBytes),
+            latest.select(col("doc_id")), overlayBytes),
             Seq("doc_id"), "left_anti")
-          .unionByName(overlay)
+          .unionByName(latest)
       }
     LsmLayout.antiJoinTombstones(spark, path, snap, folded, "doc_id")
   }
@@ -383,12 +342,9 @@ object ClusterRegistry {
     * tokens downstream joins key on; this view is what compares
     * against a from-scratch clustering (the s52 oracle) after deletes
     * may have forgotten a cluster's original min member. One window
-    * over `cluster_id`: the assignments are read once, so nothing is
-    * persisted, not even the fold overlay — a lazy frame's cache is one
-    * no operation scope could release, and every registry probe would
-    * leave one behind. */
+    * over `cluster_id`. */
   def canonicalAssignments(spark: SparkSession, path: String): DataFrame =
-    canonical(assignmentsScoped(spark, path, None, shareOverlay = false))
+    canonical(assignments(spark, path))
 
   /** `(doc_id, cluster_id)` with every cluster renamed to its min
     * `doc_id`. */
@@ -417,7 +373,7 @@ object ClusterRegistry {
     * every batch this registry already applied.
     *
     * `preSketched` hands in the delta's persisted
-    * [[BandIndex.sketchRelation]] built with the probed band's meta (the
+    * [[BandIndex.sketchRelation]] built with the probed band's constants (the
     * coordinator sketches each batch once for this ingest and the band
     * append).
     */
@@ -428,63 +384,47 @@ object ClusterRegistry {
       writerEpoch: Option[Long] = None,
       preSketched: Option[DataFrame] = None): Unit = {
     val spark = delta.sparkSession
-    val shared = sharedBand(spark, path)
-    val bandPath = shared.getOrElse(s"$path/band")
-    // the delta is sketched ONCE (with the index's own meta) for all
-    // three consumers — the index probe, the within-delta pair join
-    // and the private index append; the relation is delta-sized and
-    // shared (previously each consumer re-ran the scan→shingle→sketch
-    // chain)
-    lazy val bandMeta = BandIndex.metaOf(spark, bandPath)
-    lazy val deltaSketch: DataFrame = preSketched.getOrElse {
-      val (numHashes, bands, shingleWidth) = bandMeta
+    // the delta is sketched ONCE (with the band index's own constants)
+    // for all three consumers — the index probe, the within-delta pair
+    // join and the private index append
+    def sketchFor(band: LayoutSnapshot): DataFrame = preSketched.getOrElse {
+      val (numHashes, bands, shingleWidth) = BandIndex.metaOf(band)
       Materialize.shared(BandIndex.sketchRelation(
         delta, idCol, textCol, shingleWidth, numHashes, bands))
     }
     // file-count + overlay-size hygiene (the s46 policy): the fold's
     // broadcast overlay grows with every generation until a compact
-    // folds it into base — one listStatus, no data read
+    // folds it into base
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/assignments", "batch=",
+      compactAfterGenerations, relations(path),
       compact(spark, path, _),
       // an applied batch: the next batch must still see this one in the
-      // private band index (its own idempotency marker lives inside
-      // BandIndex); a clean retry whose registry half short-circuited
-      // only sketches if the band half actually needs to run (it checks
-      // its own marker first). A shared band is the coordinator's.
-      whenApplied = if (shared.isEmpty)
-        BandIndex.append(delta, idCol, textCol, bandPath,
+      // private band index (its own record lives inside BandIndex); a
+      // clean retry whose registry half short-circuited only sketches if
+      // the band half actually needs to run. A shared band is the
+      // coordinator's.
+      whenApplied = snap => if (sharedBandOf(snap).isEmpty) {
+        val band = LsmLayout.snapshot(spark, s"$path/band")
+        BandIndex.append(delta, idCol, textCol, band.root,
           batchId, writerEpoch = writerEpoch,
           preSketched =
-            if (LsmLayout.isApplied(spark, bandPath, batchId)) None
-            else Some(deltaSketch))) {
-      // fence BEFORE the first mutation: a superseded writer used to
-      // land its ledger generation before the first epoch check (the
-      // pre-existing write-then-fence pattern, extended to corpus
-      // text) — now it is rejected before touching any relation
+            if (band.isApplied(batchId)) None else Some(sketchFor(band)))
+      }) { snapNow =>
+      // fence BEFORE the first mutation: a superseded writer is
+      // rejected before touching any relation (its ledger generation
+      // would otherwise land before the commit's fence check)
       LsmLayout.requireCurrentEpoch(spark, path, writerEpoch)
-      shared.foreach(requireBandHolds(spark, path, _))
-      val metaRow = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-      val threshold = metaRow.getAs[Double]("threshold")
-      // MIGRATION NOTE: layouts built before the layout-owned ledger
-      // (round 15) carry no `ledger_buckets` in meta and no ledger/
-      // relation — delta-only ingest cannot rehydrate candidate text
-      // from them; fail with the remedy instead of an opaque getAs
-      require(metaRow.schema.fieldNames.contains("ledger_buckets"),
-        s"registry at $path predates the layout-owned text ledger " +
-          "(meta lacks ledger_buckets) — re-build the registry with " +
-          "ClusterRegistry.build to start an owned-ledger index life")
-      val ledgerBuckets = metaRow.getAs[Long]("ledger_buckets").toInt
-      // ONE snapshot resolution for the whole ingest: appends never
-      // flip the manifest (only compacts do, and the writer fence
-      // serializes those), so the ordinal, the probe's read scope and
-      // the fold below all see the same committed state.
-      val snapNow = LsmLayout.snapshot(spark, path)
+      val shared = sharedBandOf(snapNow)
+      val band = LsmLayout.snapshot(spark, shared.getOrElse(s"$path/band"))
+      shared.foreach(_ => requireBandHolds(snapNow, band))
+      lazy val deltaSketch = sketchFor(band)
+      val threshold = snapNow.constant("threshold").toDouble
+      val ledgerBuckets = snapNow.constant("ledger_buckets").toInt
       // append the delta's text to the layout-owned ledger (its own
       // batch-keyed generation — dynamic overwrite, so a partial first
       // attempt is replaced bit-for-bit on retry). Runs CONCURRENTLY
-      // with the probe below: the probe reads the ledger EXCLUDING
-      // this generation (explicit live-generation paths), so the
+      // with the probe below: the probe reads the record's committed
+      // ledger generations (explicit paths), never this one, so the
       // write's target directory is invisible to every concurrent
       // read — the replay input is the state before the batch either
       // way, appended or mid-append.
@@ -507,63 +447,47 @@ object ClusterRegistry {
         // discipline): while the ledger is small, one full text scan
         // beats the pruning machinery's fixed cost (the dynamic-
         // pruning subquery + bucket-keyed join), so the hint engages
-        // only past the threshold — measured: the un-gated hint cost
-        // ~+3.5 s per small-corpus ingest for a scan it could not
-        // meaningfully shrink. The live names are listed ONCE and feed
-        // both the read and the byte gate.
-        val ledgerLive = LsmLayout.liveGenerationNames(
-          spark, s"$path/ledger", "batch=", snapNow.ledgerView)
-          .filterNot(_ == batchId)
-        val corpus = ledgerFromNames(spark, path, ledgerLive, snapNow)
+        // only past the threshold.
+        val corpus = ledgerScoped(spark, path, snapNow)
           .select(col("doc_id").as(idCol), col("text").as(textCol),
             col("bucket").as("graft__lbucket"))
         val ledgerBytes = LsmLayout.dirBytes(spark, s"$path/ledger",
-          ledgerLive, "batch=")
+          snapNow.liveIn(s"$path/ledger"), "batch=")
         val bucketHint =
           if (ledgerBytes > LsmLayout.rehydrationPruneBytes)
             Some(("graft__lbucket",
               (id: org.apache.spark.sql.Column) =>
                 ledgerBucket(id, ledgerBuckets)))
           else None
-        // the generation number = the metadata-monotone ingest ordinal
-        // (shared spelling): never restarts at a compact — folded names
-        // accumulate in the snapshot, so the ordinal keeps counting and
-        // stays ALIGNED with the coordinator's other layouts even when
-        // one layout compacts independently under maintain() — identical
-        // under retry (own dir excluded), and never a data scan
-        val nextGen = LsmLayout.committedGenerationOrdinal(
-          spark, s"$path/assignments", "batch=", snapNow, batchId)
-        // the registry state as of BEFORE this batch: a marker-less
-        // replay would otherwise read its own (possibly partial) first
-        // attempt's generation — e.g. an already-applied merge re-map —
-        // and recompute a DIFFERENT row set, which the dynamic overwrite
-        // would then replace the full generation with (dropping the
-        // re-map). Excluding the batch's own partition makes the replay
-        // input identical to the first attempt's, so the overwrite is a
-        // bit-for-bit replacement. (The same discipline as the band
-        // probe's excludeGen below and the KMV gen derivation.)
-        val reg = assignmentsScoped(spark, path, Some(batchId),
-          snapOpt = Some(snapNow))
+        // the generation number = the record's ingest ordinal: never
+        // restarts at a compact, so it stays ALIGNED with the
+        // coordinator's other layouts even when one layout compacts
+        // independently under maintain() — identical under retry, and
+        // never a data scan
+        val nextGen = snapNow.ordinal + 1L
+        // the registry state as of BEFORE this batch: the record names
+        // only committed generations, so a replay never reads its own
+        // (possibly partial) first attempt's generation — e.g. an
+        // already-applied merge re-map — and recomputes the first
+        // attempt's row set bit for bit
+        val reg = assignmentsScoped(spark, path, snapNow,
+          persistOverlay = true)
         // delta ↔ indexed-corpus pairs, corpus side collapsed to its
         // cluster id; the probe skips this batch's own (possibly
         // partially appended) band generation so replays are
         // deterministic
         // materialized ONCE (the ingest's operation scope releases the
         // checkpoint): the edge list feeds BOTH the component
-        // resolution and the absorbed-cluster remap below — un-shared,
-        // `touched` re-executed the entire probe pipeline (band join,
-        // prefilter, ledger rehydration, exact verify) a second time per
-        // ingest (measured: ~1.5 s of the 6 s sf0.1 ingest wall).
+        // resolution and the absorbed-cluster remap below.
         // CHECKPOINTED, not persisted: a persisted frame is keyed by its
         // plan, and a write committing under a path the plan reads makes
         // Spark's cache manager drop the cached rows (`recacheByPath`) —
         // this batch's ledger append does, and on a shared band so does
-        // the coordinator's concurrent band append — after which the
-        // remap re-ran the whole probe pipeline (s59/s60 at sf0.1: 11-19
-        // extra stage jobs). A checkpoint's plan names no path.
+        // the coordinator's concurrent band append. A checkpoint's plan
+        // names no path.
         val (edgesDC, _, _) = IterationCheckpoint.localCounted(
-          BandIndex.probe(
-            corpus, delta, idCol, textCol, bandPath, threshold,
+          BandIndex.probeAt(band,
+            corpus, delta, idCol, textCol, threshold,
             excludeGen = Some(batchId), preSketched = Some(deltaSketch),
             corpusBucket = bucketHint)
             .join(reg.withColumnRenamed("doc_id", "corpus_id"),
@@ -571,28 +495,24 @@ object ClusterRegistry {
             .select(col("delta_id").as("u"), col("cluster_id").as("v")))
         val edgesDD = MinHashNearDup
           .pairsFromSketched(deltaSketch, threshold,
-            numHashes = bandMeta._1)
+            numHashes = BandIndex.metaOf(band)._1)
           .select(col("id_a").as("u"), col("id_b").as("v"))
         val comp = Materialize.shared(DedupClusters.components(
           edgesDC.unionByName(edgesDD), "u", "v"))
         // index the batch into the private band CONCURRENTLY with the
         // assignment-generation work below: the two touch disjoint
         // relations (band/sigs+postings vs assignments), and the band
-        // append commits its own applied marker after its own writes,
-        // so every crash interleaving is one the marker-gated retry
-        // already repairs. Launched HERE, not with the ledger append:
-        // the gen-write window below is commit-latency-bound, so the
-        // band's two delta-sized writes hide in it for free, whereas an
-        // earlier launch contends with the probe/components chain's
-        // CPU-bound critical path (a back-to-back drill read the early
-        // launch ~0.2 s/ingest slower; the variants sit within the
-        // box's noise band, so the non-contending site stays).
-        // Safe consumption of the shared delta sketch either way — a
+        // append commits its own record after its own writes, so every
+        // crash interleaving is one the record-gated retry already
+        // repairs. Launched HERE, not with the ledger append: the
+        // gen-write window below is commit-latency-bound, so the band's
+        // two delta-sized writes hide in it, whereas an earlier launch
+        // contends with the probe/components chain. Safe consumption of the shared delta sketch either way — a
         // racing first consumer computes cached partitions once under
         // the block manager's per-block lock (the lazy val itself
         // synchronizes initialization).
         if (shared.isEmpty) bandFut = Some(Overlap.future(spark)(
-          BandIndex.append(delta, idCol, textCol, bandPath, batchId,
+          BandIndex.append(delta, idCol, textCol, band.root, batchId,
             writerEpoch = writerEpoch, preSketched = Some(deltaSketch))))
         // delta assignments: component min if paired, else singleton
         val deltaAssign = delta.select(col(idCol).as("doc_id"))
@@ -611,25 +531,21 @@ object ClusterRegistry {
           .join(broadcast(remapTargets), Seq("cluster_id"))
           .select(col("doc_id"), col("comp").as("cluster_id"))
         // the (delta+absorbed-sized) generation is written DIRECTLY:
-        // its plan reads only explicit live-generation paths that
-        // exclude this batch's own partition, and the dynamic
+        // its plan reads only explicit committed generation paths,
+        // never this batch's own partition, and the dynamic
         // overwrite replaces only batch=<id> — read and write sets are
         // disjoint by construction (the compact() ledger-fold
-        // argument). The old eager checkpoint paid one extra
-        // materialization pass per ingest to exclude a hazard the
-        // explicit-path read shape already excludes; the heavy
-        // subtrees (edges, components, the fold overlay) are persisted
-        // above, so the write job re-executes none of them.
+        // argument); the edges and components are materialized above.
         LsmLayout.writeGeneration(
           deltaAssign.unionByName(remapRows)
             .withColumn("gen", lit(nextGen))
             .withColumn("batch", lit(batchId)),
           s"$path/assignments", "batch")
         // the ledger AND private band generations must be committed
-        // before the batch is marked applied (the marker asserts EVERY
-        // registry relation — assignments, ledger, private band — holds
-        // the batch; the band await costs nothing extra here, its writes
-        // overlapped the gen-write window)
+        // before the batch's record (it asserts EVERY registry relation
+        // — assignments, ledger, private band — holds the batch; the
+        // band await costs nothing extra here, its writes overlapped the
+        // gen-write window)
         Overlap.await(ledgerFut)
         bandFut.foreach(Overlap.await)
       } catch {
@@ -656,11 +572,8 @@ object ClusterRegistry {
     * assignment share prices the stored text's dead mass too. */
   def deadRowStats(spark: SparkSession, path: String): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/assignments", "batch=", snap)
     LsmLayout.deadRowStats(spark, path, snap,
-      LsmLayout.readGenerations(
-        spark, s"$path/assignments", "batch=", live)
+      LsmLayout.readLive(spark, snap, s"$path/assignments", "batch=")
         .select(col("doc_id")),
       "doc_id")
   }
@@ -678,7 +591,7 @@ object ClusterRegistry {
       writerEpoch: Option[Long] = None): Unit = {
     LsmLayout.tombstoneIds(forgetIds, idCol, "doc_id", path, batchId,
       writerEpoch)
-    // the probe side must forget too (its own marker, under band/)
+    // the probe side must forget too (its own record, under band/)
     if (sharedBand(forgetIds.sparkSession, path).isEmpty)
       BandIndex.tombstone(forgetIds, idCol, s"$path/band", batchId,
         writerEpoch = writerEpoch)
@@ -695,7 +608,7 @@ object ClusterRegistry {
     * now-applied tombstones) visible, and only directories the
     * PREVIOUS snapshot had already stopped referencing are deleted, so
     * a reader holding either snapshot sees exactly the pre- or
-    * post-compact answer. Applied markers are KEPT (a late retry of a
+    * post-compact answer. Applied batches are KEPT (a late retry of a
     * folded batch must still no-op). `writerEpoch` fences the flip and
     * the GC (a superseded writer's compact could otherwise silently
     * drop the new owner's GDPR tombstones). Restores the read fold to
@@ -722,13 +635,13 @@ object ClusterRegistry {
       rels = Seq((s"$path/assignments", "batch=")),
       secondary = Seq((s"$path/ledger", "batch="))) { fold =>
       Seq(() => LsmLayout.writeGeneration(
-        assignmentsScoped(spark, path, None, snapOpt = Some(fold.snap))
+        assignmentsScoped(spark, path, fold.snap)
           .withColumn("gen", lit(0L))
           .withColumn("batch", lit(fold.newBase)),
         s"$path/assignments", "batch")) ++
       (if (fold.foldSecondary)
         Seq(() => LsmLayout.writeGeneration(
-          ledgerScoped(spark, path, None, fold.snap)
+          ledgerScoped(spark, path, fold.snap)
             .repartition(col("bucket"))
             .withColumn("batch", lit(fold.newBase)),
           s"$path/ledger", "batch", "bucket"))

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * everywhere.
   *
   * IDEMPOTENT UNDER PARTIAL FAILURE by construction: every per-layout
-  * forget is already marker-gated (`_applied/ts-<batchId>` under its
-  * own path — the [[LsmLayout]] at-least-once contract), so a
+  * forget is already record-gated (`ts-<batchId>` applied in its own
+  * commit record — the [[LsmLayout]] at-least-once contract), so a
   * coordinator crash between layouts is repaired by re-running the
-  * SAME call: layouts that committed no-op on their markers, layouts
+  * SAME call: layouts that committed no-op on their records, layouts
   * the crash skipped apply now. The s55 oracle gates exactly that
   * (two layouts "crash-applied" individually, then the coordinator
   * completes and replays).
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * layout probes that layout instead of keeping a private copy, and the
   * band branch of every call here owns its appends, tombstones and
   * compacts. [[ingest]], [[forget]], [[compact]] and [[maintain]] check
-  * up front that `layouts.band` is the band the registry's meta names
+  * up front that `layouts.band` is the band the registry's record names
   * (a registry with a private band may run beside any band layout).
   *
   * Each fan-out ([[ingest]], [[forget]], [[compact]], [[maintain]]) is
@@ -94,7 +94,7 @@ object CorpusLifecycle {
     requireSharedBand(forgetDocs.sparkSession, layouts)
     val ids = forgetDocs.select(col(idCol))
     // the six per-layout forgets touch disjoint paths and are each
-    // marker-gated — fan them out CONCURRENTLY (Overlap settles every
+    // record-gated — fan them out CONCURRENTLY (Overlap settles every
     // branch before surfacing a failure, so an error mid-fan-out
     // leaves exactly the partial state the retry contract repairs)
     Materialize.scoped(Overlap.all(forgetDocs.sparkSession)(
@@ -120,7 +120,7 @@ object CorpusLifecycle {
     * the sixth silently MISSING the docs — every probe of that layout
     * under-serves, and no per-layout oracle can see it. One call, and
     * a retry with the same batch id, repairs any partial fan-out
-    * (every per-layout ingest is marker-gated, the [[LsmLayout]]
+    * (every per-layout ingest is record-gated, the [[LsmLayout]]
     * at-least-once contract).
     *
     * Per-layout contracts carried through: delta doc ids must be NEW;
@@ -155,13 +155,13 @@ object CorpusLifecycle {
     val spark = delta.sparkSession
     requireSharedBand(spark, layouts)
     Materialize.scoped {
-      // ONE delta sketch (with the band's own meta) for the band append
+      // ONE delta sketch (with the band's own constants) for the band append
       // and a registry probing that band: persisted here, lazily — the
       // first consumer inside the fan-out computes it, once, under the
       // block lock — and released with this call's scope. Each branch
       // persisting its own equal sketch would share one cache entry
       // (plan-keyed), which whichever branch ended first would drop. A
-      // band whose meta cannot be read gets no sketch: its branch fails
+      // band whose record cannot be read gets no sketch: its branch fails
       // on its own, as it would without one.
       val sketch = layouts.band.flatMap(b =>
         scala.util.Try(BandIndex.metaOf(spark, b)).toOption.map {
@@ -172,7 +172,7 @@ object CorpusLifecycle {
       val registrySketch = layouts.registry
         .flatMap(ClusterRegistry.sharedBand(spark, _)).flatMap(_ => sketch)
       // the six per-layout ingests touch disjoint paths and are each
-      // marker-gated — fan them out CONCURRENTLY: at bench scale each
+      // record-gated — fan them out CONCURRENTLY: at bench scale each
       // branch's wall is dominated by per-action fixed cost, and at
       // 100 TB the small layouts' commit latency hides behind the
       // registry's probe. Failure semantics are unchanged (Overlap
@@ -234,7 +234,7 @@ object CorpusLifecycle {
     * so the decision inputs are themselves spec/oracle-gated:
     *
     *  - `maxLiveGenerations` — any layout whose live generation count
-    *    (one listStatus) exceeds this compacts; this is also what
+    *    (from its commit record) exceeds this compacts; this is also what
     *    bounds the budget-guarded read-side broadcasts (overlay,
     *    tombstone lists), so size it with `broadcastBudgetBytes` in
     *    mind;
@@ -281,7 +281,7 @@ object CorpusLifecycle {
     * concentrated data stays concentrated after a retrain, so set the
     * threshold above the concentration the corpus actually has
     * (always ≥ 1/nlist by pigeonhole; the report shows the level).
-    * Decision inputs are metadata-sized (generation listings, the
+    * Decision inputs are metadata-sized (commit records, the
     * nlist-row cell stats) or narrow one-row reports (the dead-chunk
     * and dead-row scans — and the dead-row scans only run while a
     * forget is actually pending, from metadata alone otherwise); the
@@ -293,8 +293,8 @@ object CorpusLifecycle {
     import spark.implicits._
     requireSharedBand(spark, layouts)
     type Decision = (String, String, Double, Double, String)
-    def gens(p: String, dir: String, prefix: String): Int =
-      LsmLayout.liveGenerationCount(spark, p, dir, prefix)
+    def gens(p: String, dir: String): Int =
+      LsmLayout.liveGenerationCount(spark, p, dir)
     def genRule(name: String, n: Int)(run: => Unit): Decision = {
       val act = n > policy.maxLiveGenerations
       if (act) run
@@ -309,8 +309,7 @@ object CorpusLifecycle {
     def deadOrGenRule(
         name: String, p: String, liveGenerations: => Int,
         threshold: Double, stats: => DataFrame)(run: => Unit): Decision = {
-      val pending = LsmLayout.liveTombstoneBatches(
-        spark, p, LsmLayout.snapshot(spark, p)).nonEmpty
+      val pending = LsmLayout.snapshot(spark, p).pendingTombstones.nonEmpty
       val share =
         if (!pending) 0.0
         else {
@@ -332,12 +331,12 @@ object CorpusLifecycle {
     val decisions: Seq[(String, String, Double, Double, String)] =
       Materialize.scoped(Overlap.join(spark)(
       (layouts.registry.map(p => () =>
-        deadOrGenRule("registry", p, gens(p, s"$p/assignments", "batch="),
+        deadOrGenRule("registry", p, gens(p, s"$p/assignments"),
           policy.maxRegistryDeadShare,
           ClusterRegistry.deadRowStats(spark, p))(
           ClusterRegistry.compact(spark, p, epochOf(p)))) ++
       layouts.band.map(p => () =>
-        deadOrGenRule("band", p, gens(p, s"$p/sigs", "gen="),
+        deadOrGenRule("band", p, gens(p, s"$p/sigs"),
           policy.maxBandDeadShare, BandIndex.deadRowStats(spark, p))(
           BandIndex.compact(spark, p, epochOf(p)))) ++
       layouts.lexical.map(p => () =>
@@ -345,7 +344,7 @@ object CorpusLifecycle {
           policy.maxLexicalDeadShare, LexicalIndex.deadRowStats(spark, p))(
           LexicalIndex.compact(spark, p, epochOf(p)))) ++
       layouts.kmv.map(p => () =>
-        deadOrGenRule("kmv", p, gens(p, s"$p/sketches", "batch="),
+        deadOrGenRule("kmv", p, gens(p, s"$p/sketches"),
           policy.maxKmvDeadShare, KmvLayout.deadRowStats(spark, p))(
           KmvLayout.compact(spark, p, epochOf(p)))) ++
       layouts.ivf.map { p => () =>
@@ -356,7 +355,7 @@ object CorpusLifecycle {
           IvfLayout.retrain(spark, p, policy.ivfRetrainRounds,
             writerEpoch = epochOf(p))
           ("ivf", "max_cell_share", mx, policy.maxIvfCellShare, "retrain")
-        } else genRule("ivf", gens(p, s"$p/vectors", "gen="))(
+        } else genRule("ivf", gens(p, s"$p/vectors"))(
           IvfLayout.compact(spark, p, epochOf(p)))
       } ++
       layouts.chunks.map { p => () =>
@@ -368,7 +367,7 @@ object CorpusLifecycle {
           ChunkStore.compact(spark, p, epochOf(p))
           ("chunks", "dead_chunk_share", share,
             policy.maxChunkDeadShare, "compact")
-        } else genRule("chunks", gens(p, s"$p/manifest", "gen="))(
+        } else genRule("chunks", gens(p, s"$p/manifest"))(
           ChunkStore.compact(spark, p, epochOf(p)))
       }).toSeq))
     decisions
@@ -486,8 +485,7 @@ object CorpusLifecycle {
           served(BandIndex.signatures(spark, p), "doc_id"))
       } ++
       layouts.lexical.map { p =>
-        val w = LexicalIndex.layoutConstants(
-          spark, p, LsmLayout.snapshot(spark, p))._1
+        val w = LexicalIndex.layoutConstants(LsmLayout.snapshot(spark, p))._1
         diff("lexical", ref.filter(col("graft__ntok") >= w),
           served(LexicalIndex.postings(spark, p), "doc_id"))
       } ++
@@ -519,10 +517,9 @@ object CorpusLifecycle {
     *
     * Generation numbers ALIGN across coordinated layouts by
     * construction: every layout derives them through the SAME
-    * metadata-monotone ingest ordinal (`committedGenerationOrdinal` —
-    * folded names accumulate in the snapshot, so the ordinal never
-    * restarts at a compact, even one layout compacting INDEPENDENTLY
-    * under [[maintain]]), all start at 0 at build, and [[ingest]]
+    * ingest ordinal of their commit records (it never restarts at a
+    * compact, even one layout compacting INDEPENDENTLY under
+    * [[maintain]]), all start at 0 at build, and [[ingest]]
     * delivers every batch to every configured layout — so "generation
     * g" names the same ingest everywhere, forever. The shared caveats:
     * GDPR tombstones apply to every pin (a delete reaches time-travel

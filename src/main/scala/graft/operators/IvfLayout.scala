@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    one id-list write and an anti-join on every read.
   *
   * Maintenance is idempotent per the shared contract (batch-keyed
-  * dynamic overwrite + applied markers; gated by s48's fault-injected
+  * dynamic overwrite + record commits; gated by s48's fault-injected
   * oracle), and `compactAfterGenerations` bounds directory growth
   * (the s46 policy).
   *
@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * read except the 16-row centroid table); a probe reads ≤ nprobe
   * cell directories of narrow vector rows and ends in TakeOrdered.
   * Centroids are plan-time metadata (nlist rows), collected driver-
-  * side like every other layout's meta row — not a data-path collect.
+  * side — not a data-path collect.
   */
 object IvfLayout {
 
@@ -47,12 +47,10 @@ object IvfLayout {
       vecs: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Seq[Seq[Double]]): Unit = {
     val spark = vecs.sparkSession
-    LsmLayout.startIndexLife(spark, path) {
-      LsmLayout.deleteDir(spark, s"$path/centroids")
+    LsmLayout.startIndexLife(spark, path, relations(path)) {
       // the cell-assigned vectors and the literal centroid table are
       // disjoint relations — write them concurrently (the build
-      // discipline shared across the stored layouts; a crashed partial
-      // build was never servable in any ordering)
+      // discipline shared across the stored layouts)
       Overlap.all(spark)(
         () => LsmLayout.writeRelation(
           vecs
@@ -74,13 +72,7 @@ object IvfLayout {
     * snapshot flip that changes the quantizer ([[retrain]]) writes a
     * new table; flips that keep it ([[compact]]) carry it forward
     * under the new base name; superseded tables are GC'd one cycle
-    * later like every other generation.
-    *
-    * MIGRATION NOTE: layouts written before the gen-versioned table
-    * (flat `centroids/`) must be re-[[build]]t — there is no lazy
-    * fallback by design (a flat table cannot say which base it pairs
-    * with, which is the exact ambiguity the versioning removes). All
-    * harness artifacts are regenerated per run. */
+    * later like every other generation. */
   private def centroidDir(path: String, base: String): String =
     s"$path/centroids/gen=$base"
 
@@ -119,9 +111,9 @@ object IvfLayout {
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/vectors", "gen=",
-      compact(spark, path, _)) {
-      val cents = centroidsOf(spark, path, LsmLayout.snapshot(spark, path))
+      compactAfterGenerations, Seq((s"$path/vectors", "gen=")),
+      compact(spark, path, _)) { snap =>
+      val cents = centroidsOf(spark, path, snap)
       LsmLayout.writeGeneration(
         delta
           .withColumn("cell",
@@ -143,7 +135,7 @@ object IvfLayout {
       writerEpoch)
 
   /** Fold generations to one and drop tombstoned vectors physically;
-    * markers kept, forget-set retired (the shared compact contract).
+    * applied batches kept, forget-set retired (the shared compact contract).
     * SNAPSHOT-ATOMIC for concurrent readers: new immutable base
     * generation + one manifest flip + one-cycle-deferred GC;
     * `writerEpoch` fences the flip and the GC. */
@@ -240,9 +232,13 @@ object IvfLayout {
       spark: SparkSession, path: String, writerEpoch: Option[Long])(
       swap: LsmLayout.Fold => Unit): Unit =
     LsmLayout.snapshotCompact(spark, path, writerEpoch,
-      Seq((s"$path/vectors", "gen="), (s"$path/centroids", "gen="))) { fold =>
+      relations(path)) { fold =>
       Seq(() => swap(fold))
     }
+
+  /** The vectors and the centroid tables: both fold at every compact. */
+  private def relations(path: String) =
+    Seq((s"$path/vectors", "gen="), (s"$path/centroids", "gen="))
 
   private def writeVectors(
       path: String, fold: LsmLayout.Fold, rows: DataFrame): Unit =
@@ -257,14 +253,10 @@ object IvfLayout {
     vectorsScoped(spark, path, LsmLayout.snapshot(spark, path))
 
   private def vectorsScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/vectors", "gen=", snap)
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
     LsmLayout.antiJoinTombstones(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/vectors", "gen=", live)
-        .drop("gen"),
+      LsmLayout.readLive(spark, snap, s"$path/vectors", "gen=").drop("gen"),
       "vec_id")
-  }
 
   /** The retrain-decision report (the `deadChunkStats` pattern on the
     * ANN side): per-cell occupancy of the LIVE index — tombstones
@@ -332,10 +324,7 @@ object IvfLayout {
     // prune new-quantizer cells over old-quantizer assignments
     val snap = LsmLayout.snapshot(spark, path)
     val probes = probeCellsOf(spark, path, query, nprobe, snap)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/vectors", "gen=", snap)
-    val base = LsmLayout
-      .readGenerations(spark, s"$path/vectors", "gen=", live)
+    val base = LsmLayout.readLive(spark, snap, s"$path/vectors", "gen=")
       .filter(col("cell").isin(probes.map(_.toLong): _*))
     val scoped = LsmLayout.antiJoinTombstones(spark, path, snap, base, "vec_id")
     excludeId.fold(scoped)(id => scoped.filter(col("vec_id") =!= id))

@@ -31,19 +31,16 @@ import org.apache.spark.sql.functions._
   *    partitioned by `batch` — one row per doc per maintenance batch;
   *    `gen` is the monotone generation number [[sketches]]' `asOf`
   *    snapshot reads filter on, `batch` the idempotency key;
-  *  - `meta/` one row (k, hash_salt) — self-describing (the
-  *    LexicalIndex lesson): a disagreeing caller k would silently
-  *    produce valid-looking but non-comparable sketches;
+  *  - the build constants (k, hash_salt) in the commit record —
+  *    self-describing: a disagreeing caller k would silently produce
+  *    valid-looking but non-comparable sketches;
   *  - `tombstones/` (doc_id) partitioned by delete batch — the forget
   *    set every read anti-joins (GDPR deletes apply to ALL reads,
   *    including time-travel snapshots).
   *
-  * IDEMPOTENT maintenance under at-least-once delivery (shared via
-  * [[LsmLayout]]): [[refresh]]/[[tombstone]] key their writes by the
-  * caller's batch id with dynamic partition overwrite + an applied
-  * marker; the generation number is derived EXCLUDING the batch's own
-  * partition, so a retry after a partial first attempt re-stamps the
-  * same gen. Single-writer maintenance loop assumed (foreachBatch).
+  * IDEMPOTENT maintenance under at-least-once delivery (the
+  * [[LsmLayout]] contract); the generation number is the record's next
+  * ingest ordinal, so a retry re-stamps the same gen.
   *
   * Serving reads fold generations and answer overlap matrices entirely
   * from the stored layout: the folded relation is groups-sized, the
@@ -75,30 +72,22 @@ object KmvLayout {
       docs: DataFrame, groupCol: String, idCol: String, textCol: String,
       path: String, k: Int = 64, salt: String = "kmvl:"): Unit = {
     val spark = docs.sparkSession
-    LsmLayout.startIndexLife(spark, path) {
-      // the sketch table and the one-row literal meta are disjoint —
-      // write them concurrently (the build discipline shared across the
-      // stored layouts; a crashed partial build was never servable in
-      // any ordering)
-      Overlap.all(spark)(
-        () => LsmLayout.writeRelation(
-          docSketches(docs, groupCol, idCol, textCol, salt, k)
-            .withColumn("gen", lit(0L))
-            .withColumn("batch", lit(BaseBatch)),
-          s"$path/sketches", "batch"),
-        () => LsmLayout.writeRelation(
-          spark.range(1)
-            .select(lit(k.toLong).as("k"), lit(salt).as("hash_salt")),
-          s"$path/meta"))
+    LsmLayout.startIndexLife(spark, path, sketchRelation(path),
+      Map("k" -> k, "hash_salt" -> salt)) {
+      LsmLayout.writeRelation(
+        docSketches(docs, groupCol, idCol, textCol, salt, k)
+          .withColumn("gen", lit(0L))
+          .withColumn("batch", lit(BaseBatch)),
+        s"$path/sketches", "batch")
     }
   }
 
   /** Delta refresh: sketch the delta ONLY (per doc) and write its
     * generation — delta-sized work; the mergeability law makes the
-    * folded read exact. The generation number is the max over OTHER
-    * batches + 1, so an at-least-once retry re-stamps the same gen and
-    * the dynamic overwrite replaces rather than duplicates; a
-    * committed batch no-ops on its marker. */
+    * folded read exact. The generation number is the next ingest
+    * ordinal, so an at-least-once retry re-stamps the same gen and the
+    * dynamic overwrite replaces rather than duplicates; a committed
+    * batch no-ops on its record. */
   def refresh(
       delta: DataFrame, groupCol: String, idCol: String, textCol: String,
       path: String, batchId: String,
@@ -109,23 +98,16 @@ object KmvLayout {
     // compact (per-row gens are preserved through the fold), so the
     // threshold is purely a file-hygiene knob here
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/sketches", "batch=",
-      compact(spark, path, _)) {
-      val m = LsmLayout.cachedMetaRow(spark, s"$path/meta")
-      val (k, salt) = (m.getAs[Long]("k").toInt, m.getAs[String]("hash_salt"))
-      // the metadata-monotone ingest ordinal (shared spelling): never
-      // restarts at a compact — so pins stay unambiguous across compact
-      // boundaries and aligned with the coordinator's other layouts —
-      // excludes this batch's own (possibly partial) partition so a
-      // retry re-stamps the same gen, and replaces the old max(gen)
-      // AGGREGATE over the stored sketches (a data read per refresh)
-      // with one listStatus
-      val nextGen = LsmLayout.committedGenerationOrdinal(
-        spark, s"$path/sketches", "batch=",
-        LsmLayout.snapshot(spark, path), batchId)
+      compactAfterGenerations, sketchRelation(path),
+      compact(spark, path, _)) { snap =>
+      // the record's ingest ordinal: never restarts at a compact — so
+      // pins stay unambiguous across compact boundaries and aligned with
+      // the coordinator's other layouts — and a retry re-stamps the same
+      // gen, with no data read
       LsmLayout.writeGeneration(
-        docSketches(delta, groupCol, idCol, textCol, salt, k)
-          .withColumn("gen", lit(nextGen))
+        docSketches(delta, groupCol, idCol, textCol,
+          snap.constant("hash_salt"), snap.constant("k").toInt)
+          .withColumn("gen", lit(snap.ordinal + 1L))
           .withColumn("batch", lit(batchId)),
         s"$path/sketches", "batch")
     }
@@ -140,7 +122,7 @@ object KmvLayout {
     * survivors; a group whose docs are all forgotten leaves the
     * matrix). [[compact]] later drops the rows physically. Idempotent
     * at both levels (already-tombstoned ids filtered; batch partition
-    * overwrites itself; committed batch no-ops on its marker). */
+    * overwrites itself; committed batch no-ops on its record). */
   def tombstone(
       forgetIds: DataFrame, idCol: String,
       path: String, batchId: String,
@@ -155,7 +137,7 @@ object KmvLayout {
     * fold, so `asOf` keeps resolving membership exactly across any
     * number of compacts (what physically leaves is tombstoned rows —
     * GDPR outranks pins, the s43 rule).
-    * Applied markers are kept so late retries of folded batches
+    * Applied batches are kept so late retries of folded batches
     * still no-op. SNAPSHOT-ATOMIC for concurrent readers (the shared
     * discipline): new immutable base generation + one manifest flip +
     * one-cycle-deferred GC; `writerEpoch` fences the flip and the GC. */
@@ -171,7 +153,7 @@ object KmvLayout {
     // here is membership-exact, not merely post-compact (gated by the
     // s43 oracle, which now compacts between the refresh and the pin).
     LsmLayout.snapshotCompact(spark, path, writerEpoch,
-      Seq((s"$path/sketches", "batch="))) { fold =>
+      sketchRelation(path)) { fold =>
       Seq(() => LsmLayout.writeGeneration(
         fold.checkpointed(docRowsScoped(spark, path, fold.snap)
           .select(col("group"), col("doc_id"), col("sk"), col("gen")))
@@ -187,10 +169,8 @@ object KmvLayout {
     * it. One narrow doc_id scan over the live generations. */
   def deadRowStats(spark: SparkSession, path: String): DataFrame = {
     val snap = LsmLayout.snapshot(spark, path)
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/sketches", "batch=", snap)
     LsmLayout.deadRowStats(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/sketches", "batch=", live)
+      LsmLayout.readLive(spark, snap, s"$path/sketches", "batch=")
         .select(col("doc_id")),
       "doc_id")
   }
@@ -202,23 +182,20 @@ object KmvLayout {
   def servedDocIds(
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
-    val rows = docRows(spark, path)
+    val rows = docRowsScoped(spark, path, LsmLayout.snapshot(spark, path))
     asOf.fold(rows)(g => rows.filter(col("gen") <= g))
       .select(col("doc_id")).distinct()
   }
 
-  /** The stored per-doc sketch rows, tombstones applied. */
-  private def docRows(spark: SparkSession, path: String): DataFrame =
-    docRowsScoped(spark, path, LsmLayout.snapshot(spark, path))
-
+  /** The stored per-doc sketch rows of a record, tombstones applied. */
   private def docRowsScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout.liveGenerationNames(
-      spark, s"$path/sketches", "batch=", snap)
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
     LsmLayout.antiJoinTombstones(spark, path, snap,
-      LsmLayout.readGenerations(spark, s"$path/sketches", "batch=", live),
+      LsmLayout.readLive(spark, snap, s"$path/sketches", "batch="),
       "doc_id")
-  }
+
+  /** The one relation every build, refresh and compact writes. */
+  private def sketchRelation(path: String) = Seq((s"$path/sketches", "batch="))
 
   /** The folded logical sketch relation: one row per group, the
     * surviving per-doc sketches merged by re-sketching the union of
@@ -232,8 +209,9 @@ object KmvLayout {
   def sketches(
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
-    val k = LsmLayout.cachedMetaRow(spark, s"$path/meta").getAs[Long]("k").toInt
-    val base = docRows(spark, path)
+    val snap = LsmLayout.snapshot(spark, path)
+    val k = snap.constant("k").toInt
+    val base = docRowsScoped(spark, path, snap)
     asOf.fold(base)(g => base.filter(col("gen") <= g))
       .select(col("group"), explode(col("sk")).as("graft__h"))
       .groupBy(col("group"))
@@ -247,7 +225,7 @@ object KmvLayout {
   def overlapMatrix(
       spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
-    val k = LsmLayout.cachedMetaRow(spark, s"$path/meta").getAs[Long]("k").toInt
+    val k = LsmLayout.snapshot(spark, path).constant("k").toInt
     val sk = sketches(spark, path, asOf)
     sk.select(col("group").as("source_a"), col("sk").as("graft__ska"))
       .join(broadcast(

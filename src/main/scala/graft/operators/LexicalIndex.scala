@@ -25,11 +25,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   *    onto each posting so no probe needs a second doc table: `ns`
   *    (distinct-gram count) serves Jaccard, `dl` (token length) and
   *    `tf` (within-doc occurrences) serve BM25.
-  *  - `meta/` one row per generation (n_docs, n_tokens, buckets,
-  *    shingle_n) — the corpus sizes the idf ratio and the BM25 length
-  *    normalization need (counted over documents, not postings: docs
-  *    shorter than the shingle width have no postings but still
-  *    count), and the layout constants.
+  *  - `meta/` one row per generation (n_docs, n_tokens) — the corpus
+  *    sizes the idf ratio and the BM25 length normalization need
+  *    (counted over documents, not postings: docs shorter than the
+  *    shingle width have no postings but still count). The layout
+  *    constants (shingle_n, buckets) are in the commit record.
   *
   * Document frequency is not stored: a shingle's df is the length of
   * its LIVE posting list (postings minus pending tombstones), which
@@ -87,10 +87,9 @@ object LexicalIndex {
     // a rebuild starts a fresh index life (stale tombstones would
     // silently exclude rebuilt postings while the fresh meta still
     // counts them)
-    LsmLayout.startIndexLife(spark, path) {
-      // a tree written by an older layout version also holds a stored
-      // `lexicon/` (shingle → df) relation, which nothing reads anymore
-      LsmLayout.deleteDir(spark, s"$path/lexicon")
+    LsmLayout.startIndexLife(spark, path,
+      Seq((s"$path/meta", "gen="), (s"$path/postings", "gen=")),
+      Map("shingle_n" -> n, "buckets" -> buckets)) {
       // meta/ counts the DOCS, not the postings (docs shorter than the
       // shingle width have no postings but still count), so its corpus
       // scan runs CONCURRENTLY with the postings write
@@ -100,7 +99,7 @@ object LexicalIndex {
             .withColumn("gen", lit(BaseGen))),
           s"$path/postings", "gen", "bucket"),
         () => LsmLayout.writeRelation(
-          metaGeneration(docs, textCol, n, buckets, BaseGen, identity),
+          metaGeneration(docs, textCol, BaseGen, identity),
           s"$path/meta", "gen"))
     }
   }
@@ -110,37 +109,24 @@ object LexicalIndex {
     * the idempotency contract (see [[refresh]]). */
   private val BaseGen = "base"
 
-  /** The committed LIVE generations of the layout — what the
-    * auto-compaction policies count: the live meta generations (one per
-    * build, refresh and forget batch; physical dirs additionally hold
-    * superseded generations awaiting GC) that [[countedGeneration]]
+  /** What the auto-compaction policies count: the live meta generations
+    * (one per build, refresh and forget batch) that [[countedGeneration]]
     * selects. */
   private[graft] def generationCount(
-      spark: SparkSession, path: String): Int =
-    LsmLayout.liveGenerationCount(spark, path, s"$path/meta",
-      counted = countedGeneration(spark, path))
+      spark: SparkSession, path: String): Int = {
+    val snap = LsmLayout.snapshot(spark, path)
+    snap.liveIn(s"$path/meta").count(countedGeneration(path)(snap, _))
+  }
 
   /** Whether the live meta generation `g` counts as a generation: the
     * base, every forget batch, and every refresh batch that appended
     * postings. A refresh whose docs are all shorter than the shingle
     * width adds a meta row but nothing a probe scans, so it does not
     * count. */
-  private def countedGeneration(spark: SparkSession, path: String)(
-      g: String): Boolean =
+  private def countedGeneration(path: String)(
+      snap: LayoutSnapshot, g: String): Boolean =
     LsmLayout.isBaseName(g) || g.startsWith("ts-") ||
-      LsmLayout.dirExists(spark, s"$path/postings/gen=$g")
-
-  /** One relation of a layout, scoped to a SNAPSHOT's live generations
-    * — superseded base generations and folded generations awaiting GC
-    * are invisible (reading them would double-count every posting and
-    * meta sum after a compact). */
-  private def scopedRel(
-      spark: SparkSession, path: String, rel: String,
-      snap: LayoutSnapshot): DataFrame = {
-    val live = LsmLayout
-      .liveGenerationNames(spark, s"$path/$rel", "gen=", snap)
-    LsmLayout.readGenerations(spark, s"$path/$rel", "gen=", live)
-  }
+      snap.liveIn(s"$path/postings").contains(g)
 
   /** The live postings generations of a snapshot (the second fold
     * track), tombstoned rows included. A layout may have none — a build
@@ -149,9 +135,7 @@ object LexicalIndex {
     * forgotten — and then reads as empty. */
   private def livePostings(
       spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
-    LsmLayout.readGenerations(spark, s"$path/postings", "gen=",
-      LsmLayout.liveGenerationNames(
-        spark, s"$path/postings", "gen=", snap.ledgerView),
+    LsmLayout.readLive(spark, snap, s"$path/postings", "gen=",
       Some(PostingsSchema))
 
   /** The columns a postings generation read returns: the file columns
@@ -205,34 +189,27 @@ object LexicalIndex {
       (col("n_docs").cast("double") / col("df").cast("double")))
       .cast("long")
 
-  /** The LOGICAL meta row (n_docs, n_tokens, buckets, shingle_n):
-    * counters sum across generations; the layout constants are
-    * identical in every generation row. */
-  def metaRow(spark: SparkSession, path: String): DataFrame =
-    metaRowScoped(spark, path, LsmLayout.snapshot(spark, path))
-
-  private def metaRowScoped(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
-    scopedRel(spark, path, "meta", snap)
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_tokens")).as("n_tokens"),
-        max(col("buckets")).as("buckets"),
-        max(col("shingle_n")).as("shingle_n"))
-
-  /** The layout CONSTANTS (shingle_n, buckets) — identical in every
-    * meta generation row by construction, so they read from the
-    * snapshot's BASE generation only, through the driver-side
-    * fingerprint cache (one listStatus on a hit; the parquet read job
-    * only on first touch or after a compact/rebuild rewrites the
-    * base). Every maintenance call used to pay a full
-    * `metaRow().head()` Spark job just to re-learn these build-time
-    * constants. The summed counters (n_docs/n_tokens) are generational
-    * and keep reading live via [[metaRow]]. */
-  private[operators] def layoutConstants(
-      spark: SparkSession, path: String, snap: LayoutSnapshot): (Int, Int) = {
-    val row = LsmLayout.cachedMetaRow(spark, s"$path/meta", Some(snap.base))
-    (row.getAs[Long]("shingle_n").toInt, row.getAs[Long]("buckets").toInt)
+  /** The LOGICAL meta row (n_docs, n_tokens, buckets, shingle_n): the
+    * counters summed across the live generations, and the layout
+    * constants. */
+  def metaRow(spark: SparkSession, path: String): DataFrame = {
+    val snap = LsmLayout.snapshot(spark, path)
+    val (n, buckets) = layoutConstants(snap)
+    metaCounters(spark, path, snap)
+      .withColumn("buckets", lit(buckets.toLong))
+      .withColumn("shingle_n", lit(n.toLong))
   }
+
+  /** (n_docs, n_tokens) summed across a record's live meta generations. */
+  private def metaCounters(
+      spark: SparkSession, path: String, snap: LayoutSnapshot): DataFrame =
+    LsmLayout.readLive(spark, snap, s"$path/meta", "gen=")
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_tokens")).as("n_tokens"))
+
+  /** The layout constants (shingle_n, buckets) from the commit record. */
+  private[operators] def layoutConstants(snap: LayoutSnapshot): (Int, Int) =
+    (snap.constant("shingle_n").toInt, snap.constant("buckets").toInt)
 
   /** Driver-side shingling of a LITERAL query string — the serving
     * path's query side is plan-time constants, not a data scan. Same
@@ -269,22 +246,22 @@ object LexicalIndex {
       path: String,
       queryText: String,
       k: Int): DataFrame = {
-    // ONE snapshot resolution for the whole probe — meta and postings
-    // must read the SAME committed state even if a compact flips the
-    // manifest mid-planning
+    // ONE record resolution for the whole probe — constants, meta and
+    // postings must read the SAME committed state even if a compact
+    // commits mid-planning
     val snap = LsmLayout.snapshot(spark, path)
     // shingle width and bucket count are properties of the STORED
-    // layout — read them from meta (constants, driver-cached) rather
-    // than trusting caller parameters that would silently return empty
-    // or mis-pruned results on disagreement
-    val (n, buckets) = layoutConstants(spark, path, snap)
+    // layout — read them from its record rather than trusting caller
+    // parameters that would silently return empty or mis-pruned results
+    // on disagreement
+    val (n, buckets) = layoutConstants(snap)
     val qsh = literalShingles(queryText, n)
     require(qsh.nonEmpty, s"query shorter than the shingle width: $queryText")
     val qb = qsh.map(bucketOf(_, buckets)).distinct
     withDf(postingsScoped(spark, path, snap)
       .filter(col("bucket").isin(qb: _*))
       .filter(col("shingle").isin(qsh: _*)))
-      .crossJoin(broadcast(metaRowScoped(spark, path, snap)))
+      .crossJoin(broadcast(metaCounters(spark, path, snap)))
       .groupBy(col("doc_id"))
       .agg(sum(idfWeight).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -304,17 +281,11 @@ object LexicalIndex {
     * multi-delta: the serving answer from the refreshed index equals
     * the from-scratch rebuild over the union corpus).
     *
-    * IDEMPOTENT under at-least-once delivery (the foreachBatch retry
-    * contract — a failed micro-batch is re-run with the SAME batch id):
-    * every generation is keyed by the caller's `batchId` and written
-    * with dynamic partition overwrite, so a retry — whether the first
-    * attempt crashed mid-write or fully committed — REPLACES its own
-    * gen partitions instead of appending a duplicate that would
-    * silently inflate df/postings/meta. A fully-committed batch also
-    * leaves an `_applied/<batchId>` marker (written after the last
-    * write), so a clean retry skips both writes outright. Gated:
-    * n174 (refresh-with-retry ≡ rebuild through the served answer) and
-    * StreamingIndexSpec's batch-replay invariance.
+    * IDEMPOTENT under at-least-once delivery (the [[LsmLayout]]
+    * contract: a duplicated generation would silently inflate
+    * df/postings/meta). Gated: n174 (refresh-with-retry ≡ rebuild
+    * through the served answer) and StreamingIndexSpec's batch-replay
+    * invariance.
     *
     * `compactAfterGenerations` (0 = off) is the auto-compaction policy
     * for continuous ingest: when the committed meta generation count
@@ -332,16 +303,15 @@ object LexicalIndex {
       writerEpoch: Option[Long] = None): Unit = {
     val spark = delta.sparkSession
     LsmLayout.ingestBatch(spark, path, batchId, writerEpoch,
-      compactAfterGenerations, s"$path/meta", "gen=",
-      compact(spark, path, _), counted = countedGeneration(spark, path)) {
+      compactAfterGenerations,
+      Seq((s"$path/meta", "gen="), (s"$path/postings", "gen=")),
+      compact(spark, path, _), counted = countedGeneration(path)) { snap =>
       // the layout owns its shingle width and bucket count — caller-
       // supplied values that disagreed with the build would scatter the
       // delta into wrong directories or mix gram widths, silently
-      // corrupting every probe. Constants, so they come from the
-      // driver-side cache (no per-refresh meta read job).
-      val (n, buckets) = layoutConstants(
-        spark, path, LsmLayout.snapshot(spark, path))
-      // two disjoint relations — the writes overlap (the marker lands
+      // corrupting every probe
+      val (n, buckets) = layoutConstants(snap)
+      // two disjoint relations — the writes overlap (the record commits
       // after both settle)
       Overlap.all(spark)(
         () => writeBucketed(
@@ -349,7 +319,7 @@ object LexicalIndex {
             .withColumn("gen", lit(batchId)),
           s"$path/postings"),
         () => LsmLayout.writeGeneration(
-          metaGeneration(delta, textCol, n, buckets, batchId, identity),
+          metaGeneration(delta, textCol, batchId, identity),
           s"$path/meta", "gen"))
     }
   }
@@ -371,16 +341,14 @@ object LexicalIndex {
       .sortWithinPartitions(col("bucket"), col("shingle"))
 
   /** One meta generation row: the docs' counts through `signed` (a
-    * forget batch's generation is negated) plus the layout constants. */
+    * forget batch's generation is negated). */
   private def metaGeneration(
-      docs: DataFrame, textCol: String, n: Int, buckets: Int, gen: String,
+      docs: DataFrame, textCol: String, gen: String,
       signed: Column => Column): DataFrame =
     docs
       .agg(signed(count(lit(1))).as("n_docs"),
         signed(sum(size(split(col(textCol), " ")).cast("long")))
           .as("n_tokens"))
-      .withColumn("buckets", lit(buckets.toLong))
-      .withColumn("shingle_n", lit(n.toLong))
       .withColumn("gen", lit(gen))
 
   /** Right-to-be-forgotten deletes, LSM-style: the forget-set becomes a
@@ -399,21 +367,11 @@ object LexicalIndex {
     * pending, the anti-join would hide the re-ingested postings while
     * meta counted them).
     *
-    * IDEMPOTENT at two levels (the [[refresh]] discipline): (a) across
-    * DISTINCT delete batches, ids already tombstoned by an earlier
-    * batch are filtered out, so a logically re-delivered delete never
-    * subtracts meta twice; (b) within ONE batch under retry, the
-    * negated meta generation is keyed `ts-<batchId>` and the id list
-    * lands in its own `batch=<batchId>` partition, both written with
-    * dynamic overwrite — a retried partial attempt replaces its own
-    * partitions — and a fully-committed batch leaves an
-    * `_applied/ts-<batchId>` marker that makes the retry a no-op. The
-    * cross-batch filter reads the tombstone list EXCLUDING this batch's
-    * partition, so a lazy re-execution after this batch's own append
-    * cannot see its own ids (the self-read-after-write hazard the
-    * pre-generational spelling guarded with an eager checkpoint; the
-    * checkpoint is kept so the filtered set materializes once for both
-    * writes). */
+    * IDEMPOTENT at two levels ([[LsmLayout.forgetBatch]]): ids already
+    * tombstoned by an earlier batch are filtered out, so a logically
+    * re-delivered delete never subtracts meta twice, and a retried
+    * batch replaces its own `ts-<batchId>` meta generation and
+    * `batch=<batchId>` id list. */
   def tombstone(
       forgetDocs: DataFrame,
       idCol: String,
@@ -423,15 +381,14 @@ object LexicalIndex {
       writerEpoch: Option[Long] = None): Unit = {
     val spark = forgetDocs.sparkSession
     LsmLayout.forgetBatch(spark, path, batchId, writerEpoch, forgetDocs,
-      idCol, "doc_id") { (forget, snap) =>
-      val (n, buckets) = layoutConstants(spark, path, snap)
+      idCol, "doc_id", Seq((s"$path/meta", "gen="))) { (forget, _) =>
       // two disjoint relations from the checkpointed forget-set —
-      // overlap the writes (marker after both settle)
+      // overlap the writes (the record commits after both settle)
       Overlap.all(spark)(
         () => LsmLayout.writeTombstones(
           forget.select(col(idCol).as("doc_id")), path, batchId),
         () => LsmLayout.writeGeneration(
-          metaGeneration(forget, textCol, n, buckets, s"ts-$batchId", -_),
+          metaGeneration(forget, textCol, s"ts-$batchId", -_),
           s"$path/meta", "gen"))
     }
   }
@@ -460,9 +417,9 @@ object LexicalIndex {
     * folded postings (tombstoned docs dropped) with an un-folded meta
     * (which would skew every idf weight); directories only the previous
     * snapshot had stopped referencing are GC'd, so a reader holding
-    * either snapshot scans intact files. The `_applied` markers are
-    * KEPT: a late retry of a pre-compact batch must still no-op (its
-    * data survives inside the folded generation). `writerEpoch` fences
+    * either snapshot scans intact files. The applied batches are KEPT:
+    * a late retry of a pre-compact batch must still no-op (its data
+    * survives inside the folded generation). `writerEpoch` fences
     * the flip and the GC. The folds run WITHOUT eager checkpoints: each
     * reads explicit live-generation paths and writes only the
     * just-cleared gen=<newBase> directories, so read and write sets are
@@ -486,7 +443,7 @@ object LexicalIndex {
           s"$path/postings"))
       else Seq.empty) :+
         (() => LsmLayout.writeGeneration(
-          metaRowScoped(spark, path, fold.snap)
+          metaCounters(spark, path, fold.snap)
             .withColumn("gen", lit(fold.newBase)),
           s"$path/meta", "gen"))
     }
@@ -549,7 +506,7 @@ object LexicalIndex {
     val q = post.filter(col("doc_id") === queryDocId).select(col("shingle"))
     withDf(post.join(broadcast(q), Seq("shingle"), "left_semi"))
       .filter(col("doc_id") =!= queryDocId)
-      .crossJoin(broadcast(metaRowScoped(spark, path, snap)))
+      .crossJoin(broadcast(metaCounters(spark, path, snap)))
       .withColumn("graft__w", idfWeight)
   }
 

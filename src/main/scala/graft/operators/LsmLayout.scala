@@ -3,60 +3,73 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
-/** One committed SNAPSHOT of a stored layout — the tiny manifest the
-  * reader resolves ONCE and the compactor flips ATOMICALLY (one
-  * fail-if-exists file create), so maintenance is safe for concurrent
-  * READERS, not just fenced writers:
+/** One COMMIT RECORD of a stored layout (`_snap/<id>`): the whole
+  * committed state, so a reader resolves everything from the latest
+  * record — one listing of `_snap` and one tiny file read — and lists
+  * no relation directory. Every build, ingest, forget and compact the
+  * [[LsmLayout]] skeleton runs ends by committing record id+1 (one
+  * atomic temp-then-rename create), after its last data write and after
+  * the writer fence; a crash before that leaves the previous record, so
+  * the operation never happened for every reader.
   *
-  *  - `base` — the generation directory holding the current folded
-  *    base (the build writes `base`; every [[LsmLayout]] compact writes
-  *    a NEW immutable `base-<id>` directory and flips this pointer —
-  *    never an in-place rewrite a mid-compact reader could half-see);
-  *  - `folded` — generation names already folded into `base` by past
-  *    compacts; readers exclude them (their rows live on inside the
-  *    base), and they are physically deleted one compact cycle LATER
-  *    (a reader that resolved the previous snapshot may still be
-  *    scanning them — the s43 immutable-generation discipline);
-  *  - `appliedTs` — tombstone batches whose deletes the base already
-  *    applied physically; readers skip their anti-join, and the
-  *    directories are garbage-collected one cycle later.
+  *  - `base` — the base generation name of the last fold (`base` from a
+  *    build, `base-<id>` from the compact that committed record id; a
+  *    compact never rewrites a base in place);
+  *  - `live` — per relation (its directory name under the layout root,
+  *    `tombstones` included), the generation names a reader of this
+  *    record reads: a generation is live from the commit of the batch
+  *    that wrote it until a compact folds it;
+  *  - `retired` — per relation, the generations the last compact folded
+  *    (or, for tombstones, applied): no reader of this record reads them,
+  *    but a reader of the previous one may, so the NEXT compact deletes
+  *    them (the two-cycle removal contract);
+  *  - `applied` — the batch ids applied in this index life (ingest ids
+  *    and `ts-<id>` forgets): a retry of one is a no-op;
+  *  - `ordinal` — the ingest ordinal: ingests committed in this index
+  *    life, never restarting at a compact;
+  *  - `lastCompact` — the id of the record the last fold (the build or a
+  *    compact) committed; a compact deletes the records older than the
+  *    previous one's;
+  *  - `constants` — the build's layout constants (shingle width, bands,
+  *    buckets, …): a caller cannot disagree with the stored layout;
+  *  - `epoch` — the writer epoch that committed it (none when unfenced).
   *
-  * A layout with no snapshot file is exactly the state [[build]]
-  * leaves: base = "base", nothing folded, nothing applied — so the
-  * build path needs no manifest write and pre-snapshot layouts read
-  * unchanged. */
+  * `root` is where the record was read from; it is not stored. */
 private[graft] final case class LayoutSnapshot(
+    root: String,
     id: Long,
     base: String,
-    folded: Set[String],
-    appliedTs: Set[String],
-    ledgerBaseOpt: Option[String] = None,
-    ledgerFoldedOpt: Option[Set[String]] = None) {
+    live: Map[String, Seq[String]],
+    retired: Map[String, Seq[String]],
+    applied: Set[String],
+    ordinal: Long,
+    lastCompact: Long,
+    constants: Map[String, String],
+    epoch: Option[Long]) {
   /** The immutable base generation the NEXT compact writes. */
   def nextBase: String = s"base-${id + 1L}"
 
-  /** The SECOND fold track (the registry's text ledger, the lexical
-    * postings) keeps its own fold state: a compact may fold the small
-    * relations while SKIPPING the corpus-sized rewrite of the track
-    * (see [[LsmLayout.snapshotCompact]] — the track only MUST fold when
-    * pending tombstones have to leave it physically). Pre-split
-    * snapshots folded every relation together, so the track's fields
-    * default to the shared ones — old manifests read unchanged. */
-  def ledgerBase: String = ledgerBaseOpt.getOrElse(base)
-  def ledgerFolded: Set[String] = ledgerFoldedOpt.getOrElse(folded)
+  /** The live generation names of the relation directory `dir`. */
+  def liveIn(dir: String): Seq[String] =
+    live.getOrElse(LsmLayout.relationKey(root, dir), Seq.empty)
 
-  /** This snapshot re-keyed to the second track's fold state — what
-    * the track's reads/GC pass wherever the shared helpers expect
-    * `base`/`folded`. */
-  def ledgerView: LayoutSnapshot =
-    LayoutSnapshot(id, ledgerBase, ledgerFolded, appliedTs)
+  /** Tombstone batches a reader must still anti-join. */
+  def pendingTombstones: Seq[String] = live.getOrElse("tombstones", Seq.empty)
+
+  def isApplied(gen: String): Boolean = applied.contains(gen)
+
+  /** One build constant of the layout. */
+  def constant(key: String): String =
+    constants.getOrElse(key, throw new IllegalStateException(
+      s"the layout record at $root holds no build constant '$key'"))
 }
 
 /** The shared maintenance protocol of the six stored LSM layouts
   * ([[LexicalIndex]], [[BandIndex]], [[KmvLayout]], [[IvfLayout]],
-  * [[ChunkStore]], [[ClusterRegistry]]) — the at-least-once, snapshot
-  * and writer-epoch contract is written ONCE here, and each layout
-  * passes in only what is its own (its writes, its fold projections):
+  * [[ChunkStore]], [[ClusterRegistry]]) — the at-least-once, commit
+  * record and writer-epoch contract is written ONCE here, and each
+  * layout passes in only what is its own (its writes, its fold
+  * projections, its build constants):
   *
   *  - every incremental write is keyed by a CALLER-SUPPLIED batch id
   *    that becomes the generation's partition directory, written with
@@ -64,40 +77,29 @@ private[graft] final case class LayoutSnapshot(
   *    re-runs a failed micro-batch with the SAME id) REPLACES its own
   *    generation instead of appending a duplicate, whether the first
   *    attempt crashed mid-write or fully committed;
-  *  - a fully-committed batch leaves an `_applied/<gen>` marker file
-  *    (written AFTER the batch's last data write), so a clean retry
-  *    skips the work outright; markers survive compaction (a late
-  *    retry of a batch already folded into the compacted generation
-  *    must still no-op) and are cleared by a rebuild (a fresh index
-  *    life may reuse batch ids).
+  *  - a layout's state lives in ONE place, its latest commit record
+  *    ([[LayoutSnapshot]]): the applied batch ids, the live generations
+  *    of every relation, the ingest ordinal and the build constants.
+  *    A generation directory no record names is invisible (a crashed
+  *    attempt's partial write, a build that never committed), so a read
+  *    never lists a relation directory. Applied batches survive
+  *    compaction (a late retry of a batch already folded must still
+  *    no-op) and are cleared by a rebuild (a fresh index life may reuse
+  *    batch ids). A path with no record is no layout: reading it fails
+  *    and names the rebuild.
   *
-  * The skeleton (see "the maintenance skeleton" below) owns every step
-  * of that contract, so no layout can skip one:
-  *  - [[startIndexLife]] — the build preamble (tombstones, markers and
-  *    snapshots of the previous life cleared; epochs kept);
-  *  - [[ingestBatch]] — batch-id check, the marker check, then after
-  *    the layout's writes the FENCE and the MARKER ([[commitApplied]]),
-  *    then the auto-compact policy, which always compacts under the
-  *    caller's epoch;
-  *  - [[forgetBatch]] / [[tombstoneIds]] — marker check, the
-  *    already-pending filter, one counted checkpoint, the layout's
-  *    writes (skipped for an all-duplicate batch), then fence + marker
-  *    — on EVERY path, the all-duplicate one included;
-  *  - [[snapshotCompact]] — snapshot, fence, `nextBase`, stale-
-  *    generation clear, the layout's fold writes (overlapped), the
-  *    folded set, fence + COMMIT of the new manifest, then the GC; it
-  *    also owns the optional second fold track ([[foldDue]] and its
-  *    skip-path GC).
+  * The skeleton ([[startIndexLife]], [[ingestBatch]], [[forgetBatch]],
+  * [[snapshotCompact]]) owns every step of that contract, so no layout
+  * can skip one.
   *
   * Single-writer assumption: maintenance of one index path is driven
   * by one serialized loop (the foreachBatch contract) — concurrent
-  * writers would race the marker check and the generation numbering.
-  * The assumption is ENFORCED by the writer-epoch fence below
-  * ([[acquireWriterEpoch]]/[[requireCurrentEpoch]]): every layout's
-  * maintenance entry points accept an optional `writerEpoch`, and the
-  * skeleton re-checks it before every marker and every manifest commit,
-  * so a superseded loop fails loudly instead of corrupting silently
-  * (gated by WriterFencingSpec).
+  * writers would race the record ids. The assumption is ENFORCED by the
+  * writer-epoch fence below ([[acquireWriterEpoch]]/
+  * [[requireCurrentEpoch]]): every layout's maintenance entry points
+  * accept an optional `writerEpoch`, and the skeleton re-checks it
+  * before every commit, so a superseded loop fails loudly instead of
+  * corrupting silently (gated by WriterFencingSpec).
   *
   * Stored format: every relation a layout stores — build, generation,
   * fold and tombstone writes alike — goes through [[writeRelation]] or
@@ -105,10 +107,9 @@ private[graft] final case class LayoutSnapshot(
   * so the session's defaults are untouched): integer columns are
   * delta- or dictionary-coded (DELTA_BINARY_PACKED, RLE_DICTIONARY),
   * which stores the sorted band values, doc ids and signatures in
-  * fewer bytes than v1's plain pages. A tree whose older generations
-  * are v1 reads unchanged — the page version is per file. The query
-  * sinks keep the session's v1 pages and INT96 timestamps: they are
-  * what the DuckDB oracles read (see `graft.warehouse.Warehouse`).
+  * fewer bytes than v1's plain pages. The query sinks keep the
+  * session's v1 pages and INT96 timestamps: they are what the DuckDB
+  * oracles read (see `graft.warehouse.Warehouse`).
   */
 private[graft] object LsmLayout {
 
@@ -121,21 +122,6 @@ private[graft] object LsmLayout {
   def dirExists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** True iff a maintenance batch with this generation name fully
-    * committed in this index life. */
-  def isApplied(spark: SparkSession, path: String, gen: String): Boolean =
-    dirExists(spark, s"$path/_applied/$gen")
-
-  /** Every batch (ingest ids and `ts-` forget batches) whose marker is
-    * committed in this index life — one listStatus. */
-  def appliedBatches(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_applied")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filterNot(_.startsWith("."))
   }
 
   /** A layout path as a normalized absolute local path — what two
@@ -152,21 +138,12 @@ private[graft] object LsmLayout {
   def relativeLocation(base: String, target: String): String =
     location(base).relativize(location(target)).toString
 
-  def markApplied(spark: SparkSession, path: String, gen: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_applied/$gen")
-    createFresh(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-      .close()
-  }
-
-  /** Create `p` as a NEW inode: an existing file is deleted first, never
-    * truncated in place — a layout tree cloned with hard links
-    * (CorpusFixture) shares its files' inodes with the source tree, and
-    * an overwrite-create would truncate and chmod the source's file. */
-  private def createFresh(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FSDataOutputStream = {
-    fs.delete(p, false)
-    fs.create(p, false)
+  /** The key a record stores a relation under: its directory relative
+    * to the layout root. */
+  def relationKey(root: String, dir: String): String = {
+    require(dir.startsWith(root + "/"),
+      s"relation $dir is not under its layout root $root")
+    dir.substring(root.length + 1)
   }
 
   /** Generation-name hygiene: batch ids become partition directory
@@ -187,155 +164,130 @@ private[graft] object LsmLayout {
   def isBaseName(name: String): Boolean =
     name == "base" || name.startsWith("base-")
 
-  /** Generation directory NAMES under a layout relation (partition
-    * values, prefix stripped) — file-count-sized metadata (one
-    * listStatus), never a data read. The monotone-counter derivations
-    * (`nextGen` in the KMV/registry/chunk layouts) count these
-    * EXCLUDING the in-flight batch's own (possibly partial) directory,
-    * so an at-least-once retry re-derives the same number without
-    * scanning any stored data. */
-  def generationNames(
-      spark: SparkSession, dir: String,
-      prefix: String = "gen="): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map(_.getPath.getName.stripPrefix(prefix))
-  }
-
-  // ---- layout snapshots (snapshot-atomic compaction) ------------------
-  // The compact of every stored layout used to rewrite its `base`
-  // generation IN PLACE — correct under the single-process oracle
-  // harness, but a reader that opened the path mid-compact could fail
-  // on vanished files or fold a partial base. The snapshot discipline
-  // extends the immutable-generation idea (s43/s54) to the base itself:
-  // a compact WRITES a brand-new `base-<id>` generation (touching
-  // nothing a reader may hold), then FLIPS one tiny manifest file
-  // (`_snap/<id>`, fail-if-exists create — atomic), and only deletes
-  // directories the PREVIOUS snapshot had already stopped referencing —
-  // so any reader sees exactly the pre- or the post-compact state,
-  // never an error or a mix (gated by SnapshotCompactSpec's concurrent
-  // reader loop).
+  // ---- commit records --------------------------------------------------
+  // A record is a few `key=value` lines; readers take the highest id.
 
   private def snapDir(root: String) = s"$root/_snap"
 
-  /** The current committed snapshot of a layout — ONE metadata listing
-    * + one tiny file read; a layout that has never compacted (or was
-    * just rebuilt) resolves to the legacy build state. */
-  def snapshot(spark: SparkSession, root: String): LayoutSnapshot = {
+  private def recordIds(spark: SparkSession, root: String): Seq[Long] = {
     val dir = new org.apache.hadoop.fs.Path(snapDir(root))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return LegacySnapshot
-    val ids = fs.listStatus(dir).iterator
+    val listed =
+      try fs.listStatus(dir)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          Array.empty[org.apache.hadoop.fs.FileStatus]
+      }
+    listed.iterator
       .flatMap(s => scala.util.Try(s.getPath.getName.toLong).toOption)
       .toSeq
-    if (ids.isEmpty) LegacySnapshot
-    else {
-      val id = ids.max
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"${snapDir(root)}/$id"))
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val kv = body.linesIterator
-        .map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }
-        .toMap
-      def set(k: String): Set[String] =
-        kv.getOrElse(k, "").split(",").filter(_.nonEmpty).toSet
-      LayoutSnapshot(id, kv("base"), set("folded"), set("appliedTs"),
-        kv.get("lbase"), kv.get("lfolded").map(_ =>
-          set("lfolded")))
-    }
   }
 
-  /** The snapshot every un-compacted layout life starts in. */
-  val LegacySnapshot: LayoutSnapshot =
-    LayoutSnapshot(-1L, "base", Set.empty, Set.empty)
+  private def noRecord(root: String, why: String) =
+    new IllegalStateException(
+      s"no layout at $root: $why — a build that did not finish or a tree " +
+        "written before commit records; rebuild it with the layout's " +
+        "build (e.g. BandIndex.build)")
 
-  /** Atomically commit a new snapshot: the content is written to a
-    * temp name and RENAMED into place — a reader can never open a
-    * created-but-not-yet-written manifest (create-then-write showed up
-    * as an empty-file read under SnapshotCompactSpec's hammer). The
-    * temp name does not parse as a snapshot id, so readers ignore it;
-    * rename-refuses-to-overwrite keeps the fail-if-exists property
-    * (two compacts racing one layout IS the bug the writer fence
+  /** The latest committed record of a layout — one listing of `_snap` and
+    * one tiny file read. */
+  def snapshot(spark: SparkSession, root: String): LayoutSnapshot = {
+    val ids = recordIds(spark, root)
+    if (ids.isEmpty) throw noRecord(root, "no commit record under _snap")
+    val id = ids.max
+    val p = new org.apache.hadoop.fs.Path(s"${snapDir(root)}/$id")
+    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val body =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    val kv = body.linesIterator
+      .map(_.split("=", 2))
+      .collect { case Array(k, v) => k -> v }
+      .toMap
+    if (!Seq("base", "ordinal", "lastCompact").forall(kv.contains))
+      throw noRecord(root, s"_snap/$id is not a commit record")
+    def names(v: String): Seq[String] = v.split(",").filter(_.nonEmpty).toSeq
+    def keyed(prefix: String): Map[String, String] = kv.collect {
+      case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
+    }
+    LayoutSnapshot(root, id, kv("base"),
+      keyed("live.").map { case (k, v) => k -> names(v) },
+      keyed("retired.").map { case (k, v) => k -> names(v) },
+      names(kv.getOrElse("applied", "")).toSet,
+      kv("ordinal").toLong, kv("lastCompact").toLong, keyed("const."),
+      kv.get("epoch").map(_.toLong))
+  }
+
+  /** Atomically commit a record: the content is written to a temp name
+    * and RENAMED into place — a reader can never open a
+    * created-but-not-yet-written record (create-then-write showed up as
+    * an empty-file read under SnapshotCompactSpec's hammer). The temp
+    * name does not parse as a record id, so readers ignore it; the
+    * rename refuses an existing target, which keeps the fail-if-exists
+    * property (two writers racing one layout IS the bug the writer fence
     * exists to surface — loud error, not a retry case). */
   def commitSnapshot(
       spark: SparkSession, root: String, snap: LayoutSnapshot): Unit = {
     val fs = new org.apache.hadoop.fs.Path(snapDir(root))
       .getFileSystem(spark.sessionState.newHadoopConf())
+    def line(k: String, v: String) = {
+      require(!v.contains('\n'), s"record value of $k holds a line break")
+      s"$k=$v\n"
+    }
+    val body =
+      line("base", snap.base) + line("ordinal", snap.ordinal.toString) +
+        line("lastCompact", snap.lastCompact.toString) +
+        line("applied", snap.applied.toSeq.sorted.mkString(",")) +
+        snap.epoch.fold("")(e => line("epoch", e.toString)) +
+        Seq("live" -> snap.live, "retired" -> snap.retired).flatMap {
+          case (field, rels) => rels.toSeq.sortBy(_._1).collect {
+            case (r, g) if g.nonEmpty => line(s"$field.$r", g.mkString(","))
+          }
+        }.mkString +
+        snap.constants.toSeq.sorted.map { case (k, v) =>
+          line(s"const.$k", v)
+        }.mkString
     val tmp = new org.apache.hadoop.fs.Path(
       s"${snapDir(root)}/.tmp-${snap.id}")
-    val out = createFresh(fs, tmp)
-    try out.write(
-      (s"base=${snap.base}\n" +
-        s"folded=${snap.folded.toSeq.sorted.mkString(",")}\n" +
-        s"appliedTs=${snap.appliedTs.toSeq.sorted.mkString(",")}\n" +
-        snap.ledgerBaseOpt.fold("")(b => s"lbase=$b\n") +
-        snap.ledgerFoldedOpt.fold("")(f =>
-          s"lfolded=${f.toSeq.sorted.mkString(",")}\n"))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // a NEW inode: a temp file a crashed commit left is deleted, never
+    // truncated in place — a layout tree cloned with hard links
+    // (CorpusFixture) shares its files' inodes with the source tree
+    fs.delete(tmp, false)
+    val out = fs.create(tmp, false)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val p = new org.apache.hadoop.fs.Path(s"${snapDir(root)}/${snap.id}")
-    // loud-collision check (best effort — POSIX rename overwrites
-    // silently; the writer-epoch fence is what actually serializes
-    // compacts, this turns a fence-less double-commit into an error)
-    if (fs.exists(p) || !fs.rename(tmp, p))
+    // the session's local file system, like HDFS, refuses a rename onto
+    // an existing file (a raw POSIX rename would overwrite it); the
+    // writer-epoch fence is what actually serializes writers, this turns
+    // a fence-less double-commit into an error
+    if (!fs.rename(tmp, p))
       throw new java.io.IOException(
-        s"snapshot ${snap.id} already committed at $root — two compacts " +
+        s"record ${snap.id} already committed at $root — two writers " +
           "raced this layout (single-writer fence violation)")
   }
 
-  /** The generation names a reader of THIS snapshot folds: the
-    * snapshot's base plus every non-base generation not yet folded
-    * into it. Superseded base generations and folded generations may
-    * still exist on disk (they are deleted one compact cycle later) —
-    * they are invisible here. */
-  def liveGenerationNames(
-      spark: SparkSession, dir: String, prefix: String,
-      snap: LayoutSnapshot): Seq[String] =
-    generationNames(spark, dir, prefix).filter(n =>
-      n == snap.base || (!isBaseName(n) && !snap.folded.contains(n)))
+  /** Take back the latest record, which must be the one that applied
+    * `gen`: the layout is then exactly as if that batch's data writes
+    * had landed and its commit had been lost — the crash the
+    * at-least-once replay repairs. */
+  def dropCommit(spark: SparkSession, root: String, gen: String): Unit = {
+    val snap = snapshot(spark, root)
+    require(snap.isApplied(gen), s"the latest record at $root did not apply $gen")
+    val p = new org.apache.hadoop.fs.Path(s"${snapDir(root)}/${snap.id}")
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, false)
+    require(!snapshot(spark, root).isApplied(gen),
+      s"$gen was applied before the latest record at $root")
+  }
 
-  /** The metadata-monotone INGEST ORDINAL for the next batch: 1 +
-    * (generations ever committed in this index life). Folded names
-    * accumulate in the snapshot across compacts and live non-base names
-    * cover the rest, so the number NEVER restarts at a compact — the
-    * old live-count spelling did, which (a) silently broke the
-    * cross-layout pin alignment the moment ONE layout compacted
-    * independently under `CorpusLifecycle.maintain` (its numbering
-    * restarted while its siblings' kept counting), and (b) made a
-    * generation number ambiguous across compact boundaries. Excludes
-    * the in-flight batch's own (possibly partial) directory so an
-    * at-least-once retry re-derives the same ordinal; one listStatus,
-    * never a data read. */
-  def committedGenerationOrdinal(
-      spark: SparkSession, dir: String, prefix: String,
-      snap: LayoutSnapshot, excludeBatch: String): Long =
-    1L + snap.folded.size +
-      liveGenerationNames(spark, dir, prefix, snap)
-        .count(n => n != snap.base && n != excludeBatch)
-
-  /** Live-generation count under the CURRENT snapshot — what an
-    * auto-compaction policy compares against its threshold (physical
-    * directory counts include superseded generations awaiting GC and
-    * would re-trip the policy forever). `counted` selects the
-    * generation names a layout's policy counts (default: all). */
+  /** Live-generation count of one relation under the current record —
+    * what an auto-compaction policy compares against its threshold.
+    * `counted` selects the generation names a layout's policy counts
+    * (default: all). */
   def liveGenerationCount(
       spark: SparkSession, root: String, dir: String,
-      prefix: String = "gen=", counted: String => Boolean = _ => true): Int =
-    liveGenerationNames(spark, dir, prefix, snapshot(spark, root))
-      .count(counted)
-
-  /** Tombstone batches a reader of this snapshot must still anti-join
-    * (batches the base already physically applied are skipped; their
-    * directories are GC'd one cycle later). */
-  def liveTombstoneBatches(
-      spark: SparkSession, root: String, snap: LayoutSnapshot): Seq[String] =
-    generationNames(spark, root + "/tombstones", "batch=")
-      .filterNot(snap.appliedTs.contains)
+      counted: String => Boolean = _ => true): Int =
+    snapshot(spark, root).liveIn(dir).count(counted)
 
   /** Read exactly the NAMED generation directories of a layout
     * relation (basePath keeps the partition column). This — not a
@@ -366,6 +318,13 @@ private[graft] object LsmLayout {
           .parquet(names.map(n => s"$dir/$prefix$n"): _*)
     }
 
+  /** The live generations of the relation `dir` under `snap`. */
+  def readLive(
+      spark: SparkSession, snap: LayoutSnapshot, dir: String, prefix: String,
+      empty: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    readGenerations(spark, dir, prefix, snap.liveIn(dir), empty)
+
   /** The pending forget-set under a snapshot — `None` when every
     * tombstone batch is already applied — plus its on-disk byte size:
     * the honest broadcast-budget input for the forget-path dedup joins
@@ -375,7 +334,7 @@ private[graft] object LsmLayout {
   def pendingTombstonesSized(
       spark: SparkSession, root: String,
       snap: LayoutSnapshot): Option[(DataFrame, Long)] = {
-    val live = liveTombstoneBatches(spark, root, snap)
+    val live = snap.pendingTombstones
     if (live.isEmpty) None
     else Some((
       readGenerations(spark, s"$root/tombstones", "batch=", live),
@@ -383,26 +342,20 @@ private[graft] object LsmLayout {
   }
 
   /** Anti-join the pending forget-set onto `frame` by `idName` — the
-    * read-side GDPR discipline, centralized: batches the snapshot's
-    * base already applied are skipped outright (no join in the plan),
-    * and the id list is broadcast only while its backing bytes fit
+    * read-side GDPR discipline, centralized: batches a compact already
+    * applied are not pending (no join in the plan), and the id list is
+    * broadcast only while its backing bytes fit
     * [[broadcastBudgetBytes]] — a forget storm between compacts falls
     * back to a shuffle join instead of failing at the driver. */
   def antiJoinTombstones(
       spark: SparkSession, root: String, snap: LayoutSnapshot,
-      frame: DataFrame, idName: String): DataFrame = {
-    val live = liveTombstoneBatches(spark, root, snap)
-    if (live.isEmpty) frame
-    else {
-      val bytes = dirBytes(spark, s"$root/tombstones", live, "batch=")
-      frame.join(
-        hintBroadcast(
-          readGenerations(spark, s"$root/tombstones", "batch=", live)
-            .select(col(idName)),
-          bytes),
-        Seq(idName), "left_anti")
+      frame: DataFrame, idName: String): DataFrame =
+    pendingTombstonesSized(spark, root, snap) match {
+      case None => frame
+      case Some((ts, bytes)) =>
+        frame.join(hintBroadcast(ts.select(col(idName)), bytes),
+          Seq(idName), "left_anti")
     }
-  }
 
   /** One-row `(n_live, n_dead)` of `rows` against the snapshot's
     * PENDING forget-set — the shared dead-mass report (the
@@ -484,34 +437,6 @@ private[graft] object LsmLayout {
   def hintBroadcast(df: DataFrame, backingBytes: Long): DataFrame =
     if (backingBytes <= broadcastBudgetBytes) broadcast(df) else df
 
-  /** Delete directories no snapshot can reference anymore — run AFTER
-    * the new snapshot commits. Deletable now: generation directories
-    * the PREVIOUS snapshot had already folded (both snapshots exclude
-    * them), base generations superseded before the previous snapshot,
-    * and tombstone batches the previous snapshot had already applied.
-    * Directories the previous snapshot still referenced are KEPT for
-    * one more cycle — an in-flight reader may have resolved it. */
-  def gcSuperseded(
-      spark: SparkSession, root: String,
-      relDirs: Seq[(String, String)],
-      prev: LayoutSnapshot, next: LayoutSnapshot): Unit = {
-    relDirs.foreach { case (dir, prefix) =>
-      generationNames(spark, dir, prefix).foreach { n =>
-        val superseded =
-          (isBaseName(n) && n != prev.base && n != next.base) ||
-            prev.folded.contains(n)
-        if (superseded) deleteDir(spark, s"$dir/$prefix$n")
-      }
-    }
-    prev.appliedTs.foreach(b =>
-      deleteDir(spark, s"$root/tombstones/batch=$b"))
-    // an emptied forget-set leaves no trace (the pre-snapshot
-    // "compact clears the tombstones dir" contract, one cycle later)
-    if (dirExists(spark, s"$root/tombstones") &&
-      generationNames(spark, s"$root/tombstones", "batch=").isEmpty)
-      deleteDir(spark, s"$root/tombstones")
-  }
-
   // ---- the maintenance skeleton ---------------------------------------
   // One spelling of the choreography every layout's build, ingest,
   // forget and compact shares; a layout passes in only its own writes.
@@ -519,24 +444,56 @@ private[graft] object LsmLayout {
   // "compact") keyed by the layout path, and one Materialize operation
   // scope: what the operation persists or checkpoints is released when
   // it returns or throws, after every write it issued has settled.
+  // Relations are named by their directory (`s"$path/postings"`) and the
+  // prefix of its generation partitions ("gen=" or "batch=").
 
   private def operation(name: String, path: String)(body: => Unit): Unit =
     Trace(name, path)(Materialize.scoped(body))
 
-  /** A build: a rebuild starts a fresh index life, then runs the
-    * layout's `build` writes. Pending tombstones of the previous life
-    * would hide rebuilt rows, its applied markers would skip the first
-    * batch reusing an old id, and its snapshot would point reads at a
-    * vanished base (the build's full overwrite wipes every generation,
-    * so the legacy snapshot is again exactly right). Writer epochs are
-    * kept (see the fence). */
-  def startIndexLife(spark: SparkSession, path: String)(
+  /** The record after an operation that wrote generation `gen` into the
+    * relations `written`: each relation whose `gen` directory exists
+    * (an empty write leaves none) lists it as live. */
+  private def withWritten(
+      spark: SparkSession, snap: LayoutSnapshot,
+      written: Seq[(String, String, String)]): Map[String, Seq[String]] =
+    snap.live ++ written.collect {
+      case (dir, prefix, gen) if dirExists(spark, s"$dir/$prefix$gen") =>
+        val key = relationKey(snap.root, dir)
+        key -> (snap.live.getOrElse(key, Seq.empty).filterNot(_ == gen) :+ gen)
+    }
+
+  /** The fence check, then the record — after the operation's last data
+    * write, so a superseded writer can never commit. */
+  private def commit(
+      spark: SparkSession, next: LayoutSnapshot,
+      writerEpoch: Option[Long]): Unit = {
+    requireCurrentEpoch(spark, next.root, writerEpoch)
+    commitSnapshot(spark, next.root, next)
+  }
+
+  /** A build: a rebuild starts a fresh index life — everything under
+    * `path` but the writer epochs is deleted (pending tombstones of the
+    * previous life would hide rebuilt rows, its applied batches would
+    * skip the first batch reusing an old id) — then the layout's `build`
+    * writes run, and record 0 commits the `base` generation of each of
+    * `rels` and the layout's `constants`. Until it commits, the path is
+    * no layout. */
+  def startIndexLife(
+      spark: SparkSession, path: String, rels: Seq[(String, String)],
+      constants: Map[String, Any] = Map.empty)(
       build: => Unit): Unit =
     operation("build", path) {
-      deleteDir(spark, s"$path/tombstones")
-      deleteDir(spark, s"$path/_applied")
-      deleteDir(spark, snapDir(path))
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(root))
+        fs.listStatus(root).filterNot(_.getPath.getName == "_writer")
+          .foreach(s => fs.delete(s.getPath, true))
       build
+      val empty = LayoutSnapshot(path, 0L, "base", Map.empty, Map.empty,
+        Set.empty, 0L, 0L, constants.map { case (k, v) => k -> v.toString },
+        None)
+      commitSnapshot(spark, path, empty.copy(live = withWritten(spark, empty,
+        rels.map { case (dir, prefix) => (dir, prefix, "base") })))
     }
 
   /** The one parquet writer of every stored layout relation — see
@@ -547,8 +504,7 @@ private[graft] object LsmLayout {
     if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)
   }
 
-  /** Replace the whole relation `dir` — a build's write (every
-    * generation of the previous index life goes with it). */
+  /** Replace the whole relation `dir` — a build's write. */
   def writeRelation(df: DataFrame, dir: String, partitionCols: String*): Unit =
     writer(df, partitionCols).parquet(dir)
 
@@ -560,85 +516,83 @@ private[graft] object LsmLayout {
       .option("partitionOverwriteMode", "dynamic")
       .parquet(dir)
 
-  /** The commit of one maintenance batch: the fence check, then the
-    * applied marker — after the batch's last data write, so a
-    * superseded writer can never mark a batch committed. */
-  def commitApplied(
-      spark: SparkSession, path: String, gen: String,
-      writerEpoch: Option[Long]): Unit = {
-    requireCurrentEpoch(spark, path, writerEpoch)
-    markApplied(spark, path, gen)
-  }
-
-  /** The s46 generation-count policy (`compactAfterGenerations`, 0 =
-    * off) over the LIVE generations of one relation (physical
-    * directories include superseded generations awaiting GC and would
-    * re-trip the policy forever). The compact always runs under the
-    * caller's writer epoch: a superseded writer must not overwrite the
-    * new owner's base or clear its tombstones. */
-  def autoCompact(
-      spark: SparkSession, path: String, dir: String, prefix: String,
-      compactAfterGenerations: Int, writerEpoch: Option[Long],
-      counted: String => Boolean = _ => true)(
-      compact: Option[Long] => Unit): Unit =
-    if (compactAfterGenerations > 0 &&
-      liveGenerationCount(spark, path, dir, prefix, counted) >
-        compactAfterGenerations)
-      compact(writerEpoch)
-
-  /** The applied-once ingest of one batch: unless the batch's marker
-    * exists, run the layout's `writes` and commit ([[commitApplied]]),
-    * else run `whenApplied`; then, on the fresh AND the already-applied
-    * path (a clean retry must still honor the budget), the
-    * [[autoCompact]] policy over the `counted` generations of the
-    * relation `dir`. */
+  /** The applied-once ingest of one batch: unless the record lists the
+    * batch as applied, run the layout's `writes` (which see the record
+    * they extend) and commit the batch — generation `batchId` of every
+    * relation in `rels`, the next ingest ordinal — else run
+    * `whenApplied`; then, on the fresh AND the already-applied path (a
+    * clean retry must still honor the budget), the s46 generation-count
+    * policy (`compactAfterGenerations`, 0 = off) over the `counted` live
+    * generations of the first relation in `rels`. The compact always
+    * runs under the caller's writer epoch: a superseded writer must not
+    * overwrite the new owner's base or clear its tombstones. */
   def ingestBatch(
       spark: SparkSession, path: String, batchId: String,
       writerEpoch: Option[Long], compactAfterGenerations: Int,
-      dir: String, prefix: String, compact: Option[Long] => Unit,
-      whenApplied: => Unit = (), counted: String => Boolean = _ => true)(
-      writes: => Unit): Unit =
+      rels: Seq[(String, String)], compact: Option[Long] => Unit,
+      whenApplied: LayoutSnapshot => Unit = _ => (),
+      counted: (LayoutSnapshot, String) => Boolean = (_, _) => true)(
+      writes: LayoutSnapshot => Unit): Unit =
     operation("ingest", path) {
       requireValidBatchId(batchId)
-      if (!isApplied(spark, path, batchId)) {
-        writes
-        commitApplied(spark, path, batchId, writerEpoch)
-      } else whenApplied
-      autoCompact(spark, path, dir, prefix, compactAfterGenerations,
-        writerEpoch, counted)(compact)
+      val snap = snapshot(spark, path)
+      val now =
+        if (!snap.isApplied(batchId)) {
+          writes(snap)
+          val next = snap.copy(id = snap.id + 1L,
+            live = withWritten(spark, snap,
+              rels.map { case (dir, prefix) => (dir, prefix, batchId) }),
+            applied = snap.applied + batchId, ordinal = snap.ordinal + 1L,
+            epoch = writerEpoch)
+          commit(spark, next, writerEpoch)
+          next
+        } else {
+          whenApplied(snap)
+          snap
+        }
+      if (compactAfterGenerations > 0 &&
+        now.liveIn(rels.head._1).count(counted(now, _)) >
+          compactAfterGenerations)
+        compact(writerEpoch)
     }
 
   /** The forget batch `ts-<batchId>`, idempotent at both levels: a
-    * committed batch no-ops on its marker; otherwise `forget` loses the
-    * rows whose `storedId` is already pending in ANOTHER batch (read
-    * excluding this batch's own, possibly partial, partition — so a
-    * re-delivered delete never applies twice and a retry recomputes the
-    * same set), is checkpointed and counted once (the operation scope
-    * releases the checkpoint), and the layout's
-    * `writes` get the fresh rows — keyed `idName` — and the snapshot
-    * the filter read. An all-duplicate batch writes nothing (an empty
-    * parquet write would leave a schemaless directory that breaks the
-    * tombstone read) but still commits through the fence. */
+    * committed batch no-ops on its record; otherwise `forget` loses the
+    * rows whose `storedId` is already pending (an uncommitted attempt's
+    * own tombstones are not pending, so a retry recomputes the same
+    * set), is checkpointed and counted once (the operation scope
+    * releases the checkpoint), and the layout's `writes` get the fresh
+    * rows — keyed `idName` — and the record the filter read. The commit
+    * lists the batch's tombstone generation `batchId` and generation
+    * `ts-<batchId>` of each of `rels`. An all-duplicate batch writes
+    * nothing (an empty parquet write would leave a schemaless directory
+    * that breaks the tombstone read) but still commits through the
+    * fence. */
   def forgetBatch(
       spark: SparkSession, path: String, batchId: String,
       writerEpoch: Option[Long], forget: DataFrame, idName: String,
-      storedId: String)(
+      storedId: String, rels: Seq[(String, String)] = Seq.empty)(
       writes: (DataFrame, LayoutSnapshot) => Unit): Unit =
     operation("forget", path) {
       requireValidBatchId(batchId)
       val gen = s"ts-$batchId"
-      if (!isApplied(spark, path, gen)) {
-        val snap = snapshot(spark, path)
+      val snap = snapshot(spark, path)
+      if (!snap.isApplied(gen)) {
         val fresh = pendingTombstonesSized(spark, path, snap) match {
           case None => forget
           case Some((ts, bytes)) => forget.join(
-            hintBroadcast(ts.filter(col("batch") =!= batchId)
-              .select(col(storedId).as(idName)), bytes),
+            hintBroadcast(ts.select(col(storedId).as(idName)), bytes),
             Seq(idName), "left_anti")
         }
         val (rows, _, n) = IterationCheckpoint.localCounted(fresh)
         if (n > 0L) writes(rows, snap)
-        commitApplied(spark, path, gen, writerEpoch)
+        val written =
+          if (n == 0L) Seq.empty
+          else (s"$path/tombstones", "batch=", batchId) +:
+            rels.map { case (dir, prefix) => (dir, prefix, gen) }
+        commit(spark, snap.copy(id = snap.id + 1L,
+          live = withWritten(spark, snap, written),
+          applied = snap.applied + gen, epoch = writerEpoch), writerEpoch)
       }
     }
 
@@ -676,7 +630,7 @@ private[graft] object LsmLayout {
     pendingTs.nonEmpty || liveGenerations > SecondaryFoldAfterGenerations
 
   /** What a layout's fold writes see inside [[snapshotCompact]]: the
-    * snapshot being folded, the new base name to write, whether the
+    * record being folded, the new base name to write, whether the
     * second track folds this time, and a checkpoint whose blocks the
     * compact's operation scope releases. */
   final class Fold private[LsmLayout] (
@@ -691,27 +645,24 @@ private[graft] object LsmLayout {
   }
 
   /** The snapshot-atomic compact every layout shares: resolve the
-    * snapshot, check the fence, pick `nextBase`, clear what a CRASHED
+    * record, check the fence, pick `nextBase`, clear what a CRASHED
     * earlier attempt may have left under that name (the rewrite uses a
     * deterministic name with dynamic overwrite — if state changed
     * between attempts, the retry's rows may not cover every partition
     * the first attempt wrote, and the uncovered stale rows would be
-    * served after the commit; no committed snapshot references the
-    * name yet, so the delete is invisible to readers), run the layout's
+    * served after the commit; no committed record references the name
+    * yet, so the delete is invisible to readers), run the layout's
     * `folds` (independent relation writes, overlapped; the function
     * itself runs on the calling thread, so eager work it does before
-    * returning precedes every write), record the folded generations,
-    * check the fence again and COMMIT the new manifest, then GC what
-    * only the PREVIOUS snapshot had stopped referencing.
+    * returning precedes every write), then check the fence again and
+    * COMMIT the record — each folded relation live as its new base, the
+    * folded generations and the pending tombstones retired — and GC what
+    * the PREVIOUS compact retired, with the records older than it.
     *
     * `rels` fold on every compact. `secondary` relations form the
-    * second fold track (their own base and folded set in the manifest):
-    * they fold only when [[foldDue]] — the fold sees
-    * `foldSecondary` — and a skipped track keeps its base and live
-    * generations, readable unfolded, while its GC still runs against
-    * the track's own state, so a skip history keeps the two-cycle
-    * removal contract. Tombstone batches pending at the start are
-    * retired by the commit. */
+    * second fold track: they fold only when [[foldDue]] — the fold sees
+    * `foldSecondary` — and a skipped track keeps its live generations,
+    * readable unfolded. */
   def snapshotCompact(
       spark: SparkSession, root: String, writerEpoch: Option[Long],
       rels: Seq[(String, String)],
@@ -723,107 +674,54 @@ private[graft] object LsmLayout {
     (secondary ++ rels).foreach { case (dir, prefix) =>
       deleteDir(spark, s"$dir/$prefix$newBase")
     }
-    val liveTs = liveTombstoneBatches(spark, root, snap)
-    val secondaryLive = secondary.flatMap { case (dir, prefix) =>
-      liveGenerationNames(spark, dir, prefix, snap.ledgerView)
-    }.distinct
     val fold = new Fold(snap, newBase,
-      secondary.nonEmpty && foldDue(liveTs, secondaryLive.size))
+      secondary.nonEmpty && foldDue(snap.pendingTombstones,
+        secondary.flatMap { case (dir, _) => snap.liveIn(dir) }.distinct.size))
     folds(fold) match {
       case Seq(only) => only()
       case many => Overlap.all(spark)(many: _*)
     }
-    val folded = snap.folded ++ rels.flatMap { case (dir, prefix) =>
-      liveGenerationNames(spark, dir, prefix, snap)
-    }.filterNot(_ == snap.base)
-    val next =
-      if (secondary.isEmpty)
-        LayoutSnapshot(snap.id + 1L, newBase, folded, snap.appliedTs ++ liveTs)
-      else {
-        val (sbase, sfolded) =
-          if (fold.foldSecondary)
-            (newBase, snap.ledgerFolded ++
-              secondaryLive.filterNot(_ == snap.ledgerBase))
-          else (snap.ledgerBase, snap.ledgerFolded)
-        LayoutSnapshot(snap.id + 1L, newBase, folded,
-          snap.appliedTs ++ liveTs, Some(sbase), Some(sfolded))
-      }
-    requireCurrentEpoch(spark, root, writerEpoch)
-    commitSnapshot(spark, root, next)
-    gcSuperseded(spark, root, rels, snap, next)
-    if (secondary.nonEmpty)
-      gcSuperseded(spark, root, secondary, snap.ledgerView, next.ledgerView)
+    val folded = rels ++ (if (fold.foldSecondary) secondary else Seq.empty)
+    val keys = folded.map { case (dir, _) => relationKey(root, dir) } :+
+      "tombstones"
+    val next = snap.copy(id = snap.id + 1L, base = newBase,
+      live = withWritten(spark,
+        snap.copy(live = snap.live ++ keys.map(_ -> Seq.empty)),
+        folded.map { case (dir, prefix) => (dir, prefix, newBase) }),
+      retired = keys.map(k => k -> snap.live.getOrElse(k, Seq.empty)).toMap,
+      lastCompact = snap.id + 1L, epoch = writerEpoch)
+    commit(spark, next, writerEpoch)
+    gcRetired(spark, snap, secondary ++ rels, snap.pendingTombstones)
+    recordIds(spark, root).filter(_ < snap.lastCompact).foreach(id =>
+      deleteDir(spark, s"${snapDir(root)}/$id"))
+  }
+
+  /** Delete the generations `snap`'s compact retired: no reader of `snap`
+    * or of any later record reads them. With no tombstone batch `kept`,
+    * the emptied forget-set leaves no directory behind. */
+  private def gcRetired(
+      spark: SparkSession, snap: LayoutSnapshot,
+      rels: Seq[(String, String)], kept: Seq[String]): Unit = {
+    ((s"${snap.root}/tombstones", "batch=") +: rels).foreach {
+      case (dir, prefix) =>
+        snap.retired.getOrElse(relationKey(snap.root, dir), Seq.empty)
+          .foreach(g => deleteDir(spark, s"$dir/$prefix$g"))
+    }
+    if (kept.isEmpty) deleteDir(spark, s"${snap.root}/tombstones")
   }
 
   /** A whole layout folded on the [[foldDue]] rule (the registry's
-    * private band index): `compact` when due; otherwise sweep what a
-    * second compact cycle would — directories only snapshots OLDER than
-    * the current one could reference — without a manifest flip, so
-    * physical removal keeps its two-cycle contract through skips. */
+    * private band index): `compact` when due; otherwise delete what the
+    * last compact retired — as a second compact cycle would, without a
+    * new record — so physical removal keeps its two-cycle contract
+    * through skips. */
   def compactWhenDue(
       spark: SparkSession, root: String, rels: Seq[(String, String)])(
       compact: => Unit): Unit = {
     val snap = snapshot(spark, root)
-    val live = rels.flatMap { case (dir, prefix) =>
-      liveGenerationNames(spark, dir, prefix, snap)
-    }.distinct
-    if (foldDue(liveTombstoneBatches(spark, root, snap), live.size)) compact
-    else gcSuperseded(spark, root, rels, snap, snap)
-  }
-
-  // ---- immutable-meta caching ----------------------------------------
-  // The band/registry/KMV/chunk layouts each write a ONE-ROW `meta/`
-  // relation at build time and never again within an index life — yet
-  // every ingest/refresh used to re-run a full parquet read JOB just to
-  // re-learn those constants (measured: a few hundred ms of fixed cost
-  // per maintenance call, dominating small-delta ingests). The cache
-  // holds ONE entry per meta relation, validated by the read
-  // directory's file fingerprint (part-file names carry a per-write
-  // UUID, so ANY rewrite — a rebuild at the same path — changes it),
-  // making a hit one metadata listing and a rebuild a natural
-  // invalidation; a layout whose constants live in a generation of the
-  // relation (the lexical base) replaces its entry when the base moves
-  // instead of leaving one dead entry per compact. Driver-side only,
-  // like every other plan-time constant.
-
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.Row)]()
-
-  private def metaFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).iterator
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .toSeq.sorted.mkString(";")
-  }
-
-  /** The single meta row of the relation `dir` — or of its generation
-    * `gen=<generation>` — cached against the read directory's file
-    * fingerprint: one listStatus on a hit, the parquet read job only on
-    * first touch or after a rewrite. Use ONLY for rows that are
-    * immutable within an index life (the build-time constant metas);
-    * generational sums (the lexical counters) must keep reading live. */
-  def cachedMetaRow(
-      spark: SparkSession, dir: String,
-      generation: Option[String] = None): org.apache.spark.sql.Row = {
-    val read = generation.fold(dir)(g => s"$dir/gen=$g")
-    val fp = s"$read|${metaFingerprint(spark, read)}"
-    val hit = metaCache.get(dir)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val row = spark.read.parquet(read).head()
-      metaCache.put(dir, (fp, row))
-      row
-    }
-  }
-
-  /** The meta relations the cache currently holds an entry for. */
-  private[graft] def cachedMetaDirs: Set[String] = {
-    val keys = Set.newBuilder[String]
-    metaCache.keys().asIterator().forEachRemaining(k => keys += k)
-    keys.result()
+    val live = rels.flatMap { case (dir, _) => snap.liveIn(dir) }.distinct
+    if (foldDue(snap.pendingTombstones, live.size)) compact
+    else gcRetired(spark, snap, rels, snap.pendingTombstones)
   }
 
   // ---- writer fencing -----------------------------------------------
@@ -833,19 +731,20 @@ private[graft] object LsmLayout {
   // from silent corruption into a loud error. A maintenance loop calls
   // [[acquireWriterEpoch]] ONCE at loop start and passes the epoch to
   // every maintenance call; each commit re-checks the fence immediately
-  // before its `_applied` marker, so a superseded writer can never mark
-  // a batch committed after a newer loop took over. (Its in-flight DATA
-  // write may already have landed — the new owner's re-delivery of the
-  // same micro-batch id overwrites that generation, per the dynamic-
-  // overwrite contract; what the fence guarantees is that the stale
-  // loop STOPS, loudly, instead of racing the marker check and the
-  // generation numbering forever.) Epochs are never cleared — not even
-  // by a rebuild — so a revived old loop stays fenced across index
-  // lives.
+  // before its record, so a superseded writer can never commit a batch
+  // after a newer loop took over. (Its in-flight DATA write may already
+  // have landed — the new owner's re-delivery of the same micro-batch id
+  // overwrites that generation, per the dynamic-overwrite contract; no
+  // record names it until then. What the fence guarantees is that the
+  // stale loop STOPS, loudly, instead of racing the record ids forever.)
+  // Epochs are never cleared — not even by a rebuild — so a revived old
+  // loop stays fenced across index lives. The epoch files stay separate
+  // from the records: their fail-if-exists create is the atomic step
+  // that serializes the writers themselves.
 
   /** Claim ownership of a layout path's maintenance: returns a fresh
     * epoch strictly greater than every epoch ever issued for the path.
-    * MUTUALLY EXCLUSIVE under races: the marker is created
+    * MUTUALLY EXCLUSIVE under races: the epoch file is created
     * fail-if-exists, so two replacement drivers that both computed
     * `latest + 1` cannot share an epoch — the loser re-lists and takes
     * the next number (and is then fenced by the winner's, or fences
@@ -879,7 +778,7 @@ private[graft] object LsmLayout {
       .foldLeft(0L)(math.max)
   }
 
-  /** The fence check every maintenance commit runs before its marker:
+  /** The fence check every maintenance commit runs before its record:
     * `None` (an unfenced caller — batch jobs, tests) passes; a fenced
     * caller whose epoch has been superseded throws instead of
     * committing. */

@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * Failure contract: [[join]]/[[all]] SETTLE every task (no write is
   * still in flight when the caller sees the error) and rethrow the
   * FIRST failure in declaration order — the same exception a
-  * sequential fan-out would have surfaced, so marker-gated retry
+  * sequential fan-out would have surfaced, so record-gated retry
   * semantics are unchanged: a failure mid-fan-out leaves a subset of
   * layouts applied, and the retry completes the rest (exactly the
   * partial-failure contract the coordinator specs pin). The interrupt

@@ -13,7 +13,7 @@ import graft.operators._
   * CLONED (a file-tree copy) into each oracle's own sink root before
   * the oracle mutates it. The registry is built on the fixture's
   * `band` layout (`ClusterRegistry.build(sharedBand = ...)`): one band
-  * index per corpus, no private `registry/band` copy; its meta names
+  * index per corpus, no private `registry/band` copy; its record names
   * the band relative to the root, so a clone probes its own `band`.
   *
   * Why (the r15 bench adjudication): every coordination oracle used to
@@ -37,7 +37,8 @@ import graft.operators._
   * run re-prices one build. The key's `base3-v<n>` suffix names the
   * tree's layout format: a change to what the builds write (v2: the
   * shared band; v3: no stored lexical lexicon; v4: v2 data pages and
-  * sorted lexical and band postings) bumps it, so an older
+  * sorted lexical and band postings; v5: commit records instead of
+  * `meta/` relations and applied markers) bumps it, so an older
   * cached tree is swept and rebuilt instead of cloned.
   */
 object CorpusFixture {
@@ -74,7 +75,7 @@ object CorpusFixture {
     val src = new java.io.File(sfDir, "documents.parquet")
     val fp = java.lang.Long.toHexString(
       src.length * 1000003L ^ src.lastModified)
-    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v4"
+    s"target/sinks/_fixture/${new java.io.File(sfDir).getName}-$fp-base3-v5"
   }
 
   /** Build the fixture if its `_done` marker is absent (or `rebuild`);

@@ -1291,7 +1291,7 @@ object NorthStar {
     // applied to the s23 layout): build on 90% of the vectors, refresh
     // with the rest — assigned by the STORED centroids, written as a
     // batch-keyed generation — with the batch retried clean AND
-    // replayed marker-less. A duplicated generation would duplicate
+    // replayed commit-less. A duplicated generation would duplicate
     // candidate rows straight into the top-k; the oracle computes the
     // probe answer over the FULL vector set from scratch, so
     // refresh∘retry∘replay ≡ rebuild through the served ranking.
@@ -1318,10 +1318,10 @@ object NorthStar {
         path, cents)
       graft.operators.IvfLayout.refresh(
         delta, "vec_id", "embedding", path, batchId = "b1")
-      // clean retry, then a marker-less partial-failure replay
+      // clean retry, then a commit-less partial-failure replay
       graft.operators.IvfLayout.refresh(
         delta, "vec_id", "embedding", path, batchId = "b1")
-      new java.io.File(s"$path/_applied/b1").delete()
+      graft.operators.LsmLayout.dropCommit(s, path, "b1")
       graft.operators.IvfLayout.refresh(
         delta, "vec_id", "embedding", path, batchId = "b1")
       val qv = emb.filter(col("vec_id") === 2)
@@ -7890,7 +7890,7 @@ object NorthStar {
     // refresh with the other half — the delta's manifests append and
     // ONLY content-new chunks join the store (edit-sized growth, the
     // n169 claim as a maintained layout) — with the b1 batch retried
-    // clean AND replayed marker-less (the n174/n175 fault injection; a
+    // clean AND replayed commit-less (the n174/n175 fault injection; a
     // duplicated store generation would duplicate every reconstruction
     // row through the manifest⋈store join). The oracle reconstructs
     // every doc from the raw text — refresh∘retry ≡ one-shot build,
@@ -7923,10 +7923,10 @@ object NorthStar {
         maskBits = 4)
       graft.operators.ChunkStore.refresh(
         delta, "doc_id", "text", path, batchId = "b1")
-      // clean retry, then a marker-less partial-failure replay
+      // clean retry, then a commit-less partial-failure replay
       graft.operators.ChunkStore.refresh(
         delta, "doc_id", "text", path, batchId = "b1")
-      new java.io.File(s"$path/_applied/b1").delete()
+      graft.operators.LsmLayout.dropCommit(s, path, "b1")
       graft.operators.ChunkStore.refresh(
         delta, "doc_id", "text", path, batchId = "b1")
       graft.operators.ChunkStore.reconstruct(s, path)
@@ -8454,9 +8454,9 @@ object NorthStar {
     // foreachBatch re-delivers a failed micro-batch with the SAME batch
     // id — the failure mode that silently inflated df/postings before
     // generations were batch-keyed. The maintenance loop here replays
-    // batch b1 twice: once as a clean retry (the applied marker
-    // short-circuits) and once as a partial-failure replay (marker
-    // removed, so the generation-keyed dynamic overwrite must REPLACE
+    // batch b1 twice: once as a clean retry (the applied record
+    // short-circuits) and once as a partial-failure replay (record
+    // dropped, so the generation-keyed dynamic overwrite must REPLACE
     // the generation). The oracle computes the serving answer over the
     // union corpus from scratch — refresh∘retry∘replay∘refresh ≡
     // rebuild, proven on the served answer (the n124 discipline under
@@ -8483,10 +8483,10 @@ object NorthStar {
         LexicalIndex.build(
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path, n = 3)
         LexicalIndex.refresh(b1, "doc_id", "text", path, batchId = "b1")
-        // clean retry: the marker short-circuits
+        // clean retry: the record short-circuits
         LexicalIndex.refresh(b1, "doc_id", "text", path, batchId = "b1")
-        // partial-failure replay: marker lost, generation must overwrite
-        new java.io.File(s"$path/_applied/b1").delete()
+        // partial-failure replay: commit lost, generation must overwrite
+        graft.operators.LsmLayout.dropCommit(s, path, "b1")
         LexicalIndex.refresh(b1, "doc_id", "text", path, batchId = "b1")
         LexicalIndex.refresh(
           docs.filter(col("doc_id") % 3 === 2), "doc_id", "text", path,
@@ -8556,7 +8556,7 @@ object NorthStar {
     // corpus side to its CLUSTER id, CC runs over the (delta + touched
     // clusters) graph, and merges APPEND re-mapping rows bounded by
     // the absorbed clusters. The ingest is retried clean and replayed
-    // marker-less (the n174/n175 fault injection; the probe excludes
+    // commit-less (the n174/n175 fault injection; the probe excludes
     // the batch's own band generation so the replay is deterministic).
     // Oracle: the n30 recursive transitive closure over the FULL
     // corpus's exact-Jaccard pairs, singletons = own id.
@@ -8584,10 +8584,10 @@ object NorthStar {
           corpus, "doc_id", "text", path, threshold = 0.8)
         graft.operators.ClusterRegistry.ingest(
           delta, "doc_id", "text", path, batchId = "b1")
-        // clean retry, then a marker-less partial-failure replay
+        // clean retry, then a commit-less partial-failure replay
         graft.operators.ClusterRegistry.ingest(
           delta, "doc_id", "text", path, batchId = "b1")
-        new java.io.File(s"$path/_applied/b1").delete()
+        graft.operators.LsmLayout.dropCommit(s, path, "b1")
         graft.operators.ClusterRegistry.ingest(
           delta, "doc_id", "text", path, batchId = "b1")
         graft.operators.ClusterRegistry.assignments(s, path)
@@ -8595,7 +8595,7 @@ object NorthStar {
 
     // ----- n175: band-index append under at-least-once retry ------------
     // The same fault injection for the LSH layout: append batch b1 is
-    // retried clean AND replayed marker-less; a duplicated signature
+    // retried clean AND replayed commit-less; a duplicated signature
     // generation would multiply probe rows through the sig join, so
     // the oracle (exact delta×index Jaccard over corpus ∪ delta1,
     // computed from scratch) catches any duplication in rows, not just
@@ -8630,9 +8630,9 @@ object NorthStar {
         val path = "target/sinks/n175_band"
         BandIndex.build(docs, "doc_id", "text", path)
         BandIndex.append(delta1, "doc_id", "text", path, batchId = "b1")
-        // clean retry, then a marker-less partial-failure replay
+        // clean retry, then a commit-less partial-failure replay
         BandIndex.append(delta1, "doc_id", "text", path, batchId = "b1")
-        new java.io.File(s"$path/_applied/b1").delete()
+        graft.operators.LsmLayout.dropCommit(s, path, "b1")
         BandIndex.append(delta1, "doc_id", "text", path, batchId = "b1")
         BandIndex.probe(
           docs.unionByName(delta1), delta2,
@@ -8685,7 +8685,7 @@ object NorthStar {
         // generations until the next compact's GC — the snapshot
         // discipline's one-cycle retention for concurrent readers)
         require(graft.operators.LsmLayout.liveGenerationCount(
-          s, path, s"$path/assignments", "batch=") == 2,
+          s, path, s"$path/assignments") == 2,
           "registry auto-compaction did not fire mid-sequence")
         graft.operators.ClusterRegistry.assignments(s, path)
     },
@@ -8745,10 +8745,10 @@ object NorthStar {
     // n177 gates ONE ingest with fault injection; this is the batch
     // spelling of the DEPLOYED shape — a multi-micro-batch foreachBatch
     // loop (build on the first batch, ingest each next, corpus ledger
-    // growing batch by batch) with a marker-less replay of the
+    // growing batch by batch) with a commit-less replay of the
     // IN-FLIGHT batch mid-stream (foreachBatch retries the current
-    // micro-batch; both the registry marker and the band marker are
-    // lost, so the replay re-derives the generation number, re-probes
+    // micro-batch; both the registry record and the band record of
+    // the batch are lost, so the replay re-derives the generation number, re-probes
     // with its own partial band generation excluded, and the dynamic
     // overwrite replaces both layouts' generations). The oracle is the
     // batch closure over the union corpus — stream-shaped maintenance
@@ -8786,9 +8786,9 @@ object NorthStar {
             "doc_id", "text", path, batchId = s"mb-$r")
           if (r == 2) {
             // the in-flight micro-batch fails AFTER its writes but
-            // BEFORE its markers — foreachBatch re-delivers it whole
-            new java.io.File(s"$path/_applied/mb-2").delete()
-            new java.io.File(s"$path/band/_applied/mb-2").delete()
+            // BEFORE its commits — foreachBatch re-delivers it whole
+            graft.operators.LsmLayout.dropCommit(s, path, "mb-2")
+            graft.operators.LsmLayout.dropCommit(s, s"$path/band", "mb-2")
             graft.operators.ClusterRegistry.ingest(
               docs.filter(col("doc_id") % 4 === 2),
               "doc_id", "text", path, batchId = "mb-2")

@@ -19,9 +19,8 @@ import graft.operators.{LayoutSnapshot, LsmLayout}
 /** The local write path: every file, `.crc` sidecar and directory a
   * session write creates gets the mode an unbound session gives it,
   * without one `chmod` process per path
-  * ([[ForkFreeLocalFileSystem]]), and the layout metadata writes
-  * (`_applied` markers, the `_snap` temp file) never write through an
-  * existing inode — a hard-linked layout clone shares its inodes with
+  * ([[ForkFreeLocalFileSystem]]), and the layout's commit record write
+  * (the `_snap` temp file) never writes through an existing inode — a hard-linked layout clone shares its inodes with
   * the source tree. */
 class LocalWritesSpec extends SparkTestBase with BeforeAndAfterAll {
 
@@ -85,14 +84,18 @@ class LocalWritesSpec extends SparkTestBase with BeforeAndAfterAll {
 
   /** The write program of this spec: a 16-bucket `partitionBy` parquet
     * write (committer `_temporary` dirs, part files, `.crc`s,
-    * `_SUCCESS`), an applied marker and a snapshot commit. */
+    * `_SUCCESS`) and a commit record. */
   private def writeProgram(root: JPath): Unit = {
     spark.range(256).withColumn("bucket", col("id") % 16)
       .write.partitionBy("bucket").parquet(s"$root/bucketed")
-    LsmLayout.markApplied(spark, s"$root/layout", "b1")
-    LsmLayout.commitSnapshot(spark, s"$root/layout",
-      LayoutSnapshot(0L, "base-0", Set.empty, Set.empty))
+    commitRecord(s"$root/layout")
   }
+
+  /** Record 0 of a layout at `path` that applied batch b1. */
+  private def commitRecord(path: String): Unit =
+    LsmLayout.commitSnapshot(spark, path, LayoutSnapshot(path, 0L, "base",
+      Map("rel" -> Seq("base", "b1")), Map.empty, Set("b1"), 1L, 0L,
+      Map("k" -> "1"), None))
 
   test("session writes start no chmod process; the default local fs starts dozens") {
     val default = withDefaultLocalFs(chmodStarts(writeProgram(tmpDir())))
@@ -110,8 +113,7 @@ class LocalWritesSpec extends SparkTestBase with BeforeAndAfterAll {
     val tree = modeTree(got)
     assert(tree == modeTree(ref))
     assert(tree.exists(_._1.endsWith(".crc")), "checksum sidecars are kept")
-    assert(tree.exists(_._1.contains("_applied")) &&
-      tree.exists(_._1.contains("_snap")))
+    assert(tree.exists(_._1.contains("_snap")))
 
     // explicit modes, including one PosixFilePermission cannot spell
     val requested = Seq("dir-sticky" -> 0x3ff, "dir-private" -> 0x1c0,
@@ -148,10 +150,9 @@ class LocalWritesSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(bound == ((false, "b")))
   }
 
-  test("markApplied and the snapshot temp write never write through a hard-linked file") {
+  test("the record temp write never writes through a hard-linked file") {
     val src = tmpDir()
     val clone = tmpDir()
-    LsmLayout.markApplied(spark, src.toString, "b1")
     // a commit that crashed before its rename leaves the temp file behind
     val tmpName = "_snap/.tmp-0"
     Files.createDirectories(src.resolve("_snap"))
@@ -165,25 +166,24 @@ class LocalWritesSpec extends SparkTestBase with BeforeAndAfterAll {
       else Files.createLink(d, s)
     } finally walk.close()
     val old = FileTime.fromMillis(86400000L)
-    val watched = Seq("_applied/b1", tmpName).map(src.resolve)
+    val watched = Seq(src.resolve(tmpName))
     watched.foreach { p =>
       Files.setLastModifiedTime(p, old)
       Files.setAttribute(p, "unix:mode", Integer.valueOf(0x180))
     }
 
-    LsmLayout.markApplied(spark, clone.toString, "b1")
-    LsmLayout.commitSnapshot(spark, clone.toString,
-      LayoutSnapshot(0L, "base-0", Set.empty, Set.empty))
+    commitRecord(clone.toString)
 
     def ino(p: JPath) = Files.getAttribute(p, "unix:ino")
-    assert(ino(src.resolve("_applied/b1")) != ino(clone.resolve("_applied/b1")))
+    assert(ino(src.resolve(tmpName)) != ino(clone.resolve("_snap/0")))
     watched.foreach { p =>
       assert(Files.getLastModifiedTime(p) == old, s"$p mtime")
       assert(mode(p) == 0x180, s"$p mode")
     }
     assert(new String(Files.readAllBytes(src.resolve(tmpName)), "UTF-8") ==
       "source")
-    assert(LsmLayout.isApplied(spark, clone.toString, "b1"))
-    assert(LsmLayout.snapshot(spark, clone.toString).base == "base-0")
+    val rec = LsmLayout.snapshot(spark, clone.toString)
+    assert(rec.isApplied("b1") && rec.ordinal == 1L &&
+      rec.liveIn(s"$clone/rel") == Seq("base", "b1") && rec.constant("k") == "1")
   }
 }

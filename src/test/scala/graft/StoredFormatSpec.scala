@@ -143,9 +143,11 @@ class StoredFormatSpec extends SparkTestBase {
     }
     val band = s"$Root/band_v2"
     BandIndex.build(lexCorpus(1 to 50), "doc_id", "text", band)
-    Seq("postings", "sigs", "meta").foreach { rel =>
+    Seq("postings", "sigs").foreach { rel =>
       assert(allV2(chunks(s"$band/$rel")), s"band $rel must be on v2 pages")
     }
+    assert(!new java.io.File(s"$band/meta").exists(),
+      "the band's constants live in its commit record, not a meta relation")
   }
 
   /** Rewrite the generation directory `dir` as parquet v1 pages in
@@ -227,7 +229,7 @@ class StoredFormatSpec extends SparkTestBase {
     check("refresh")
     LexicalIndex.tombstone(lexCorpus(1 to 10), "doc_id", "text", p, batchId = "d1")
     LexicalIndex.compact(spark, p)
-    val base = LsmLayout.snapshot(spark, p).ledgerBase
+    val base = LsmLayout.snapshot(spark, p).base
     assert(new java.io.File(s"$p/postings/gen=$base").exists(),
       "the compact must have folded the postings")
     check("compact")

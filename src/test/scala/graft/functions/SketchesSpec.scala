@@ -286,7 +286,7 @@ class SketchesSpec extends SparkTestBase {
     KmvLayout.refresh(
       docs.filter(col("doc_id") % 5 === 0), "g", "doc_id", "text", p,
       batchId = "b1")
-    new java.io.File(s"$p/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, p, "b1")
     KmvLayout.refresh(
       docs.filter(col("doc_id") % 5 === 0), "g", "doc_id", "text", p,
       batchId = "b1")
@@ -312,8 +312,7 @@ class SketchesSpec extends SparkTestBase {
     // compact drops the rows from the live layout and keeps serving
     // identically; the second cycle's GC clears the forget-set dir
     KmvLayout.compact(spark, p)
-    assert(LsmLayout.liveTombstoneBatches(
-      spark, p, LsmLayout.snapshot(spark, p)).isEmpty)
+    assert(LsmLayout.snapshot(spark, p).pendingTombstones.isEmpty)
     assert(sk(p) === sk(rem))
     assert(mat(p) === mat(rem))
     KmvLayout.compact(spark, p)
@@ -338,7 +337,7 @@ class SketchesSpec extends SparkTestBase {
     }
     // b2 made 3 batches > 2 → compacted to 1; b3 appended → 2 LIVE
     assert(LsmLayout.liveGenerationCount(
-      spark, p, s"$p/sketches", "batch=") === 2)
+      spark, p, s"$p/sketches") === 2)
     KmvLayout.build(docs, "g", "doc_id", "text", full, k = 32)
     def sk(q: String) = KmvLayout.sketches(spark, q)
       .select(col("group"), col("sk"))

@@ -86,7 +86,7 @@ class BandIndexSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$path/postings").count() === physPost)
     assert(spark.read.parquet(s"$path/sigs").count() === physSigs)
     // partial-failure retry: marker lost, generation must OVERWRITE
-    new java.io.File(s"$path/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, path, "b1")
     BandIndex.append(delta1, "doc_id", "text", path, batchId = "b1")
     assert(spark.read.parquet(s"$path/postings").count() === physPost,
       "a replayed batch must replace its generation, not append")
@@ -137,7 +137,7 @@ class BandIndexSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$del/postings")
       .filter(col("gen") === snap.base && col("doc_id") === 1).count() === 0L,
       "compact must drop tombstoned postings from the new base")
-    assert(LsmLayout.liveTombstoneBatches(spark, del, snap).isEmpty)
+    assert(snap.pendingTombstones.isEmpty)
     assert(probeAll(del) === probeAll(rem))
     BandIndex.compact(spark, del)
     assert(spark.read.parquet(s"$del/postings")

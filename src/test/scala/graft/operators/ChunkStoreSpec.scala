@@ -60,7 +60,7 @@ class ChunkStoreSpec extends SparkTestBase {
     assert(rec === expect,
       "reconstruct must serve the EDITED doc 7, not a merged garble")
     // and the supersede survives a marker-less replay of the edit batch
-    new java.io.File(s"$p/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, p, "b1")
     ChunkStore.refresh(delta, "doc_id", "text", p, batchId = "b1")
     val rec2 = ChunkStore.reconstruct(spark, p)
       .as[(Long, Long, String)].collect().map(r => r._1 -> r._3).toMap
@@ -91,7 +91,7 @@ class ChunkStoreSpec extends SparkTestBase {
     // (superseded dirs survive one cycle for concurrent readers)
     ChunkStore.compact(spark, p)
     val snap = LsmLayout.snapshot(spark, p)
-    assert(LsmLayout.liveTombstoneBatches(spark, p, snap).isEmpty)
+    assert(snap.pendingTombstones.isEmpty)
     val store = spark.read.parquet(s"$p/store")
       .filter(col("gen") === snap.base)
       .as[(String, String, String)].collect() // chunk_h, chunk, gen
@@ -156,7 +156,7 @@ class ChunkStoreSpec extends SparkTestBase {
     ChunkStore.refresh(delta, "doc_id", "text", p, batchId = "b1")
     assert(spark.read.parquet(s"$p/store").count() === store)
     assert(spark.read.parquet(s"$p/manifest").count() === manifest)
-    new java.io.File(s"$p/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, p, "b1")
     ChunkStore.refresh(delta, "doc_id", "text", p, batchId = "b1")
     assert(spark.read.parquet(s"$p/store").count() === store,
       "a replayed batch must replace its generation, not append")

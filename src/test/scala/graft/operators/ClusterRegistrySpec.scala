@@ -74,7 +74,7 @@ class ClusterRegistrySpec extends SparkTestBase {
       batchId = "b1")
     assert(assigned(p) === want)
     assert(spark.read.parquet(s"$p/assignments").count() === phys)
-    new java.io.File(s"$p/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, p, "b1")
     ClusterRegistry.ingest(delta, "doc_id", "text", p,
       batchId = "b1")
     assert(assigned(p) === want,
@@ -150,8 +150,8 @@ class ClusterRegistrySpec extends SparkTestBase {
     assert(live.groupBy(col("doc_id")).count()
       .filter(col("count") > 1).count() === 0L)
     assert(LsmLayout.liveGenerationCount(
-      spark, p, s"$p/assignments", "batch=") === 1)
-    assert(LsmLayout.liveTombstoneBatches(spark, p, snap).isEmpty)
+      spark, p, s"$p/assignments") === 1)
+    assert(snap.pendingTombstones.isEmpty)
     assert(BandIndex.postings(spark, s"$p/band")
       .filter(col("doc_id") === 2L).count() === 0L)
     ClusterRegistry.compact(spark, p)
@@ -187,7 +187,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     // base+b1+b2 = 3 gens > 2 tripped the policy at b2 (fold to 1);
     // b3 lands on the folded base -> 2 LIVE generations after the loop
     assert(LsmLayout.liveGenerationCount(
-      spark, p, s"$p/assignments", "batch=") === 2,
+      spark, p, s"$p/assignments") === 2,
       "auto-compaction did not fire mid-sequence")
     assert(assigned(p) === Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L,
       50L -> 50L, 51L -> 51L, 52L -> 52L))
@@ -384,13 +384,11 @@ class ClusterRegistrySpec extends SparkTestBase {
     ClusterRegistry.compact(spark, p)
     val snap = LsmLayout.snapshot(spark, p)
     assert(LsmLayout.liveGenerationCount(
-      spark, p, s"$p/assignments", "batch=") === 1,
+      spark, p, s"$p/assignments") === 1,
       "the assignment log must fold to one live generation")
     assert(!LsmLayout.dirExists(spark, s"$p/ledger/batch=${snap.base}"),
       "a no-tombstone compact must not write a folded ledger copy")
-    assert(LsmLayout.liveGenerationNames(
-      spark, s"$p/ledger", "batch=", snap.ledgerView).toSet ===
-      Set("base", "b1"),
+    assert(snap.liveIn(s"$p/ledger").toSet === Set("base", "b1"),
       "the ledger keeps its immutable generations live")
     assert(led() === wantLedger, "ledger reads must be unchanged")
     assert(assigned(p) === wantAssign)
@@ -425,7 +423,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     ClusterRegistry.ingest(delta, "doc_id", "text", reg, batchId = "b1")
     assert(assigned(reg) ===
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 10L -> 1L))
-    assert(!LsmLayout.isApplied(spark, band, "b1"))
+    assert(!LsmLayout.snapshot(spark, band).isApplied("b1"))
     assert(BandIndex.signatures(spark, band)
       .filter(col("doc_id") === 10L).count() === 0L)
     val more = Seq((40L, (1 to 20).map(i => s"y$i").mkString(" ")))
@@ -433,7 +431,7 @@ class ClusterRegistrySpec extends SparkTestBase {
     val e = intercept[IllegalStateException](
       ClusterRegistry.ingest(more, "doc_id", "text", reg, batchId = "b2"))
     assert(e.getMessage.contains("b1"), e.getMessage)
-    assert(!LsmLayout.isApplied(spark, reg, "b2"))
+    assert(!LsmLayout.snapshot(spark, reg).isApplied("b2"))
     // delivering the batch to the band clears the check
     BandIndex.append(delta, "doc_id", "text", band, batchId = "b1")
     ClusterRegistry.ingest(more, "doc_id", "text", reg, batchId = "b2")

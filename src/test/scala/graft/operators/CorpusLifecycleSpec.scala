@@ -85,7 +85,7 @@ class CorpusLifecycleSpec extends SparkTestBase {
       .forall(mid(_)._1 == 2L), s"unexpected mid-crash state: $mid")
     // the retry completes the remaining four and no-ops the two
     CorpusLifecycle.forget(forget, "doc_id", "text", lay, batchId = "g1")
-    // a second replay is a full no-op (markers) — nothing double-counts
+    // a second replay is a full no-op (records) — nothing double-counts
     CorpusLifecycle.forget(forget, "doc_id", "text", lay, batchId = "g1")
     val after = auditMap(lay)
     assert(after.values.forall(v => v._1 == 0L && v._2 == 10L),
@@ -109,12 +109,12 @@ class CorpusLifecycleSpec extends SparkTestBase {
     val before = auditMap(lay)
     CorpusLifecycle.compact(spark, lay)
     assert(auditMap(lay) === before, "compact must not change serving")
-    // every layout flipped to a snapshot base (manifest committed)
+    // every layout's latest record is its compact's
     lay.paths.foreach { p =>
-      assert(LsmLayout.snapshot(spark, p).id === 0L,
-        s"$p did not commit a compact snapshot")
-      assert(LsmLayout.liveTombstoneBatches(
-        spark, p, LsmLayout.snapshot(spark, p)).isEmpty,
+      val snap = LsmLayout.snapshot(spark, p)
+      assert(snap.lastCompact === snap.id && snap.id > 0L,
+        s"$p did not commit a compact record")
+      assert(snap.pendingTombstones.isEmpty,
         s"$p did not retire its forget-set")
     }
     // re-forgetting after physical reclamation is a fresh batch
@@ -226,9 +226,11 @@ class CorpusLifecycleSpec extends SparkTestBase {
     assert(rep("ivf")._5 === "retrain" &&
       rep("ivf")._2 === "max_cell_share")
     // every action flipped a snapshot; serving is invariant
-    lay.paths.foreach(p =>
-      assert(LsmLayout.snapshot(spark, p).id === 0L,
-        s"$p did not act on its committed snapshot"))
+    lay.paths.foreach { p =>
+      val snap = LsmLayout.snapshot(spark, p)
+      assert(snap.lastCompact === snap.id && snap.id > 0L,
+        s"$p did not act on its committed record")
+    }
     assert(ingestAuditMap(lay) === before,
       "maintenance must not change serving")
     // second run: the count/share rules converged to none; the IVF
@@ -503,7 +505,7 @@ class CorpusLifecycleSpec extends SparkTestBase {
     // the coordinator crashed after the registry half committed b1
     ClusterRegistry.ingest(bandDelta1, "doc_id", "text", lay.registry.get,
       batchId = "b1")
-    assert(!LsmLayout.isApplied(spark, band, "b1"))
+    assert(!LsmLayout.snapshot(spark, band).isApplied("b1"))
     CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
     CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
     assert(spark.read.parquet(s"$band/sigs").filter(col("gen") === "b1")
@@ -521,8 +523,14 @@ class CorpusLifecycleSpec extends SparkTestBase {
     val lay = bandTree(root, shared = true)
     CorpusLifecycle.ingest(bandDelta1, "doc_id", "text", lay, batchId = "b1")
     assert(consistency(lay).values.forall(_ == ((0L, 0L))))
-    Seq("sigs", "postings").foreach(r =>
-      LsmLayout.deleteDir(spark, s"$root/band/$r/gen=b1"))
+    // b1's data files are lost; its record still names the generation
+    Seq("sigs", "postings").foreach { r =>
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(s"$root/band/$r/gen=b1"))
+      try walk.filter(f => java.nio.file.Files.isRegularFile(f))
+        .forEach(f => java.nio.file.Files.delete(f))
+      finally walk.close()
+    }
     val a = consistency(lay)
     assert(a("band") === ((2L, 0L)), s"b1's two docs must show missing: $a")
     assert(a("registry") === ((0L, 0L)), s"the registry lost nothing: $a")
@@ -545,12 +553,12 @@ class CorpusLifecycleSpec extends SparkTestBase {
       }
     // refused up front: no layout applied anything
     Seq(s"$root/registry", s"$root/band").foreach(p =>
-      assert(LsmLayout.appliedBatches(spark, p).isEmpty, p))
+      assert(LsmLayout.snapshot(spark, p).applied.isEmpty, p))
     // the same band spelled as an absolute path is the same band
     CorpusLifecycle.ingest(bandDelta1, "doc_id", "text",
       lay.copy(band = Some(new java.io.File(s"$root/band").getAbsolutePath)),
       batchId = "b1")
-    assert(LsmLayout.isApplied(spark, s"$root/band", "b1"))
+    assert(LsmLayout.snapshot(spark, s"$root/band").isApplied("b1"))
   }
 
   test("maintain: the lexical generation rule counts build, ingest and forget as three meta generations") {

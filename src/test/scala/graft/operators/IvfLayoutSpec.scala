@@ -47,7 +47,7 @@ class IvfLayoutSpec extends SparkTestBase {
     assert(ranked(inc, queryVec) === ranked(full, queryVec))
     val phys = spark.read.parquet(s"$inc/vectors").count()
     IvfLayout.refresh(delta, "vec_id", "embedding", inc, batchId = "b1")
-    new java.io.File(s"$inc/_applied/b1").delete()
+    LsmLayout.dropCommit(spark, inc, "b1")
     IvfLayout.refresh(delta, "vec_id", "embedding", inc, batchId = "b1")
     assert(spark.read.parquet(s"$inc/vectors").count() === phys,
       "a replayed batch must replace its generation, not append")
@@ -98,7 +98,7 @@ class IvfLayoutSpec extends SparkTestBase {
     val snap = LsmLayout.snapshot(spark, del)
     assert(spark.read.parquet(s"$del/vectors")
       .filter(col("gen") === snap.base).count() < physBefore)
-    assert(LsmLayout.liveTombstoneBatches(spark, del, snap).isEmpty)
+    assert(snap.pendingTombstones.isEmpty)
     assert(ranked(del, queryVec) === ranked(rem, queryVec))
     // second cycle: the GC sweeps superseded dirs and the forget-set
     IvfLayout.compact(spark, del)
@@ -153,7 +153,7 @@ class IvfLayoutSpec extends SparkTestBase {
     // retrain subsumed the compact: one live generation, forget-set
     // retired, tombstoned vectors physically gone
     assert(LsmLayout.liveGenerationCount(spark, p, s"$p/vectors") === 1)
-    assert(LsmLayout.liveTombstoneBatches(spark, p, snap).isEmpty)
+    assert(snap.pendingTombstones.isEmpty)
     assert(!stored.keySet.exists(_ % 3 == 1))
     // post-retrain refreshes assign with the NEW stored quantizer and
     // partial probes stay correct: the served top-k over the probed
@@ -180,7 +180,8 @@ class IvfLayoutSpec extends SparkTestBase {
     // a second retrain supersedes the first and GC keeps exactly the
     // two most recent centroid tables (one-cycle-deferred, like data)
     IvfLayout.retrain(spark, p, rounds = 2)
-    val gens = LsmLayout.generationNames(spark, s"$p/centroids", "gen=")
+    val gens = new java.io.File(s"$p/centroids").list().toSeq
+      .filter(_.startsWith("gen=")).map(_.stripPrefix("gen="))
     assert(gens.toSet.size <= 2 &&
       gens.contains(LsmLayout.snapshot(spark, p).base))
   }
@@ -292,7 +293,7 @@ class IvfLayoutSpec extends SparkTestBase {
     intercept[IllegalStateException] {
       IvfLayout.retrain(spark, p, rounds = 1, writerEpoch = Some(stale))
     }
-    assert(LsmLayout.snapshot(spark, p) === LsmLayout.LegacySnapshot,
-      "a fenced retrain must not flip the manifest")
+    assert(LsmLayout.snapshot(spark, p).id === 0L,
+      "a fenced retrain must not commit a record")
   }
 }

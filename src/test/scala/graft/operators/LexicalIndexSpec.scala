@@ -167,7 +167,7 @@ class LexicalIndexSpec extends SparkTestBase {
       .filter(col("gen") === snap.base && col("doc_id") === 1)
       .count() === 0L,
       "compact must drop the tombstoned postings from the new base")
-    assert(LsmLayout.liveTombstoneBatches(spark, del, snap).isEmpty,
+    assert(snap.pendingTombstones.isEmpty,
       "compact must retire the forget-set")
     assert(posts(del) === posts(rem))
     assert(lexi(del) === lexi(rem))
@@ -234,15 +234,15 @@ class LexicalIndexSpec extends SparkTestBase {
     LexicalIndex.refresh(delta, "doc_id", "text", inc, batchId = "b1")
     assert(state() === before,
       "a retried batch must not duplicate a generation")
-    // even a PARTIAL first attempt heals: simulate by deleting the
-    // applied marker (so the retry re-runs) — the generation-keyed
+    // even a PARTIAL first attempt heals: simulate by dropping the
+    // batch's record (so the retry re-runs) — the generation-keyed
     // dynamic overwrite must replace, not append
-    val marker = new java.io.File(s"$inc/_applied/b1")
-    assert(marker.exists(), "refresh must record the applied batch")
-    marker.delete()
+    assert(LsmLayout.snapshot(spark, inc).isApplied("b1"),
+      "refresh must record the applied batch")
+    LsmLayout.dropCommit(spark, inc, "b1")
     LexicalIndex.refresh(delta, "doc_id", "text", inc, batchId = "b1")
     assert(state() === before,
-      "a replayed batch without its marker must overwrite its own generation")
+      "a replayed batch without its record must overwrite its own generation")
     // and the logical relations still equal a from-scratch rebuild
     LexicalIndex.build(corpus, "doc_id", "text", full, n = 2, buckets = 4)
     assert(LexicalIndex.lexicon(spark, inc)
@@ -359,21 +359,6 @@ class LexicalIndexSpec extends SparkTestBase {
       rows(LexicalIndex.pointProbe(spark, rem, "a b x", 10)))
   }
 
-  test("the meta cache keeps one entry per lexical path across compacts") {
-    val p = "target/test_lexidx/meta_cache"
-    LexicalIndex.build(corpus, "doc_id", "text", p, n = 2, buckets = 4)
-    (1 to 3).foreach { i =>
-      // each refresh reads the layout constants of the current base
-      LexicalIndex.refresh(
-        Seq((100L + i, s"q$i r$i s$i")).toDF("doc_id", "text"),
-        "doc_id", "text", p, batchId = s"b$i")
-      LexicalIndex.compact(spark, p)
-    }
-    LexicalIndex.pointProbe(spark, p, "a b c", k = 3).collect()
-    assert(LsmLayout.cachedMetaDirs.filter(_.startsWith(s"$p/")) ===
-      Set(s"$p/meta"))
-  }
-
   test("a build over an older tree with a stored lexicon/ removes it and serves like a fresh build") {
     val old = "target/test_lexidx/old_format"
     val fresh = "target/test_lexidx/old_format_fresh"
@@ -419,7 +404,9 @@ class LexicalIndexSpec extends SparkTestBase {
     val p = "target/test_lexidx/all_short"
     LexicalIndex.build(Seq((1L, "zz"), (2L, "y")).toDF("doc_id", "text"),
       "doc_id", "text", p, n = 2, buckets = 4)
-    assert(LsmLayout.generationNames(spark, s"$p/postings").isEmpty,
+    assert(LsmLayout.snapshot(spark, p).liveIn(s"$p/postings").isEmpty &&
+      !Option(new java.io.File(s"$p/postings").list()).exists(
+        _.exists(_.startsWith("gen="))),
       "no postings generation is written")
     assertEmptyServing(p)
     assert(LexicalIndex.metaRow(spark, p).select("n_docs").head().getLong(0) === 2L)
@@ -436,8 +423,7 @@ class LexicalIndexSpec extends SparkTestBase {
     LexicalIndex.tombstone(corpus, "doc_id", "text", p, batchId = "d1")
     assertEmptyServing(p)
     LexicalIndex.compact(spark, p)
-    val live = LsmLayout.liveGenerationNames(spark, s"$p/postings", "gen=",
-      LsmLayout.snapshot(spark, p).ledgerView)
+    val live = LsmLayout.snapshot(spark, p).liveIn(s"$p/postings")
     assert(live.isEmpty, "the fold of an all-forgotten corpus writes no postings")
     assertEmptyServing(p)
     assert(LexicalIndex.metaRow(spark, p).select("n_docs").head().getLong(0) === 0L)

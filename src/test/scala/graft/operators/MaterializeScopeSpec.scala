@@ -146,7 +146,7 @@ class MaterializeScopeSpec extends SparkTestBase {
     Materialize.releaseAll(spark)
     val path = "target/test_scope/nested"
     val dir = s"$path/rel"
-    LsmLayout.startIndexLife(spark, path) {
+    LsmLayout.startIndexLife(spark, path, Seq((dir, "gen="))) {
       LsmLayout.writeRelation(spark.range(5).toDF("id")
         .withColumn("gen", lit("base")), dir, "gen")
     }
@@ -155,13 +155,12 @@ class MaterializeScopeSpec extends SparkTestBase {
     var afterCompact = Set.empty[Int]
     var outerHeldAfterCompact = false
     // two live generations past a budget of one: the ingest compacts
-    LsmLayout.ingestBatch(spark, path, "b1", None, 1, dir, "gen=",
+    LsmLayout.ingestBatch(spark, path, "b1", None, 1, Seq((dir, "gen=")),
       epoch => {
         LsmLayout.snapshotCompact(spark, path, epoch, Seq((dir, "gen="))) {
           fold => Seq(() => {
             val ck = fold.checkpointed(
-              LsmLayout.readGenerations(spark, dir, "gen=",
-                LsmLayout.liveGenerationNames(spark, dir, "gen=", fold.snap))
+              LsmLayout.readLive(spark, fold.snap, dir, "gen=")
                 .select(col("id")))
             innerHeld = persistedIds
             LsmLayout.writeGeneration(
@@ -170,7 +169,7 @@ class MaterializeScopeSpec extends SparkTestBase {
         }
         afterCompact = persistedIds
         outerHeldAfterCompact = cached(outer)
-      }) {
+      }) { _ =>
       val o = Materialize.shared(outer)
       LsmLayout.writeGeneration(
         o.select(col("id")).withColumn("gen", lit("b1")), dir, "gen")
@@ -215,5 +214,20 @@ class MaterializeScopeSpec extends SparkTestBase {
     assert(ChunkStore.reconstruct(spark, lay.chunks.get)
       .filter(col("doc_id") === id).count() === 1L)
     assertNothingHeld("the probes")
+  }
+
+  test("registry reads after each of three ingests leave no persisted RDD") {
+    Materialize.releaseAll(spark)
+    val p = "target/test_scope/registry_reads"
+    def doc(id: Long, tag: String) =
+      (id, (1 to 12).map(i => s"$tag$i").mkString(" "))
+    ClusterRegistry.build(Seq(doc(1L, "a"), doc(2L, "b")).toDF("doc_id", "text"),
+      "doc_id", "text", p)
+    Seq("c", "d", "e").zipWithIndex.foreach { case (tag, i) =>
+      ClusterRegistry.ingest(Seq(doc(10L + i, tag)).toDF("doc_id", "text"),
+        "doc_id", "text", p, batchId = s"b$i")
+      assert(ClusterRegistry.assignments(spark, p).count() === 3L + i)
+      assertNothingHeld(s"the read after ingest b$i")
+    }
   }
 }

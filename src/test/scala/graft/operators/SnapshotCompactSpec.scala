@@ -12,9 +12,9 @@ import graft.SparkTestBase
   * (vanished files) and never a mix (a half-rewritten base, or one
   * relation of a layout folded beside another un-folded). The
   * mechanism under test: compacts write a NEW immutable base
-  * generation, flip one fail-if-exists manifest, and defer deletion of
+  * generation, commit one fail-if-exists record, and defer deletion of
   * superseded directories by one compact cycle
-  * ([[LsmLayout.snapshot]]/[[LsmLayout.gcSuperseded]]).
+  * ([[LsmLayout.snapshot]]/[[LsmLayout.snapshotCompact]]).
   *
   * The reader threads here hammer the serving paths of the registry,
   * the band index and the lexical index while the main thread runs
@@ -137,18 +137,26 @@ class SnapshotCompactSpec extends SparkTestBase {
     assert(errs.isEmpty, s"probes failed during compact: ${errs.headOption}")
   }
 
-  test("manifest mechanics: legacy default, atomic flip, one-cycle GC retention") {
+  test("commit records: one per operation, one-cycle GC retention") {
     val p = "target/test_snapcompact/manifest"
     val d = docs(8)
     ClusterRegistry.build(d, "doc_id", "text", p)
-    // a freshly-built layout reads under the legacy snapshot
-    assert(LsmLayout.snapshot(spark, p) === LsmLayout.LegacySnapshot)
+    // the build commits record 0: its base generations, no batch applied
+    val b = LsmLayout.snapshot(spark, p)
+    assert(b.id === 0L && b.base === "base" && b.applied.isEmpty &&
+      b.ordinal === 0L && b.liveIn(s"$p/assignments") === Seq("base"))
+    assert(b.constant("ledger_buckets") === "16")
     ClusterRegistry.ingest(
       Seq((100L, run(500, 519))).toDF("doc_id", "text"),
       "doc_id", "text", p, batchId = "b1")
+    val i = LsmLayout.snapshot(spark, p)
+    assert(i.id === 1L && i.isApplied("b1") && i.ordinal === 1L &&
+      i.liveIn(s"$p/assignments") === Seq("base", "b1"))
     ClusterRegistry.compact(spark, p)
     val s0 = LsmLayout.snapshot(spark, p)
-    assert(s0.id === 0L && s0.base === "base-0" && s0.folded === Set("b1"))
+    assert(s0.id === 2L && s0.base === "base-2" && s0.isApplied("b1") &&
+      s0.ordinal === 1L && s0.liveIn(s"$p/assignments") === Seq("base-2") &&
+      s0.retired("assignments").toSet === Set("base", "b1"))
     // first cycle RETAINS the previous snapshot's dirs (a concurrent
     // reader may hold it) ...
     assert(LsmLayout.dirExists(spark, s"$p/assignments/batch=base"))
@@ -157,8 +165,11 @@ class SnapshotCompactSpec extends SparkTestBase {
     // ... and the second cycle's GC sweeps them
     assert(!LsmLayout.dirExists(spark, s"$p/assignments/batch=base"))
     assert(!LsmLayout.dirExists(spark, s"$p/assignments/batch=b1"))
-    assert(LsmLayout.dirExists(spark, s"$p/assignments/batch=base-0"))
-    assert(LsmLayout.dirExists(spark, s"$p/assignments/batch=base-1"))
+    assert(LsmLayout.dirExists(spark, s"$p/assignments/batch=base-2"))
+    assert(LsmLayout.dirExists(spark, s"$p/assignments/batch=base-3"))
+    // the records older than the previous compact's are gone with them
+    assert(new java.io.File(s"$p/_snap").list().filterNot(_.startsWith("."))
+      .toSet === Set("2", "3"))
     // the flip is fail-if-exists: re-committing an id is a loud error
     intercept[java.io.IOException] {
       LsmLayout.commitSnapshot(spark, p, LsmLayout.snapshot(spark, p))
@@ -192,11 +203,10 @@ class SnapshotCompactSpec extends SparkTestBase {
     intercept[IllegalStateException] {
       ClusterRegistry.compact(spark, p, writerEpoch = Some(stale))
     }
-    // the fenced compact must not have flipped the manifest — the
+    // the fenced compact must not have committed a record — the
     // pending GDPR tombstone is still live for the real owner
-    assert(LsmLayout.snapshot(spark, p) === LsmLayout.LegacySnapshot)
-    assert(LsmLayout.liveTombstoneBatches(
-      spark, p, LsmLayout.snapshot(spark, p)) === Seq("d1"))
+    assert(LsmLayout.snapshot(spark, p).id === 1L)
+    assert(LsmLayout.snapshot(spark, p).pendingTombstones === Seq("d1"))
   }
 
   test("over-budget overlays and forget-sets fall back to a shuffle join with identical answers") {

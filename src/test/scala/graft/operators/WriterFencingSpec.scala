@@ -57,13 +57,13 @@ class WriterFencingSpec extends SparkTestBase {
         batchId = "b3", writerEpoch = Some(epochA))
     }
     assert(err.getMessage.contains("stale writer epoch"))
-    assert(!LsmLayout.isApplied(spark, p, "b3"),
-      "a fenced-out commit must not leave an applied marker")
+    assert(!LsmLayout.snapshot(spark, p).isApplied("b3"),
+      "a fenced-out commit must not apply the batch")
     // B's re-delivery of the same micro-batch id replaces A's orphaned
     // partial generation — the layout converges under the new owner
     LexicalIndex.refresh(docs(16 until 20, "a"), "doc_id", "text", p,
       batchId = "b3", writerEpoch = Some(epochB))
-    assert(LsmLayout.isApplied(spark, p, "b3"))
+    assert(LsmLayout.snapshot(spark, p).isApplied("b3"))
     val rebuilt = "target/test_fence/lex_oneshot"
     LexicalIndex.build(docs(0 until 20, "a"), "doc_id", "text", rebuilt,
       n = 2)
@@ -74,15 +74,15 @@ class WriterFencingSpec extends SparkTestBase {
   }
 
   /** A stale writer's maintenance call must throw the fence error and
-    * commit nothing: no applied marker for `marker`, no new snapshot. */
+    * commit nothing: `marker` not applied, no new record. */
   private def fencedOut(path: String, marker: Option[String])(op: => Unit): Unit = {
     val snapBefore = LsmLayout.snapshot(spark, path).id
     val err = intercept[IllegalStateException](op)
     assert(err.getMessage.contains("stale writer epoch"), err.getMessage)
-    marker.foreach(m => assert(!LsmLayout.isApplied(spark, path, m),
-      s"a fenced-out call must not leave the $m marker at $path"))
+    marker.foreach(m => assert(!LsmLayout.snapshot(spark, path).isApplied(m),
+      s"a fenced-out call must not apply $m at $path"))
     assert(LsmLayout.snapshot(spark, path).id === snapBefore,
-      s"a fenced-out call must not commit a snapshot at $path")
+      s"a fenced-out call must not commit a record at $path")
   }
 
   test("the fence guards every layout family's commit path") {

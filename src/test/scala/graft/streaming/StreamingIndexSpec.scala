@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.operators.LexicalIndex
+import graft.operators.{LexicalIndex, LsmLayout}
 
 /** Streaming maintenance of the stored lexical index: a real
   * foreachBatch query drives build-then-refresh over micro-batches,
@@ -132,8 +132,8 @@ class StreamingIndexSpec extends SparkTestBase {
     // on BOTH layouts and overwrite bit-for-bit
     val physA = spark.read.parquet(s"$streamed/assignments").count()
     val physB = spark.read.parquet(s"$streamed/band/postings").count()
-    new java.io.File(s"$streamed/_applied/mb-2").delete()
-    new java.io.File(s"$streamed/band/_applied/mb-2").delete()
+    LsmLayout.dropCommit(spark, streamed, "mb-2")
+    LsmLayout.dropCommit(spark, s"$streamed/band", "mb-2")
     graft.operators.ClusterRegistry.ingest(
       b3.toDF("doc_id", "text"),
       "doc_id", "text", streamed, batchId = "mb-2")
@@ -267,7 +267,7 @@ class StreamingIndexSpec extends SparkTestBase {
     val before = physical.map(p => p -> spark.read.parquet(p).count()).toMap
     Seq(s"$root/registry", s"$root/registry/band", s"$root/band",
       s"$root/lexical", s"$root/kmv", s"$root/ivf", s"$root/chunks")
-      .foreach(p => new java.io.File(s"$p/_applied/mb-2").delete())
+      .foreach(p => LsmLayout.dropCommit(spark, p, "mb-2"))
     CorpusLifecycle.ingest(
       b3.toDF("doc_id", "text").withColumn("g", col("doc_id")),
       "doc_id", "text", lay, batchId = "mb-2", groupCol = Some("g"),

@@ -15,8 +15,9 @@ the row count, the file bytes and the file count; with --columns, one
 line per column as well: compressed bytes, physical type (with its
 converted type), the encodings the footer lists and the value count.
 The tail totals the bytes that are not parquet data: the `.crc`
-checksum sidecars and the marker files (`_SUCCESS`, `_applied/`,
-`_snap/`, `_writer/` and any other non-parquet file).
+checksum sidecars, the layouts' commit records (`_snap/<id>`) and the
+marker files (`_SUCCESS`, `_writer/<epoch>` and any other non-parquet
+file).
 """
 import argparse
 import os
@@ -58,13 +59,15 @@ def scan(root):
                                 "encodings": set()})
     gens = defaultdict(lambda: {"bytes": 0, "rows": 0, "file_bytes": 0,
                                 "files": 0})
-    other = {"crc": [0, 0], "marker": [0, 0]}
+    other = {"crc": [0, 0], "record": [0, 0], "marker": [0, 0]}
     for d, _, files in os.walk(root):
         for f in files:
             p = os.path.join(d, f)
             size = os.path.getsize(p)
             if f.endswith(".crc"):
                 kind = "crc"
+            elif os.path.basename(d) == "_snap":
+                kind = "record"
             elif f.endswith(".parquet") and not f.startswith((".", "_")):
                 rel, gen = place(os.path.relpath(p, root))
                 md = pq.ParquetFile(p).metadata
@@ -120,10 +123,11 @@ def main():
         print(f"{rel:<36} {'(all)':<12} {human(b):>33} {n:>5}")
     parquet = sum(b for b, _ in by_rel.values())
     files = sum(n for _, n in by_rel.values())
-    total = parquet + other["crc"][0] + other["marker"][0]
+    total = parquet + sum(b for b, _ in other.values())
     print()
     print(f"parquet  {human(parquet):>11} in {files} files")
     print(f"crc      {human(other['crc'][0]):>11} in {other['crc'][1]} files")
+    print(f"records  {human(other['record'][0]):>11} in {other['record'][1]} files")
     print(f"markers  {human(other['marker'][0]):>11} in {other['marker'][1]} files")
     print(f"total    {human(total):>11}")
 
