@@ -38,12 +38,46 @@ import org.apache.spark.sql.SparkSession
   *   scoped instead: `Warehouse`'s stagings write through a clone of
   *   this session that carries it (`Warehouse.StoredFormat`), and the
   *   stored layouts set v2 pages per write (`LsmLayout.writeRelation`).
+  *
+  * Three driver-side retainers are stopped, because a long-lived session
+  * serves call after call and nothing reads what they keep:
+  * - the status store keeps [[RetainedStatusEntries]] finished jobs,
+  *   stages and SQL executions (Spark keeps 1,000 of each by default;
+  *   about 4 MiB of a serving session's retained heap). The UI is off
+  *   and nothing in the engine reads a finished job from the store —
+  *   the ledger and the benchmark count through listeners of their own.
+  *   Running jobs are never evicted, so `statusTracker.getActiveJobIds`
+  *   is unchanged.
+  * - the file-status cache is off
+  *   (`spark.sql.hive.filesourcePartitionFileCacheSize` = 0). Every path
+  *   read files its listing under a new client id that no later read
+  *   asks for, so entries only left at the cache's 250 MB bound. This
+  *   relies on no partitioned catalog table being read twice through one
+  *   index, where the cache would save a re-listing (s13 stages one and
+  *   reads it once).
+  * - the idle threads of Spark's five exchange and subquery pools
+  *   ([[org.apache.spark.sql.execution.GraftExchangePools]]) and of
+  *   `graft.operators.Overlap`'s pool exit after [[IdleThreadKeepAliveMs]]
+  *   instead of 60 s; each pool thread held about 14 KB of thread-local
+  *   buffers, and a serving session kept about 300 of them. Spark's
+  *   pools start a thread per submission up to their cap either way
+  *   (core size = cap, unbounded queue), so this adds no thread start
+  *   below the cap; it relies on the caps staying Spark's
+  *   (`spark.sql.*.maxThreadThreshold`). Lower caps deadlock: a query's
+  *   pool thread waits on its subquery, whose stages queue behind it in
+  *   the same pool.
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  def local(threads: String = cpus, appName: String = "graft"): SparkSession =
-    SparkSession
+  /** Finished jobs, stages and SQL executions the status store keeps. */
+  val RetainedStatusEntries = 1
+
+  /** How long an idle driver pool thread lives before it exits. */
+  val IdleThreadKeepAliveMs = 1000L
+
+  def local(threads: String = cpus, appName: String = "graft"): SparkSession = {
+    val spark = SparkSession
       .builder()
       .appName(appName)
       .withExtensions(graft.functions.GraftFunctions.register)
@@ -56,7 +90,14 @@ object Sessions {
       .config("spark.sql.warehouse.dir", "target/warehouse")
       .config("spark.hadoop.fs.file.impl",
         classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.ui.retainedJobs", RetainedStatusEntries)
+      .config("spark.ui.retainedStages", RetainedStatusEntries)
+      .config("spark.sql.ui.retainedExecutions", RetainedStatusEntries)
+      .config("spark.sql.hive.filesourcePartitionFileCacheSize", 0)
       .getOrCreate()
+    org.apache.spark.sql.execution.GraftExchangePools.setKeepAlive(IdleThreadKeepAliveMs)
+    spark
+  }
 }
 
 /** Hadoop's checksummed local file system over [[ForkFreeRawLocalFileSystem]]

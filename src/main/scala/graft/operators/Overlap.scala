@@ -33,12 +33,17 @@ import org.apache.spark.sql.SparkSession
   * carries its submitter's [[Trace]] span tags and
   * [[Materialize.scoped]] operation scope. The pool is unbounded
   * (cached) because tasks may themselves fan out — nested submits must
-  * never deadlock — and daemon so it cannot pin a JVM exit.
+  * never deadlock — and daemon so it cannot pin a JVM exit. An idle
+  * thread exits after `Sessions.IdleThreadKeepAliveMs`, as Spark's own
+  * driver pools do in an engine session.
   */
 private[graft] object Overlap {
 
   private lazy val pool =
-    java.util.concurrent.Executors.newCachedThreadPool(
+    new java.util.concurrent.ThreadPoolExecutor(
+      0, Int.MaxValue, graft.Sessions.IdleThreadKeepAliveMs,
+      java.util.concurrent.TimeUnit.MILLISECONDS,
+      new java.util.concurrent.SynchronousQueue[Runnable],
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {

@@ -23,7 +23,9 @@ import graft.operators.Trace
   * and with its nested spans (`jobs_total`); and what the query left
   * persisted for the sweep (`persisted_after`: persisted RDDs and cached
   * plans, counted just before the ledger's own sweep — an operation
-  * scope leaves none, see `graft.operators.Materialize`). With `reps` > 1
+  * scope leaves none, see `graft.operators.Materialize`); and the JVM's
+  * live thread count when the query ended (`live_threads`: the driver's
+  * pool threads, which idle-exit, show here). With `reps` > 1
   * the record is the fastest rep's, with every rep's wall in `walls_s`.
   *
   * Usage: runMain graft.tools.Ledger <query>[,<query>...]|all [sfDir] [reps] [out]
@@ -46,7 +48,7 @@ object Ledger {
       executorCpuS: Double, inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, driverGapS: Double,
       topOperators: Seq[OpTotal], spans: Seq[SpanJobs], persistedAfter: Held,
-      error: Option[String])
+      liveThreads: Int, error: Option[String])
 
   private final class Job(val id: Int, val startMs: Long, val tags: Set[String],
       val stageIds: Seq[Int]) {
@@ -133,6 +135,7 @@ object Ledger {
     sc.addSparkListener(events)
     spark.listenerManager.register(events)
     private val spans = Trace.start(sc)
+    private val threads = java.lang.management.ManagementFactory.getThreadMXBean
 
     def close(): Unit = {
       Trace.stop()
@@ -166,6 +169,7 @@ object Ledger {
           None
         } catch { case e: Throwable => Some(e.toString) }
       val wallS = (System.nanoTime() - t0) / 1e9
+      val liveThreads = threads.getThreadCount
       drain()
       val (jobs, stages, ops) = events.take()
       val traced = spans.recorded
@@ -192,6 +196,7 @@ object Ledger {
           SpanJobs(s, innermost.count(_ == s.id), jobs.count(_.tags(tag)))
         },
         persistedAfter = held,
+        liveThreads = liveThreads,
         error = error)
     }
   }
@@ -206,7 +211,7 @@ object Ledger {
 
   private def num(d: Double): String = f"$d%.4f"
 
-  private def json(e: Entry): String = {
+  private[tools] def json(e: Entry): String = {
     val ops = e.topOperators.map(o =>
       s"""{"op":${str(o.op)},"count":${o.count},""" +
         s""""time_ms":${num(o.timeMs)},"rows":${o.rows}}""")
@@ -227,6 +232,7 @@ object Ledger {
       s""""spans":${spans.mkString("[", ",", "]")},""" +
       s""""persisted_after":{"rdds":${e.persistedAfter.rdds},""" +
       s""""plans":${e.persistedAfter.plans}},""" +
+      s""""live_threads":${e.liveThreads},""" +
       s""""error":${e.error.map(str).getOrElse("null")}}"""
   }
 
@@ -260,7 +266,8 @@ object Ledger {
     try names.foreach { name =>
       val e = session.record(name, sfDir, reps)
       System.err.println(f"[ledger] $name%-36s ${e.wallS}%7.2f s ${e.jobs}%4d jobs" +
-        s" held ${e.persistedAfter.rdds}/${e.persistedAfter.plans}")
+        s" held ${e.persistedAfter.rdds}/${e.persistedAfter.plans}" +
+        s" threads ${e.liveThreads}")
       lines += s"${str(name)}:${json(e)}"
       // rewritten after every query, so a cut run keeps what it measured
       java.nio.file.Files.writeString(out, lines.mkString(head + "\n", ",\n", "\n}}\n"))

@@ -105,6 +105,30 @@ class LedgerSpec extends SparkTestBase {
     }
   }
 
+  test("every query record carries the live thread count at the query's end") {
+    withLedger { ledger =>
+      Seq("s1_scan_project", "j4_semi_join").foreach { q =>
+        val e = ledger.record(q, sf)
+        assert(e.error.isEmpty, q)
+        assert(e.liveThreads > 0, q)
+        assert(Ledger.json(e).contains(s""""live_threads":${e.liveThreads},"""), q)
+      }
+      // threads a query leaves running are in its count
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val idle = ledger.measure(())
+      val parked = Seq.fill(32)(new Thread(() => release.await()))
+      try {
+        val busy = ledger.measure(parked.foreach(_.start()))
+        // other threads may exit in between (idle pool threads)
+        assert(busy.liveThreads - idle.liveThreads >= 24,
+          s"${idle.liveThreads} -> ${busy.liveThreads}")
+      } finally {
+        release.countDown()
+        parked.foreach(_.join())
+      }
+    }
+  }
+
   test("with the ledger off, Trace records nothing and starts no job") {
     val sc = spark.sparkContext
     val stopped = Trace.start(sc)
