@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Driver-side overlap of INDEPENDENT Spark actions: actions are only
   * sequential because driver code calls them sequentially — Spark's
   * scheduler happily runs several jobs at once inside one application,
-  * and FIFO scheduling back-fills the tail of one job with the next
-  * job's tasks. The maintenance fan-outs this serves (one lifecycle
-  * call issuing several writes/reads against DISJOINT directories) are
+  * and back-fills the tail of one job with the next job's tasks. The
+  * maintenance fan-outs this serves (one lifecycle call issuing several
+  * writes/reads against DISJOINT directories) are
   * dominated by per-action fixed cost at bench scale (job launch,
   * write commit, metadata reads), so overlapping them cuts the wall to
   * the longest chain without changing any stored byte. At 100 TB the
@@ -31,7 +31,19 @@ import org.apache.spark.sql.SparkSession
   * propagated (cosmetic only on these paths), while each task tags its
   * jobs with a tag of its own, the handle its cancellation uses, and
   * carries its submitter's [[Trace]] span tags and
-  * [[Materialize.scoped]] operation scope. The pool is unbounded
+  * [[Materialize.scoped]] operation scope. Each task also runs its jobs
+  * in a FAIR scheduler pool of its own (`Sessions.local` sets FAIR
+  * mode): under FIFO a freed core goes to the oldest queued stage, so a
+  * branch made of many small dependent jobs waits behind the other
+  * branches' bulk stages; with a pool per running branch, a freed core
+  * goes to the branch with the fewest running tasks, and a fan-out's
+  * wall moves toward its longest chain. The pool is named after the
+  * lowest slot free when the body starts, held until the body exits:
+  * Spark keeps every pool it creates, so names are reused and the pool
+  * count stays at the peak number of concurrent tasks, never one per
+  * task. Adaptive-stage, broadcast and subquery jobs inherit the pool
+  * through the local properties Spark captures; jobs of the caller's
+  * own thread stay in `default`. The pool is unbounded
   * (cached) because tasks may themselves fan out — nested submits must
   * never deadlock — and daemon so it cannot pin a JVM exit. An idle
   * thread exits after `Sessions.IdleThreadKeepAliveMs`, as Spark's own
@@ -59,6 +71,21 @@ private[graft] object Overlap {
 
   private val nextTagId = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The local property naming a job's FAIR scheduler pool. */
+  private[graft] val PoolProperty = "spark.scheduler.pool"
+
+  /** The slots of the running task bodies; slot n runs in pool
+    * `overlap-n`. */
+  private val slots = new java.util.BitSet
+
+  private def acquireSlot(): Int = slots.synchronized {
+    val n = slots.nextClearBit(0)
+    slots.set(n)
+    n
+  }
+
+  private def releaseSlot(n: Int): Unit = slots.synchronized(slots.clear(n))
+
   /** One submitted task. Unlike a plain FutureTask it knows when its
     * body has really exited — a cancelled FutureTask reports done at
     * once while its body may still be running — and every Spark job the
@@ -81,8 +108,14 @@ private[graft] object Overlap {
         Trace.adopt(sc, spans)
         Materialize.adopt(scope)
         sc.addJobTag(tag)
+        // released before the result is published, so a fan-out issued
+        // right after this one finds the slot free again
+        val slot = acquireSlot()
+        sc.setLocalProperty(PoolProperty, s"overlap-$slot")
         try body()
         finally {
+          sc.setLocalProperty(PoolProperty, null)
+          releaseSlot(slot)
           sc.removeJobTag(tag)
           Materialize.adopt(null)
         }

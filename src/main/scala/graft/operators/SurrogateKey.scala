@@ -13,10 +13,16 @@ import org.apache.spark.sql.functions._
   *
   * This is the scale-safe equivalent: range-repartition on the sort key
   * (so partition p holds exactly the rows ranked between partitions p-1
-  * and p+1), number rows within each partition, then shift every
-  * partition by the total count of the partitions before it. The offset
-  * table is one row per partition — metadata-sized, broadcast to the
-  * join — so no stage ever sees more than its own partition's rows.
+  * and p+1), sort each partition on the same key and number its rows in
+  * that order, then shift every partition by the total count of the
+  * partitions before it. The offset table is one row per partition —
+  * metadata-sized, broadcast to the join — so no stage ever sees more
+  * than its own partition's rows. The rows are numbered in the stage
+  * that reads the range shuffle (`monotonically_increasing_id` is the
+  * partition index in its upper 31 bits and the row's position in its
+  * lower 33): a window partitioned by the partition index would
+  * re-shuffle every row, since the planner cannot see that the range
+  * partitions already are those groups.
   *
   * Output equals `row_number() OVER (ORDER BY order*)` exactly, provided
   * `order` is a total ordering (no ties). Ties would make the global
@@ -27,17 +33,17 @@ object SurrogateKey {
   def denseRowNumber(df: DataFrame, outCol: String, order: Column*): DataFrame = {
     val pid = "graft__pid"
     val local = "graft__local"
-    val ranged = df
-      .repartitionByRange(order: _*)
-      .withColumn(pid, spark_partition_id())
-    val numbered = ranged.withColumn(
-      local,
-      row_number().over(Window.partitionBy(col(pid)).orderBy(order: _*)))
+    val ranged = df.repartitionByRange(order: _*)
+    val numbered = ranged
+      .sortWithinPartitions(order: _*)
+      .withColumn(local, monotonically_increasing_id())
+      .withColumn(pid, shiftright(col(local), 33).cast("int"))
     // This unpartitioned window (Spark logs "No Partition Defined for
     // Window operation" here) is deliberate and safe: it runs over the
     // per-partition COUNTS — at most one row per shuffle partition,
     // metadata-sized at any data scale — never over the data itself.
     val offsets = ranged
+      .withColumn(pid, spark_partition_id())
       .groupBy(col(pid))
       .agg(count(lit(1)).as("graft__n"))
       .withColumn(
@@ -51,7 +57,8 @@ object SurrogateKey {
       .select(col(pid), col("graft__offset"))
     numbered
       .join(broadcast(offsets), pid)
-      .withColumn(outCol, (col(local) + col("graft__offset")).cast("long"))
+      .withColumn(outCol,
+        col(local) - shiftleft(col(pid).cast("long"), 33) + col("graft__offset") + 1L)
       .drop(pid, local, "graft__offset")
   }
 }

@@ -16,7 +16,10 @@ import graft.operators.Trace
   * `SparkListener` and one `QueryExecutionListener`, and writes one
   * JSON record per query: wall time; job, stage and task counts;
   * executor CPU; input, shuffle and spill bytes; the driver gap (wall
-  * minus the union of job intervals); the top physical operators by
+  * minus the union of job intervals); the queue wait (`queue_wait_s`:
+  * for each stage, the time from its submission to its first task
+  * launch, summed — the time stages waited for a free core, which the
+  * scheduler's pool policy moves); the top physical operators by
   * their `SQLMetrics` time and rows, read from each action's executed
   * plan; and the [[Trace]] spans of the stored layouts' build, ingest,
   * forget and compact calls, each with the jobs it ran itself (`jobs`)
@@ -47,7 +50,7 @@ object Ledger {
       wallS: Double, wallsS: Seq[Double], jobs: Int, stages: Int, tasks: Long,
       executorCpuS: Double, inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, driverGapS: Double,
-      topOperators: Seq[OpTotal], spans: Seq[SpanJobs], persistedAfter: Held,
+      queueWaitS: Double, topOperators: Seq[OpTotal], spans: Seq[SpanJobs], persistedAfter: Held,
       liveThreads: Int, error: Option[String])
 
   private final class Job(val id: Int, val startMs: Long, val tags: Set[String],
@@ -57,7 +60,7 @@ object Ledger {
 
   private final case class Stage(
       id: Int, tasks: Int, cpuNs: Long, input: Long, shuffleRead: Long,
-      shuffleWrite: Long, spill: Long)
+      shuffleWrite: Long, spill: Long, queueWaitMs: Long)
 
   /** What the two listeners saw since the last [[take]]. */
   private final class Events extends SparkListener with QueryExecutionListener
@@ -65,6 +68,8 @@ object Ledger {
     private var jobs = mutable.LinkedHashMap.empty[Int, Job]
     private var stages = mutable.ArrayBuffer.empty[Stage]
     private var ops = mutable.ArrayBuffer.empty[(String, Double, Long)]
+    /** First task launch of each stage still running. */
+    private val firstLaunch = mutable.Map.empty[Int, Long]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val tags = Option(e.properties)
@@ -77,14 +82,21 @@ object Ledger {
       jobs.get(e.jobId).foreach(_.endMs = e.time)
     }
 
+    override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+      if (!firstLaunch.contains(e.stageId)) firstLaunch(e.stageId) = e.taskInfo.launchTime
+    }
+
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       synchronized {
         val s = e.stageInfo
+        val launched = firstLaunch.remove(s.stageId)
         Option(s.taskMetrics).foreach { m =>
+          val waitMs = (for (l <- launched; sub <- s.submissionTime) yield l - sub)
+            .getOrElse(0L)
           stages += Stage(s.stageId, s.numTasks, m.executorCpuTime,
             m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
             m.shuffleWriteMetrics.bytesWritten,
-            m.memoryBytesSpilled + m.diskBytesSpilled)
+            m.memoryBytesSpilled + m.diskBytesSpilled, waitMs)
         }
       }
 
@@ -188,6 +200,7 @@ object Ledger {
         shuffleWriteBytes = ran.map(_.shuffleWrite).sum,
         spillBytes = ran.map(_.spill).sum,
         driverGapS = wallS - unionMs(jobs.map(j => (j.startMs, j.endMs))) / 1e3,
+        queueWaitS = ran.map(_.queueWaitMs).sum / 1e3,
         topOperators = ops.groupBy(_._1).toSeq.map { case (op, xs) =>
           OpTotal(op, xs.size, xs.map(_._2).sum, xs.map(_._3).sum)
         }.sortBy(o => (-o.timeMs, -o.rows)).take(5),
@@ -227,7 +240,7 @@ object Ledger {
       s""""executor_cpu_s":${num(e.executorCpuS)},"input_bytes":${e.inputBytes},""" +
       s""""shuffle_read_bytes":${e.shuffleReadBytes},""" +
       s""""shuffle_write_bytes":${e.shuffleWriteBytes},"spill_bytes":${e.spillBytes},""" +
-      s""""driver_gap_s":${num(e.driverGapS)},""" +
+      s""""driver_gap_s":${num(e.driverGapS)},"queue_wait_s":${num(e.queueWaitS)},""" +
       s""""top_operators":${ops.mkString("[", ",", "]")},""" +
       s""""spans":${spans.mkString("[", ",", "]")},""" +
       s""""persisted_after":{"rdds":${e.persistedAfter.rdds},""" +

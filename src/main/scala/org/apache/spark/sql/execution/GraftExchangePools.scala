@@ -4,19 +4,20 @@ import java.util.concurrent.{ThreadPoolExecutor, TimeUnit}
 
 import scala.concurrent.ExecutionContextExecutorService
 
-import org.apache.spark.sql.execution.adaptive.ResultQueryStageExec
+import org.apache.spark.sql.execution.adaptive.{QueryStagePool, ResultQueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
-/** Compile-time bridge to the five JVM-wide driver pools of Spark's
-  * exchange, result-stage and subquery operators (their
-  * `executionContext` values are `private[execution]`). Each pool is a
+/** Compile-time bridge to the six JVM-wide driver pools of Spark's
+  * exchange, result-stage and subquery operators and of the adaptive
+  * plan's query-stage creation (their `executionContext` values are
+  * `private[execution]` or `private[adaptive]`). Each pool is a
   * `ThreadUtils.newDaemonCachedThreadPool`: core size equal to its cap,
   * an unbounded queue and core threads that time out after 60 s idle.
   * `graft.Sessions.local` shortens that timeout; the caps stay Spark's.
   */
 object GraftExchangePools {
 
-  /** The five pools, each named by its threads' name prefix. Throws if
+  /** The six pools, each named by its threads' name prefix. Throws if
     * one is not a `ThreadPoolExecutor` whose core threads time out —
     * a Spark that builds them differently must fail here, not keep its
     * idle threads unnoticed. */
@@ -25,7 +26,8 @@ object GraftExchangePools {
     "shuffle-exchange" -> ShuffleExchangeExec.executionContext,
     "ResultQueryStageExecution" -> ResultQueryStageExec.executionContext,
     "subquery" -> SubqueryExec.executionContext,
-    "dynamicpruning" -> SubqueryBroadcastExec.executionContext
+    "dynamicpruning" -> SubqueryBroadcastExec.executionContext,
+    "QueryStageCreator" -> QueryStagePool.executionContext
   ).map { case (name, ec) => name -> threadPool(name, ec) }
 
   /** Let every pool thread exit once it has been idle for `ms`. */
@@ -51,5 +53,13 @@ object GraftExchangePools {
           s"the $name pool is not a ThreadPoolExecutor whose core threads " +
             s"time out: ${other.getClass.getName}")
     }
+  }
+}
+
+package adaptive {
+  /** `AdaptiveSparkPlanExec.executionContext` is `private[adaptive]`. */
+  private[execution] object QueryStagePool {
+    def executionContext: ExecutionContextExecutorService =
+      AdaptiveSparkPlanExec.executionContext
   }
 }

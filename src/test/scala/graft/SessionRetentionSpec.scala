@@ -66,17 +66,20 @@ class SessionRetentionSpec extends SparkTestBase {
     }
   }
 
-  test("the five driver pools keep Spark's caps and let idle threads exit") {
+  test("the six driver pools keep Spark's caps and let idle threads exit") {
     val caps = Map(
       "broadcast-exchange" -> StaticSQLConf.BROADCAST_EXCHANGE_MAX_THREAD_THRESHOLD,
       "shuffle-exchange" -> StaticSQLConf.SHUFFLE_EXCHANGE_MAX_THREAD_THRESHOLD,
       "ResultQueryStageExecution" -> StaticSQLConf.RESULT_QUERY_STAGE_MAX_THREAD_THRESHOLD,
       "subquery" -> StaticSQLConf.SUBQUERY_MAX_THREAD_THRESHOLD,
       "dynamicpruning" -> StaticSQLConf.BROADCAST_EXCHANGE_MAX_THREAD_THRESHOLD)
+      .map { case (name, conf) => name -> conf.defaultValue.get }
+      // the adaptive plan's stage-creation pool has a fixed cap, no conf
+      .updated("QueryStageCreator", 16)
     val pools = GraftExchangePools.pools
     assert(pools.map(_._1).toSet === caps.keySet)
     pools.foreach { case (name, p) =>
-      assert(p.getMaximumPoolSize === caps(name).defaultValue.get, name)
+      assert(p.getMaximumPoolSize === caps(name), name)
       assert(p.getCorePoolSize === p.getMaximumPoolSize, name)
       assert(p.getKeepAliveTime(TimeUnit.MILLISECONDS) === Sessions.IdleThreadKeepAliveMs, name)
     }

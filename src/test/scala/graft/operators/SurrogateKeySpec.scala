@@ -1,11 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-class SurrogateKeySpec extends SparkTestBase {
+class SurrogateKeySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("denseRowNumber equals a global row_number on a total ordering") {
     import spark.implicits._
@@ -36,11 +41,24 @@ class SurrogateKeySpec extends SparkTestBase {
 
   test("no single-partition global window appears in the plan") {
     import spark.implicits._
-    val df = (1 to 100).map(i => (i.toLong, i % 10)).toDF("id", "k")
-    val plan = SurrogateKey.denseRowNumber(df, "rn", col("k"), col("id"))
-      .queryExecution.executedPlan.toString
-    // the window must partition by graft__pid, never be empty-partitioned
-    assert(!plan.contains("Window [row_number()") ||
-      plan.contains("graft__pid"))
+    val df = (1 to 2000).map(i => (i.toLong, i % 10)).toDF("id", "k").repartition(5)
+    val ranked = SurrogateKey.denseRowNumber(df, "rn", col("k"), col("id"))
+    assert(ranked.collect().length === 2000)
+    val plan = ranked.queryExecution.executedPlan
+    // the data rows are numbered by no window at all; the one window
+    // runs over the per-partition counts
+    assert(!plan.toString.contains("Window [row_number()"))
+    // the data rows cross one exchange, the range shuffle; the only
+    // exchange keyed on the partition index carries the partial counts
+    val exchanges = collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }
+    val byPid = exchanges.filter(_.outputPartitioning match {
+      case h: HashPartitioning => h.references.exists(_.name == "graft__pid")
+      case _ => false
+    })
+    assert(byPid.nonEmpty && byPid.forall(_.child match {
+      case WholeStageCodegenExec(a) => a.isInstanceOf[HashAggregateExec]
+      case a => a.isInstanceOf[HashAggregateExec]
+    }), byPid.mkString("\n"))
+    assert(exchanges.count(_.outputPartitioning.isInstanceOf[RangePartitioning]) === 1)
   }
 }

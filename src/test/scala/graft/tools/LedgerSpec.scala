@@ -3,10 +3,15 @@ package graft.tools
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskStart}
 
 import graft.SparkTestBase
 import graft.operators.{ChunkStore, KmvLayout, Trace}
+
+object LedgerSpec {
+  /** Tasks of the spec's core-holding job that have started. */
+  val started = new java.util.concurrent.atomic.AtomicInteger(0)
+}
 
 /** The execution ledger against an independent listener: its job
   * counts, its span attribution, and that spans cost nothing while it
@@ -126,6 +131,46 @@ class LedgerSpec extends SparkTestBase {
         release.countDown()
         parked.foreach(_.join())
       }
+    }
+  }
+
+  test("queue_wait_s sums each stage's wait from submission to its first task launch") {
+    val sc = spark.sparkContext
+    val submitted = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val launched = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        submitted.put(e.stageInfo.stageId, e.stageInfo.submissionTime.get)
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        launched.putIfAbsent(e.stageId, e.taskInfo.launchTime)
+    }
+    withLedger { ledger =>
+      ListenerBusAccess.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        val cores = sc.defaultParallelism
+        val e = ledger.measure {
+          // a job holds every core for a second; one submitted meanwhile waits
+          LedgerSpec.started.set(0)
+          val holder = new Thread(() =>
+            sc.parallelize(1 to cores, cores).foreach { _ =>
+              LedgerSpec.started.incrementAndGet()
+              Thread.sleep(1000)
+            })
+          holder.start()
+          val deadline = System.nanoTime() + 30000000000L
+          while (LedgerSpec.started.get < cores && System.nanoTime() < deadline)
+            Thread.sleep(10)
+          assert(sc.parallelize(1 to 1, 1).count() === 1L)
+          holder.join()
+        }
+        ListenerBusAccess.drain(sc)
+        assert(e.error.isEmpty && e.stages === 2)
+        val waitMs = submitted.asScala.map { case (id, t) => launched.get(id) - t }.sum
+        assert(e.queueWaitS === waitMs / 1e3)
+        assert(e.queueWaitS >= 0.5, e.queueWaitS)
+        assert(Ledger.json(e).contains(f""""queue_wait_s":${e.queueWaitS}%.4f,"""))
+      } finally sc.removeSparkListener(l)
     }
   }
 
