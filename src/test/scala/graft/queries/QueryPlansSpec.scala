@@ -289,13 +289,15 @@ class QueryPlansSpec extends SparkTestBase {
     val plan = finalPlan(q("n60_corpus_order"))
     assert(plan.contains("rangepartitioning"),
       s"ordering must range-shuffle on the seed hash:\n$plan")
-    // the data-path window must partition by graft__pid; only the
-    // metadata-sized per-partition-count window may be unpartitioned
+    // the data rows are numbered inside each range partition, by no
+    // window; only the metadata-sized per-partition-count window may
+    // be unpartitioned
+    assert(plan.contains("monotonically_increasing_id"),
+      s"rows must be numbered within their range partition:\n$plan")
     val rowNumWindows = plan.linesIterator
-      .filter(l => l.contains("Window") && l.contains("row_number"))
-      .mkString("\n")
-    assert(rowNumWindows.contains("graft__pid"),
-      s"row_number window must be partition-local:\n$rowNumWindows")
+      .filter(l => l.contains("Window") && l.contains("row_number")).toSeq
+    assert(rowNumWindows.forall(_.contains("graft__pid")),
+      s"row_number window must be partition-local:\n${rowNumWindows.mkString("\n")}")
   }
 
   test("n61 dup-ngram coverage: shuffles carry fingerprints and positions, never gram text") {
@@ -901,11 +903,12 @@ class QueryPlansSpec extends SparkTestBase {
     val plan = finalPlan(q("n101_balanced_shards"))
     assert(plan.contains("rangepartitioning"),
       s"the global rank must range-shuffle on the size key:\n$plan")
+    assert(plan.contains("monotonically_increasing_id"),
+      s"the rank must be numbered within its range partition:\n$plan")
     val rowNumWindows = plan.linesIterator
-      .filter(l => l.contains("Window") && l.contains("row_number"))
-      .mkString("\n")
-    assert(rowNumWindows.contains("graft__pid"),
-      s"row_number window must be partition-local:\n$rowNumWindows")
+      .filter(l => l.contains("Window") && l.contains("row_number")).toSeq
+    assert(rowNumWindows.forall(_.contains("graft__pid")),
+      s"row_number window must be partition-local:\n${rowNumWindows.mkString("\n")}")
   }
 
   test("n127 containment: the inverted join ships fp/id/size longs, never text") {
