@@ -50,8 +50,8 @@ object Ledger {
       wallS: Double, wallsS: Seq[Double], jobs: Int, stages: Int, tasks: Long,
       executorCpuS: Double, inputBytes: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, driverGapS: Double,
-      queueWaitS: Double, topOperators: Seq[OpTotal], spans: Seq[SpanJobs], persistedAfter: Held,
-      liveThreads: Int, error: Option[String])
+      queueWaitS: Double, topOperators: Seq[OpTotal], spans: Seq[SpanJobs],
+      persistedAfter: Held, liveThreads: Int, error: Option[String])
 
   private final class Job(val id: Int, val startMs: Long, val tags: Set[String],
       val stageIds: Seq[Int]) {
@@ -83,7 +83,7 @@ object Ledger {
     }
 
     override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
-      if (!firstLaunch.contains(e.stageId)) firstLaunch(e.stageId) = e.taskInfo.launchTime
+      firstLaunch.getOrElseUpdate(e.stageId, e.taskInfo.launchTime)
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
